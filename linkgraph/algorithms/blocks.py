@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -83,6 +84,34 @@ def _pull_task_count(block_path: str, num_blocks: int) -> int:
 # sweeps) beats ~10 distributed fixpoint jobs. One constant — tuning it for
 # a bigger driver moves every algorithm's crossover together.
 DRIVER_EDGE_THRESHOLD = 2_000_000
+
+
+def collect_if_small(df: DataFrame) -> pd.DataFrame | None:
+    """``df`` as pandas when it has at most DRIVER_EDGE_THRESHOLD rows, else
+    None. The LIMIT-bounded probe and the collect are one job: above the
+    threshold at most threshold + 1 rows reach the driver and are dropped,
+    and no full scan or count runs."""
+    pdf = df.limit(DRIVER_EDGE_THRESHOLD + 1).toPandas()
+    return None if len(pdf) > DRIVER_EDGE_THRESHOLD else pdf
+
+
+def index_edges(
+    ids: np.ndarray, src: np.ndarray, dst: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(es, ed, ok): positions of ``src``/``dst`` in the sorted unique node
+    ``ids``, and the mask of edges with both endpoints in ``ids`` — the
+    edges a distributed join against the node table keeps."""
+    n = len(ids)
+    es = np.searchsorted(ids, src)
+    ed = np.searchsorted(ids, dst)
+    if n == 0:
+        return es, ed, np.zeros(len(src), dtype=bool)
+    ok = (
+        (es < n) & (ed < n)
+        & (ids[np.minimum(es, n - 1)] == src)
+        & (ids[np.minimum(ed, n - 1)] == dst)
+    )
+    return es, ed, ok
 
 
 def auto_num_blocks(edges, parallelism: int) -> int:
@@ -227,7 +256,7 @@ _FINGERPRINT_STAT_CAP = 1024
 
 
 def _input_files_fingerprint(edges: DataFrame) -> int:
-    """Content signature of the plan's file inputs: a hash over the sorted
+    """Content signature of the plan's file inputs: a CRC-32 over the sorted
     input-file paths plus (size, mtime_ns) for up to _FINGERPRINT_STAT_CAP
     local files. Overwriting a parquet file beneath a semantically identical
     plan changes this signature, so the store cache rebuilds instead of
@@ -250,7 +279,8 @@ def _input_files_fingerprint(edges: DataFrame) -> int:
             except OSError:
                 pass
         sig.append((f,))
-    return hash(tuple(sig))
+    # a stable digest, not hash(): str hashing is salted per process
+    return zlib.crc32(repr(sig).encode())
 
 
 def semantic_store_key(edges: DataFrame, *extra) -> tuple | None:
@@ -267,7 +297,9 @@ def semantic_store_key(edges: DataFrame, *extra) -> tuple | None:
 def cached_store_dir(key: tuple | None, prefix: str) -> tuple[str, bool]:
     """(path, hit) — the cached store dir for `key`, or a fresh tempdir
     (registered under `key` unless key is None). `hit` means a _SUCCESS
-    store already exists there."""
+    store already exists there. Staleness caveat: the key stats local
+    files only, so a non-local input rewritten in place under the same
+    file name still hits the old store."""
     import shutil
     import tempfile
 

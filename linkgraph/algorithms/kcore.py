@@ -5,8 +5,13 @@ Two operators, both pure DataFrame fixpoints:
 
 * ``k_core(graph, k)`` — the maximal subgraph where every node has
   undirected degree ≥ k, by iterative peeling: drop nodes below k,
-  recompute degrees over the survivors, repeat to fixpoint. Each round is
-  one degree aggregation + one semi-join; round count ≤ peel depth.
+  recompute degrees over the survivors, repeat to fixpoint. Round count ≤
+  peel depth. Two physical plans, picked by data size (the union-find /
+  pull-engine crossover): when the undirected edges and the node table
+  each fit ``blocks.DRIVER_EDGE_THRESHOLD`` rows, both are collected once
+  and every round is one ``np.bincount`` over the edges between survivors;
+  otherwise every round is one degree aggregation + one semi-join. Both
+  run the same rounds and report the same ``iterations``/``did_converge``.
 * ``core_numbers(graph)`` — every node's coreness via the iterated
   h-index (Lü et al., Nature Communications 2016): start from the degree,
   repeatedly replace each node's estimate with the h-index of its
@@ -19,8 +24,11 @@ Two operators, both pure DataFrame fixpoints:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
 
 
@@ -30,8 +38,47 @@ def _und_edges(graph: Graph) -> DataFrame:
     )
 
 
+def _k_core_local(graph: Graph, k: int, max_rounds: int) -> DataFrame | None:
+    """The synchronous peel on the driver; None above the crossover."""
+    ep = blocks.collect_if_small(_und_edges(graph))
+    if ep is None:
+        return None
+    node_pd = blocks.collect_if_small(graph.nodes.select("id"))
+    if node_pd is None:
+        return None
+    node_ids = node_pd["id"].to_numpy(np.int64)
+    ids = np.unique(node_ids)
+    n = len(ids)
+    es, ed, ok = blocks.index_edges(
+        ids, ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64)
+    )
+    es, ed = es[ok], ed[ok]
+    active = np.ones(n, dtype=bool)
+    n_active = n
+    rounds, converged = 0, False
+    while rounds < max_rounds:
+        rounds += 1
+        m = active[es] & active[ed]
+        keep = active & (np.bincount(es[m], minlength=n) >= k)
+        n_keep = int(keep.sum())
+        if n_keep == n_active:
+            converged = True
+            break
+        active, n_active = keep, n_keep
+    out = graph.nodes.sparkSession.createDataFrame(
+        pd.DataFrame({"id": node_ids, "in_core": active[np.searchsorted(ids, node_ids)]}),
+        "id long, in_core boolean",
+    )
+    out.iterations = rounds
+    out.did_converge = converged
+    return out
+
+
 def k_core(graph: Graph, k: int, max_rounds: int = 10_000) -> DataFrame:
     """→ (id, in_core: boolean) over ALL nodes; the k-core = in_core rows."""
+    local = _k_core_local(graph, k, max_rounds)
+    if local is not None:
+        return local
     edges = _und_edges(graph).persist()
     active = graph.nodes.select("id").localCheckpoint(eager=True)
     n_active = active.count()

@@ -9,21 +9,31 @@ GDS-family systems ship it as the standard cohesion ladder step between
 triangles and communities).
 
 Synchronous peel: each round re-enumerates triangles over the SURVIVING
-edge set with the same degree-oriented wedge join as `triangles._triangles`
-(wedges pivot on the min-degree corner ⇒ Σ min-degree ≈ m·√m worst case,
-not Σ deg²), attributes each triangle to its three edges, and drops every
-edge with support < k−2. Deletions are monotone, so the fixpoint is
-reached in ≤ m rounds (in practice a handful) and running extra rounds is
-a no-op — which is what makes the fixed-round SQL oracle in queries.py
-exact. Each round is one triangle count: two shuffle joins + one
-map-side-combining groupBy; lineage truncated per round via
-localCheckpoint, the same contract as WCC/LPA/k-core.
+edge set with degree-oriented wedges (pivot on the min-degree corner ⇒
+Σ min-degree ≈ m·√m worst case, not Σ deg²), attributes each triangle to
+its three edges, and drops every edge with support < k−2. Deletions are
+monotone, so the fixpoint is reached in ≤ m rounds (in practice a
+handful) and running extra rounds is a no-op — which is what makes the
+fixed-round SQL oracle in queries.py exact.
+
+Two physical plans, picked by data size (the union-find / pull-engine
+crossover): at or below ``blocks.DRIVER_EDGE_THRESHOLD`` canonical edges
+the edge list is collected once and every round is
+``triangles.triangle_kernel`` plus one ``np.bincount`` over the surviving
+edges; above it each round is one distributed triangle count — two
+shuffle joins + one map-side-combining groupBy, lineage truncated per
+round via localCheckpoint, the same contract as WCC/LPA/k-core. Both run
+the same rounds and report the same ``rounds``/``did_converge``.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algorithms import blocks
+from linkgraph.algorithms.triangles import triangle_kernel
 from linkgraph.graph import Graph
 
 
@@ -72,12 +82,48 @@ def _support(ce: DataFrame) -> DataFrame:
     )
 
 
+def _edge_support(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
+    """Triangles through each canonical edge."""
+    return np.bincount(triangle_kernel(src, dst)[1].ravel(), minlength=len(src))
+
+
+def _k_truss_local(graph: Graph, k: int, max_rounds: int) -> DataFrame | None:
+    """The synchronous peel on the driver; None above the crossover."""
+    pdf = blocks.collect_if_small(graph.canonical_edges().select("src", "dst"))
+    if pdf is None:
+        return None
+    src = pdf["src"].to_numpy(np.int64)
+    dst = pdf["dst"].to_numpy(np.int64)
+    rounds, converged = 0, False
+    for _ in range(max_rounds):
+        sup = _edge_support(src, dst)
+        rounds += 1
+        keep = sup >= k - 2
+        if keep.all():
+            converged = True
+            break
+        src, dst = src[keep], dst[keep]
+    if not converged:  # as below: support inside the returned subgraph
+        sup = _edge_support(src, dst)
+    out = graph.nodes.sparkSession.createDataFrame(
+        pd.DataFrame({"src": src, "dst": dst, "support": sup}),
+        "src long, dst long, support long",
+    )
+    out.rounds = rounds  # type: ignore[attr-defined]
+    out.iterations = rounds  # type: ignore[attr-defined]
+    out.did_converge = converged  # type: ignore[attr-defined]
+    return out
+
+
 def k_truss(graph: Graph, k: int = 4, max_rounds: int = 30) -> DataFrame:
     """→ (src, dst, support): the canonical edges of the k-truss, with each
     edge's triangle support inside the truss. k ≥ 3 (k−2 ≥ 1 triangle per
     edge); k=3 keeps every edge in at least one triangle."""
     if k < 3:
         raise ValueError("k-truss requires k >= 3")
+    local = _k_truss_local(graph, k, max_rounds)
+    if local is not None:
+        return local
     ce = graph.canonical_edges().select("src", "dst").localCheckpoint(eager=True)
     rounds, converged = 0, False
     sup = None

@@ -43,7 +43,7 @@ def _lpa_local(
     import numpy as np
     import pandas as pd
 
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
+    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD, index_edges
 
     e = edges.localCheckpoint(eager=True)
     if e.count() > DRIVER_EDGE_THRESHOLD:
@@ -54,17 +54,11 @@ def _lpa_local(
     ids = ids[order]
     lab = lab_pd["label"].to_numpy(np.int64)[order]
     ep = e.select("src", "dst", "weight").toPandas()
-    rs = ep["src"].to_numpy(np.int64)
-    rd = ep["dst"].to_numpy(np.int64)
-    es = np.searchsorted(ids, rs)
-    ed = np.searchsorted(ids, rd)
     n = len(ids)
     # drop edges with endpoints outside the node set — the distributed
     # loop's joins do the same
-    ok = (
-        (es < n) & (ed < n)
-        & (ids[np.minimum(es, n - 1)] == rs)
-        & (ids[np.minimum(ed, n - 1)] == rd)
+    es, ed, ok = index_edges(
+        ids, ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64)
     )
     es, ed = es[ok], ed[ok]
     w = (

@@ -84,34 +84,30 @@ def _scc_local(edges: DataFrame, nodes: DataFrame, max_rounds: int) -> DataFrame
     in ascending id order, so index comparisons ≡ id comparisons and every
     step is exact integer arithmetic — the output (unique anyway: SCCs
     labeled by min member id) matches the distributed path bit-for-bit.
-    Returns None above the threshold (LIMIT-bounded probe, no full scan)."""
+    Returns None when the edges or the node table exceed the threshold
+    (LIMIT-bounded probes fused with the collects, no full scan)."""
     import pandas as pd
 
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
+    from linkgraph.algorithms.blocks import collect_if_small, index_edges
 
-    if edges.limit(DRIVER_EDGE_THRESHOLD + 1).count() > DRIVER_EDGE_THRESHOLD:
+    ep = collect_if_small(edges)
+    if ep is None:
+        return None
+    node_pd = collect_if_small(nodes.select("id"))
+    if node_pd is None:
         return None
     spark = nodes.sparkSession
-    ids = np.sort(
-        nodes.select("id").toPandas()["id"].to_numpy(np.int64, copy=True)
-    )
+    ids = np.sort(node_pd["id"].to_numpy(np.int64, copy=True))
     n = len(ids)
     if n == 0:
         out = spark.createDataFrame([], "id long, component long")
         out.iterations = 0
         out.did_converge = True
         return out
-    ep = edges.toPandas()
-    rs = ep["src"].to_numpy(np.int64)
-    rd = ep["dst"].to_numpy(np.int64)
-    es = np.searchsorted(ids, rs)
-    ed = np.searchsorted(ids, rd)
     # drop edges with endpoints outside the node set — the distributed
     # loop's joins against `active` do the same
-    ok = (
-        (es < n) & (ed < n)
-        & (ids[np.minimum(es, n - 1)] == rs)
-        & (ids[np.minimum(ed, n - 1)] == rd)
+    es, ed, ok = index_edges(
+        ids, ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64)
     )
     es, ed = es[ok], ed[ok]
     comp = np.full(n, -1, dtype=np.int64)

@@ -3,22 +3,107 @@
 Reference: `algo/src/main/java/org/neo4j/graphalgo/TriangleProc.java`,
 `algo/.../impl/triangle/{TriangleStream,TriangleCountQueue,
 IntersectingTriangleCount}.java`. There: forward-ordered adjacency
-intersection per edge in shared memory. Here: the classic two-shuffle
-self-join on canonical (src < dst) edges —
+intersection per edge in shared memory. Here, two physical plans for one
+algorithm, picked by data size (the union-find / pull-engine crossover):
+
+* at or below ``blocks.DRIVER_EDGE_THRESHOLD`` canonical edges, the edge
+  list is collected (one LIMIT-bounded job) and ``triangle_kernel`` —
+  vectorised numpy over the degree-oriented CSR, wedges closed by a
+  ``searchsorted`` lookup on sorted int64 edge keys — enumerates every
+  triangle with the ids of its corners and the indices of its edges;
+* above it, the classic two-shuffle self-join on canonical (src < dst)
+  edges —
 
     wedges  = e(a,b) ⋈ e(a,c) on a, with b < c
     closed  = wedges ⋈ e(b,c)            → each triangle found exactly once
 
-Per-node counts attribute each triangle to all three corners; local
-clustering coefficient = 2·T(v) / (deg(v)·(deg(v)−1)) on the undirected
-deduped degree, exactly the reference's formula; global count = Σ T(v) / 3.
+Both plans count over the canonical edges alone (endpoints need not be in
+``graph.nodes``), so they agree exactly. Per-node counts attribute each
+triangle to all three corners; local clustering coefficient =
+2·T(v) / (deg(v)·(deg(v)−1)) on the undirected deduped degree, exactly the
+reference's formula; global count = Σ T(v) / 3. ``ktruss`` reuses the
+kernel for its per-edge support.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
+
+# Wedges enumerated per kernel chunk: bounds the transient int64 arrays
+# (a handful of this length, ~32 MB each) however skewed the graph is.
+WEDGE_CHUNK = 1 << 22
+
+
+def triangle_kernel(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Every triangle of a canonical edge list (src < dst, no duplicates).
+
+    → (nodes, edges): two (t, 3) int64 arrays, one row per triangle — the
+    ids of its three corners and the indices (into ``src``/``dst``) of its
+    three edges. Edges are oriented from the lower to the higher
+    (degree, id) endpoint, so a pivot's out-degree is at most √(2m); the
+    wedges at each pivot are closed by one ``searchsorted`` on the sorted
+    int64 keys rank(lo)·n + rank(hi). Each triangle is found exactly once,
+    at its lowest-ranked corner. Wedges are enumerated in chunks of whole
+    pivot ranges of at most WEDGE_CHUNK wedges (one pivot may exceed it).
+    """
+    src = np.asarray(src, dtype=np.int64)
+    dst = np.asarray(dst, dtype=np.int64)
+    m = len(src)
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+    deg = np.bincount(inv, minlength=n)
+    # node indices are id-ordered, so a stable sort by degree ranks by (deg, id)
+    by_rank = np.argsort(deg, kind="stable")
+    rank = np.empty(n, dtype=np.int64)
+    rank[by_rank] = np.arange(n)
+    ru, rv = rank[inv[:m]], rank[inv[m:]]
+    lo, hi = np.minimum(ru, rv), np.maximum(ru, rv)
+    keys = lo * n + hi
+    eorder = np.argsort(keys)
+    keys, lo, hi = keys[eorder], lo[eorder], hi[eorder]
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(lo, minlength=n), out=indptr[1:])
+    dplus = np.diff(indptr)
+    cum_wedges = np.cumsum(dplus * (dplus - 1) // 2)
+    total = int(cum_wedges[-1]) if n else 0
+    # per CSR position: how many later positions share its pivot
+    later = indptr[lo + 1] - np.arange(m) - 1
+    tri_nodes, tri_edges = [], []
+    p0, done = 0, 0
+    while done < total:
+        p1 = max(p0 + 1, int(np.searchsorted(cum_wedges, done + WEDGE_CHUNK, side="right")))
+        j = np.arange(indptr[p0], indptr[p1])
+        cnt = later[j]
+        first = np.repeat(j, cnt)
+        # second = first + 1 + offset of the wedge inside first's run
+        second = np.arange(len(first)) + np.repeat(j + 1 - (np.cumsum(cnt) - cnt), cnt)
+        q = hi[first] * n + hi[second]
+        pos = np.minimum(np.searchsorted(keys, q), m - 1)
+        hit = keys[pos] == q
+        first, second, pos = first[hit], second[hit], pos[hit]
+        tri_nodes.append(np.stack([lo[first], hi[first], hi[second]], axis=1))
+        tri_edges.append(np.stack([first, second, pos], axis=1))
+        done = int(cum_wedges[p1 - 1])
+        p0 = p1
+    if not tri_nodes:
+        return np.empty((0, 3), dtype=np.int64), np.empty((0, 3), dtype=np.int64)
+    return ids[by_rank[np.concatenate(tri_nodes)]], eorder[np.concatenate(tri_edges)]
+
+
+def _triangles_local(graph: Graph) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """(src, dst, triangle corner ids) of the canonical edges, by the numpy
+    kernel; None above the driver crossover."""
+    pdf = blocks.collect_if_small(graph.canonical_edges().select("src", "dst"))
+    if pdf is None:
+        return None
+    src = pdf["src"].to_numpy(np.int64)
+    dst = pdf["dst"].to_numpy(np.int64)
+    return src, dst, triangle_kernel(src, dst)[0]
 
 
 def _triangles(graph: Graph) -> DataFrame:
@@ -62,25 +147,42 @@ def _triangles(graph: Graph) -> DataFrame:
 
 def triangle_stream(graph: Graph) -> DataFrame:
     """`algo.triangle.stream` → (a, b, c) node-id triples, a < b < c."""
-    return _triangles(graph)
+    local = _triangles_local(graph)
+    if local is None:
+        return _triangles(graph)
+    tri = np.sort(local[2], axis=1)
+    return graph.nodes.sparkSession.createDataFrame(
+        pd.DataFrame(tri, columns=["a", "b", "c"]), "a long, b long, c long"
+    )
 
 
 def triangle_count(graph: Graph) -> DataFrame:
     """`algo.triangleCount.stream` → (id, triangles, coefficient)."""
-    tri = _triangles(graph)
-    corners = (
-        tri.select(F.col("a").alias("id"))
-        .unionByName(tri.select(F.col("b").alias("id")))
-        .unionByName(tri.select(F.col("c").alias("id")))
-    )
-    per_node = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
-    ce = graph.canonical_edges()
-    deg = (
-        ce.select(F.col("src").alias("id"))
-        .unionByName(ce.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    local = _triangles_local(graph)
+    if local is None:
+        tri = _triangles(graph)
+        corners = (
+            tri.select(F.col("a").alias("id"))
+            .unionByName(tri.select(F.col("b").alias("id")))
+            .unionByName(tri.select(F.col("c").alias("id")))
+        )
+        per_node = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
+        ce = graph.canonical_edges()
+        deg = (
+            ce.select(F.col("src").alias("id"))
+            .unionByName(ce.select(F.col("dst").alias("id")))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+    else:
+        src, dst, tri = local
+        ends, d = np.unique(np.concatenate([src, dst]), return_counts=True)
+        t = np.bincount(np.searchsorted(ends, tri.ravel()), minlength=len(ends))
+        stats = graph.nodes.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ends, "triangles": t, "deg": d}),
+            "id long, triangles long, deg long",
+        )
+        per_node, deg = stats.select("id", "triangles"), stats.select("id", "deg")
     return (
         graph.nodes.select("id")
         .join(per_node, "id", "left")

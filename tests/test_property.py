@@ -101,6 +101,42 @@ def test_triangle_count_matches_bruteforce(spark, g):
     assert got == want
 
 
+@st.composite
+def canonical_edge_lists(draw):
+    """Possibly empty random graphs as canonical (src < dst) pairs in random
+    order, on spread-out ids."""
+    n = draw(st.integers(0, 14))
+    pairs = draw(st.lists(st.tuples(st.integers(0, n), st.integers(0, n)),
+                          max_size=60 if n else 0))
+    canon = {(min(a, b) * 3 + 1, max(a, b) * 3 + 1) for a, b in pairs if a != b}
+    return draw(st.permutations(sorted(canon)))
+
+
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(canonical_edge_lists(), st.sampled_from([1, 2, 5, 1 << 22]))
+def test_triangle_kernel_matches_bruteforce(monkeypatch, canon, chunk):
+    """The numpy kernel finds every triangle of a canonical edge list once,
+    with the indices of its three edges — on empty graphs, and with the
+    per-chunk wedge cap patched small so the multi-chunk path runs."""
+    import itertools
+
+    import linkgraph.algorithms.triangles as T
+
+    monkeypatch.setattr(T, "WEDGE_CHUNK", chunk)
+    src = np.array([a for a, _ in canon], dtype=np.int64)
+    dst = np.array([b for _, b in canon], dtype=np.int64)
+    nodes, edges = T.triangle_kernel(src, dst)
+    es = set(canon)
+    ids = sorted({v for e in canon for v in e})
+    want = {t for t in itertools.combinations(ids, 3)
+            if all(p in es for p in itertools.combinations(t, 2))}
+    got = [tuple(sorted(r)) for r in nodes.tolist()]
+    assert sorted(got) == sorted(want)  # each triangle exactly once
+    for tri, ix in zip(got, edges.tolist()):
+        assert sorted(canon[i] for i in ix) == list(itertools.combinations(tri, 2))
+
+
 @settings(**SETTINGS)
 @given(graphs())
 def test_lpa_partition_invariance(spark, g):
