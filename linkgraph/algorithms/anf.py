@@ -76,25 +76,26 @@ def _estimate(sketches: DataFrame) -> DataFrame:
     )
 
 
-def _anf_curve_local(edges: DataFrame, nodes: DataFrame, sk: DataFrame, max_h: int):
-    """Driver-local sketch propagation below DRIVER_EDGE_THRESHOLD (r6) —
+def _anf_curve_local(edges: DataFrame, sk: DataFrame, max_h: int):
+    """Driver-local sketch propagation below the driver crossover (r6) —
     the union-find / pull-engine hybrid crossover applied to ANF. The
     initial FM bitmasks are still the Spark-computed xxhash64 sketches
     (collected once: n×R longs); each hop is then one dst-grouped OR
     (np.bitwise_or.reduceat) instead of ~4 exchanges, with bit-identical
     masks (OR is order-free) and the same estimate arithmetic (b = 63 −
     sentinel cases or trailing zeros of ~mask, est = 2^mean(b)/φ — all
-    exact small-int sums). Returns None above the threshold or when the
-    edge list references ids outside the node set (the distributed loop's
-    outer-join semantics differ there)."""
+    exact small-int sums). Returns None when the edge list or the n×R
+    sketch table is over the driver crossover, or when the edge list
+    references ids outside the node set (the distributed loop's outer-join
+    semantics differ there)."""
     import numpy as np
 
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
+    from linkgraph.algorithms.blocks import collect_if_small
 
-    e = edges.localCheckpoint(eager=True)
-    if e.count() > DRIVER_EDGE_THRESHOLD:
+    epd = collect_if_small(edges)
+    sk_pd = None if epd is None else collect_if_small(sk)
+    if sk_pd is None:
         return None
-    sk_pd = sk.toPandas()
     ids = np.sort(sk_pd["id"].unique().astype(np.int64))
     n = len(ids)
     R = int(sk_pd["trial"].max()) + 1 if n else 1
@@ -103,7 +104,6 @@ def _anf_curve_local(edges: DataFrame, nodes: DataFrame, sk: DataFrame, max_h: i
         np.searchsorted(ids, sk_pd["id"].to_numpy(np.int64)),
         sk_pd["trial"].to_numpy(np.int64),
     ] = sk_pd["mask"].to_numpy(np.int64)
-    epd = e.toPandas()
     es, ed = epd["_s"].to_numpy(np.int64), epd["_d"].to_numpy(np.int64)
     ps, pd_ = np.searchsorted(ids, es), np.searchsorted(ids, ed)
     ok = (
@@ -178,7 +178,7 @@ def neighborhood_function(
     sk = _init_sketches(graph.nodes.select("id"), num_trials).localCheckpoint(
         eager=True
     )
-    curve_local = _anf_curve_local(edges, graph.nodes.select("id"), sk, max_h)
+    curve_local = _anf_curve_local(edges, sk, max_h)
     if curve_local is not None:
         return spark.createDataFrame(
             [(h, round(v, 3)) for h, v in curve_local],

@@ -71,28 +71,34 @@ EDGES_PER_BLOCK = 1 << 18  # ≥256k edges per block: real numpy work per task
 EDGES_PER_PULL_TASK = 1 << 20
 
 
+def _store_edge_count(block_path: str) -> int:
+    return sum(int(v) for v in read_manifest(block_path)["parts"].values())
+
+
 def _pull_task_count(block_path: str, num_blocks: int) -> int:
     try:
-        m = read_manifest(block_path)
-        n_edges = sum(int(v) for v in m["parts"].values())
+        n_edges = _store_edge_count(block_path)
     except OSError:
         return num_blocks
     return max(1, min(int(num_blocks), -(-n_edges // EDGES_PER_PULL_TASK)))
 
-# Shared hybrid crossover: row counts at or below this fit comfortably on the
-# driver, so the driver-numpy path (union-find, coarsened Louvain, InfoMap
-# sweeps) beats ~10 distributed fixpoint jobs. One constant — tuning it for
-# a bigger driver moves every algorithm's crossover together.
+# The hybrid crossover, shared by every algorithm with a driver-local path:
+# a table of at most this many rows fits comfortably on the driver, where
+# numpy beats ~10 distributed fixpoint jobs. It is read at call time and
+# only in this module (collect_if_small and pull_engine), so assigning
+# blocks.DRIVER_EDGE_THRESHOLD moves every algorithm's crossover together.
 DRIVER_EDGE_THRESHOLD = 2_000_000
 
 
-def collect_if_small(df: DataFrame) -> pd.DataFrame | None:
-    """``df`` as pandas when it has at most DRIVER_EDGE_THRESHOLD rows, else
-    None. The LIMIT-bounded probe and the collect are one job: above the
-    threshold at most threshold + 1 rows reach the driver and are dropped,
-    and no full scan or count runs."""
-    pdf = df.limit(DRIVER_EDGE_THRESHOLD + 1).toPandas()
-    return None if len(pdf) > DRIVER_EDGE_THRESHOLD else pdf
+def collect_if_small(df: DataFrame, budget: int | None = None) -> pd.DataFrame | None:
+    """``df`` as pandas when it has at most ``budget`` rows (default
+    DRIVER_EDGE_THRESHOLD), else None. The LIMIT-bounded probe and the
+    collect are one job: above the budget at most budget + 1 rows reach the
+    driver and are dropped, and no full scan or count runs."""
+    if budget is None:
+        budget = DRIVER_EDGE_THRESHOLD
+    pdf = df.limit(budget + 1).toPandas()
+    return None if len(pdf) > budget else pdf
 
 
 def index_edges(
@@ -154,6 +160,19 @@ def _load_part(path: str, part: int, names: list[str]) -> dict | None:
     if len(_MMAP_CACHE) > 4096:
         _MMAP_CACHE.clear()
     return blk
+
+
+def _edge_buffer(path: str, part: int, n_edges: int) -> np.ndarray:
+    """A per-edge float64 scratch buffer for one block, reused across
+    supersteps: fresh ~8B/edge anonymous allocations each superstep cost
+    hundreds of ms of page faults on large blocks (measured on the
+    403M-edge bench)."""
+    key = ("pe", path, part)
+    buf = _MMAP_CACHE.get(key)
+    if buf is None or len(buf) != n_edges:
+        buf = np.empty(n_edges)
+        _MMAP_CACHE[key] = buf
+    return buf
 
 
 def _finalize_store(
@@ -461,14 +480,7 @@ def scatter_partials(rank_blocks: DataFrame, block_path: str) -> DataFrame:
                     ids[np.minimum(pos, len(ids) - 1)] == src_ids
                 )
                 r_src = np.where(ok, vals[np.minimum(pos, len(ids) - 1)], 0.0)
-                # reuse the per-edge buffer across supersteps: fresh ~8B/edge
-                # anonymous allocations each superstep cost hundreds of ms of
-                # page faults on large blocks (measured on the 403M-edge bench)
-                key = ("pe", block_path, int(row.part))
-                buf = _MMAP_CACHE.get(key)
-                if buf is None or len(buf) != len(blk["w_norm"]):
-                    buf = np.empty(len(blk["w_norm"]))
-                    _MMAP_CACHE[key] = buf
+                buf = _edge_buffer(block_path, int(row.part), len(blk["w_norm"]))
                 np.multiply(
                     np.repeat(r_src, np.diff(blk["indptr"])), blk["w_norm"], out=buf
                 )
@@ -503,11 +515,7 @@ def scatter_partials_combined(rank_blocks: DataFrame, block_path: str) -> DataFr
                 pos = np.searchsorted(ids, src_ids)
                 ok = (pos < len(ids)) & (ids[np.minimum(pos, len(ids) - 1)] == src_ids)
                 r_src = np.where(ok, vals[np.minimum(pos, len(ids) - 1)], 0.0)
-                key = ("pe", block_path, int(row.part))
-                buf = _MMAP_CACHE.get(key)
-                if buf is None or len(buf) != len(blk["w_norm"]):
-                    buf = np.empty(len(blk["w_norm"]))
-                    _MMAP_CACHE[key] = buf
+                buf = _edge_buffer(block_path, int(row.part), len(blk["w_norm"]))
                 np.multiply(
                     np.repeat(r_src, np.diff(blk["indptr"])), blk["w_norm"], out=buf
                 )
@@ -674,145 +682,76 @@ def write_pull_blocks(
     _finalize_store(manifest, path, num_blocks, meta)
 
 
-def pull_superstep(
-    sc, block_path: str, num_blocks: int, n: int, p: np.ndarray
-) -> np.ndarray:
-    """One pull superstep: broadcast p, per-slice gather, reassemble on driver.
+def _pull_block(x: np.ndarray, blk: dict, slice_len: int, buf: np.ndarray) -> np.ndarray:
+    """Σ_{u→v} x[u]·w_norm(u,v) over one CSC block's target slice: one
+    gather, multiply and bincount per column of ``x`` (an n vector or an
+    n×k matrix; the result has the same trailing shape)."""
+    cols = x if x.ndim == 2 else x[:, None]
+    out = np.empty((slice_len, cols.shape[1]))
+    for j in range(cols.shape[1]):
+        np.take(cols[:, j], blk["src"], out=buf)
+        np.multiply(buf, blk["w_norm"], out=buf)
+        out[:, j] = np.bincount(blk["slice_pos"], weights=buf, minlength=slice_len)
+    return out.reshape((slice_len,) + x.shape[1:])
 
-    Returns the contribution vector Σ_{u→v} p[u]·w_norm(u,v), indexed by id.
+
+def _slice_len(n: int, part: int, num_blocks: int) -> int:
+    return max(0, (n - part + num_blocks - 1) // num_blocks)
+
+
+def pull_superstep(
+    sc, block_path: str, num_blocks: int, n: int, x: np.ndarray
+) -> np.ndarray:
+    """One pull superstep: broadcast x (an n vector or an n×k matrix —
+    every column in the same job), per-slice gather, reassemble on the
+    driver. Returns Σ_{u→v} x[u]·w_norm(u,v), indexed by id, shaped like x.
     """
-    bc = sc.broadcast(p)
+    tail = x.shape[1:]
+    bc = sc.broadcast(np.ascontiguousarray(x))
 
     def task(part: int):
         blk = _load_part(block_path, part, _PULL_ARRAYS)
-        slice_len = max(0, (n - part + num_blocks - 1) // num_blocks)
+        slice_len = _slice_len(n, part, num_blocks)
         if blk is None:
-            return part, np.zeros(slice_len).tobytes()
-        # per-edge buffer reuse (see scatter_gather): avoids ~8B/edge of
-        # fresh anonymous pages + faults every superstep
-        key = ("pe", block_path, part)
-        buf = _MMAP_CACHE.get(key)
-        if buf is None or len(buf) != len(blk["w_norm"]):
-            buf = np.empty(len(blk["w_norm"]))
-            _MMAP_CACHE[key] = buf
-        np.take(bc.value, blk["src"], out=buf)
-        np.multiply(buf, blk["w_norm"], out=buf)
-        contrib = np.bincount(blk["slice_pos"], weights=buf, minlength=slice_len)
-        return part, contrib.tobytes()
+            return part, np.zeros((slice_len,) + tail).tobytes()
+        buf = _edge_buffer(block_path, part, len(blk["w_norm"]))
+        return part, _pull_block(bc.value, blk, slice_len, buf).tobytes()
 
     n_tasks = _pull_task_count(block_path, num_blocks)
     results = sc.parallelize(range(num_blocks), n_tasks).map(task).collect()
-    out = np.zeros(n)
+    out = np.zeros((n,) + tail)
     for part, buf in results:
-        out[part::num_blocks] = np.frombuffer(buf, np.float64)
+        out[part::num_blocks] = np.frombuffer(buf, np.float64).reshape((-1,) + tail)
     bc.destroy()
     return out
 
 
 def pull_engine(sc, block_path: str, num_blocks: int, n: int):
-    """→ step(p) -> contrib, choosing the execution side ONCE per run.
+    """→ step(x) -> contrib for an n vector or n×k matrix x, choosing the
+    execution side ONCE per run.
 
-    Hybrid crossover (same DRIVER_EDGE_THRESHOLD contract as union-find /
-    coarsened Louvain / InfoMap): when the store's total edge count — read
-    from the manifest, no job — fits the driver budget, each superstep is
-    a driver-local gather-multiply-bincount over the SAME mmap'd block
-    arrays (zero Spark jobs per superstep; this host's per-job floor is
-    ~150-350 ms, which dominated every superstep of a small graph).
-    Beyond the threshold, the distributed one-job ``pull_superstep`` path
-    is unchanged — the 100 TB shape is identical, only the barrier moves.
+    When the store's total edge count — read from the manifest, no job —
+    fits DRIVER_EDGE_THRESHOLD, each superstep is a driver-local
+    gather-multiply-bincount over the SAME mmap'd block arrays (zero Spark
+    jobs per superstep; the per-job floor, ~150-350 ms at local[4],
+    dominated every superstep of a small graph). Beyond the threshold,
+    each step is one distributed ``pull_superstep`` job — the 100 TB shape
+    is identical, only the barrier moves. Both sides run ``_pull_block``,
+    so their results are bit-identical.
     """
-    manifest = read_manifest(block_path)
-    n_edges = sum(int(v) for v in manifest["parts"].values())
-    if n_edges > DRIVER_EDGE_THRESHOLD:
-        return lambda p: pull_superstep(sc, block_path, num_blocks, n, p)
+    if _store_edge_count(block_path) > DRIVER_EDGE_THRESHOLD:
+        return lambda x: pull_superstep(sc, block_path, num_blocks, n, x)
     parts = []
     for k in range(num_blocks):
         blk = _load_part(block_path, k, _PULL_ARRAYS)
         if blk is not None and len(blk["w_norm"]):
-            parts.append(
-                (
-                    k,
-                    np.asarray(blk["src"]),
-                    np.asarray(blk["slice_pos"]),
-                    np.asarray(blk["w_norm"]),
-                    max(0, (n - k + num_blocks - 1) // num_blocks),
-                )
-            )
+            buf = _edge_buffer(block_path, k, len(blk["w_norm"]))
+            parts.append((k, blk, _slice_len(n, k, num_blocks), buf))
 
-    def step(p: np.ndarray) -> np.ndarray:
-        out = np.zeros(n)
-        for k, src, slice_pos, w, slice_len in parts:
-            out[k::num_blocks] = np.bincount(
-                slice_pos, weights=p[src] * w, minlength=slice_len
-            )
+    def step(x: np.ndarray) -> np.ndarray:
+        out = np.zeros((n,) + x.shape[1:])
+        for k, blk, slice_len, buf in parts:
+            out[k::num_blocks] = _pull_block(x, blk, slice_len, buf)
         return out
 
     return step
-
-
-def pull_engine_multi(sc, block_path: str, num_blocks: int, n: int):
-    """Multi-vector twin of :func:`pull_engine` (n×k matrices)."""
-    manifest = read_manifest(block_path)
-    n_edges = sum(int(v) for v in manifest["parts"].values())
-    if n_edges > DRIVER_EDGE_THRESHOLD:
-        return lambda P: pull_superstep_multi(sc, block_path, num_blocks, n, P)
-    parts = []
-    for k in range(num_blocks):
-        blk = _load_part(block_path, k, _PULL_ARRAYS)
-        if blk is not None and len(blk["w_norm"]):
-            parts.append(
-                (
-                    k,
-                    np.asarray(blk["src"]),
-                    np.asarray(blk["slice_pos"]),
-                    np.asarray(blk["w_norm"]),
-                    max(0, (n - k + num_blocks - 1) // num_blocks),
-                )
-            )
-
-    def step(P: np.ndarray) -> np.ndarray:
-        kk = P.shape[1]
-        out = np.zeros((n, kk))
-        for k, src, slice_pos, w, slice_len in parts:
-            o = np.empty((slice_len, kk))
-            for j in range(kk):
-                o[:, j] = np.bincount(
-                    slice_pos, weights=P[src, j] * w, minlength=slice_len
-                )
-            out[k::num_blocks, :] = o
-        return out
-
-    return step
-
-
-def pull_superstep_multi(
-    sc, block_path: str, num_blocks: int, n: int, P: np.ndarray
-) -> np.ndarray:
-    """One pull superstep over k vectors at once: broadcast the n×k matrix
-    ONCE and compute every column's gather inside a single job — k-fold
-    fewer scheduler round-trips and broadcasts than k `pull_superstep`
-    calls (the hot loop of subspace/orthogonal iteration)."""
-    k = P.shape[1]
-    bc = sc.broadcast(np.ascontiguousarray(P))
-
-    def task(part: int):
-        blk = _load_part(block_path, part, _PULL_ARRAYS)
-        slice_len = max(0, (n - part + num_blocks - 1) // num_blocks)
-        if blk is None:
-            return part, np.zeros((slice_len, k)).tobytes()
-        src, w = blk["src"], blk["w_norm"]
-        out = np.empty((slice_len, k))
-        for j in range(k):
-            out[:, j] = np.bincount(
-                blk["slice_pos"], weights=bc.value[src, j] * w,
-                minlength=slice_len,
-            )
-        return part, out.tobytes()
-
-    n_tasks = _pull_task_count(block_path, num_blocks)
-    results = sc.parallelize(range(num_blocks), n_tasks).map(task).collect()
-    out = np.zeros((n, k))
-    for part, buf in results:
-        out[part::num_blocks, :] = np.frombuffer(buf, np.float64).reshape(-1, k)
-    bc.destroy()
-    return out

@@ -8,9 +8,9 @@ Spark split: the flow distribution (PageRank visit rates) is computed with
 the DISTRIBUTED PageRank engine — that's the part that touches every edge
 at full scale. The greedy module optimization runs on the driver:
 
-* below ``driver_threshold`` edges — directly over the collected
-  (edge, rate) arrays, exactly like the reference's single-threaded
-  optimizer;
+* when the edge and rank tables fit the driver crossover
+  (``blocks.collect_if_small``) — directly over the collected (edge, rate)
+  arrays, exactly like the reference's single-threaded optimizer;
 * above it — the graph is first COARSENED with a distributed Louvain
   level (communities → super-nodes, per-edge stationary flow and visit
   rates aggregated per community with DataFrame ops), and the greedy map-
@@ -34,9 +34,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
-
-from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD  # shared crossover
 
 
 def _plogp(x):
@@ -169,15 +168,13 @@ def infomap(
     max_sweeps: int = 20,
     damping: float = 0.85,
     weighted: bool = True,
-    driver_threshold: int = DRIVER_EDGE_THRESHOLD,
 ) -> DataFrame:
     """→ (id, community) [+ .codelength]. Deterministic greedy sweeps in
     ascending node-id order, modules labeled by min member id. Graphs
-    whose edge table exceeds ``driver_threshold`` are Louvain-coarsened
+    whose edge table is over the driver crossover are Louvain-coarsened
     distributed first; the sweep then runs over communities."""
     from linkgraph.algorithms.pagerank import PageRank, _contiguous_n
 
-    n_edges = graph.edges.count()
     # flow: distributed PageRank visit rates, normalized to Σp = 1
     # (pull/CSC fast path when ids are contiguous AND the rank vector fits
     # driver memory — same cap as PageRank's own auto resolution; beyond
@@ -200,13 +197,12 @@ def infomap(
     ).run(graph)
     spark = graph.nodes.sparkSession
 
-    if n_edges <= driver_threshold:
+    epdf = blocks.collect_if_small(
+        graph.edges.filter(F.col("src") != F.col("dst")).select("src", "dst", "weight")
+    )
+    rpdf = None if epdf is None else blocks.collect_if_small(ranks.select("id", "rank"))
+    if rpdf is not None:
         # ---- direct driver path (reference-faithful)
-        rpdf = ranks.select("id", "rank").toPandas()
-        epdf = graph.edges.filter(F.col("src") != F.col("dst")).select(
-            "src", "dst", "weight"
-        ).toPandas()
-
         ids = rpdf["id"].to_numpy(np.int64)
         order = np.argsort(ids)
         ids = ids[order]
@@ -247,7 +243,7 @@ def infomap(
                 (F.col("p") * F.col("weight") / F.col("ws")).alias("flow"),
             )
         )
-        comm = louvain(graph, max_levels=1, driver_threshold=driver_threshold)
+        comm = louvain(graph, max_levels=1)
         lbl_s = comm.select(F.col("id").alias("src"), F.col("community").alias("cs"))
         lbl_d = comm.select(F.col("id").alias("dst"), F.col("community").alias("cd"))
         super_edges = (
@@ -262,20 +258,16 @@ def infomap(
             .groupBy(F.col("community").alias("sid"))
             .agg(F.sum("p").alias("p"))
         )
-        n_super = super_p.count()
-        n_super_edges = super_edges.count()
-        # the contracted graph must fit REAL driver capacity (not the
-        # caller's possibly-artificial crossover threshold)
-        cap = max(driver_threshold, DRIVER_EDGE_THRESHOLD)
-        if max(n_super, n_super_edges) > cap:
+        # the contracted graph must fit the driver crossover
+        spdf = blocks.collect_if_small(super_p)
+        sepdf = None if spdf is None else blocks.collect_if_small(super_edges)
+        if sepdf is None:
             raise ValueError(
-                f"infomap: Louvain coarsening left {n_super} communities / "
-                f"{n_super_edges} super-edges > driver capacity ({cap}) — "
-                f"coarsen further (more louvain levels) or raise "
-                f"driver_threshold explicitly."
+                "infomap: Louvain coarsening left more communities or "
+                "super-edges than the driver crossover "
+                "(blocks.DRIVER_EDGE_THRESHOLD) holds — coarsen further "
+                "(more louvain levels) or raise the crossover."
             )
-        spdf = super_p.toPandas()
-        sepdf = super_edges.toPandas()
         sids = np.sort(spdf["sid"].to_numpy(np.int64))
         p_sup = np.zeros(len(sids))
         p_sup[np.searchsorted(sids, spdf["sid"].to_numpy(np.int64))] = (

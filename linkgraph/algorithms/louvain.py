@@ -18,7 +18,7 @@ phase that must be distributed is level 1 over the full-size edge table;
 every later level runs on the (tiny) coarsened graph with an exact
 numpy kernel on the driver. Both kernels implement the *same* synchronous
 parity-alternating move rule, so results are identical path-for-path
-(tested). ``driver_threshold`` picks the crossover by edge count.
+(tested). ``blocks.collect_if_small`` picks the crossover by edge rows.
 """
 
 from __future__ import annotations
@@ -27,11 +27,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
-
-# below this many (both-direction) edge rows the whole multilevel loop runs
-# in one numpy kernel on the driver — Spark job overhead dominates there
-from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD  # shared crossover
 
 
 # ------------------------------------------------------------- numpy kernel
@@ -159,8 +156,11 @@ def _canon_level(lv: np.ndarray, n: int) -> np.ndarray:
 
 
 def _collect_edges(und: DataFrame):
-    """Both-direction edge DataFrame → (src, dst, w) numpy + dense id map."""
-    pdf = und.select("src", "dst", "weight").toPandas()
+    """Both-direction (src, dst, weight) rows → (src, dst, w) numpy + dense
+    id map, or None when the table is over the driver crossover."""
+    pdf = blocks.collect_if_small(und.select("src", "dst", "weight"))
+    if pdf is None:
+        return None
     src = pdf["src"].to_numpy(np.int64)
     dst = pdf["dst"].to_numpy(np.int64)
     w = pdf["weight"].to_numpy(np.float64)
@@ -274,14 +274,13 @@ def louvain(
     move_rounds: int = 10,
     seed_col: str | None = None,
     include_intermediate: bool = False,
-    driver_threshold: int = DRIVER_EDGE_THRESHOLD,
 ):
     """→ (id, community) [+ .levels list of per-level assignments].
 
     Runs move+coarsen until modularity stops improving or max_levels.
-    Level 1 runs distributed when the edge table exceeds
-    ``driver_threshold`` rows; coarsened levels (and small graphs
-    outright) run the exact numpy kernel on the driver.
+    Level 1 runs distributed when the edge table is over the driver
+    crossover (``blocks.collect_if_small``); coarsened levels (and small
+    graphs outright) run the exact numpy kernel on the driver.
     """
     spark = graph.nodes.sparkSession
     und = (
@@ -289,7 +288,6 @@ def louvain(
         .filter(F.col("src") != F.col("dst"))
         .localCheckpoint(eager=True)
     )
-    n_rows = und.count()
     m2 = und.agg(F.sum("weight")).first()[0] or 1.0
     nodes = graph.nodes
 
@@ -303,9 +301,10 @@ def louvain(
         result.final_modularity = q
         return result
 
-    if n_rows <= driver_threshold:
+    local = _collect_edges(und)
+    if local is not None:
         # ---- all-driver path (small graph / tests / contract scale)
-        src, dst, w, ids = _collect_edges(und)
+        src, dst, w, ids = local
         n = len(ids)
         init = None
         seed_label_ids = None
@@ -377,11 +376,12 @@ def louvain(
     q1 = modularity(und, mapping, m2)
     coarse = _contract(und, mapping)
     # If level 1 barely contracted (oscillation, exhausted move_rounds,
-    # near-singleton communities), the coarsened table can still exceed
-    # driver_threshold — collecting it could OOM the driver. Keep running
-    # DISTRIBUTED move+contract levels until it fits (or levels run out).
+    # near-singleton communities), the coarsened table can still be over
+    # the driver crossover — collecting it could OOM the driver. Keep
+    # running DISTRIBUTED move+contract levels until it fits (or levels
+    # run out).
     levels_left = max_levels - 1
-    while levels_left > 0 and coarse.count() > driver_threshold:
+    while levels_left > 0 and (local := _collect_edges(coarse)) is None:
         snodes = (
             coarse.select(F.col("src").alias("id"))
             .unionByName(coarse.select(F.col("dst").alias("id")))
@@ -405,7 +405,7 @@ def louvain(
         levels.append(mapping)
         coarse = _contract(coarse, cres)
     if levels_left > 0:
-        csrc, cdst, cw, cids = _collect_edges(coarse)
+        csrc, cdst, cw, cids = local
         cn = len(cids)
         cmap, _, q = _np_louvain(csrc, cdst, cw, cn, m2, levels_left, move_rounds,
                                  node_ids=cids)

@@ -28,7 +28,7 @@ def _lpa_local(
     max_iterations: int,
     run_to_convergence: bool,
 ):
-    """Driver-local synchronous LPA below DRIVER_EDGE_THRESHOLD (r6) —
+    """Driver-local synchronous LPA below the driver crossover (r6) —
     the union-find / pull-engine hybrid crossover. Consumes the SAME
     prepared edge view (direction/dedup already applied) and initial
     labels as the distributed loop; per round the (dst, label) vote sums
@@ -38,22 +38,22 @@ def _lpa_local(
     adds EXACTLY in any order, so winners match the distributed plan
     bit-for-bit on the contract graphs; arbitrary real weights could
     differ in ties at ~1e-16 (same caveat as any re-ordered float sum).
-    Returns None above the threshold (the distributed loop is the
-    at-scale path and the only path under checkpoint/resume)."""
+    Returns None when the edge or the label table is over the driver
+    crossover (the distributed loop is the at-scale path and the only path
+    under checkpoint/resume)."""
     import numpy as np
     import pandas as pd
 
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD, index_edges
+    from linkgraph.algorithms.blocks import collect_if_small, index_edges
 
-    e = edges.localCheckpoint(eager=True)
-    if e.count() > DRIVER_EDGE_THRESHOLD:
+    ep = collect_if_small(edges.select("src", "dst", "weight"))
+    lab_pd = None if ep is None else collect_if_small(labels)
+    if lab_pd is None:
         return None
-    lab_pd = labels.toPandas()
     ids = lab_pd["id"].to_numpy(np.int64)
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
     lab = lab_pd["label"].to_numpy(np.int64)[order]
-    ep = e.select("src", "dst", "weight").toPandas()
     n = len(ids)
     # drop edges with endpoints outside the node set — the distributed
     # loop's joins do the same

@@ -95,29 +95,29 @@ def _level_sync_msbfs(edges: DataFrame, assign: DataFrame, max_depth: int | None
 
 
 def _msbfs_sums_local(edges: DataFrame, nodes: DataFrame, max_depth, mode):
-    """Driver-local bitset MSBFS below DRIVER_EDGE_THRESHOLD (r6) — the
+    """Driver-local bitset MSBFS below the driver crossover (r6) — the
     same hybrid crossover as union-find / the pull engine. IDENTICAL
     arithmetic to the distributed path: the same 64-sources-per-word
     bitsets, one OR-propagation per level (np.bitwise_or.reduceat over a
     dst-sorted edge array), popcount deltas accumulated per (node,
     depth) with the same increment formulas — reachable counts are exact
     ints and dist_sum products/sums are the same float64 ops, so outputs
-    are value-identical. Returns None above the threshold (the chunked
-    distributed MSBFS is unchanged and remains the at-scale path)."""
+    are value-identical. Returns None when the edge or the node table is
+    over the driver crossover (the chunked distributed MSBFS is unchanged
+    and remains the at-scale path)."""
     import numpy as np
 
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
+    from linkgraph.algorithms.blocks import collect_if_small
 
-    e = edges.localCheckpoint(eager=True)
-    if e.count() > DRIVER_EDGE_THRESHOLD:
+    epd = collect_if_small(edges)
+    node_pd = None if epd is None else collect_if_small(nodes)
+    if node_pd is None:
         return None
     spark = nodes.sparkSession
-    node_pd = nodes.toPandas()
     ids = np.sort(node_pd["id"].to_numpy(np.int64))
     n = len(ids)
     if n == 0:
         return spark.createDataFrame([], "id long, reachable long, dist_sum double")
-    epd = e.toPandas()
     src = np.searchsorted(ids, epd["src"].to_numpy(np.int64))
     dst = np.searchsorted(ids, epd["dst"].to_numpy(np.int64))
     order = np.argsort(dst, kind="stable")

@@ -26,7 +26,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
+from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
 
 
@@ -370,7 +370,7 @@ def minimum_spanning_forest(graph: Graph, maximum: bool = False) -> DataFrame:
     O(log n) rounds; deterministic (weight, src, dst) tie-break keeps the
     pick set cycle-free.
     """
-    from linkgraph.algorithms.wcc import wcc as _wcc
+    from linkgraph.algorithms.wcc import union_find_mapping, wcc as _wcc
 
     und = graph.canonical_edges().persist()
     und.count()
@@ -403,33 +403,33 @@ def minimum_spanning_forest(graph: Graph, maximum: bool = False) -> DataFrame:
             .select("src", "dst", "weight", "c1", "c2")
             .localCheckpoint(eager=True)
         )
-        n_picks = picks.count()
-        if n_picks == 0:
-            break
-        # two components may pick the same edge — dedup within the round;
-        # across rounds an edge cannot recur (its endpoints share a comp)
-        new_edges = picks.select("src", "dst", "weight").distinct()
-        forest = (
-            new_edges if forest is None else forest.unionByName(new_edges)
-        ).localCheckpoint(eager=True)
         # contract: connected components of the comp-merge graph. One pick
         # per component, so the merge graph has ≤ #components edges — when
         # that is driver-sized, a numpy union-find beats ~10 distributed WCC
         # jobs (same hybrid as Louvain's coarsened levels); the distributed
         # WCC remains the path for the first rounds at 10^9-component scale.
-        if n_picks <= DRIVER_EDGE_THRESHOLD:
-            from linkgraph.algorithms.wcc import union_find_mapping
-
-            mapping = union_find_mapping(picks.select("c1", "c2"), spark).select(
-                F.col("id").alias("comp_old"), F.col("component").alias("comp_new")
-            )
-        else:
+        pick_pd = blocks.collect_if_small(picks.select("c1", "c2"))
+        if pick_pd is None:
+            if picks.isEmpty():  # only when the crossover is below zero rows
+                break
             merge_graph = Graph.from_edges(
                 picks.select(F.col("c1").alias("src"), F.col("c2").alias("dst"))
             )
             mapping = _wcc(merge_graph).select(
                 F.col("id").alias("comp_old"), F.col("component").alias("comp_new")
             )
+        elif pick_pd.empty:
+            break
+        else:
+            mapping = union_find_mapping(pick_pd, spark).select(
+                F.col("id").alias("comp_old"), F.col("component").alias("comp_new")
+            )
+        # two components may pick the same edge — dedup within the round;
+        # across rounds an edge cannot recur (its endpoints share a comp)
+        new_edges = picks.select("src", "dst", "weight").distinct()
+        forest = (
+            new_edges if forest is None else forest.unionByName(new_edges)
+        ).localCheckpoint(eager=True)
         comp = (
             comp.join(mapping, comp.comp == mapping.comp_old, "left")
             .select("id", F.coalesce("comp_new", "comp").alias("comp"))
@@ -449,17 +449,16 @@ def k_spanning_tree(graph: Graph, k: int, maximum: bool = False) -> DataFrame:
     resulting k clusters. Cluster id = min member id (via hash-min WCC on
     the kept tree edges — all DataFrame ops).
     """
-    from linkgraph.algorithms.wcc import wcc as _wcc
+    from linkgraph.algorithms.wcc import union_find_mapping, wcc as _wcc
 
     forest = minimum_spanning_forest(graph, maximum=maximum).persist()
     order = F.asc("weight") if maximum else F.desc("weight")
     cuts = forest.orderBy(order, F.asc("src"), F.asc("dst")).limit(max(k - 1, 0))
     kept = forest.join(cuts, ["src", "dst"], "left_anti").localCheckpoint(eager=True)
     # tree has n-1 edges; hybrid labeling like the Borůvka contraction
-    if kept.count() <= DRIVER_EDGE_THRESHOLD:
-        from linkgraph.algorithms.wcc import union_find_mapping
-
-        mapping = union_find_mapping(kept.select("src", "dst"))
+    kept_pd = blocks.collect_if_small(kept.select("src", "dst"))
+    if kept_pd is not None:
+        mapping = union_find_mapping(kept_pd, kept.sparkSession)
         out = (
             graph.nodes.select("id")
             .join(mapping, "id", "left")

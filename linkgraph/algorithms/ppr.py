@@ -96,8 +96,9 @@ def ppr_batch(
 
 def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
     """CSC-block pull execution of the seed batch (r6): when node ids are
-    contiguous 0..n-1, all S PPR vectors advance as ONE n×S numpy matrix —
-    per superstep a single zero-shuffle job (blocks.pull_superstep_multi)
+    contiguous 0..n-1, all S PPR vectors advance as ONE n×S numpy matrix
+    through ``blocks.pull_engine`` — per superstep a driver-local gather, or
+    above the crossover a single zero-shuffle ``pull_superstep`` job,
     instead of the join loop's edges⋈shares shuffle + groupBy + left-join
     + localCheckpoint. Identical arithmetic (w_norm = 1/outdeg baked at
     store build, no dangling redistribution); the store is shared with
@@ -130,7 +131,7 @@ def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
         for j, s in enumerate(seeds):
             ind[int(s), j] = 1.0
         P = ind.copy()
-        pull_step = blocks.pull_engine_multi(sc, path, b, n)
+        pull_step = blocks.pull_engine(sc, path, b, n)
         for _ in range(iterations):
             C = pull_step(P)
             P = (1.0 - d) * ind + d * C

@@ -148,18 +148,15 @@ def sample_neighbors(
     return ok.unionByName(fallback)
 
 
-def _k_hop_sample_local(edges: DataFrame, seeds: DataFrame, fanouts) -> DataFrame:
-    """Driver-local k-hop sampling below DRIVER_EDGE_THRESHOLD (r6) — the
-    union-find / pull-engine hybrid crossover. All arithmetic is exact
-    int64 (the same affine rank hash), and per-src top-f is a lexsort by
-    (src, hash, dst) — identical rows to the distributed salted top-f and
-    to the SQL oracle's ROW_NUMBER. The gate uses a LIMIT-bounded count
-    probe so huge edge inputs never pay a full scan just to be told to
-    stay distributed."""
+def _k_hop_sample_local(ep, seeds: DataFrame, fanouts) -> DataFrame:
+    """Driver-local k-hop sampling over the collected (src, dst) edges
+    ``ep`` (r6 hybrid crossover). All arithmetic is exact int64 (the same
+    affine rank hash), and per-src top-f is a lexsort by (src, hash, dst)
+    — identical rows to the distributed salted top-f and to the SQL
+    oracle's ROW_NUMBER."""
     import numpy as np
     import pandas as pd
 
-    ep = edges.select("src", "dst").toPandas()
     src = ep["src"].to_numpy(np.int64)
     dst = ep["dst"].to_numpy(np.int64)
     frontier = np.unique(
@@ -184,7 +181,7 @@ def _k_hop_sample_local(edges: DataFrame, seeds: DataFrame, fanouts) -> DataFram
         )
         frontier = np.unique(cd[keep])
     out = pd.concat(hop_frames, ignore_index=True)
-    return edges.sparkSession.createDataFrame(
+    return seeds.sparkSession.createDataFrame(
         out, schema="hop int, src long, dst long"
     )
 
@@ -203,12 +200,13 @@ def k_hop_sample(
     lineage — the frontier feeds both the output and the next hop."""
     if not fanouts:
         raise ValueError("fanouts must name at least one hop, e.g. (25, 10)")
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
+    from linkgraph.algorithms import blocks
 
-    # bounded probe: reads at most threshold+1 rows, never a full scan
-    probe = edges.limit(DRIVER_EDGE_THRESHOLD + 1).count()
-    if probe <= DRIVER_EDGE_THRESHOLD:
-        return _k_hop_sample_local(edges, seeds, fanouts)
+    # bounded probe + collect: huge edge inputs never pay a full scan just
+    # to be told to stay distributed
+    ep = blocks.collect_if_small(edges.select("src", "dst"))
+    if ep is not None:
+        return _k_hop_sample_local(ep, seeds, fanouts)
     frontier = seeds.select(
         F.col(seeds.columns[0]).cast("long").alias("src")
     ).distinct()

@@ -12,9 +12,10 @@ Execution model mirrors PageRank's pull strategy:
   * N is materialized ONCE as a CSC block store (one shuffle; edges are
     symmetrized and weighted 1/√(d_u d_v) at build time — pure DataFrame
     prep, so Catalyst plans the degree joins);
-  * each multiply is k zero-shuffle `blocks.pull_superstep` passes (one
-    per column — the vectors broadcast, the store stays worker-resident
-    and OS-page-cache shared);
+  * each multiply is one `blocks.pull_engine` step over the n×k basis:
+    driver-local while the store fits the driver crossover, else one
+    zero-shuffle `blocks.pull_superstep` job for all k columns (the basis
+    broadcast once, the store worker-resident and OS-page-cache shared);
   * the QR factorization runs on the n×k driver matrix (same n ≤ ~1e8
     broadcast ceiling as PageRank's pull path, documented there); beyond
     it, the push/CSR strategy is the fallback just as for PageRank.
@@ -125,9 +126,9 @@ def spectral_embedding(
         X, _ = np.linalg.qr(rng.standard_normal((n, k)))
         evals = np.zeros(k)
         prev_evals = np.zeros(k)
+        step = blocks.pull_engine(sc, path, b, n)
         for _ in range(max_iterations):
-            # ONE broadcast + ONE job per iteration for all k columns
-            Y = blocks.pull_superstep_multi(sc, path, b, n, X)
+            Y = step(X)
             # Rayleigh quotients before re-orthonormalization
             evals = np.einsum("ij,ij->j", X, Y)
             X, _ = np.linalg.qr(Y)

@@ -24,8 +24,11 @@ the reference's `threshold` config.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
 from linkgraph.io import CheckpointManager
 
@@ -90,17 +93,19 @@ def wcc(
             start, e, _ = latest
     e = e.localCheckpoint(eager=True)
 
-    # r6 hybrid crossover (union_find_mapping's documented contract): the
-    # symmetrized edge list is materialized anyway, so one cheap count
-    # routes driver-sized graphs through numpy union-find — identical
+    # r6 hybrid crossover: the symmetrized edge list is materialized anyway,
+    # so one LIMIT-bounded collect of its canonical (u < v) half routes
+    # driver-sized graphs through numpy union-find — identical
     # min-member-id labels, zero fixpoint rounds (each large/small-star
     # round costs ~6 jobs of fixed scheduler overhead). The distributed
     # Kiveris fixpoint below is unchanged and remains the at-scale path
     # (and the only path under checkpoint/resume).
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
-
-    if checkpoint is None and e.count() <= 2 * DRIVER_EDGE_THRESHOLD:
-        mapping = union_find_mapping(e.filter(F.col("u") < F.col("v")))
+    pairs = (
+        None if checkpoint is not None
+        else blocks.collect_if_small(e.filter(F.col("u") < F.col("v")))
+    )
+    if pairs is not None:
+        mapping = union_find_mapping(pairs, nodes.sparkSession)
         out = (
             nodes.join(mapping, "id", "left")
             .select("id", F.coalesce("component", F.col("id")).alias("component"))
@@ -140,26 +145,21 @@ def wcc(
     return out
 
 
-def union_find_mapping(pairs_df: DataFrame, spark=None) -> DataFrame:
-    """Driver-side union-find over a DRIVER-SIZED pair DataFrame (src, dst)
-    → broadcastable mapping (id, component), component = min member id.
+def union_find_mapping(pairs: pd.DataFrame, spark) -> DataFrame:
+    """Driver-side union-find over collected (src, dst) pairs → broadcastable
+    mapping (id, component), component = min member id.
 
     The hybrid small-side of the Kiveris WCC: contraction graphs (Borůvka
-    merge rounds, cut spanning trees, Louvain coarsenings) shrink
-    geometrically, and once they fit on the driver a numpy union-find
-    replaces ~10 distributed fixpoint jobs. Callers must bound the input
-    (count it first); the distributed `wcc` stays the path at scale.
+    merge rounds, cut spanning trees, near-dup pair lists) shrink
+    geometrically, and once ``blocks.collect_if_small`` returns their
+    pairs a numpy union-find replaces ~10 distributed fixpoint jobs; the
+    distributed `wcc` stays the path at scale.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = spark or pairs_df.sparkSession
-    pdf = pairs_df.toPandas()
-    if len(pdf) == 0:
+    if len(pairs) == 0:
         return spark.createDataFrame([], "id long, component long")
-    pairs = pdf.to_numpy(dtype=np.int64)
-    uniq, inv = np.unique(pairs, return_inverse=True)
-    inv = inv.reshape(pairs.shape)
+    ends = pairs.to_numpy(dtype=np.int64)
+    uniq, inv = np.unique(ends, return_inverse=True)
+    inv = inv.reshape(ends.shape)
     a_idx, b_idx = inv[:, 0], inv[:, 1]
     # r6: vectorized iterated min-label + pointer jumping (the numpy form
     # of hash-min; a per-pair Python find/union loop was the bottleneck at

@@ -209,16 +209,16 @@ def train_ivf_centroids_distributed(
 
     n_cells, dim = cent.shape
     # r6 hybrid crossover: when the corpus fits the driver matrix budget
-    # (LIMIT-bounded probe — never a full scan just to decide), run the
-    # same Lloyd updates on one collected matrix: same assignment argmax,
-    # same mean/normalize, zero jobs per iteration. The partial-sum
+    # (LIMIT-bounded probe + collect — never a full scan just to decide),
+    # run the same Lloyd updates on one collected matrix: same assignment
+    # argmax, same mean/normalize, zero jobs per iteration. The partial-sum
     # distributed loop below is unchanged and remains the at-scale path.
+    from linkgraph.algorithms import blocks
+
     cap = max(1, LLOYD_DRIVER_BUDGET // max(dim * 8, 1))
-    if corpus.limit(cap + 1).count() <= cap:
-        x = np.array(
-            corpus.select(F.col(vec_col).alias("v")).toPandas()["v"].tolist(),
-            dtype=np.float64,
-        )
+    local = blocks.collect_if_small(corpus.select(F.col(vec_col).alias("v")), budget=cap)
+    if local is not None:
+        x = np.array(local["v"].tolist(), dtype=np.float64)
         if len(x):
             x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
             for _ in range(iters):

@@ -210,16 +210,17 @@ def _clusters_from_pairs(pairs: DataFrame, items: DataFrame, id_col: str) -> Dat
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).localCheckpoint(eager=True)
     # r6: driver-sized pair graphs skip the distributed contraction + WCC
-    # entirely — numpy union-find over the materialized pair list (the
-    # union_find_mapping hybrid contract; identical min-member-id labels).
-    # Dense near-dup pair sets make the hash-min contraction itself several
-    # jobs of mostly fixed overhead; beyond the threshold the contraction +
-    # distributed WCC tail below is unchanged.
-    from linkgraph.algorithms.blocks import DRIVER_EDGE_THRESHOLD
+    # entirely — numpy union-find over the collected pair list (identical
+    # min-member-id labels). Dense near-dup pair sets make the hash-min
+    # contraction itself several jobs of mostly fixed overhead; beyond the
+    # driver crossover the contraction + distributed WCC tail below is
+    # unchanged.
+    from linkgraph.algorithms import blocks
     from linkgraph.algorithms.wcc import union_find_mapping
 
-    if edge_list.count() <= DRIVER_EDGE_THRESHOLD:
-        mapping = union_find_mapping(edge_list)
+    pair_pd = blocks.collect_if_small(edge_list)
+    if pair_pd is not None:
+        mapping = union_find_mapping(pair_pd, edge_list.sparkSession)
         return (
             items.select(F.col(id_col).alias("id"))
             .join(mapping, "id", "left")

@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import linkgraph.algorithms.blocks as B
 from linkgraph.graph import BOTH, Graph
 from tests.conftest import edges_df
 
@@ -57,8 +58,8 @@ def test_outgoing_sum_strategy_unchanged(spark):
 
 
 # ---------------------------------------------------------------- finding 2
-def test_louvain_distributed_extra_level_when_coarse_too_big(spark):
-    """With driver_threshold=0 every level must run distributed; the result
+def test_louvain_distributed_extra_level_when_coarse_too_big(spark, monkeypatch):
+    """With the driver crossover at 0 every level must run distributed; the result
     must still be a sane community assignment (two planted cliques)."""
     from linkgraph.algorithms.louvain import louvain
 
@@ -66,7 +67,8 @@ def test_louvain_distributed_extra_level_when_coarse_too_big(spark):
     clique_b = [(i, j, 1.0) for i in range(10, 15) for j in range(10, 15) if i != j]
     bridge = [(0, 10, 0.1), (10, 0, 0.1)]
     g = Graph.from_edges(edges_df(spark, clique_a + clique_b + bridge))
-    res = louvain(g, max_levels=3, driver_threshold=0)
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 0)
+    res = louvain(g, max_levels=3)
     comm = {r["id"]: r["community"] for r in res.collect()}
     assert len({comm[i] for i in range(5)}) == 1
     assert len({comm[i] for i in range(10, 15)}) == 1
@@ -113,7 +115,7 @@ def test_both_direction_skip_is_symmetric_and_deterministic(spark):
     assert w1 == w2
 
 
-def test_louvain_seeded_cross_threshold_parity(spark):
+def test_louvain_seeded_cross_threshold_parity(spark, monkeypatch):
     """Seeded multilevel Louvain must produce the same partition on the
     driver-numpy and distributed paths (seed labels live in their own
     label space; coarsening must map them through seed ids)."""
@@ -131,9 +133,9 @@ def test_louvain_seeded_cross_threshold_parity(spark):
     )
     r_driver = {r["id"]: r["community"]
                 for r in louvain(g, max_levels=3, seed_col="seed").collect()}
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 0)
     r_dist = {r["id"]: r["community"]
-              for r in louvain(g, max_levels=3, seed_col="seed",
-                               driver_threshold=0).collect()}
+              for r in louvain(g, max_levels=3, seed_col="seed").collect()}
 
     def parts(m):
         out = {}

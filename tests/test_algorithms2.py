@@ -2,6 +2,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+import linkgraph.algorithms.blocks as B
 from linkgraph import Graph
 from linkgraph.algorithms.betweenness import betweenness_centrality
 from linkgraph.algorithms.louvain import louvain
@@ -289,7 +290,7 @@ def test_vector_similarity_procs(spark):
     assert p.count() == 12 or p.count() == 4 * 3
 
 
-def test_louvain_driver_vs_distributed_parity(spark):
+def test_louvain_driver_vs_distributed_parity(spark, monkeypatch):
     """Both kernels implement the same synchronous parity-move rule, so the
     final PARTITION must be identical (labels are canonical min-node-id)."""
     edges = [
@@ -300,7 +301,8 @@ def test_louvain_driver_vs_distributed_parity(spark):
     ]
     g = _g(spark, edges, ids=range(9))
     small = louvain(g, max_levels=3, move_rounds=8)  # numpy path
-    big = louvain(g, max_levels=3, move_rounds=8, driver_threshold=0)
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 0)
+    big = louvain(g, max_levels=3, move_rounds=8)
 
     def partition(df):
         rows = {r["id"]: r["community"] for r in df.collect()}

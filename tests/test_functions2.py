@@ -6,6 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+import linkgraph.algorithms.blocks as B
 from linkgraph.graph import Graph
 
 from conftest import edges_df
@@ -140,10 +141,12 @@ def test_infomap_two_communities(spark):
     assert res.codelength > 0
 
 
-def test_infomap_coarsened_parity(spark):
-    """driver_threshold=0 forces the Louvain-coarsened distributed path;
-    on clearly separable communities it must agree with the direct driver
-    optimizer — same partition, codelength equal to ~1e-9."""
+def test_infomap_coarsened_parity(spark, monkeypatch):
+    """A driver crossover below the 22 edge rows (and at or above the
+    coarsened super graph: 3 communities, 4 super-edges) forces the
+    Louvain-coarsened distributed path; on clearly separable communities
+    it must agree with the direct driver optimizer — same partition,
+    codelength equal to ~1e-9."""
     from linkgraph.algorithms.infomap import infomap
 
     edges = [
@@ -157,7 +160,8 @@ def test_infomap_coarsened_parity(spark):
                          nodes=spark.createDataFrame([(i,) for i in range(9)], "id long"))
     direct = infomap(g)
     got_d = {r["id"]: r["community"] for r in direct.collect()}
-    coarse = infomap(g, driver_threshold=0)
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 10)
+    coarse = infomap(g)
     got_c = {r["id"]: r["community"] for r in coarse.collect()}
     assert got_d == got_c
     assert abs(direct.codelength - coarse.codelength) < 1e-9

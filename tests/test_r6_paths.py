@@ -1,14 +1,17 @@
-"""Round-6 path-parity regressions.
+"""Driver-vs-distributed path-parity regressions.
 
-The r6 optimization round added driver-local crossovers below
-DRIVER_EDGE_THRESHOLD (WCC union-find, MSBFS, ANF, LPA, k-hop sampling,
-cluster tails, the pull engine, k-means Lloyd, the bitset Jaccard kernel,
-the Arrow cosine kernel), later joined by SCC, the numpy triangle kernel
-(triangle count and stream), k-truss and k-core — which means ordinary
-small-fixture tests now exercise the DRIVER paths only. These tests force the DISTRIBUTED /
-codegen paths by monkeypatching the crossover constants and assert they
-produce exactly the same results as the default (driver) paths, so the
-at-scale code can never silently rot.
+Every hybrid algorithm decides between a driver-local path and a
+distributed one through the single crossover in ``blocks``:
+``blocks.collect_if_small`` for DataFrames (WCC union-find, MSBFS, ANF,
+LPA, k-hop sampling, the cluster tails, minimum spanning forest and
+k-spanning tree, Louvain, InfoMap, Lloyd k-means, SCC, the numpy triangle
+kernel for triangle count and stream, k-truss and k-core) and
+``blocks.pull_engine`` for pull block stores (PageRank, PPR, HITS,
+spectral embedding) — which means ordinary small-fixture tests exercise
+the DRIVER paths only. These tests force the DISTRIBUTED / codegen paths
+by setting ``blocks.DRIVER_EDGE_THRESHOLD`` (or a kernel-choice cap) and
+assert they produce exactly the same results as the default (driver)
+paths, so the at-scale code can never silently rot.
 """
 
 from __future__ import annotations
@@ -190,28 +193,20 @@ def test_clusters_from_pairs_distributed_matches_local(spark, monkeypatch):
     assert local == dist
 
 
-def test_pull_engine_distributed_matches_local(spark, tmp_path, small_graph):
+@pytest.mark.parametrize("matrix,num_blocks", [(False, 4), (True, 3)], ids=["vector", "matrix"])
+def test_pull_engine_distributed_matches_local(spark, tmp_path, small_graph, matrix, num_blocks):
     sc = spark.sparkContext
     edges = small_graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))
     path = str(tmp_path / "pull")
-    B.write_pull_blocks(edges, 4, path)
+    B.write_pull_blocks(edges, num_blocks, path)
     n = 60
-    p = np.arange(n, dtype=np.float64) + 1.0
-    local_step = B.pull_engine(sc, path, 4, n)  # 180 edges << threshold
-    dist = B.pull_superstep(sc, path, 4, n, p)
-    assert np.array_equal(local_step(p), dist)  # bit-identical arithmetic
-
-
-def test_pull_engine_multi_distributed_matches_local(spark, tmp_path, small_graph):
-    sc = spark.sparkContext
-    edges = small_graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))
-    path = str(tmp_path / "pullm")
-    B.write_pull_blocks(edges, 3, path)
-    n = 60
-    P = np.vstack([np.ones(n), np.arange(n, dtype=np.float64)]).T
-    local_step = B.pull_engine_multi(sc, path, 3, n)
-    dist = B.pull_superstep_multi(sc, path, 3, n, P)
-    assert np.array_equal(local_step(P), dist)
+    x = np.arange(n, dtype=np.float64) + 1.0
+    if matrix:  # n×2: every column in one superstep
+        x = np.vstack([np.ones(n), x]).T
+    local_step = B.pull_engine(sc, path, num_blocks, n)  # 180 edges << threshold
+    dist = B.pull_superstep(sc, path, num_blocks, n, x)
+    assert dist.shape == x.shape
+    assert np.array_equal(local_step(x), dist)  # bit-identical arithmetic
 
 
 def test_fused_csr_matches_pull_rounded(spark, small_graph):
@@ -399,20 +394,124 @@ def test_kcore_edgeless_distributed_matches_local(spark, edgeless_graph, monkeyp
     assert local[0] == [(i, False) for i in range(5)]
 
 
-def test_scc_node_probe_falls_back_to_distributed(spark, monkeypatch):
-    # few edges but a node table over the budget: the node table must not
-    # be collected, and the distributed path gives the same components
+def _scc_case(g):
     from linkgraph.algorithms.scc import _scc_local, scc
 
+    return (
+        _scc_local(g.edges.select("src", "dst"), g.nodes, 100),
+        _rows(scc(g), ["id", "component"]),
+    )
+
+
+def _lpa_case(g):
+    from linkgraph.algorithms.lpa import _lpa_local, label_propagation
+
+    edges = g.undirected_edges().filter(F.col("src") != F.col("dst"))
+    labels = g.nodes.select("id", F.col("id").alias("label"))
+    return (
+        _lpa_local(edges, labels, True, 6, True),
+        _rows(label_propagation(g, max_iterations=6), ["id", "label"]),
+    )
+
+
+def _closeness_case(g):
+    from linkgraph.algorithms.msbfs import _msbfs_sums_local, closeness_centrality
+
+    edges = g.undirected_edges().select("src", "dst").filter(F.col("src") != F.col("dst"))
+    return (
+        _msbfs_sums_local(edges, g.nodes.select("id"), None, "closeness"),
+        _rows(closeness_centrality(g), ["id", "centrality"]),
+    )
+
+
+def _anf_case(g):
+    from linkgraph.algorithms.anf import _anf_curve_local, _init_sketches, neighborhood_function
+
+    edges = g.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
+    return (
+        _anf_curve_local(edges, _init_sketches(g.nodes.select("id"), 4), 8),
+        _rows(neighborhood_function(g, max_h=8, num_trials=4), ["h", "neighborhood_estimate"]),
+    )
+
+
+@pytest.mark.parametrize(
+    "case", [_scc_case, _lpa_case, _closeness_case, _anf_case],
+    ids=["scc", "lpa", "closeness", "anf"],
+)
+def test_node_probe_falls_back_to_distributed(spark, case, monkeypatch):
+    # few edges but a node table over the budget: the node table must not
+    # be collected, and the distributed path gives the same result
     e = spark.createDataFrame(
         [(0, 1, 1.0), (1, 0, 1.0), (2, 3, 1.0)], "src long, dst long, weight double"
     )
     g = Graph.from_edges(e, nodes=spark.range(12).select(F.col("id")))
-    local = _rows(scc(g), ["id", "component"])
+    local, default = case(g)
+    assert local is not None  # the default side is the driver
     monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 5)
-    assert _scc_local(g.edges.select("src", "dst"), g.nodes, 100) is None
-    assert _rows(scc(g), ["id", "component"]) == local
-    assert dict(local)[1] == 0 and dict(local)[11] == 11
+    local, dist = case(g)
+    assert local is None
+    assert dist == default
+    if case is _scc_case:
+        assert dict(default)[1] == 0 and dict(default)[11] == 11
+
+
+def _forbid_union_find(monkeypatch):
+    """Force every crossover distributed and make the driver union-find
+    raise, so a gate that ignores the constant fails loudly."""
+    import importlib
+
+    def boom(*a, **kw):
+        raise AssertionError("union_find_mapping called on the distributed side")
+
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", -1)
+    monkeypatch.setattr(importlib.import_module("linkgraph.algorithms.wcc"),
+                        "union_find_mapping", boom)
+
+
+@pytest.mark.parametrize("maximum", [False, True])
+def test_minimum_spanning_forest_distributed_matches_local(spark, messy_graph, maximum, monkeypatch):
+    from linkgraph.algorithms.paths import minimum_spanning_forest
+
+    def run():
+        return _rows(minimum_spanning_forest(messy_graph, maximum=maximum),
+                     ["src", "dst", "weight"])
+
+    local = run()
+    _forbid_union_find(monkeypatch)
+    assert run() == local
+    # a spanning tree per component: wheel + chain (16 nodes) and the
+    # 5-clique + node 99 (6 nodes)
+    assert len(local) == (16 - 1) + (6 - 1)
+
+
+def test_k_spanning_tree_distributed_matches_local(spark, messy_graph, monkeypatch):
+    from linkgraph.algorithms.paths import k_spanning_tree
+
+    def run():
+        return _rows(k_spanning_tree(messy_graph, k=3), ["id", "cluster"])
+
+    local = run()
+    _forbid_union_find(monkeypatch)
+    assert run() == local
+    assert len({c for _, c in local}) > 3  # isolated nodes are clusters too
+
+
+def test_spectral_embedding_distributed_matches_local(spark, small_graph, monkeypatch):
+    from linkgraph.algorithms.spectral import spectral_embedding
+
+    jobs = []
+    superstep = B.pull_superstep
+    monkeypatch.setattr(B, "pull_superstep", lambda *a: jobs.append(a) or superstep(*a))
+
+    def run():
+        before = len(jobs)
+        rows = spectral_embedding(small_graph, k=3, max_iterations=5).collect()
+        return sorted((r["id"], tuple(r["vec"])) for r in rows), len(jobs) - before
+
+    (local, local_jobs), (dist, dist_jobs) = _both_sides(monkeypatch, run)
+    assert (local_jobs, dist_jobs) == (0, 5)  # one n×k job per iteration
+    assert local == dist  # bit-identical: both sides run the same kernel
+    assert len(local) == 60 and len(local[0][1]) == 3
 
 
 def test_store_key_changes_when_part_file_rewritten_in_place(spark, tmp_path):
@@ -443,3 +542,32 @@ def test_store_key_changes_when_part_file_rewritten_in_place(spark, tmp_path):
     with open(part, "ab") as f:  # appended bytes: the size changes
         f.write(b"\0")
     assert key() not in (k1, k2)
+
+
+def test_only_blocks_names_the_crossover_constant():
+    # the driver crossover is one seam: every gate reads the constant
+    # through blocks (collect_if_small / pull_engine), so no other module
+    # may import, bind or read DRIVER_EDGE_THRESHOLD. Docstrings, comments
+    # and messages may mention it.
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(B.__file__).resolve().parents[1]
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.resolve() == pathlib.Path(B.__file__).resolve():
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name
+            elif isinstance(node, ast.Constant):
+                name = node.value  # getattr(blocks, "...")
+            else:
+                continue
+            if name == "DRIVER_EDGE_THRESHOLD":
+                offenders.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
+    assert offenders == []
