@@ -90,13 +90,24 @@ def _pull_task_count(block_path: str, num_blocks: int) -> int:
 DRIVER_EDGE_THRESHOLD = 2_000_000
 
 
-def collect_if_small(df: DataFrame, budget: int | None = None) -> pd.DataFrame | None:
+def collect_if_small(
+    df: DataFrame, budget: int | None = None, count_first: bool = False
+) -> pd.DataFrame | None:
     """``df`` as pandas when it has at most ``budget`` rows (default
     DRIVER_EDGE_THRESHOLD), else None. The LIMIT-bounded probe and the
     collect are one job: above the budget at most budget + 1 rows reach the
-    driver and are dropped, and no full scan or count runs."""
+    driver and are dropped, and no full scan or count runs.
+
+    ``count_first`` is for a checkpointed table in a loop that is usually
+    over budget at scale (Borůvka rounds, coarse Louvain levels): a count
+    decides first, so no rows move when the table does not fit, at one
+    extra job when it does. Over a 2,000,000-row budget the dropped
+    collect costs ~1.1 s and ~0.7 GB of transient driver JVM heap against
+    ~0.17 s for the count (3M-row two-long table, local[2] on a 4-core Xeon)."""
     if budget is None:
         budget = DRIVER_EDGE_THRESHOLD
+    if count_first and df.count() > budget:
+        return None
     pdf = df.limit(budget + 1).toPandas()
     return None if len(pdf) > budget else pdf
 
@@ -745,13 +756,16 @@ def pull_engine(sc, block_path: str, num_blocks: int, n: int):
     for k in range(num_blocks):
         blk = _load_part(block_path, k, _PULL_ARRAYS)
         if blk is not None and len(blk["w_norm"]):
-            buf = _edge_buffer(block_path, k, len(blk["w_norm"]))
-            parts.append((k, blk, _slice_len(n, k, num_blocks), buf))
+            parts.append((k, blk, _slice_len(n, k, num_blocks)))
+    # one scratch buffer for the run, held by this closure only (not the
+    # process-wide cache the executor tasks use), so it is freed with it
+    buf = np.empty(max((len(blk["w_norm"]) for _, blk, _ in parts), default=0))
 
     def step(x: np.ndarray) -> np.ndarray:
         out = np.zeros((n,) + x.shape[1:])
-        for k, blk, slice_len, buf in parts:
-            out[k::num_blocks] = _pull_block(x, blk, slice_len, buf)
+        for k, blk, slice_len in parts:
+            view = buf[: len(blk["w_norm"])]
+            out[k::num_blocks] = _pull_block(x, blk, slice_len, view)
         return out
 
     return step

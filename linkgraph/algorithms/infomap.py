@@ -8,7 +8,7 @@ Spark split: the flow distribution (PageRank visit rates) is computed with
 the DISTRIBUTED PageRank engine — that's the part that touches every edge
 at full scale. The greedy module optimization runs on the driver:
 
-* when the edge and rank tables fit the driver crossover
+* when the edge table fits the driver crossover
   (``blocks.collect_if_small``) — directly over the collected (edge, rate)
   arrays, exactly like the reference's single-threaded optimizer;
 * above it — the graph is first COARSENED with a distributed Louvain
@@ -197,12 +197,14 @@ def infomap(
     ).run(graph)
     spark = graph.nodes.sparkSession
 
-    epdf = blocks.collect_if_small(
-        graph.edges.filter(F.col("src") != F.col("dst")).select("src", "dst", "weight")
-    )
-    rpdf = None if epdf is None else blocks.collect_if_small(ranks.select("id", "rank"))
-    if rpdf is not None:
+    # the side follows the edge table alone: the coarsened path is an
+    # approximation, and Louvain keeps every isolated node its own
+    # community, so it is no fallback for a large node table
+    epdf = blocks.collect_if_small(graph.edges.select("src", "dst", "weight"))
+    if epdf is not None:
         # ---- direct driver path (reference-faithful)
+        epdf = epdf[epdf["src"] != epdf["dst"]]
+        rpdf = ranks.select("id", "rank").toPandas()
         ids = rpdf["id"].to_numpy(np.int64)
         order = np.argsort(ids)
         ids = ids[order]

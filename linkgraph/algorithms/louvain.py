@@ -155,10 +155,12 @@ def _canon_level(lv: np.ndarray, n: int) -> np.ndarray:
     return rep[lv]
 
 
-def _collect_edges(und: DataFrame):
+def _collect_edges(und: DataFrame, count_first: bool = False):
     """Both-direction (src, dst, weight) rows → (src, dst, w) numpy + dense
     id map, or None when the table is over the driver crossover."""
-    pdf = blocks.collect_if_small(und.select("src", "dst", "weight"))
+    pdf = blocks.collect_if_small(
+        und.select("src", "dst", "weight"), count_first=count_first
+    )
     if pdf is None:
         return None
     src = pdf["src"].to_numpy(np.int64)
@@ -381,7 +383,7 @@ def louvain(
     # running DISTRIBUTED move+contract levels until it fits (or levels
     # run out).
     levels_left = max_levels - 1
-    while levels_left > 0 and (local := _collect_edges(coarse)) is None:
+    while levels_left > 0 and (local := _collect_edges(coarse, count_first=True)) is None:
         snodes = (
             coarse.select(F.col("src").alias("id"))
             .unionByName(coarse.select(F.col("dst").alias("id")))

@@ -408,10 +408,8 @@ def minimum_spanning_forest(graph: Graph, maximum: bool = False) -> DataFrame:
         # that is driver-sized, a numpy union-find beats ~10 distributed WCC
         # jobs (same hybrid as Louvain's coarsened levels); the distributed
         # WCC remains the path for the first rounds at 10^9-component scale.
-        pick_pd = blocks.collect_if_small(picks.select("c1", "c2"))
+        pick_pd = blocks.collect_if_small(picks.select("c1", "c2"), count_first=True)
         if pick_pd is None:
-            if picks.isEmpty():  # only when the crossover is below zero rows
-                break
             merge_graph = Graph.from_edges(
                 picks.select(F.col("c1").alias("src"), F.col("c2").alias("dst"))
             )

@@ -167,6 +167,31 @@ def test_infomap_coarsened_parity(spark, monkeypatch):
     assert abs(direct.codelength - coarse.codelength) < 1e-9
 
 
+def test_infomap_side_follows_edges_not_nodes(spark, monkeypatch):
+    """14 edge rows and 40 nodes (34 isolated), crossover at 20: the edge
+    table fits, so InfoMap stays on the exact driver optimizer even though
+    the node table does not. The coarsened path is no fallback here —
+    Louvain keeps each isolated node its own community, 36 > 20."""
+    from linkgraph.algorithms.infomap import infomap
+
+    edges = [
+        (0, 1, 1.0), (1, 2, 1.0), (0, 2, 1.0),
+        (3, 4, 1.0), (4, 5, 1.0), (3, 5, 1.0),
+        (2, 3, 0.1),
+    ]
+    und = edges + [(b, a, w) for a, b, w in edges]
+    g = Graph.from_edges(edges_df(spark, und),
+                         nodes=spark.createDataFrame([(i,) for i in range(40)], "id long"))
+    default = infomap(g)
+    got_d = {r["id"]: r["community"] for r in default.collect()}
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 20)
+    small = infomap(g)
+    got_s = {r["id"]: r["community"] for r in small.collect()}
+    assert got_s == got_d
+    assert small.codelength == default.codelength
+    assert len(got_s) == 40 and got_s[0] != got_s[3]
+
+
 def test_dense_pairwise_guard(spark):
     from linkgraph.algorithms.vector_similarity import cosine
 

@@ -456,14 +456,15 @@ def test_node_probe_falls_back_to_distributed(spark, case, monkeypatch):
 
 
 def _forbid_union_find(monkeypatch):
-    """Force every crossover distributed and make the driver union-find
-    raise, so a gate that ignores the constant fails loudly."""
+    """Force every non-empty table over the crossover (0 rows) and make the
+    driver union-find raise, so a gate that ignores the constant fails
+    loudly. An empty table still fits, which ends the Borůvka loop."""
     import importlib
 
     def boom(*a, **kw):
         raise AssertionError("union_find_mapping called on the distributed side")
 
-    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", -1)
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 0)
     monkeypatch.setattr(importlib.import_module("linkgraph.algorithms.wcc"),
                         "union_find_mapping", boom)
 
