@@ -14,6 +14,16 @@ propagation, which needs O(diameter) rounds and degrades catastrophically
 on chain-shaped graphs (spanning trees, paths; measured 100+ rounds on a
 500-node tree before this rewrite).
 
+Before the first round, each partition of the symmetric edge table is
+contracted in place by a ``mapInArrow`` union-find (``_contract_partitions``):
+every node the partition connects is rewired onto the minimum id of its
+partition-local component. Connectivity is unchanged, no partition grows
+and no shuffle precedes it; when a partition holds a whole component (one
+big component, or few partitions), the star rounds that follow only
+confirm the fixpoint. Graphs whose canonical edge list fits
+``blocks.DRIVER_EDGE_THRESHOLD`` skip all of this for one driver-side
+union-find.
+
 Component id = **min original node id in the component** — canonical and
 stable, unlike the reference's arbitrary DSS roots (its tests assert
 membership/sizes, not ids; SURVEY.md §7 hard-part 5).
@@ -26,6 +36,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.algorithms import blocks
@@ -34,11 +45,18 @@ from linkgraph.io import CheckpointManager
 
 
 def _symmetrize(e: DataFrame) -> DataFrame:
-    return (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
+    """Both directions of every distinct non-loop pair of ``e``. The
+    distinct runs on the canonical (least, greatest) pair, so it shuffles
+    one row per pair and both directions of a pair share a partition."""
+    pairs = (
+        e.select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
+        .filter(F.col("a") < F.col("b"))
         .distinct()
     )
+    return pairs.select(F.inline(F.array(
+        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+        F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+    )))
 
 
 def _star(e: DataFrame, large: bool) -> DataFrame:
@@ -58,6 +76,53 @@ def _star(e: DataFrame, large: bool) -> DataFrame:
             .unionByName(m.select("u", F.col("m").alias("v")))
         )
     return _symmetrize(out)
+
+
+def _min_labels(a_idx: np.ndarray, b_idx: np.ndarray, n: int) -> np.ndarray:
+    """Component labels of nodes ``0..n-1`` joined by the pairs
+    ``(a_idx[i], b_idx[i])``: each node's label is the smallest node index
+    in its component.
+
+    Vectorized iterated min-label + pointer jumping (the numpy form of
+    hash-min; a per-pair Python find/union loop was the bottleneck at ~1M
+    pairs). Labels start at self and only ever decrease, so label chases
+    are valid pointer jumps."""
+    label = np.arange(n)
+    while True:
+        before = label.copy()
+        np.minimum.at(label, a_idx, label[b_idx])
+        np.minimum.at(label, b_idx, label[a_idx])
+        label = label[label]
+        label = label[label]
+        if np.array_equal(label, before):
+            return label
+
+
+def _contract_partitions(e: DataFrame) -> DataFrame:
+    """Per-partition union-find over the edge table ``e``: each partition
+    emits one ``(node, root)`` row for every node its rows connect to a
+    smaller partition-local root (the local component's min id).
+
+    A local component of k nodes spans at least k - 1 of the partition's
+    rows and becomes k - 1 star rows, so no partition grows, and the
+    components of ``e`` are unchanged. Rows come in one direction only and
+    repeat across partitions: ``_symmetrize`` the result."""
+
+    def kernel(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        u = np.concatenate([b.column("u").to_numpy() for b in batches])
+        v = np.concatenate([b.column("v").to_numpy() for b in batches])
+        uniq, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+        label = _min_labels(inv[: len(u)], inv[len(u):], len(uniq))
+        moved = label != np.arange(len(uniq))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(uniq[moved], pa.int64()), pa.array(uniq[label[moved]], pa.int64())],
+            names=["u", "v"],
+        )
+
+    return e.mapInArrow(kernel, schema="u long, v long")
 
 
 def _fingerprint(e: DataFrame) -> tuple:
@@ -97,9 +162,9 @@ def wcc(
     # so one LIMIT-bounded collect of its canonical (u < v) half routes
     # driver-sized graphs through numpy union-find — identical
     # min-member-id labels, zero fixpoint rounds (each large/small-star
-    # round costs ~6 jobs of fixed scheduler overhead). The distributed
-    # Kiveris fixpoint below is unchanged and remains the at-scale path
-    # (and the only path under checkpoint/resume).
+    # round costs ~14 jobs, mostly fixed scheduler overhead). The
+    # distributed Kiveris fixpoint below remains the at-scale path (and the
+    # only path under checkpoint/resume).
     pairs = (
         None if checkpoint is not None
         else blocks.collect_if_small(e.filter(F.col("u") < F.col("v")))
@@ -115,6 +180,10 @@ def wcc(
         out.did_converge = True
         return out
 
+    # the distinct in _symmetrize precedes the first fingerprint: a row
+    # repeated across partitions XOR-cancels in the hash and costs one more
+    # round. Also applied after a resume, as it preserves connectivity.
+    e = _symmetrize(_contract_partitions(e)).localCheckpoint(eager=True)
     prev_fp = _fingerprint(e)
 
     step = start
@@ -160,21 +229,8 @@ def union_find_mapping(pairs: pd.DataFrame, spark) -> DataFrame:
     ends = pairs.to_numpy(dtype=np.int64)
     uniq, inv = np.unique(ends, return_inverse=True)
     inv = inv.reshape(ends.shape)
-    a_idx, b_idx = inv[:, 0], inv[:, 1]
-    # r6: vectorized iterated min-label + pointer jumping (the numpy form
-    # of hash-min; a per-pair Python find/union loop was the bottleneck at
-    # ~1M pairs). Labels are indices into the SORTED uniq array, start at
-    # self, and only ever decrease, so label chases are valid pointer
-    # jumps and the fixpoint label is the index of the component's min id.
-    label = np.arange(len(uniq))
-    while True:
-        before = label.copy()
-        np.minimum.at(label, a_idx, label[b_idx])
-        np.minimum.at(label, b_idx, label[a_idx])
-        label = label[label]
-        label = label[label]
-        if np.array_equal(label, before):
-            break
+    # indices into the SORTED uniq array: the smallest index is the min id
+    label = _min_labels(inv[:, 0], inv[:, 1], len(uniq))
     return F.broadcast(
         spark.createDataFrame(
             pd.DataFrame({"id": uniq, "component": uniq[label]})

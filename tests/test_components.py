@@ -1,9 +1,12 @@
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from linkgraph import Graph
+from linkgraph.algorithms import blocks
 from linkgraph.algorithms.lpa import label_propagation
 from linkgraph.algorithms.triangles import triangle_count, triangle_count_global, triangle_stream
-from linkgraph.algorithms.wcc import wcc, wcc_stats
+from linkgraph.algorithms.wcc import _contract_partitions, wcc, wcc_stats
 
 from conftest import edges_df, nodes_df
 from oracles import np_lpa_sync, np_triangles, np_wcc
@@ -43,12 +46,60 @@ def test_wcc_threshold(spark):
     assert sizes == [1, 1, 3, 4]
 
 
-def test_wcc_long_chain_pointer_jumping(spark):
-    # path of 40 nodes must converge well inside 100 rounds (O(log n))
-    chain = [(i, i + 1, 1.0) for i in range(40)]
-    g = Graph.from_edges(edges_df(spark, chain))
-    got = {r["id"]: r["component"] for r in wcc(g, max_iterations=12).collect()}
-    assert set(got.values()) == {0}
+@pytest.fixture()
+def uncoalesced(spark):
+    """Keep every shuffle at its 4 partitions: coalesced into one, a small
+    edge table is solved whole by the per-partition contraction and the
+    star rounds never run."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, before)
+
+
+def _shuffled_path(n, seed):
+    rng = np.random.default_rng(seed)
+    ids = rng.permutation(n)
+    path = [(int(ids[i]), int(ids[i + 1]), 1.0) for i in range(n - 1)]
+    return [path[i] for i in rng.permutation(n - 1)]
+
+
+def test_wcc_long_chain_pointer_jumping(spark, uncoalesced, monkeypatch):
+    # a shuffled 500-node path on the distributed side must converge in
+    # O(log n) star rounds, far inside the 250 hash-min would need
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 0)
+    g = Graph.from_edges(edges_df(spark, _shuffled_path(500, seed=3)))
+    out = wcc(g, max_iterations=12)
+    got = {r["id"]: r["component"] for r in out.collect()}
+    assert got == {i: 0 for i in range(500)}
+    assert out.did_converge and 2 <= out.iterations <= 12
+
+
+def test_wcc_contraction_invariants(spark):
+    rng = np.random.default_rng(11)
+    n, m = 300, 240
+    edges = [(int(a), int(b), 1.0) for a, b in rng.integers(0, n, size=(m, 2)) if a != b]
+    sym = (
+        edges_df(spark, edges + [(d, s, w) for s, d, w in edges])
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .repartition(4)
+        .localCheckpoint(eager=True)
+    )
+    out = _contract_partitions(sym).localCheckpoint(eager=True)
+
+    def per_partition(df):
+        return dict(df.groupBy(F.spark_partition_id()).count().collect())
+
+    rows_in, rows_out = per_partition(sym), per_partition(out)
+    assert len(rows_in) == 4
+    assert all(rows_out.get(p, 0) <= c for p, c in rows_in.items())
+
+    ids = sorted({x for s, d, _ in edges for x in (s, d)})
+    want = np_wcc(edges, ids)
+    pairs = [(r["u"], r["v"]) for r in out.collect()]
+    assert all(want[u] == want[v] for u, v in pairs)
+    assert np_wcc([(u, v, 1.0) for u, v in pairs], ids) == want
 
 
 def test_wcc_stats(spark):
@@ -58,17 +109,17 @@ def test_wcc_stats(spark):
     assert row["maxSetSize"] == 7
 
 
-def test_wcc_checkpoint_resume(spark, tmp_path):
+def test_wcc_checkpoint_resume(spark, tmp_path, uncoalesced):
     from linkgraph.io import CheckpointManager
 
-    chain = [(i, i + 1, 1.0) for i in range(30)]
-    g = Graph.from_edges(edges_df(spark, chain))
+    g = Graph.from_edges(edges_df(spark, _shuffled_path(500, seed=5)))
     full = {r["id"]: r["component"] for r in wcc(g).collect()}
     ck = CheckpointManager(spark, str(tmp_path / "wcc_ck"))
-    wcc(g, max_iterations=2, checkpoint=ck, checkpoint_every=1)  # interrupted early
+    cut = wcc(g, max_iterations=2, checkpoint=ck, checkpoint_every=1)
+    assert not cut.did_converge  # interrupted early
     resumed = {r["id"]: r["component"]
                for r in wcc(g, checkpoint=ck, checkpoint_every=1).collect()}
-    assert resumed == full
+    assert resumed == full == {i: 0 for i in range(500)}
 
 
 def test_lpa_seeded_clusters(spark):

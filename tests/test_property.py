@@ -60,11 +60,15 @@ def _uf_components(n, edges):
     return out
 
 
+@pytest.mark.parametrize("threshold", [None, 0], ids=["default", "distributed"])
 @settings(**SETTINGS)
 @given(graphs())
-def test_wcc_matches_union_find(spark, g):
+def test_wcc_matches_union_find(spark, monkeypatch, threshold, g):
+    from linkgraph.algorithms import blocks
     from linkgraph.algorithms.wcc import wcc
 
+    if threshold is not None:
+        monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", threshold)
     n, edges = g
     if not edges:
         return
