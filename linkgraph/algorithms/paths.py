@@ -14,8 +14,8 @@ Spark mapping (SURVEY.md §2.3/§2.8):
   (a natural DataFrame fixpoint, parallel per bucket).
 * BFS/DFS stream — iterative frontier joins with `left_anti` visited
   subtraction.
-* MST — **Borůvka** (not Prim: Borůvka's min-edge-per-component + hash-min
-  merge is the shuffle-friendly formulation).
+* MST — **Borůvka** (not Prim: Borůvka's min-edge-per-component +
+  connected-components merge is the shuffle-friendly formulation).
 """
 
 from __future__ import annotations
@@ -365,10 +365,11 @@ def minimum_spanning_forest(graph: Graph, maximum: bool = False) -> DataFrame:
     Borůvka, fully distributed: per component pick its min (max) incident
     edge (window over all edges), union the picked edges into the forest
     DataFrame (never collected to the driver), and merge components by
-    running hash-min WCC over the tiny component-merge graph — Borůvka's
-    contraction as a DataFrame fixpoint instead of a driver union-find.
-    O(log n) rounds; deterministic (weight, src, dst) tie-break keeps the
-    pick set cycle-free.
+    connected components of the component-merge graph: a driver union-find
+    once the picks fit ``blocks.collect_if_small``, else ``wcc()``. The
+    gate counts first, and an empty pick set ends the loop. O(log n)
+    rounds; deterministic (weight, src, dst) tie-break keeps the pick set
+    cycle-free.
     """
     from linkgraph.algorithms.wcc import union_find_mapping, wcc as _wcc
 
@@ -444,26 +445,17 @@ def k_spanning_tree(graph: Graph, k: int, maximum: bool = False) -> DataFrame:
 
     Reference `impl/spanningTrees/KSpanningTree.java`: build the min (max)
     spanning tree, cut the k−1 heaviest (lightest) tree edges, label the
-    resulting k clusters. Cluster id = min member id (via hash-min WCC on
-    the kept tree edges — all DataFrame ops).
+    resulting k clusters. Cluster id = min member id (``wcc()`` over the
+    kept tree edges, which picks the driver or distributed side).
     """
-    from linkgraph.algorithms.wcc import union_find_mapping, wcc as _wcc
+    from linkgraph.algorithms.wcc import wcc
 
     forest = minimum_spanning_forest(graph, maximum=maximum).persist()
     order = F.asc("weight") if maximum else F.desc("weight")
     cuts = forest.orderBy(order, F.asc("src"), F.asc("dst")).limit(max(k - 1, 0))
-    kept = forest.join(cuts, ["src", "dst"], "left_anti").localCheckpoint(eager=True)
-    # tree has n-1 edges; hybrid labeling like the Borůvka contraction
-    kept_pd = blocks.collect_if_small(kept.select("src", "dst"))
-    if kept_pd is not None:
-        mapping = union_find_mapping(kept_pd, kept.sparkSession)
-        out = (
-            graph.nodes.select("id")
-            .join(mapping, "id", "left")
-            .select("id", F.coalesce("component", "id").alias("cluster"))
-        )
-    else:
-        g2 = Graph.from_edges(kept, nodes=graph.nodes.select("id"))
-        out = _wcc(g2).select("id", F.col("component").alias("cluster"))
+    kept = forest.join(cuts, ["src", "dst"], "left_anti")
+    out = wcc(Graph.from_edges(kept, nodes=graph.nodes.select("id"))).select(
+        "id", F.col("component").alias("cluster")
+    )
     forest.unpersist()
     return out

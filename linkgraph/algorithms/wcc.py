@@ -149,7 +149,7 @@ def wcc(
     e = _symmetrize(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
-    nodes = graph.nodes.select("id").persist()
+    nodes = graph.nodes.select("id")
 
     start = 0
     if checkpoint is not None:
@@ -175,7 +175,6 @@ def wcc(
             nodes.join(mapping, "id", "left")
             .select("id", F.coalesce("component", F.col("id")).alias("component"))
         )
-        nodes.unpersist()
         out.iterations = 1  # one exact union-find pass (stats rows expect ≥ 1)
         out.did_converge = True
         return out
@@ -208,7 +207,6 @@ def wcc(
         nodes.join(labels, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
     )
-    nodes.unpersist()
     out.iterations = step
     out.did_converge = converged
     return out
@@ -218,11 +216,11 @@ def union_find_mapping(pairs: pd.DataFrame, spark) -> DataFrame:
     """Driver-side union-find over collected (src, dst) pairs → broadcastable
     mapping (id, component), component = min member id.
 
-    The hybrid small-side of the Kiveris WCC: contraction graphs (Borůvka
-    merge rounds, cut spanning trees, near-dup pair lists) shrink
-    geometrically, and once ``blocks.collect_if_small`` returns their
-    pairs a numpy union-find replaces ~10 distributed fixpoint jobs; the
-    distributed `wcc` stays the path at scale.
+    The driver side of ``wcc`` (which also serves the dedup cluster tail
+    and the k-spanning tree) and of the Borůvka merge rounds in
+    ``paths.minimum_spanning_forest``, its only callers: once
+    ``blocks.collect_if_small`` returns the pairs, a numpy union-find
+    replaces the distributed fixpoint rounds (~14 jobs each).
     """
     if len(pairs) == 0:
         return spark.createDataFrame([], "id long, component long")

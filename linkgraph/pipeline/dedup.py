@@ -190,82 +190,18 @@ def _verify_jaccard_pairs(
 
 def _clusters_from_pairs(pairs: DataFrame, items: DataFrame, id_col: str) -> DataFrame:
     """(a, b) duplicate pairs → (id_col, cluster, is_representative):
-    distributed WCC over the pair graph, min-id representative — shared
-    tail of both dedup-cluster operators.
-
-    One hash-min contraction round runs FIRST: label(u) = min(u, min
-    neighbor), edges relabeled through it. Near-dup components are dense
-    (often near-cliques), so this single aggregation collapses most of the
-    pair volume before the WCC fixpoint ever runs; correctness is exact —
-    it is literally round one of the hash-min recursion, and the pulled-back
-    components are unchanged (the component-minimum node labels itself, so
-    cluster ids stay min-member ids)."""
+    ``wcc()`` over the pair graph, min-id representative — shared tail of
+    the dedup-cluster operators. ``wcc`` picks the side (driver union-find
+    or distributed contraction + star rounds) and its eager checkpoint of
+    the symmetrized pairs evaluates the pair plan once."""
     from linkgraph.algorithms.wcc import wcc
     from linkgraph.graph import Graph
 
-    # materialize the pair list ONCE before the WCC fixpoint — the pair plan
-    # (prefix join + verify) is expensive and WCC's setup + first rounds
-    # would otherwise re-evaluate it several times
-    edge_list = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).localCheckpoint(eager=True)
-    # r6: driver-sized pair graphs skip the distributed contraction + WCC
-    # entirely — numpy union-find over the collected pair list (identical
-    # min-member-id labels). Dense near-dup pair sets make the hash-min
-    # contraction itself several jobs of mostly fixed overhead; beyond the
-    # driver crossover the contraction + distributed WCC tail below is
-    # unchanged.
-    from linkgraph.algorithms import blocks
-    from linkgraph.algorithms.wcc import union_find_mapping
-
-    pair_pd = blocks.collect_if_small(edge_list)
-    if pair_pd is not None:
-        mapping = union_find_mapping(pair_pd, edge_list.sparkSession)
-        return (
-            items.select(F.col(id_col).alias("id"))
-            .join(mapping, "id", "left")
-            .select(
-                F.col("id").alias(id_col),
-                F.coalesce("component", F.col("id")).alias("cluster"),
-                (F.col("id") == F.coalesce("component", F.col("id"))).alias(
-                    "is_representative"
-                ),
-            )
-        )
-    sym = edge_list.unionByName(
-        edge_list.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    g = Graph.from_edges(
+        pairs, src="a", dst="b", weight=None,
+        nodes=items.select(F.col(id_col).alias("id")),
     )
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("mv"))
-        .select(F.col("src").alias("u"), F.least("src", "mv").alias("lbl"))
-    )
-    contracted = (
-        sym.join(labels.select(F.col("u").alias("src"), F.col("lbl").alias("ls")), "src")
-        .join(labels.select(F.col("u").alias("dst"), F.col("lbl").alias("ld")), "dst")
-        .filter(F.col("ls") != F.col("ld"))
-        .select(F.col("ls").alias("src"), F.col("ld").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cnodes = contracted.select(F.col("src").alias("id")).unionByName(
-        contracted.select(F.col("dst").alias("id"))
-    ).distinct()
-    comp_c = wcc(Graph.from_edges(contracted, nodes=cnodes)).select(
-        F.col("id").alias("lbl"), "component"
-    )
-    # pull back: item → label → contracted component (label IS the component
-    # when the contracted graph dropped it as an isolated/self-loop node)
-    comp = (
-        items.select(F.col(id_col).alias("id"))
-        .join(labels.select(F.col("u").alias("id"), "lbl"), "id", "left")
-        .join(comp_c, "lbl", "left")
-        .select(
-            "id",
-            F.coalesce("component", "lbl", "id").alias("component"),
-        )
-    )
-    return comp.select(
+    return wcc(g).select(
         F.col("id").alias(id_col),
         F.col("component").alias("cluster"),
         (F.col("id") == F.col("component")).alias("is_representative"),
@@ -418,8 +354,9 @@ def near_duplicate_clusters(
     IDENTICAL distinct-token sets (they are J=1 pairs by definition, so
     only one representative per set needs to enter the pair search), find
     near-dup PAIRS among the unique sets, run connected components over
-    the pair graph (distributed WCC), pull clusters back through the set
-    key, keep the min-id representative. Nothing touches the driver.
+    the pair graph (``wcc()``, which picks the driver or distributed side),
+    pull clusters back through the set key, keep the min-id
+    representative.
 
     Pair strategies over the collapsed set-representatives:
 
@@ -522,7 +459,7 @@ def embedding_duplicate_clusters(
 ) -> DataFrame:
     """(vec_id, cluster, is_representative) — the embedding twin of
     :func:`near_duplicate_clusters`: hyperplane-LSH near-dup pairs with
-    exact cosine recheck → distributed WCC over the pair graph → min-id
+    exact cosine recheck → ``wcc()`` over the pair graph → min-id
     representative per cluster."""
     pairs = embedding_near_duplicates(emb, threshold, id_col, vec_col, **lsh_kwargs)
     return _clusters_from_pairs(pairs, emb, id_col)
@@ -917,8 +854,8 @@ def semantic_dedup(
        (cell-scoped self-join: cost Σ|cell|², the paper's trick — grow
        num_cells with the corpus and cells stay bounded, so the pair
        join never goes global the way brute-force embedding dedup does).
-    3. Connected components over the pair graph (shared hash-min +
-       contraction tail with the text dedup operators).
+    3. Connected components over the pair graph: ``wcc()``, through the
+       cluster tail shared with the text dedup operators.
     4. Per cluster keep the member with the LOWEST cosine to its cell
        centroid (the paper's rule: the most atypical copy carries the
        most information), ties to the smallest id — one partial-

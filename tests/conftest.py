@@ -15,6 +15,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def uncoalesced(spark):
+    """Keep every shuffle at its 4 partitions: coalesced into one, a small
+    edge table is solved whole by the per-partition contraction and the
+    star rounds never run."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, before)
+
+
 def edges_df(spark, triples):
     """[(src, dst, weight), ...] → edges DataFrame."""
     return spark.createDataFrame(

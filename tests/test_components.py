@@ -46,18 +46,6 @@ def test_wcc_threshold(spark):
     assert sizes == [1, 1, 3, 4]
 
 
-@pytest.fixture()
-def uncoalesced(spark):
-    """Keep every shuffle at its 4 partitions: coalesced into one, a small
-    edge table is solved whole by the per-partition contraction and the
-    star rounds never run."""
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    yield
-    spark.conf.set(key, before)
-
-
 def _shuffled_path(n, seed):
     rng = np.random.default_rng(seed)
     ids = rng.permutation(n)

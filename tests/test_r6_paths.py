@@ -2,10 +2,11 @@
 
 Every hybrid algorithm decides between a driver-local path and a
 distributed one through the single crossover in ``blocks``:
-``blocks.collect_if_small`` for DataFrames (WCC union-find, MSBFS, ANF,
-LPA, k-hop sampling, the cluster tails, minimum spanning forest and
-k-spanning tree, Louvain, InfoMap, Lloyd k-means, SCC, the numpy triangle
-kernel for triangle count and stream, k-truss and k-core) and
+``blocks.collect_if_small`` for DataFrames (WCC union-find, which also
+serves the dedup cluster tail and k-spanning tree, MSBFS, ANF, LPA, k-hop
+sampling, minimum spanning forest, Louvain, InfoMap, Lloyd k-means, SCC,
+the numpy triangle kernel for triangle count and stream, k-truss and
+k-core) and
 ``blocks.pull_engine`` for pull block stores (PageRank, PPR, HITS,
 spectral embedding) — which means ordinary small-fixture tests exercise
 the DRIVER paths only. These tests force the DISTRIBUTED / codegen paths
@@ -15,6 +16,9 @@ paths, so the at-scale code can never silently rot.
 """
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import numpy as np
 import pytest
@@ -174,23 +178,49 @@ def test_scc_distributed_matches_local_structured(spark, monkeypatch):
     assert local == dist
 
 
-def test_clusters_from_pairs_distributed_matches_local(spark, monkeypatch):
-    from linkgraph.pipeline.dedup import _clusters_from_pairs
+def _near_dup_pairs():
+    """A 12-node near-clique, a shuffled 240-node chain in random
+    orientations, duplicate and reversed pairs and (a, a) pairs; items
+    600-609 are in no pair."""
+    rng = np.random.default_rng(5)
+    clique = [(a, b) for a in range(12) for b in range(a + 1, 12) if (a + b) % 5]
+    ids = rng.permutation(np.arange(100, 340))
+    chain = [(int(ids[i]), int(ids[i + 1])) for i in range(len(ids) - 1)]
+    chain = [chain[i] if rng.random() < 0.5 else chain[i][::-1]
+             for i in rng.permutation(len(chain))]
+    messy = [(1, 3), (3, 1), (1, 3), (7, 7), (500, 500), (11, 0)]
+    items = list(range(12)) + list(range(100, 340)) + [500] + list(range(600, 610))
+    return clique + chain + messy, items
 
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6), (8, 9), (9, 0)], "a long, b long"
-    )
-    items = spark.range(12).select(F.col("id").alias("doc_id"))
-    local = _rows(
-        _clusters_from_pairs(pairs, items, "doc_id"),
-        ["doc_id", "cluster", "is_representative"],
-    )
-    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", -1)
-    dist = _rows(
-        _clusters_from_pairs(pairs, items, "doc_id"),
-        ["doc_id", "cluster", "is_representative"],
-    )
-    assert local == dist
+
+def test_clusters_from_pairs_distributed_matches_local(spark, uncoalesced, monkeypatch):
+    import importlib
+
+    from linkgraph.pipeline.dedup import _clusters_from_pairs
+    from oracles import np_wcc
+
+    pair_list, ids = _near_dup_pairs()
+    items = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+
+    def run(pl):
+        pairs = spark.createDataFrame(pl, "a long, b long").repartition(4)
+        return _rows(_clusters_from_pairs(pairs, items, "doc_id"),
+                     ["doc_id", "cluster", "is_representative"])
+
+    local, local_empty = run(pair_list), run([])
+    W = importlib.import_module("linkgraph.algorithms.wcc")
+    stars = []
+    star = W._star
+    monkeypatch.setattr(W, "_star", lambda e, large: stars.append(large) or star(e, large))
+    _forbid_union_find(monkeypatch)
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", -1)  # empty pairs too
+    assert run(pair_list) == local
+    assert len(stars) >= 4  # the star rounds did work past round one
+    assert run([]) == local_empty
+    comp = np_wcc([(a, b, 1.0) for a, b in pair_list], ids)
+    assert local == sorted((i, comp[i], i == comp[i]) for i in ids)
+    assert len({c for _, c, _ in local}) == 1 + 1 + 1 + 10
+    assert local_empty == sorted((i, i, True) for i in ids)
 
 
 @pytest.mark.parametrize("matrix,num_blocks", [(False, 4), (True, 3)], ids=["vector", "matrix"])
@@ -545,30 +575,52 @@ def test_store_key_changes_when_part_file_rewritten_in_place(spark, tmp_path):
     assert key() not in (k1, k2)
 
 
+def _code_names(path):
+    """(name, line) of every identifier, imported name and string constant
+    in the module at ``path``. Docstrings and messages are whole strings,
+    so prose that mentions a name never equals it."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno
+        elif isinstance(node, ast.alias):
+            yield node.name, node.lineno
+        elif isinstance(node, ast.Constant):
+            yield node.value, node.lineno  # getattr(blocks, "...")
+
+
+def _package_modules():
+    pkg = pathlib.Path(B.__file__).resolve().parents[1]
+    return [(p, p.relative_to(pkg.parent).as_posix()) for p in sorted(pkg.rglob("*.py"))]
+
+
 def test_only_blocks_names_the_crossover_constant():
     # the driver crossover is one seam: every gate reads the constant
     # through blocks (collect_if_small / pull_engine), so no other module
     # may import, bind or read DRIVER_EDGE_THRESHOLD. Docstrings, comments
     # and messages may mention it.
-    import ast
-    import pathlib
+    offenders = [
+        f"{rel}:{line}"
+        for path, rel in _package_modules() if rel != "linkgraph/algorithms/blocks.py"
+        for name, line in _code_names(path) if name == "DRIVER_EDGE_THRESHOLD"
+    ]
+    assert offenders == []
 
-    pkg = pathlib.Path(B.__file__).resolve().parents[1]
-    offenders = []
-    for path in sorted(pkg.rglob("*.py")):
-        if path.resolve() == pathlib.Path(B.__file__).resolve():
-            continue
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Name):
-                name = node.id
-            elif isinstance(node, ast.Attribute):
-                name = node.attr
-            elif isinstance(node, ast.alias):
-                name = node.name
-            elif isinstance(node, ast.Constant):
-                name = node.value  # getattr(blocks, "...")
-            else:
-                continue
-            if name == "DRIVER_EDGE_THRESHOLD":
-                offenders.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
+
+def test_only_wcc_and_msf_call_union_find():
+    # one connected-components call: the dedup cluster tail and the
+    # k-spanning tree go through wcc(), whose gate picks the driver
+    # union-find. Only the Borůvka rounds of the minimum spanning forest
+    # keep their own count-first gate (it also ends their loop).
+    modules = _package_modules()
+    (paths,) = [p for p, rel in modules if rel == "linkgraph/algorithms/paths.py"]
+    (msf,) = [n for n in ast.parse(paths.read_text()).body
+              if isinstance(n, ast.FunctionDef) and n.name == "minimum_spanning_forest"]
+    offenders = [
+        f"{rel}:{line}"
+        for path, rel in modules if rel != "linkgraph/algorithms/wcc.py"
+        for name, line in _code_names(path) if name == "union_find_mapping"
+        if not (rel == "linkgraph/algorithms/paths.py" and msf.lineno <= line <= msf.end_lineno)
+    ]
     assert offenders == []
