@@ -4,68 +4,52 @@ Reference: `core/src/main/java/org/neo4j/graphalgo/core/IdMap.java` /
 `core/.../core/huge/loader/HugeIdMap.java`: sparse external ids →
 consecutive internal ids, bidirectional.
 
-`monotonically_increasing_id` is NOT contiguous, so we use the two-pass
-scheme: sort-partition the keys, count per partition, broadcast cumulative
-offsets, then enumerate inside each partition (zipWithIndex semantics, but
-expressed over Arrow batches). Deterministic given the sort key.
+`monotonically_increasing_id` is NOT contiguous: it is
+``(partition << 33) + row-within-partition``. We make it contiguous in
+Catalyst alone, with no Python worker and no join: range-partition and sort
+the distinct keys, tag each row with its partition and its monotonic id,
+materialise that once (``localCheckpoint``), collect the per-partition
+counts, and rebase every row by its partition's cumulative offset read from
+a literal map. Deterministic given the sort key.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 
 def densify_ids(df: DataFrame, key_col: str, num_partitions: int | None = None) -> DataFrame:
-    """distinct keys → (id: long contiguous 0..n-1, <key_col>).
+    """distinct keys → (id: long contiguous 0..n-1, <key_col>), ids in key order.
 
-    Two-pass: repartitionByRange on the key (deterministic order), per-
-    partition counts → offsets, then an Arrow-batched enumerate. No global
-    sort bottleneck: the range exchange samples, the enumerate is local.
+    repartitionByRange on the key, sort within each range partition, then
+    ``id = _mono - (_part << 33) + offset[_part]``, where ``offset`` holds
+    the cumulative row counts of the lower partitions. One collect of the
+    counts; no global sort, no join, no UDF. Bound: a range partition may
+    hold at most 2^33 rows, or its monotonic ids spill into the next
+    partition's range.
+
+    The tagged table is a ``localCheckpoint``, not a ``persist``, so no
+    CacheManager entry outlives the call.
     """
     spark = df.sparkSession
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    # Arrow schemas below are derived from the ACTUAL key type (string,
-    # long, ...) — hardcoding string here silently corrupted long keys.
-    key_ddl = df.schema[key_col].dataType.simpleString()
-    keys = (
+    keyed = (
         df.select(F.col(key_col).alias("_key"))
         .distinct()
         .repartitionByRange(n_parts, "_key")
         .sortWithinPartitions("_key")
+        .select(
+            "_key",
+            F.spark_partition_id().alias("_part"),
+            F.monotonically_increasing_id().alias("_mono"),
+        )
+        .localCheckpoint(eager=False)
     )
-
-    def with_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["_part"] = pid
-            yield pdf
-
-    keyed = keys.mapInPandas(with_part, schema=f"_key {key_ddl}, _part int").persist()
-    counts = keyed.groupBy("_part").agg(F.count(F.lit(1)).alias("_cnt"))
-    w = Window.orderBy("_part").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_part", F.coalesce(F.sum("_cnt").over(w), F.lit(0)).alias("_offset")
-    )
-    off_map = {r["_part"]: r["_offset"] for r in offsets.collect()}
-
-    def enumerate_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        for pdf in batches:
-            part = int(pdf["_part"].iloc[0]) if len(pdf) else 0
-            base = off_map.get(part, 0) + seen
-            out = pd.DataFrame(
-                {"id": range(base, base + len(pdf)), "_key": pdf["_key"].values}
-            )
-            seen += len(pdf)
-            yield out
-
-    result = keyed.mapInPandas(enumerate_part, schema=f"id long, _key {key_ddl}")
-    return result.select("id", F.col("_key").alias(key_col))
+    counts = sorted(tuple(r) for r in keyed.groupBy("_part").count().collect())
+    pairs, total = [], 0
+    for part, cnt in counts:
+        pairs += [F.lit(part), F.lit(total).cast("long")]
+        total += cnt
+    offset = F.element_at(F.create_map(*pairs), F.col("_part")) if pairs else F.lit(0)
+    ids = F.col("_mono") - F.shiftleft(F.col("_part").cast("long"), 33) + offset
+    return keyed.select(ids.alias("id"), F.col("_key").alias(key_col))

@@ -124,8 +124,10 @@ def verify_content_sha(df: DataFrame) -> int:
     """Per-row invariant: sha256(content) equality vs the sidecar column.
 
     Returns the number of violations (must be 0 after every pipeline stage).
+    NULL-safe: a NULL on exactly one side (content or sidecar) counts.
     """
-    return df.filter(F.sha2(F.col("content"), 256) != F.col("content_sha")).count()
+    same = F.sha2(F.col("content"), 256).eqNullSafe(F.col("content_sha"))
+    return df.filter(~same).count()
 
 
 def mine_import_edges(repos_df: DataFrame) -> DataFrame:
@@ -162,16 +164,16 @@ def mine_import_edges(repos_df: DataFrame) -> DataFrame:
     )
 
 
-def _pkg_map(repos_df: DataFrame) -> DataFrame:
-    """package → owning repo resolution (pkg_<i> belongs to repo index i)."""
-    return (
-        repos_df.select("repo")
-        .distinct()
-        .withColumn(
-            "pkg",
-            F.concat(F.lit("pkg_"), F.regexp_extract(F.col("repo"), r"repo(\d+)$", 1)),
-        )
-        .withColumnRenamed("repo", "dst_repo")
+def _defs(repos_df: DataFrame) -> DataFrame:
+    """package → (owning repo, defining file) in one aggregate.
+
+    pkg_<i> belongs to repo index i; the defining file is the repo's
+    lexicographically-first path (its src/m0 core module).
+    """
+    return repos_df.groupBy("repo").agg(F.min("path").alias("dst_path")).select(
+        F.concat(F.lit("pkg_"), F.regexp_extract("repo", r"repo(\d+)$", 1)).alias("dst_pkg"),
+        F.col("repo").alias("dst_repo"),
+        "dst_path",
     )
 
 
@@ -184,14 +186,12 @@ def repo_dependency_graph(repos_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     from linkgraph.ids import densify_ids
 
     imports = mine_import_edges(repos_df)
-    # package → repo resolution: pkg_<i> belongs to repo index i
-    pkg_map = _pkg_map(repos_df)
     repo_edges_named = (
-        imports.join(F.broadcast(pkg_map), imports.dst_pkg == pkg_map.pkg)
+        imports.join(F.broadcast(_defs(repos_df)), "dst_pkg")
         .groupBy("src_repo", "dst_repo")
         .agg(F.count(F.lit(1)).cast("double").alias("weight"))
     )
-    nodes = densify_ids(repos_df.select(F.col("repo").alias("name")).distinct(), "name")
+    nodes = densify_ids(repos_df.select(F.col("repo").alias("name")), "name")
     src_ids = nodes.select(F.col("id").alias("src"), F.col("name").alias("src_repo"))
     dst_ids = nodes.select(F.col("id").alias("dst"), F.col("name").alias("dst_repo"))
     edges = (
@@ -202,15 +202,22 @@ def repo_dependency_graph(repos_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return nodes.select("id", F.col("name").alias("repo")), edges
 
 
+def _file_key(repo: str, path: str):
+    return F.struct(F.col(repo).alias("repo"), F.col(path).alias("path"))
+
+
 def file_dependency_graph(repos_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Full mining pipeline at FILE granularity → (file_nodes, file_edges).
 
-    file_nodes(id, repo, path) — densified contiguous ids over repo/path
+    file_nodes(id, repo, path) — densified contiguous ids over the
+    ``struct(repo, path)`` file key, read straight off the id table (no
+    re-join); ids follow (repo, path) order.
     file_edges(src, dst, weight=import count): the importing FILE links to
     the target repo's DEFINING file. Definition resolution here is the
     repo's lexicographically-first path (its src/m0 core module) — the
     relational stand-in for a symbol table; at 10^12-file scale this is a
     broadcast/shuffle join against a defs table, never content re-parsing.
+    The only Python stage is the import regex in `mine_import_edges`.
 
     North-star shape: "edges = repo→repo and file→file dependency/import
     links mined from content via vectorized Arrow UDFs".
@@ -218,30 +225,20 @@ def file_dependency_graph(repos_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     from linkgraph.ids import densify_ids
 
     imports = mine_import_edges(repos_df)
-    pkg_map = _pkg_map(repos_df)
-    defs = (
-        repos_df.groupBy(F.col("repo").alias("dst_repo"))
-        .agg(F.min("path").alias("dst_path"))
-    )
     file_edges_named = (
-        imports.join(F.broadcast(pkg_map), imports.dst_pkg == pkg_map.pkg)
-        .join(F.broadcast(defs), "dst_repo")
-        .groupBy("src_repo", "src_path", "dst_repo", "dst_path")
+        imports.join(F.broadcast(_defs(repos_df)), "dst_pkg")
+        .groupBy(
+            _file_key("src_repo", "src_path").alias("skey"),
+            _file_key("dst_repo", "dst_path").alias("dkey"),
+        )
         .agg(F.count(F.lit(1)).cast("double").alias("weight"))
     )
-    files = repos_df.select(
-        F.concat_ws("\x00", "repo", "path").alias("fkey"), "repo", "path"
-    ).distinct()
-    ids = densify_ids(files.select("fkey"), "fkey")
-    nodes = files.join(ids, "fkey").select("id", "repo", "path")
+    ids = densify_ids(repos_df.select(_file_key("repo", "path").alias("fkey")), "fkey")
+    nodes = ids.select("id", "fkey.repo", "fkey.path")
     src_ids = ids.select(F.col("id").alias("src"), F.col("fkey").alias("skey"))
     dst_ids = ids.select(F.col("id").alias("dst"), F.col("fkey").alias("dkey"))
     edges = (
-        file_edges_named.withColumn(
-            "skey", F.concat_ws("\x00", "src_repo", "src_path")
-        )
-        .withColumn("dkey", F.concat_ws("\x00", "dst_repo", "dst_path"))
-        .join(src_ids, "skey")
+        file_edges_named.join(src_ids, "skey")
         .join(dst_ids, "dkey")
         .select("src", "dst", "weight")
     )
