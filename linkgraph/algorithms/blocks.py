@@ -10,9 +10,10 @@ Two layouts, one block-store design:
 * **push (CSR)** — edges hash-partitioned by ``src``; per block arrays
   (src_ids, indptr, w_norm, dst_uniq, dst_code). Per superstep each block
   scatters rank(u)·w_norm into a local bincount (map-side combine) and the
-  gather is ``groupBy(dst).agg(sum)`` — at most B partial rows per target,
-  so high-in-degree skew cannot unbalance the shuffle. Scales to rank
-  vectors far beyond single-machine memory.
+  gather is one ``pmod(dst, B)`` exchange into a fused sum/update/pack
+  (gather_pack) — at most B partial rows per target, so high-in-degree
+  skew cannot unbalance the shuffle. Scales to rank vectors far beyond
+  single-machine memory.
 * **pull (CSC)** — edges partitioned by ``pmod(dst, B)``; per block
   (src, slice_pos, w_norm) with slice_pos indexing np.arange(part, n, B).
   Per superstep the driver broadcasts the rank vector and each block
@@ -472,46 +473,15 @@ def pack_rank_blocks(ranks: DataFrame, value_col: str, num_blocks: int) -> DataF
     return r.groupBy("part").applyInPandas(_pack_rank_block, schema=RANK_BLOCK_SCHEMA)
 
 
-def scatter_partials(rank_blocks: DataFrame, block_path: str) -> DataFrame:
-    """The scatter half of a push superstep: per-block bincount against
-    the page-cache-resident CSR (map-side combine) → (dst, partial) rows,
-    at most one per (block, target)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                blk = _load_part(block_path, int(row.part), _PUSH_ARRAYS)
-                if blk is None or len(blk["src_ids"]) == 0:
-                    continue
-                ids = np.frombuffer(row.ids, np.int64)
-                vals = np.frombuffer(row.vals, np.float64)
-                src_ids = np.asarray(blk["src_ids"])
-                pos = np.searchsorted(ids, src_ids)
-                ok = (pos < len(ids)) & (
-                    ids[np.minimum(pos, len(ids) - 1)] == src_ids
-                )
-                r_src = np.where(ok, vals[np.minimum(pos, len(ids) - 1)], 0.0)
-                buf = _edge_buffer(block_path, int(row.part), len(blk["w_norm"]))
-                np.multiply(
-                    np.repeat(r_src, np.diff(blk["indptr"])), blk["w_norm"], out=buf
-                )
-                partial = np.bincount(
-                    blk["dst_code"], weights=buf, minlength=len(blk["dst_uniq"])
-                )
-                yield pd.DataFrame({"dst": np.asarray(blk["dst_uniq"]), "partial": partial})
-
-    return rank_blocks.mapInPandas(run, schema="dst long, partial double")
-
-
 def scatter_partials_combined(rank_blocks: DataFrame, block_path: str) -> DataFrame:
-    """Scatter with task-level map-side combine (r6, fused-loop variant):
-    each task's per-block partial vectors are merged (concat → sort →
-    reduceat) BEFORE they cross the Arrow boundary, so the downstream
-    repartition carries ≈ distinct-targets-per-task rows instead of one
-    row per (block, target) — the JVM groupBy's partial aggregation did
-    this for the unfused loop; the fused loop has to do it in-kernel.
-    Pair with a volume-sized coalesce of the rank blocks so tasks hold
-    several blocks' worth of real numpy work."""
+    """The scatter half of a push superstep, with task-level map-side
+    combine: each block bincounts rank(u)·w_norm against the
+    page-cache-resident CSR, and the task's per-block partial vectors are
+    merged (concat → sort → reduceat) before they cross the Arrow
+    boundary, so the gather exchange carries ≈ distinct targets per task
+    rows — at most one per (source block, target). Pair with a
+    volume-sized coalesce of the rank blocks so tasks hold several
+    blocks' worth of real numpy work."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ds, ps = [], []
@@ -545,15 +515,6 @@ def scatter_partials_combined(rank_blocks: DataFrame, block_path: str) -> DataFr
             yield pd.DataFrame({"dst": u, "partial": np.add.reduceat(p_, idx)})
 
     return rank_blocks.mapInPandas(run, schema="dst long, partial double")
-
-
-def scatter_gather(rank_blocks: DataFrame, block_path: str) -> DataFrame:
-    """One push superstep: (dst, contrib = Σ rank(u)·w_norm(u,v)).
-
-    Scatter (above) → global ``groupBy(dst).agg(sum)`` gather shuffle.
-    """
-    partials = scatter_partials(rank_blocks, block_path)
-    return partials.groupBy("dst").agg(F.sum("partial").alias("contrib"))
 
 
 def gather_pack(
@@ -605,6 +566,34 @@ def gather_pack(
     return partials.repartition(
         num_blocks, F.pmod(F.col("dst"), F.lit(num_blocks))
     ).mapInPandas(run, schema=RANK_BLOCK_SCHEMA)
+
+
+def rank_block_delta(new_blocks: DataFrame, old_blocks: DataFrame) -> float:
+    """max |new − old| between two packed rank-block tables, over the ids
+    present in both (an id in only one of them is ignored). One row per
+    block on each side, so the join on ``part`` moves B rows, not n."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            m = 0.0
+            for row in pdf.itertuples(index=False):
+                _, i, j = np.intersect1d(
+                    np.frombuffer(row.ids, np.int64),
+                    np.frombuffer(row.o_ids, np.int64),
+                    assume_unique=True,
+                    return_indices=True,
+                )
+                if len(i):
+                    vals = np.frombuffer(row.vals, np.float64)[i]
+                    o_vals = np.frombuffer(row.o_vals, np.float64)[j]
+                    m = max(m, float(np.abs(vals - o_vals).max()))
+            yield pd.DataFrame({"m": [m]})
+
+    old = old_blocks.select(
+        "part", F.col("ids").alias("o_ids"), F.col("vals").alias("o_vals")
+    )
+    rows = new_blocks.join(old, "part").mapInPandas(run, "m double").collect()
+    return max((r["m"] for r in rows), default=0.0)
 
 
 def unpack_rank_blocks(rank_blocks: DataFrame) -> DataFrame:

@@ -24,7 +24,7 @@ normalizes every half-step and the two agree to ≥9 significant digits.
 
 Scale shape: each half-step is one `edges ⋈ scores` (shuffle keyed on
 the edge's own partition key) + one map-side-combining `groupBy().sum()`
-— identical plan shape to PageRank's join strategy, so the same
+— identical plan shape to pagerank._join_power_loop, so the same
 1000-executor reasoning applies (partial aggregation bounds hot-key
 fan-in; AQE handles residual skew). One eager localCheckpoint per
 iteration (on the hub vector only — the authority half lives inside the

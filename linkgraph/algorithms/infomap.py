@@ -173,18 +173,11 @@ def infomap(
     ascending node-id order, modules labeled by min member id. Graphs
     whose edge table is over the driver crossover are Louvain-coarsened
     distributed first; the sweep then runs over communities."""
-    from linkgraph.algorithms.pagerank import PageRank, _contiguous_n
+    from linkgraph.algorithms.pagerank import PageRank, _resolve_strategy
 
-    # flow: distributed PageRank visit rates, normalized to Σp = 1
-    # (pull/CSC fast path when ids are contiguous AND the rank vector fits
-    # driver memory — same cap as PageRank's own auto resolution; beyond
-    # it the push/CSR shuffle path)
-    n_contig = _contiguous_n(graph.nodes.select("id"))
-    strat = (
-        "pull"
-        if n_contig is not None and n_contig <= PageRank.PULL_MAX_NODES
-        else "csr"
-    )
+    # flow: distributed PageRank visit rates, normalized to Σp = 1, on the
+    # plan PageRank's own auto resolution picks
+    strat = _resolve_strategy(graph.nodes)
     ranks = PageRank(
         damping=damping,
         max_iterations=pr_iterations,

@@ -33,44 +33,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.algorithms import blocks
-from linkgraph.algorithms.triangles import triangle_kernel
+from linkgraph.algorithms.triangles import _triangles, triangle_kernel
 from linkgraph.graph import Graph
-
-
-def _triangles_of(ce: DataFrame) -> DataFrame:
-    """(a,b,c), a<b<c, each triangle once — over an explicit canonical
-    (src<dst) edge list. Degree-oriented like triangles._triangles."""
-    deg = (
-        ce.select(F.col("src").alias("id"))
-        .unionByName(ce.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    e = (
-        ce.join(deg.select(F.col("id").alias("src"), F.col("d").alias("ds")), "src")
-        .join(deg.select(F.col("id").alias("dst"), F.col("d").alias("dd")), "dst")
-    )
-    ks = F.struct(F.col("ds").alias("d"), F.col("src").alias("i"))
-    kd = F.struct(F.col("dd").alias("d"), F.col("dst").alias("i"))
-    oriented = e.select(
-        F.when(ks < kd, F.col("src")).otherwise(F.col("dst")).alias("u"),
-        F.when(ks < kd, F.col("dst")).otherwise(F.col("src")).alias("v"),
-        F.when(ks < kd, kd).otherwise(ks).alias("kv"),
-    )
-    o1 = oriented.select("u", F.col("v").alias("b"), F.col("kv").alias("kb"))
-    o2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("c"), F.col("kv").alias("kc"))
-    wedges = o1.join(o2, (o1.u == o2.u2) & (o1.kb < o2.kc)).select("u", "b", "c")
-    o3 = oriented.select(F.col("u").alias("b2"), F.col("v").alias("c2"))
-    tri = wedges.join(o3, (wedges.b == o3.b2) & (wedges.c == o3.c2))
-    srt = F.array_sort(F.array("u", "b", "c"))
-    return tri.select(
-        srt.getItem(0).alias("a"), srt.getItem(1).alias("b"), srt.getItem(2).alias("c")
-    )
 
 
 def _support(ce: DataFrame) -> DataFrame:
     """(src, dst, support): triangles through each surviving edge."""
-    tri = _triangles_of(ce)
+    tri = _triangles(ce)
     sides = (
         tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(tri.select(F.col("a").alias("src"), F.col("c").alias("dst")))

@@ -12,18 +12,19 @@ no dangling-mass redistribution, no 1/N normalization — hub scores ≫ 1.
 Early exit on ``tolerance`` (max |Δ| across nodes), as in 3.5.x.
 
 Execution re-imagined for Spark instead of the reference's shared-memory
-BSP float[] buffers:
+BSP float[] buffers — one vertex program, two physical plans picked by
+data size:
 
-* ``strategy='auto'`` (default): resolves per run to ``pull`` (broadcast
-  rank vector, zero shuffle) when node ids are contiguous and the vector
-  fits a memory-aware driver budget, else ``csr``.
+* ``strategy='auto'`` (default): resolves per run to ``pull`` when node
+  ids are contiguous and the rank vector fits a memory-aware driver
+  budget, else ``csr`` (``_resolve_strategy``).
+* ``strategy='pull'``: dst-sliced CSC blocks and one broadcast rank
+  vector, zero shuffle per superstep (blocks.pull_engine).
 * ``strategy='csr'``: per-partition CSR blocks inside Arrow UDFs
-  (blocks.py) — scatter is one numpy bincount per block (map-side combine),
-  gather is ``groupBy(dst).agg(sum)``; at most B partial rows per target
-  regardless of in-degree, so hot nodes cannot skew the shuffle.
-* ``strategy='join'``: pure DataFrame — ranks ⋈ edges → salted two-stage
-  ``groupBy(dst).agg(sum)``; Catalyst/AQE pick the join; ``salt`` > 0
-  spreads hot targets across salt buckets before the final combine.
+  (blocks.py), one exchange per superstep. The scatter sums per (source
+  block, dst) and the fused gather sums per dst: a two-stage salted
+  combine whose salt buckets are the B source blocks, so a hub receives
+  at most B partial rows however high its in-degree.
 
 Per-superstep checkpoints (io.CheckpointManager) give resumability +
 lineage truncation; metrics mirror the reference's stats row
@@ -32,7 +33,6 @@ lineage truncation; metrics mirror the reference's stats row
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -41,6 +41,9 @@ from pyspark.sql import DataFrame, functions as F
 from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
 from linkgraph.io import CheckpointManager
+
+
+STRATEGIES = ("auto", "pull", "csr")
 
 
 @dataclass
@@ -63,11 +66,15 @@ class PageRank:
         source_nodes: list[int] | None = None,
         strategy: str = "auto",
         num_blocks: int | None = None,
-        salt: int = 0,
         checkpoint: CheckpointManager | None = None,
         checkpoint_every: int = 0,
         block_store: str | None = None,
     ):
+        if strategy not in STRATEGIES:
+            raise ValueError(
+                f"unknown PageRank strategy {strategy!r}; "
+                f"expected one of {', '.join(STRATEGIES)}"
+            )
         self.damping = damping
         self.max_iterations = max_iterations
         self.tolerance = tolerance
@@ -75,7 +82,6 @@ class PageRank:
         self.source_nodes = source_nodes
         self.strategy = strategy
         self.num_blocks = num_blocks
-        self.salt = salt
         self.checkpoint = checkpoint
         self.checkpoint_every = checkpoint_every
         self.block_store = block_store
@@ -90,31 +96,6 @@ class PageRank:
             "id", F.when(F.col("id").isin(srcs), 1.0).otherwise(0.0).alias("t")
         )
 
-    def _denominator(self, edges: DataFrame) -> DataFrame:
-        """W(u): out-degree (unweighted) or total out-weight (weighted)."""
-        agg = F.sum("weight") if self.weighted else F.count(F.lit(1)).cast("double")
-        return edges.groupBy(F.col("src").alias("id")).agg(agg.alias("wsum"))
-
-    # ------------------------------------------------------------ superstep
-    def _contribs_join(self, edges: DataFrame, ranks: DataFrame, denom: DataFrame) -> DataFrame:
-        share = ranks.join(denom, "id").select(
-            "id", (F.col("rank") / F.col("wsum")).alias("share")
-        )
-        per_edge = edges.join(share, edges.src == share.id).select(
-            F.col("dst"),
-            (F.col("share") * F.col("weight")).alias("c")
-            if self.weighted
-            else F.col("share").alias("c"),
-            F.col("src"),
-        )
-        if self.salt > 0:
-            # two-stage salted combine: hot dst spread over `salt` buckets
-            stage1 = per_edge.groupBy(
-                "dst", F.pmod(F.xxhash64("src"), F.lit(self.salt)).alias("_salt")
-            ).agg(F.sum("c").alias("c"))
-            return stage1.groupBy("dst").agg(F.sum("c").alias("contrib"))
-        return per_edge.groupBy("dst").agg(F.sum("c").alias("contrib"))
-
     # ------------------------------------------------------------- pull loop
     def _run_pull(self, graph: Graph) -> DataFrame:
         """Broadcast-pull execution: dst-sliced CSC blocks, zero shuffle.
@@ -127,8 +108,6 @@ class PageRank:
         """
         import numpy as np
         import pandas as pd
-
-        from linkgraph.algorithms import blocks
 
         spark = graph.edges.sparkSession
         sc = spark.sparkContext
@@ -252,206 +231,116 @@ class PageRank:
             mem_bytes = 1 << 30
         return max(1, min(cls.PULL_MAX_NODES, int(mem_bytes * 0.25) // 64))
 
-    # -------------------------------------------------------------------- run
-    def run(self, graph: Graph) -> DataFrame:
-        strategy = self.strategy
-        if strategy == "auto":
-            # strategy resolution (per RUN, into a local + resolved_strategy
-            # — a reused instance must re-resolve for each new graph):
-            # pull = CSC blocks + one broadcast rank vector, ZERO shuffle
-            # per superstep — the fast path whenever ids are contiguous and
-            # the vector fits DRIVER memory (memory-aware cap); csr = push
-            # scatter + groupBy(dst).sum gather beyond that.
-            n = _contiguous_n(graph.nodes.select("id"))
-            cap = self._pull_node_cap(graph.nodes.sparkSession)
-            strategy = "pull" if n is not None and n <= cap else "csr"
-        self.resolved_strategy = strategy
-        if strategy == "pull":
-            t0 = time.time()
-            out = self._run_pull(graph)
-            self.metrics.compute_millis = int((time.time() - t0) * 1000)
-            out.iterations = self.metrics.iterations
-            out.did_converge = self.metrics.did_converge
-            return out
-        t0 = time.time()
+    # -------------------------------------------------------------- csr loop
+    def _run_csr(self, graph: Graph) -> DataFrame:
+        """Push execution over the CSR block store, one exchange per
+        superstep: scatter partials (summed per task) plus one zero row per
+        no-in-edge node → repartition(pmod(dst, b)) → fused
+        gather/update/pack emits the next superstep's rank blocks directly.
+        The tolerance check and the checkpoints read those blocks; a resume
+        packs the checkpointed (id, rank) table like the teleport table."""
         d = self.damping
         nodes = self._teleport(graph.nodes).persist()
         edges = graph.edges
-        start_step = 0
 
-        denom = None
-        block_path = None
+        # materialize the CSR block store once (worker-resident thereafter)
+        block_path = self.block_store
         owns_blocks = False
         b = self.num_blocks
-        if strategy == "csr":
-            # materialize the CSR block store once (worker-resident thereafter)
-            block_path = self.block_store
-            if block_path is None:
-                key = blocks.semantic_store_key(edges, "pr-csr", self.weighted)
-                block_path, _hit = blocks.cached_store_dir(
-                    key, "linkgraph_blocks_"
-                )
-                owns_blocks = key is None
-            if blocks.store_exists(block_path):
-                # adopt the store's num_blocks; reject weighted/layout drift
-                b = blocks.validate_store(block_path, "push", self.weighted)
-            else:
-                if b is None:  # size by edge volume only when actually building
-                    b = blocks.auto_num_blocks(
-                        edges, edges.sparkSession.sparkContext.defaultParallelism
-                    )
-                blocks.write_edge_blocks(
-                    edges if self.weighted else edges.withColumn("weight", F.lit(1.0)),
-                    b,
-                    block_path,
-                    weighted=self.weighted,
-                )
+        if block_path is None:
+            key = blocks.semantic_store_key(edges, "pr-csr", self.weighted)
+            block_path, _hit = blocks.cached_store_dir(key, "linkgraph_blocks_")
+            owns_blocks = key is None
+        if blocks.store_exists(block_path):
+            # adopt the store's num_blocks; reject weighted/layout drift
+            b = blocks.validate_store(block_path, "push", self.weighted)
         else:
-            denom = self._denominator(edges).persist()
+            if b is None:  # size by edge volume only when actually building
+                b = blocks.auto_num_blocks(
+                    edges, edges.sparkSession.sparkContext.defaultParallelism
+                )
+            blocks.write_edge_blocks(
+                edges if self.weighted else edges.withColumn("weight", F.lit(1.0)),
+                b,
+                block_path,
+                weighted=self.weighted,
+            )
 
         ranks = nodes.select("id", F.col("t").alias("rank"))
+        step = 0
         if self.checkpoint is not None:
             latest = self.checkpoint.latest(fmt="pagerank/ranks-v1")
             if latest is not None:
-                start_step, ranks, m = latest
-                self.metrics.resumed_from = start_step
+                step, ranks, _ = latest
+                self.metrics.resumed_from = step
         ranks = ranks.localCheckpoint(eager=True)
-
-        # r6: nodes with NO in-edges have the constant rank (1−d)·t every
-        # superstep, so the per-superstep nodes ⟕ contribs shuffle join is
-        # replaced by contribs-side arithmetic + a UNION with this static
-        # slice (computed once) — one exchange fewer per superstep, same
-        # values. The teleport is a row-local expression of id, so contrib
-        # rows never need a join to fetch t.
-        if self.source_nodes is None:
-            def t_of(c):
-                return F.lit(1.0)
-        else:
-            srcs = [int(s) for s in self.source_nodes]
-
-            def t_of(c):
-                return F.when(c.isin(srcs), 1.0).otherwise(0.0)
-        static_ranks = (
+        # nodes with no in-edges get no scatter partial; a zero row each
+        # makes the gather emit their constant rank (1−d)·t
+        static_zero = (
             nodes.join(
                 edges.select(F.col("dst").alias("id")).distinct(), "id", "left_anti"
             )
-            .select("id", ((1.0 - d) * F.col("t")).alias("rank"))
-            # lazy: the fused csr loop below never reads this; the
-            # tolerance/resume loop materializes it in its first superstep
-            .localCheckpoint(eager=False)
+            .select(F.col("id").alias("dst"), F.lit(0.0).alias("partial"))
+            .localCheckpoint(eager=True)
         )
-
+        rank_blocks = blocks.pack_rank_blocks(ranks, "rank", b).localCheckpoint(
+            eager=True
+        )
+        n_tasks = blocks._pull_task_count(block_path, b)
         converged = False
-        step = start_step
-        if block_path is not None:
-            blocks.pin_store(block_path)  # see pull strategy: guards LRU eviction
-
-        # r6 fused csr loop (no tolerance/resume bookkeeping needed): one
-        # exchange per superstep — scatter partials + injected zero rows
-        # for no-in-edge nodes → repartition(pmod(dst, b)) → fused
-        # gather/update/pack emits the NEXT superstep's rank blocks
-        # directly. The tolerance / checkpoint-resume loop below keeps the
-        # unpacked (id, rank) table per superstep and is unchanged.
-        if (
-            strategy == "csr"
-            and self.tolerance is None
-            and self.checkpoint is None
-        ):
-            static_zero = (
-                nodes.join(
-                    edges.select(F.col("dst").alias("id")).distinct(),
-                    "id",
-                    "left_anti",
-                )
-                .select(F.col("id").alias("dst"), F.lit(0.0).alias("partial"))
-                .localCheckpoint(eager=True)
-            )
-            rank_blocks = blocks.pack_rank_blocks(ranks, "rank", b).localCheckpoint(
-                eager=True
-            )
-            n_tasks = blocks._pull_task_count(block_path, b)
-            while step < self.max_iterations:
-                it0 = time.time()
-                partials = blocks.scatter_partials_combined(
-                    rank_blocks.coalesce(n_tasks), block_path
-                ).unionByName(static_zero)
-                rank_blocks = blocks.gather_pack(
-                    partials, b, d, self.source_nodes
-                ).localCheckpoint(eager=True)
-                step += 1
-                self.metrics.superstep_millis.append(int((time.time() - it0) * 1000))
-            ranks = blocks.unpack_rank_blocks(rank_blocks)
-            self.metrics.iterations = step
-            self.metrics.did_converge = False
-            self.metrics.compute_millis = int((time.time() - t0) * 1000)
-            blocks.unpin_store(block_path)
-            if owns_blocks and block_path:
-                import shutil
-
-                shutil.rmtree(block_path, ignore_errors=True)
-            nodes.unpersist()
-            ranks.iterations = self.metrics.iterations
-            ranks.did_converge = self.metrics.did_converge
-            return ranks
-
+        blocks.pin_store(block_path)  # see pull strategy: guards LRU eviction
         while step < self.max_iterations:
             it0 = time.time()
-            if strategy == "csr":
-                rank_blocks = blocks.pack_rank_blocks(ranks, "rank", b)
-                contribs = blocks.scatter_gather(rank_blocks, block_path)
-            else:
-                contribs = self._contribs_join(edges, ranks, denom)
+            partials = blocks.scatter_partials_combined(
+                rank_blocks.coalesce(n_tasks), block_path
+            ).unionByName(static_zero)
             # eager localCheckpoint = superstep barrier + lineage truncation
             # (the reference's BSP sync point; durable resume = CheckpointManager)
-            new_ranks = (
-                contribs.select(
-                    F.col("dst").alias("id"),
-                    ((1.0 - d) * t_of(F.col("dst")) + d * F.col("contrib")).alias(
-                        "rank"
-                    ),
-                )
-                .unionByName(static_ranks)
-                .localCheckpoint(eager=True)
-            )
+            new_blocks = blocks.gather_pack(
+                partials, b, d, self.source_nodes
+            ).localCheckpoint(eager=True)
             step += 1
             delta = None
             if self.tolerance is not None:
-                delta = (
-                    new_ranks.alias("n")
-                    .join(ranks.alias("o"), "id")
-                    .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("m"))
-                    .first()["m"]
-                ) or 0.0
-                self.metrics.deltas.append(float(delta))
+                delta = blocks.rank_block_delta(new_blocks, rank_blocks)
+                self.metrics.deltas.append(delta)
             if self.checkpoint is not None and (
                 self.checkpoint_every and step % self.checkpoint_every == 0
             ):
-                new_ranks = self.checkpoint.write(
-                    new_ranks, step, {"delta": delta, "iteration": step},
-                    fmt="pagerank/ranks-v1",
+                self.checkpoint.write(
+                    blocks.unpack_rank_blocks(new_blocks), step,
+                    {"delta": delta, "iteration": step}, fmt="pagerank/ranks-v1",
                 )
-            ranks.unpersist()
-            ranks = new_ranks
+            rank_blocks = new_blocks
             self.metrics.superstep_millis.append(int((time.time() - it0) * 1000))
-            if self.tolerance is not None and delta is not None and delta < self.tolerance:
+            if delta is not None and delta < self.tolerance:
                 converged = True
                 break
 
         self.metrics.iterations = step
         self.metrics.did_converge = converged
-        self.metrics.compute_millis = int((time.time() - t0) * 1000)
-        if block_path is not None:
-            blocks.unpin_store(block_path)
-        if owns_blocks and block_path:
+        blocks.unpin_store(block_path)
+        if owns_blocks:
             import shutil
 
             shutil.rmtree(block_path, ignore_errors=True)
-        if denom is not None:
-            denom.unpersist()
         nodes.unpersist()
-        ranks.iterations = self.metrics.iterations
-        ranks.did_converge = self.metrics.did_converge
-        return ranks
+        return blocks.unpack_rank_blocks(rank_blocks)
+
+    # -------------------------------------------------------------------- run
+    def run(self, graph: Graph) -> DataFrame:
+        # resolved per RUN into a local + resolved_strategy: a reused auto
+        # instance must re-resolve for each new graph
+        strategy = self.strategy
+        if strategy == "auto":
+            strategy = _resolve_strategy(graph.nodes)
+        self.resolved_strategy = strategy
+        t0 = time.time()
+        out = self._run_pull(graph) if strategy == "pull" else self._run_csr(graph)
+        self.metrics.compute_millis = int((time.time() - t0) * 1000)
+        out.iterations = self.metrics.iterations
+        out.did_converge = self.metrics.did_converge
+        return out
 
 
 def pagerank(graph: Graph, **kwargs) -> DataFrame:
@@ -467,6 +356,17 @@ def _contiguous_n(nodes: DataFrame) -> int | None:
     if row["c"] and row["mn"] == 0 and row["mx"] == row["c"] - 1:
         return int(row["c"])
     return None
+
+
+def _resolve_strategy(nodes: DataFrame) -> str:
+    """``strategy='auto'`` for a node table (PageRank.run and InfoMap):
+    pull (CSC blocks + one broadcast rank vector, zero shuffle per
+    superstep) when ids are contiguous and the vector fits the
+    memory-aware driver cap, csr (push scatter + one-exchange gather)
+    beyond that."""
+    n = _contiguous_n(nodes.select("id"))
+    cap = PageRank._pull_node_cap(nodes.sparkSession)
+    return "pull" if n is not None and n <= cap else "csr"
 
 
 def _pull_power_iteration(
@@ -526,7 +426,7 @@ def _join_power_loop(
     tolerance: float | None = None,
     step_post=None,
 ):
-    """Shared join-strategy power-iteration scaffold — the
+    """Shared DataFrame-join power-iteration scaffold — the
     non-contiguous-id fallback for ArticleRank / Eigenvector / Katz (one
     implementation instead of three hand-kept copies). Per iteration: one
     edges⋈share shuffle + map-side-combining groupBy(dst).sum + left-join

@@ -21,7 +21,7 @@ methods); per-seed scores are therefore a constant renormalization away
 from the redistributing variant and rank-order identical per seed.
 
 Scale shape: each superstep is one edges ⋈ shares shuffle plus one
-map-side-combining groupBy(dst) — identical to PageRank's join strategy
+map-side-combining groupBy(dst) — identical to pagerank._join_power_loop
 — but carries S rank doubles per row instead of 1, so S seeds cost ONE
 pass over the edges, not S passes. All S columns are plain doubles in
 whole-stage codegen (no arrays, no UDFs); lineage is truncated with an

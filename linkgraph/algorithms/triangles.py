@@ -106,8 +106,9 @@ def _triangles_local(graph: Graph) -> tuple[np.ndarray, np.ndarray, np.ndarray] 
     return src, dst, triangle_kernel(src, dst)[0]
 
 
-def _triangles(graph: Graph) -> DataFrame:
-    """All triangles as (a, b, c) with a < b < c, each exactly once.
+def _triangles(ce: DataFrame) -> DataFrame:
+    """All triangles of a canonical (src < dst) edge frame as (a, b, c)
+    with a < b < c, each exactly once.
 
     Edges are oriented by DEGREE order (lower-(deg,id) endpoint → higher),
     and wedges pivot on the lower-degree corner: a hub of degree d
@@ -115,8 +116,10 @@ def _triangles(graph: Graph) -> DataFrame:
     wedge volume is bounded by Σ min-degree ≈ m·√m worst case instead of
     Σ deg² — the standard skew mitigation for the self-join formulation
     (id-ordering makes a small-id hub a deg² wedge bomb).
+
+    The oriented edges feed three joins, so they are materialized once —
+    by localCheckpoint(eager=False), which leaves no cache entry behind.
     """
-    ce = graph.canonical_edges().select("src", "dst")
     deg = (
         ce.select(F.col("src").alias("id"))
         .unionByName(ce.select(F.col("dst").alias("id")))
@@ -133,7 +136,7 @@ def _triangles(graph: Graph) -> DataFrame:
         F.when(ks < kd, F.col("src")).otherwise(F.col("dst")).alias("u"),
         F.when(ks < kd, F.col("dst")).otherwise(F.col("src")).alias("v"),
         F.when(ks < kd, kd).otherwise(ks).alias("kv"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     o1 = oriented.select("u", F.col("v").alias("b"), F.col("kv").alias("kb"))
     o2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("c"), F.col("kv").alias("kc"))
     wedges = o1.join(o2, (o1.u == o2.u2) & (o1.kb < o2.kc)).select("u", "b", "c")
@@ -149,7 +152,7 @@ def triangle_stream(graph: Graph) -> DataFrame:
     """`algo.triangle.stream` → (a, b, c) node-id triples, a < b < c."""
     local = _triangles_local(graph)
     if local is None:
-        return _triangles(graph)
+        return _triangles(graph.canonical_edges().select("src", "dst"))
     tri = np.sort(local[2], axis=1)
     return graph.nodes.sparkSession.createDataFrame(
         pd.DataFrame(tri, columns=["a", "b", "c"]), "a long, b long, c long"
@@ -160,7 +163,7 @@ def triangle_count(graph: Graph) -> DataFrame:
     """`algo.triangleCount.stream` → (id, triangles, coefficient)."""
     local = _triangles_local(graph)
     if local is None:
-        tri = _triangles(graph)
+        tri = _triangles(graph.canonical_edges().select("src", "dst"))
         corners = (
             tri.select(F.col("a").alias("id"))
             .unionByName(tri.select(F.col("b").alias("id")))
@@ -221,7 +224,7 @@ def balanced_triads(graph: Graph) -> DataFrame:
     ce = (
         graph.canonical_edges()
         .select("src", "dst", F.signum("weight").alias("sign"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     e1 = ce.select(F.col("src").alias("a"), F.col("dst").alias("b"), F.col("sign").alias("s1"))
     e2 = ce.select(F.col("src").alias("a2"), F.col("dst").alias("c"), F.col("sign").alias("s2"))

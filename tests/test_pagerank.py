@@ -34,7 +34,7 @@ def _run(spark, strategy, weighted=False, **kw):
     return got, pr
 
 
-@pytest.mark.parametrize("strategy", ["join", "csr", "pull"])
+@pytest.mark.parametrize("strategy", ["csr", "pull"])
 def test_pagerank_fixed_iterations(spark, strategy):
     # exact-iteration equality vs the numpy oracle — stronger than convergence
     golden = np_pagerank([(s, d, 1.0) for s, d in G_PR], N, iters=30)
@@ -73,15 +73,21 @@ def test_pagerank_auto_strategy(spark):
 
 
 def test_pagerank_convergence_1e6(spark):
-    # north-star correctness: allclose 1e-6 at convergence
+    # north-star correctness: allclose 1e-6 at convergence, on both plans,
+    # which stop on the same max |Δ| superstep
     golden = np_pagerank([(s, d, 1.0) for s, d in G_PR], N, tol=1e-12)
-    got, pr = _run(spark, "csr", tolerance=2e-8, max_iterations=200)
-    assert pr.metrics.did_converge
-    for i in range(N):
-        assert got[i] == pytest.approx(golden[i], abs=1e-6)
+    iterations = set()
+    for strategy in ("csr", "pull"):
+        got, pr = _run(spark, strategy, tolerance=2e-8, max_iterations=200)
+        assert pr.metrics.did_converge
+        assert len(pr.metrics.deltas) == pr.metrics.iterations
+        iterations.add(pr.metrics.iterations)
+        for i in range(N):
+            assert got[i] == pytest.approx(golden[i], abs=1e-6)
+    assert len(iterations) == 1
 
 
-@pytest.mark.parametrize("strategy", ["join", "csr", "pull"])
+@pytest.mark.parametrize("strategy", ["csr", "pull"])
 def test_pagerank_weighted(spark, strategy):
     golden = np_pagerank(_edges(True), N, weighted=True, iters=30)
     got, _ = _run(spark, strategy, weighted=True, max_iterations=30)
@@ -89,7 +95,7 @@ def test_pagerank_weighted(spark, strategy):
         assert got[i] == pytest.approx(golden[i], abs=1e-9)
 
 
-@pytest.mark.parametrize("strategy", ["join", "csr", "pull"])
+@pytest.mark.parametrize("strategy", ["csr", "pull"])
 def test_pagerank_personalized(spark, strategy):
     t = np.zeros(N)
     t[3] = 1.0
@@ -97,13 +103,6 @@ def test_pagerank_personalized(spark, strategy):
     got, _ = _run(spark, strategy, source_nodes=[3], max_iterations=30)
     for i in range(N):
         assert got[i] == pytest.approx(golden[i], abs=1e-9)
-
-
-def test_pagerank_salted_equals_unsalted(spark):
-    plain, _ = _run(spark, "join", max_iterations=5)
-    salted, _ = _run(spark, "join", max_iterations=5, salt=8)
-    for i in range(N):
-        assert salted[i] == pytest.approx(plain[i], abs=1e-9)
 
 
 @pytest.mark.parametrize("reparts,blocks", [(1, 1), (8, 3)])
@@ -120,15 +119,43 @@ def test_pagerank_checkpoint_resume(spark, tmp_path):
     from linkgraph.io import CheckpointManager
 
     g = _graph(spark)
-    full = {r["id"]: r["rank"] for r in
-            PageRank(strategy="join", max_iterations=10).run(g).collect()}
-    ck = CheckpointManager(spark, str(tmp_path / "ck"))
-    PageRank(strategy="join", max_iterations=4, checkpoint=ck, checkpoint_every=1).run(g).collect()
-    pr2 = PageRank(strategy="join", max_iterations=10, checkpoint=ck, checkpoint_every=1)
-    resumed = {r["id"]: r["rank"] for r in pr2.run(g).collect()}
-    assert pr2.metrics.resumed_from == 4
-    for i in range(N):
-        assert resumed[i] == pytest.approx(full[i], abs=1e-12)
+    for strategy in ("csr", "pull"):
+        full = {r["id"]: r["rank"] for r in
+                PageRank(strategy=strategy, max_iterations=10).run(g).collect()}
+        ck = CheckpointManager(spark, str(tmp_path / strategy))
+        PageRank(strategy=strategy, max_iterations=4, checkpoint=ck,
+                 checkpoint_every=1).run(g).collect()
+        pr2 = PageRank(strategy=strategy, max_iterations=10, checkpoint=ck,
+                       checkpoint_every=1)
+        resumed = {r["id"]: r["rank"] for r in pr2.run(g).collect()}
+        assert pr2.metrics.resumed_from == 4
+        for i in range(N):
+            assert resumed[i] == pytest.approx(full[i], abs=1e-12)
+
+
+@pytest.mark.parametrize("strategy", ["CSR", "join"])
+def test_pagerank_rejects_unknown_strategy(strategy):
+    with pytest.raises(ValueError, match="auto, pull, csr"):
+        PageRank(strategy=strategy)
+
+
+def test_infomap_pagerank_follows_auto_resolution(spark, monkeypatch):
+    """InfoMap runs its PageRank on the plan `auto` would pick: with the
+    memory-aware pull cap below the node count that is csr."""
+    from linkgraph.algorithms.infomap import infomap
+
+    resolved = []
+    run = PageRank.run
+
+    def spy(self, graph):
+        out = run(self, graph)
+        resolved.append((self.resolved_strategy, self.tolerance))
+        return out
+
+    monkeypatch.setattr(PageRank, "_pull_node_cap", classmethod(lambda cls, s: 2))
+    monkeypatch.setattr(PageRank, "run", spy)
+    infomap(_graph(spark), pr_iterations=5).collect()
+    assert resolved == [("csr", None)]
 
 
 def test_article_rank_matches_oracle(spark):

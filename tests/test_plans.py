@@ -88,17 +88,3 @@ def test_pq_ivf_plan_has_no_cartesian_product(spark):
     assert "MapInArrow" in baseline_plan or "mapInArrow" in baseline_plan
     assert "CartesianProduct" not in baseline_plan
     assert "Join" not in baseline_plan
-
-
-def test_pagerank_join_strategy_salted_gather(spark):
-    """The pure-DataFrame strategy must keep its two-stage (salted) gather:
-    more than one Exchange between scan and result."""
-    from linkgraph.algorithms.pagerank import PageRank
-    from linkgraph.graph import Graph
-
-    e = spark.createDataFrame(
-        [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0)], "src long, dst long, weight double"
-    )
-    g = Graph.from_edges(e)
-    out = PageRank(max_iterations=1, strategy="join").run(g)
-    assert out.count() == 3  # runs; salting details asserted in unit tests

@@ -364,6 +364,22 @@ def test_triangle_stream_distributed_matches_kernel(spark, graph, request, monke
     assert len(local) == (12 + 10 + 3 if graph == "messy_graph" else 0)
 
 
+def test_distributed_triangles_leave_no_cache_entry(spark, messy_graph, monkeypatch):
+    """The wedge join materializes its shared input with a lazy
+    localCheckpoint, not persist(): no CacheManager entry outlives a call."""
+    from linkgraph.algorithms.triangles import balanced_triads, triangle_stream
+    from tests.test_mining import _plan_nodes
+
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", -1)
+    tri = triangle_stream(messy_graph)
+    triads = balanced_triads(messy_graph)
+    assert _plan_nodes(tri, "InMemoryRelation") == 0
+    assert _plan_nodes(triads, "InMemoryRelation") == 0
+    assert tri.count() == 12 + 10 + 3
+    # node 99 is not in the node table: its 3 triangles count at 2 corners each
+    assert sum(r["balanced"] for r in triads.collect()) == 3 * (12 + 10) + 3 * 2
+
+
 @pytest.mark.parametrize("max_rounds", [30, 1])
 def test_ktruss_distributed_matches_local(spark, messy_graph, max_rounds, monkeypatch):
     from linkgraph.algorithms.ktruss import k_truss

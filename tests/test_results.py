@@ -100,7 +100,7 @@ def test_pagerank_stats_row(spark):
             "pageRank",
             g,
             lambda g_: PageRank(tolerance=1e-3, max_iterations=100,
-                                strategy="join").run(g_),
+                                strategy="csr").run(g_),
         )
     )
     assert r["didConverge"] is True and r["iterations"] >= 1
@@ -178,7 +178,7 @@ def test_pagerank_call_write_mode(spark):
 
     g = _graph(spark)
     r = _row(procs.call("algo.pageRank", g, write=True, max_iterations=5,
-                        strategy="join"))
+                        strategy="csr"))
     assert r["sumCentrality"] > 0.0
     assert r["iterations"] >= 1
 
