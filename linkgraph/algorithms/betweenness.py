@@ -6,7 +6,7 @@ ParallelBetweennessCentrality,RABrandesBetweennessCentrality}.java`.
 Brandes' dependency accumulation doesn't decompose into joins (SURVEY.md §7
 hard-part 6). Spark-native form: batch the SOURCES — each Arrow task runs
 exact per-source Brandes over the worker-resident CSR built DISTRIBUTED via
-`blocks.write_edge_blocks` (executor tasks write per-part .npy blocks to
+`blocks.open_store` (executor tasks write per-part .npy blocks to
 shared storage; each worker merges them into one global CSR once, then it
 is process/page-cache resident) and emits partial dependency scores;
 `groupBy(id).agg(sum)` combines. The per-source kernel is level-synchronous
@@ -30,42 +30,23 @@ from linkgraph.algorithms import blocks
 
 
 def _ensure_store(graph: Graph, direction: str, store_path: str | None) -> tuple[str, int]:
-    """Distributed CSR block-store build (idempotent). Returns (path, n).
+    """The CSR block store of the graph's ``direction`` edges, opened
+    through ``blocks.open_store``. Returns (path, n).
 
     On a cluster `store_path` must live on shared storage (same contract as
-    PageRank's block_store); the local-mode default is a plan-keyed cached
-    tempdir (blocks.cached_store_dir) so repeat runs on the same logical
-    graph — walker batches, bench medians, betweenness re-runs — skip the
-    store rebuild.
+    PageRank's block_store); without it the store comes from the plan-keyed
+    cache, so repeat runs on the same logical graph — walker batches, bench
+    medians, betweenness re-runs — skip the rebuild. The manifest records
+    ``direction`` and the node count ``n``: a reused store built for
+    another direction or node range would silently yield wrong
+    centralities, so open_store rejects it.
     """
     n = int(graph.nodes.agg(F.max("id")).first()[0]) + 1
-    if store_path is None:
-        key = blocks.semantic_store_key(graph.edges, "csr", direction, n)
-        store_path, _hit = blocks.cached_store_dir(key, "linkgraph_csrstore_")
-    if blocks.store_exists(store_path):
-        blocks.validate_store(store_path, "push")
-        m = blocks.read_manifest(store_path)
-        # reject direction / graph drift: a reused store built with another
-        # direction or node range silently yields wrong centralities
-        if m.get("direction") is not None and m["direction"] != direction:
-            raise ValueError(
-                f"store at {store_path} was built direction={m['direction']}; "
-                f"this run needs {direction} — rebuild or point elsewhere"
-            )
-        if m.get("n") is not None and int(m["n"]) != n:
-            raise ValueError(
-                f"store at {store_path} was built for n={m['n']} nodes, "
-                f"graph has n={n} — rebuild or point elsewhere"
-            )
-    else:
-        edges = (
-            graph.undirected_edges() if direction == "BOTH" else graph.edges
-        ).select("src", "dst", "weight")
-        b = graph.nodes.sparkSession.sparkContext.defaultParallelism
-        blocks.write_edge_blocks(
-            edges, b, store_path, meta_extra={"direction": direction, "n": n}
-        )
-    return store_path, n
+    edges = (
+        graph.undirected_edges() if direction == "BOTH" else graph.edges
+    ).select("src", "dst", "weight")
+    path, _ = blocks.open_store(edges, "push", store_path, direction=direction, n=n)
+    return path, n
 
 
 def _neighbors_flat(indptr, indices, frontier):

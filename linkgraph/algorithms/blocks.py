@@ -37,10 +37,21 @@ caching; see BENCH/BASELINE.md history). Per superstep, Arrow/broadcast
 traffic is ONLY the rank vector. On a cluster the store lives on the
 executor-local scratch of a shared filesystem (or is fetched once from
 object storage per host).
+
+Lifecycle: every algorithm gets its store from ``open_store``, the one
+place a store is keyed, sized, built and validated. Each manifest records
+the parameters the store was built with (layout, ``weighted``, and
+``normalize``/``denom_add`` for pull or ``direction``/``n`` for the
+betweenness push store), and a reused store whose recorded parameters
+differ from the run's is rejected. The plan-keyed cache owns every
+directory it creates, so no algorithm deletes a store; each superstep loop
+runs inside ``pinned_store``, which keeps its store from LRU eviction
+until the loop ends, normally or not.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import zlib
@@ -188,42 +199,19 @@ def _edge_buffer(path: str, part: int, n_edges: int) -> np.ndarray:
 
 
 def _finalize_store(
-    df_manifest: DataFrame, path: str, num_blocks: int, meta: dict | None = None
+    df_manifest: DataFrame, path: str, num_blocks: int, meta: dict
 ) -> None:
+    """Write the manifest — block count, edges per part and every build
+    parameter that is not None — then _SUCCESS."""
     rows = df_manifest.collect()
     manifest = {
         "num_blocks": num_blocks,
         "parts": {str(r["part"]): int(r["n_edge"]) for r in rows},
     }
-    if meta:
-        manifest.update(meta)
+    manifest.update({k: v for k, v in meta.items() if v is not None})
     with open(os.path.join(path, "manifest.json"), "w") as f:
         json.dump(manifest, f)
     open(os.path.join(path, "_SUCCESS"), "w").close()
-
-
-def validate_store(
-    path: str, layout: str, weighted: bool | None = None
-) -> int:
-    """Read a pre-built store's manifest and return ITS num_blocks.
-
-    Raises on layout or weighted-flag mismatch — a store built with a
-    different num_blocks (e.g. defaultParallelism changed between sessions)
-    or weighting would otherwise silently mis-slice / zero contributions.
-    """
-    m = read_manifest(path)
-    got_layout = m.get("layout")
-    if got_layout is not None and got_layout != layout:
-        raise ValueError(
-            f"block store at {path} has layout={got_layout!r}, need {layout!r}"
-        )
-    got_w = m.get("weighted")
-    if weighted is not None and got_w is not None and bool(got_w) != bool(weighted):
-        raise ValueError(
-            f"block store at {path} was built weighted={got_w}; "
-            f"this run needs weighted={weighted} — rebuild or point elsewhere"
-        )
-    return int(m["num_blocks"])
 
 
 def store_exists(path: str) -> bool:
@@ -236,51 +224,39 @@ def read_manifest(path: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# In-process store-directory cache keyed by the edge PLAN's semantic hash:
-# repeated algorithm runs on the same logical graph (bench repeats, an
-# interactive session iterating parameters) reuse the materialized block
-# store instead of re-shuffling the edge table every call. Stores are
-# immutable once written (_SUCCESS last); validate_store still guards
-# geometry on reuse. NOT keyed by data contents — mutating the underlying
-# files mid-process is out of contract (same assumption the OS-page-cache
-# residency already makes). Bounded: oldest UNPINNED entries evicted +
-# deleted — algorithms pin their store for the duration of a superstep
-# loop so eviction can never delete a directory that is being read.
+# The store lifecycle, one mechanism for every algorithm (open_store).
+# Stores are keyed by the edge PLAN's semantic hash plus the layout and the
+# build parameters, so repeated runs on the same logical graph (bench
+# repeats, parameter sweeps, the Katz/ArticleRank/Eigenvector family) reuse
+# the materialized store instead of re-shuffling the edge table. Stores are
+# immutable once written (_SUCCESS last) and every manifest records the
+# parameters it was built with; a reused store whose recorded layout or
+# parameters differ from the run's is rejected. NOT keyed by data contents
+# beyond the input-file fingerprint: rewriting a non-local input in place
+# is out of contract (the OS-page-cache residency makes the same
+# assumption). The cache owns every directory it creates, also those whose
+# key cannot be computed, so no algorithm deletes a store: past the bound
+# the oldest UNPINNED entries are evicted and deleted. Every superstep loop
+# runs inside `pinned_store`, so eviction never deletes a directory that is
+# being read, and the pin is dropped however the loop ends.
 # ---------------------------------------------------------------------------
 _STORE_DIR_CACHE: dict[tuple, str] = {}
 _STORE_DIR_CACHE_MAX = 16
-# path → refcount of in-flight algorithm runs reading the store: eviction
-# skips pinned paths, so a long PageRank mid-superstep can never have its
-# block directory rmtree'd out from under it by 16 newer stores
+# path → number of in-flight loops reading the store; eviction skips these
 _STORE_DIR_PINS: dict[str, int] = {}
 
 
-def pin_store(path: str) -> None:
+@contextlib.contextmanager
+def pinned_store(path: str) -> Iterator[str]:
+    """Pin `path` against LRU eviction for the duration of a superstep
+    loop; the pin is dropped on exit, also when the loop raises."""
     _STORE_DIR_PINS[path] = _STORE_DIR_PINS.get(path, 0) + 1
-
-
-def unpin_store(path: str) -> None:
-    n = _STORE_DIR_PINS.get(path, 0) - 1
-    if n <= 0:
-        _STORE_DIR_PINS.pop(path, None)
-    else:
-        _STORE_DIR_PINS[path] = n
-
-
-class pinned_store:
-    """Context manager: pin `path` against LRU eviction for the duration of
-    an algorithm run (use around any superstep loop that re-reads blocks)."""
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def __enter__(self):
-        pin_store(self.path)
-        return self.path
-
-    def __exit__(self, *exc):
-        unpin_store(self.path)
-        return False
+    try:
+        yield path
+    finally:
+        left = _STORE_DIR_PINS.pop(path) - 1
+        if left:
+            _STORE_DIR_PINS[path] = left
 
 
 _FINGERPRINT_STAT_CAP = 1024
@@ -316,8 +292,7 @@ def _input_files_fingerprint(edges: DataFrame) -> int:
 
 def semantic_store_key(edges: DataFrame, *extra) -> tuple | None:
     """Cache key from the analyzed plan's semanticHash + an input-files
-    content fingerprint — None when the hash is unavailable (then callers
-    build an uncached tempdir store)."""
+    content fingerprint — None when the hash is unavailable."""
     try:
         h = edges._jdf.queryExecution().analyzed().semanticHash()
     except Exception:
@@ -325,36 +300,76 @@ def semantic_store_key(edges: DataFrame, *extra) -> tuple | None:
     return (int(h), _input_files_fingerprint(edges), *extra)
 
 
-def cached_store_dir(key: tuple | None, prefix: str) -> tuple[str, bool]:
-    """(path, hit) — the cached store dir for `key`, or a fresh tempdir
-    (registered under `key` unless key is None). `hit` means a _SUCCESS
-    store already exists there. Staleness caveat: the key stats local
-    files only, so a non-local input rewritten in place under the same
-    file name still hits the old store."""
+def cached_store_dir(key: tuple, prefix: str) -> str:
+    """The cached store dir for `key` when a _SUCCESS store exists there,
+    else a fresh tempdir registered under `key`. Staleness caveat: the key
+    stats local files only, so a non-local input rewritten in place under
+    the same file name still hits the old store."""
     import shutil
     import tempfile
 
-    if key is not None:
-        path = _STORE_DIR_CACHE.get(key)
-        if path is not None and store_exists(path):
-            return path, True
-    path = tempfile.mkdtemp(prefix=prefix)
-    if key is not None:
-        stale = _STORE_DIR_CACHE.get(key)
-        if stale is not None:  # half-built dir from a failed run — reclaim
-            shutil.rmtree(stale, ignore_errors=True)
-        _STORE_DIR_CACHE[key] = path
-        # evict oldest UNPINNED entries; a store mid-algorithm-run stays on
-        # disk even if that temporarily overflows the cache bound
-        if len(_STORE_DIR_CACHE) > _STORE_DIR_CACHE_MAX:
-            evictable = [
-                k for k, p in _STORE_DIR_CACHE.items()
-                if p not in _STORE_DIR_PINS and p != path
-            ]
-            for old_key in evictable[: len(_STORE_DIR_CACHE) - _STORE_DIR_CACHE_MAX]:
-                old = _STORE_DIR_CACHE.pop(old_key)
-                shutil.rmtree(old, ignore_errors=True)
-    return path, False
+    path = _STORE_DIR_CACHE.get(key)
+    if path is not None and store_exists(path):
+        return path
+    if path is not None:  # half-built dir from a failed run — reclaim
+        shutil.rmtree(path, ignore_errors=True)
+    path = _STORE_DIR_CACHE[key] = tempfile.mkdtemp(prefix=prefix)
+    # evict oldest UNPINNED entries; a store mid-algorithm-run stays on
+    # disk even if that temporarily overflows the cache bound
+    if len(_STORE_DIR_CACHE) > _STORE_DIR_CACHE_MAX:
+        evictable = [
+            k for k, p in _STORE_DIR_CACHE.items()
+            if p not in _STORE_DIR_PINS and p != path
+        ]
+        for old_key in evictable[: len(_STORE_DIR_CACHE) - _STORE_DIR_CACHE_MAX]:
+            shutil.rmtree(_STORE_DIR_CACHE.pop(old_key), ignore_errors=True)
+    return path
+
+
+# build parameters a layout always records, so a run that leaves them at
+# their defaults still rejects a store built with other values
+_BUILD_DEFAULTS = {"pull": {"normalize": True, "denom_add": 0.0}, "push": {}}
+
+
+def open_store(
+    edges: DataFrame,
+    layout: str,
+    path: str | None = None,
+    num_blocks: int | None = None,
+    **meta,
+) -> tuple[str, int]:
+    """(path, num_blocks) of a ``layout`` ('pull' CSC or 'push' CSR) block
+    store over ``edges`` built with the parameters ``meta`` (see
+    write_pull_blocks / write_edge_blocks).
+
+    Without ``path`` the store lives in the plan-keyed cache (key: plan
+    hash, layout, sorted meta), which owns the directory. A store that
+    already exists is checked against ``layout`` and every ``meta`` entry
+    its manifest records — a store built another way would silently
+    mis-weight every superstep — and its OWN block count is returned: a
+    count that differs from ``num_blocks`` would mis-slice. Otherwise the
+    store is built with ``num_blocks``, or a count sized by edge volume."""
+    meta = {**_BUILD_DEFAULTS[layout], **meta}
+    if path is None:
+        # a plan without a hash gets a fresh key: built once, still evicted
+        key = semantic_store_key(edges, layout, *sorted(meta.items()))
+        path = cached_store_dir(key or (object(),), f"linkgraph_{layout}_")
+    if store_exists(path):
+        m = read_manifest(path)
+        for name, want in {"layout": layout, **meta}.items():
+            got = m.get(name)
+            if got is not None and want is not None and got != want:
+                raise ValueError(
+                    f"block store at {path} was built {name}={got!r}; this "
+                    f"run needs {name}={want!r} — rebuild or point elsewhere"
+                )
+        return path, int(m["num_blocks"])
+    b = num_blocks or auto_num_blocks(
+        edges, edges.sparkSession.sparkContext.defaultParallelism
+    )
+    write = write_pull_blocks if layout == "pull" else write_edge_blocks
+    write(edges, b, path, **meta)
+    return path, b
 
 
 _GLOBAL_CSR_CACHE: dict[str, tuple] = {}
@@ -437,20 +452,19 @@ def write_edge_blocks(
     num_blocks: int,
     path: str,
     weighted: bool | None = None,
-    meta_extra: dict | None = None,
+    **meta,
 ) -> None:
-    """Materialize the CSR block store once under `path/part=K/*.npy`."""
+    """Materialize the CSR block store once under `path/part=K/*.npy`;
+    `weighted` and any further `meta` (betweenness records its `direction`
+    and node count `n`) go into the manifest."""
     os.makedirs(path, exist_ok=True)
     e = edges.withColumn("part", F.pmod(F.col("src"), F.lit(num_blocks)).cast("int"))
     manifest = e.groupBy("part").applyInPandas(
         _build_push_writer(path), schema="part int, n_edge long"
     )
-    meta = {"layout": "push"}
-    if weighted is not None:
-        meta["weighted"] = bool(weighted)
-    if meta_extra:
-        meta.update(meta_extra)
-    _finalize_store(manifest, path, num_blocks, meta)
+    _finalize_store(
+        manifest, path, num_blocks, {"layout": "push", "weighted": weighted, **meta}
+    )
 
 
 def _pack_rank_block(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -653,7 +667,8 @@ def write_pull_blocks(
     global here, unlike the src-partitioned push build where they're
     partition-local). `denom_add` bakes ArticleRank's `outdeg + avgdeg`
     denominator into the store; `normalize=False` stores raw weights
-    (eigenvector power iteration).
+    (eigenvector power iteration). The manifest records `weighted`,
+    `normalize` and `denom_add`.
     """
     os.makedirs(path, exist_ok=True)
     if normalize:
@@ -676,10 +691,10 @@ def write_pull_blocks(
     manifest = e.groupBy("part").applyInPandas(
         _build_pull_writer(path, num_blocks), schema="part int, n_edge long"
     )
-    meta = {"layout": "pull"}
-    if weighted is not None:
-        meta["weighted"] = bool(weighted)
-    _finalize_store(manifest, path, num_blocks, meta)
+    _finalize_store(manifest, path, num_blocks, {
+        "layout": "pull", "weighted": weighted,
+        "normalize": bool(normalize), "denom_add": float(denom_add),
+    })
 
 
 def _pull_block(x: np.ndarray, blk: dict, slice_len: int, buf: np.ndarray) -> np.ndarray:

@@ -117,11 +117,13 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
     """CSC-block pull execution (r6): when node ids are contiguous 0..n-1,
     both half-steps are zero-shuffle driver-vector gathers — auth over the
     forward-edge pull store, hub over the reversed-edge store (both raw
-    weights, shared with Katz/eigenvector through the plan-keyed cache) —
-    instead of 2 joins + 2 groupBys + a localCheckpoint per iteration.
-    Same unnormalized-loop + periodic/final L1 rescale semantics as the
+    weights from ``blocks.open_store``, so the forward store is the one
+    Katz/eigenvector use on the same edges) — instead of 2 joins + 2
+    groupBys + a localCheckpoint per iteration. Each store is pinned as
+    soon as it is open, before the second one can evict it. Same
+    unnormalized-loop + periodic/final L1 rescale semantics as the
     DataFrame path. Returns None when ids are not contiguous."""
-    import shutil
+    import contextlib
 
     import numpy as np
     import pandas as pd
@@ -138,32 +140,22 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
         "weight", F.lit(1.0)
     )
     sc = edges.sparkSession.sparkContext
-    stores = []
-    try:
-        built = []
-        for e, prefix in ((fwd, "linkgraph_hitsf_"), (rev, "linkgraph_hitsr_")):
-            key = blocks.semantic_store_key(e, "pullpi", n, 0.0, False)
-            path, hit = blocks.cached_store_dir(key, prefix)
-            blocks.pin_store(path)
-            stores.append((path, key))
-            if hit:
-                b = blocks.validate_store(path, "pull")
-            else:
-                b = blocks.auto_num_blocks(e, sc.defaultParallelism)
-                blocks.write_pull_blocks(e, b, path, normalize=False)
-            built.append((path, b))
-        (fpath, fb), (rpath, rb) = built
-        fwd_step = blocks.pull_engine(sc, fpath, fb, n)
-        rev_step = blocks.pull_engine(sc, rpath, rb, n)
 
-        def l1(v):
-            s = v.sum()
-            return v * (float(n) / s) if s > 0 else np.zeros_like(v)
+    def l1(v):
+        s = v.sum()
+        return v * (float(n) / s) if s > 0 else np.zeros_like(v)
 
-        h = np.ones(n)
-        a = np.zeros(n)
-        prev_norm = None
-        iterations, converged = 0, False
+    h = np.ones(n)
+    a = np.zeros(n)
+    prev_norm = None
+    iterations, converged = 0, False
+    with contextlib.ExitStack() as pins:
+        steps = []
+        for e in (fwd, rev):
+            path, b = blocks.open_store(e, "pull", normalize=False)
+            pins.enter_context(blocks.pinned_store(path))
+            steps.append(blocks.pull_engine(sc, path, b, n))
+        fwd_step, rev_step = steps
         for step in range(max_iterations):
             a = fwd_step(h)
             h_new = rev_step(a)
@@ -178,18 +170,13 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
             h = h_new
             if converged:
                 break
-        h, a = l1(h), l1(a)
-        out = edges.sparkSession.createDataFrame(
-            pd.DataFrame({"id": np.arange(n), "hub": h, "authority": a})
-        )
-        out.iterations = iterations  # type: ignore[attr-defined]
-        out.did_converge = converged  # type: ignore[attr-defined]
-        return out
-    finally:
-        for path, key in stores:
-            blocks.unpin_store(path)
-            if key is None:
-                shutil.rmtree(path, ignore_errors=True)
+    h, a = l1(h), l1(a)
+    out = edges.sparkSession.createDataFrame(
+        pd.DataFrame({"id": np.arange(n), "hub": h, "authority": a})
+    )
+    out.iterations = iterations  # type: ignore[attr-defined]
+    out.did_converge = converged  # type: ignore[attr-defined]
+    return out
 
 
 def _l1_pair(nodes: DataFrame, hub: DataFrame, auth: DataFrame, n: int):

@@ -365,7 +365,7 @@ def weighted_all_shortest_paths(
     Reference `impl/WeightedAllShortestPaths.java`: per-source Dijkstra,
     parallel across sources. Spark form: sources fan out across tasks; each
     Arrow task runs Dijkstra over the worker-resident global CSR (built
-    distributed via blocks.write_edge_blocks, RAW weights) — same store
+    distributed via blocks.open_store, RAW weights) — same store
     pattern as Brandes. Weights must be ≥ 0.
     """
     import heapq

@@ -117,7 +117,6 @@ class PageRank:
             if self.weighted
             else graph.edges.withColumn("weight", F.lit(1.0))
         )
-        b = self.num_blocks
 
         node_pd = self._teleport(graph.nodes).toPandas()
         n = len(node_pd)
@@ -132,24 +131,9 @@ class PageRank:
         t = np.zeros(n)
         t[ids] = node_pd["t"].to_numpy(np.float64)
 
-        block_path = self.block_store
-        owns_blocks = False
-        if block_path is None:
-            # plan-keyed cache: repeat runs on the same logical edge table
-            # (bench medians, parameter sweeps) reuse the materialized store
-            key = blocks.semantic_store_key(edges, "pr-pull", self.weighted)
-            block_path, _hit = blocks.cached_store_dir(
-                key, "linkgraph_pullblocks_"
-            )
-            owns_blocks = key is None  # cache owns registered dirs
-        if blocks.store_exists(block_path):
-            # trust the STORE's geometry, not the caller's: a b mismatch
-            # would silently mis-slice every superstep
-            b = blocks.validate_store(block_path, "pull", self.weighted)
-        else:
-            if b is None:  # size by edge volume only when actually building
-                b = blocks.auto_num_blocks(edges, sc.defaultParallelism)
-            blocks.write_pull_blocks(edges, b, block_path, weighted=self.weighted)
+        block_path, b = blocks.open_store(
+            edges, "pull", self.block_store, self.num_blocks, weighted=self.weighted
+        )
 
         p = t.copy()
         start_step = 0
@@ -164,41 +148,33 @@ class PageRank:
 
         converged = False
         step = start_step
-        # pin the block store across the superstep loop so the LRU eviction
-        # in cached_store_dir can never rmtree it mid-run (a crash mid-loop
-        # leaks the pin, which only disables eviction for this one path)
-        blocks.pin_store(block_path)
-        # r6: execution side resolved once — driver-local numpy gather when
-        # the store's edge count fits DRIVER_EDGE_THRESHOLD (zero jobs per
-        # superstep), the distributed pull job beyond it
-        pull_step = blocks.pull_engine(sc, block_path, b, n)
-        while step < self.max_iterations:
-            it0 = time.time()
-            contrib = pull_step(p)
-            p_new = (1.0 - d) * t + d * contrib
-            step += 1
-            delta = float(np.abs(p_new - p).max())
-            self.metrics.deltas.append(delta)
-            p = p_new
-            if self.checkpoint is not None and (
-                self.checkpoint_every and step % self.checkpoint_every == 0
-            ):
-                ck_df = spark.createDataFrame(
-                    pd.DataFrame({"id": np.arange(n), "rank": p})
-                )
-                self.checkpoint.write(ck_df, step, {"delta": delta, "iteration": step}, fmt="pagerank/ranks-v1")
-            self.metrics.superstep_millis.append(int((time.time() - it0) * 1000))
-            if self.tolerance is not None and delta < self.tolerance:
-                converged = True
-                break
+        with blocks.pinned_store(block_path):
+            # execution side resolved once — driver-local numpy gather when
+            # the store's edge count fits DRIVER_EDGE_THRESHOLD (zero jobs
+            # per superstep), the distributed pull job beyond it
+            pull_step = blocks.pull_engine(sc, block_path, b, n)
+            while step < self.max_iterations:
+                it0 = time.time()
+                contrib = pull_step(p)
+                p_new = (1.0 - d) * t + d * contrib
+                step += 1
+                delta = float(np.abs(p_new - p).max())
+                self.metrics.deltas.append(delta)
+                p = p_new
+                if self.checkpoint is not None and (
+                    self.checkpoint_every and step % self.checkpoint_every == 0
+                ):
+                    ck_df = spark.createDataFrame(
+                        pd.DataFrame({"id": np.arange(n), "rank": p})
+                    )
+                    self.checkpoint.write(ck_df, step, {"delta": delta, "iteration": step}, fmt="pagerank/ranks-v1")
+                self.metrics.superstep_millis.append(int((time.time() - it0) * 1000))
+                if self.tolerance is not None and delta < self.tolerance:
+                    converged = True
+                    break
 
         self.metrics.iterations = step
         self.metrics.did_converge = converged
-        blocks.unpin_store(block_path)
-        if owns_blocks:
-            import shutil
-
-            shutil.rmtree(block_path, ignore_errors=True)
         return spark.createDataFrame(pd.DataFrame({"id": np.arange(n), "rank": p}))
 
     # hard ceiling on the rank-vector length the pull strategy will broadcast;
@@ -241,30 +217,15 @@ class PageRank:
         packs the checkpointed (id, rank) table like the teleport table."""
         d = self.damping
         nodes = self._teleport(graph.nodes).persist()
-        edges = graph.edges
-
+        edges = (
+            graph.edges
+            if self.weighted
+            else graph.edges.withColumn("weight", F.lit(1.0))
+        )
         # materialize the CSR block store once (worker-resident thereafter)
-        block_path = self.block_store
-        owns_blocks = False
-        b = self.num_blocks
-        if block_path is None:
-            key = blocks.semantic_store_key(edges, "pr-csr", self.weighted)
-            block_path, _hit = blocks.cached_store_dir(key, "linkgraph_blocks_")
-            owns_blocks = key is None
-        if blocks.store_exists(block_path):
-            # adopt the store's num_blocks; reject weighted/layout drift
-            b = blocks.validate_store(block_path, "push", self.weighted)
-        else:
-            if b is None:  # size by edge volume only when actually building
-                b = blocks.auto_num_blocks(
-                    edges, edges.sparkSession.sparkContext.defaultParallelism
-                )
-            blocks.write_edge_blocks(
-                edges if self.weighted else edges.withColumn("weight", F.lit(1.0)),
-                b,
-                block_path,
-                weighted=self.weighted,
-            )
+        block_path, b = blocks.open_store(
+            edges, "push", self.block_store, self.num_blocks, weighted=self.weighted
+        )
 
         ranks = nodes.select("id", F.col("t").alias("rank"))
         step = 0
@@ -273,7 +234,6 @@ class PageRank:
             if latest is not None:
                 step, ranks, _ = latest
                 self.metrics.resumed_from = step
-        ranks = ranks.localCheckpoint(eager=True)
         # nodes with no in-edges get no scatter partial; a zero row each
         # makes the gather emit their constant rank (1−d)·t
         static_zero = (
@@ -288,42 +248,38 @@ class PageRank:
         )
         n_tasks = blocks._pull_task_count(block_path, b)
         converged = False
-        blocks.pin_store(block_path)  # see pull strategy: guards LRU eviction
-        while step < self.max_iterations:
-            it0 = time.time()
-            partials = blocks.scatter_partials_combined(
-                rank_blocks.coalesce(n_tasks), block_path
-            ).unionByName(static_zero)
-            # eager localCheckpoint = superstep barrier + lineage truncation
-            # (the reference's BSP sync point; durable resume = CheckpointManager)
-            new_blocks = blocks.gather_pack(
-                partials, b, d, self.source_nodes
-            ).localCheckpoint(eager=True)
-            step += 1
-            delta = None
-            if self.tolerance is not None:
-                delta = blocks.rank_block_delta(new_blocks, rank_blocks)
-                self.metrics.deltas.append(delta)
-            if self.checkpoint is not None and (
-                self.checkpoint_every and step % self.checkpoint_every == 0
-            ):
-                self.checkpoint.write(
-                    blocks.unpack_rank_blocks(new_blocks), step,
-                    {"delta": delta, "iteration": step}, fmt="pagerank/ranks-v1",
-                )
-            rank_blocks = new_blocks
-            self.metrics.superstep_millis.append(int((time.time() - it0) * 1000))
-            if delta is not None and delta < self.tolerance:
-                converged = True
-                break
+        with blocks.pinned_store(block_path):
+            while step < self.max_iterations:
+                it0 = time.time()
+                partials = blocks.scatter_partials_combined(
+                    rank_blocks.coalesce(n_tasks), block_path
+                ).unionByName(static_zero)
+                # eager localCheckpoint = superstep barrier + lineage
+                # truncation (the reference's BSP sync point; durable
+                # resume = CheckpointManager)
+                new_blocks = blocks.gather_pack(
+                    partials, b, d, self.source_nodes
+                ).localCheckpoint(eager=True)
+                step += 1
+                delta = None
+                if self.tolerance is not None:
+                    delta = blocks.rank_block_delta(new_blocks, rank_blocks)
+                    self.metrics.deltas.append(delta)
+                if self.checkpoint is not None and (
+                    self.checkpoint_every and step % self.checkpoint_every == 0
+                ):
+                    self.checkpoint.write(
+                        blocks.unpack_rank_blocks(new_blocks), step,
+                        {"delta": delta, "iteration": step}, fmt="pagerank/ranks-v1",
+                    )
+                rank_blocks = new_blocks
+                self.metrics.superstep_millis.append(int((time.time() - it0) * 1000))
+                if delta is not None and delta < self.tolerance:
+                    converged = True
+                    break
 
         self.metrics.iterations = step
         self.metrics.did_converge = converged
-        blocks.unpin_store(block_path)
-        if owns_blocks:
-            import shutil
-
-            shutil.rmtree(block_path, ignore_errors=True)
         nodes.unpersist()
         return blocks.unpack_rank_blocks(rank_blocks)
 
@@ -378,30 +334,20 @@ def _pull_power_iteration(
     normalize: bool = True,
     tolerance: float | None = None,
 ):
-    """Shared CSC-block power-iteration driver: build the pull store once
-    (one shuffle), then zero-shuffle supersteps; `step(p, contrib)` returns
-    the next vector. Returns the final numpy vector.
-
-    The store is reused across calls through the plan-keyed cache
-    (blocks.cached_store_dir): Katz/ArticleRank/Eigenvector re-runs on the
-    same logical edge table skip the shuffle + rewrite entirely."""
-    import shutil
-
+    """Shared CSC-block power-iteration driver: open the pull store once
+    (blocks.open_store: one shuffle to build it, none when the plan-keyed
+    cache already holds it — Katz/ArticleRank/Eigenvector re-runs on the
+    same logical edge table skip the rebuild), then zero-shuffle supersteps
+    inside the store pin; `step(p, contrib)` returns the next vector.
+    Returns the final numpy vector."""
     import numpy as np
 
     sc = edges.sparkSession.sparkContext
-    key = blocks.semantic_store_key(edges, "pullpi", n, denom_add, normalize)
-    path, hit = blocks.cached_store_dir(key, "linkgraph_pullpi_")
-    blocks.pin_store(path)
-    try:
-        if hit:
-            b = blocks.validate_store(path, "pull")
-        else:
-            b = blocks.auto_num_blocks(edges, sc.defaultParallelism)
-            blocks.write_pull_blocks(
-                edges, b, path, denom_add=denom_add, normalize=normalize
-            )
-        p = np.ones(n)
+    path, b = blocks.open_store(
+        edges, "pull", denom_add=denom_add, normalize=normalize
+    )
+    p = np.ones(n)
+    with blocks.pinned_store(path):
         pull_step = blocks.pull_engine(sc, path, b, n)  # r6: see _run_pull
         for _ in range(max_iterations):
             contrib = pull_step(p)
@@ -410,11 +356,7 @@ def _pull_power_iteration(
             p = p_new
             if tolerance is not None and delta < tolerance:
                 break
-        return p
-    finally:
-        blocks.unpin_store(path)
-        if key is None:  # uncached build — nothing owns it, clean up
-            shutil.rmtree(path, ignore_errors=True)
+    return p
 
 
 def _join_power_loop(

@@ -101,11 +101,10 @@ def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
     above the crossover a single zero-shuffle ``pull_superstep`` job,
     instead of the join loop's edges⋈shares shuffle + groupBy + left-join
     + localCheckpoint. Identical arithmetic (w_norm = 1/outdeg baked at
-    store build, no dangling redistribution); the store is shared with
-    PageRank's pull store through the same plan-keyed cache. Returns None
-    when ids are not contiguous (callers fall back to the join loop)."""
-    import shutil
-
+    store build, no dangling redistribution); the store comes from
+    ``blocks.open_store``, so a repeat batch on the same edges reuses it,
+    and the supersteps run inside its pin. Returns None when ids are not
+    contiguous (callers fall back to the join loop)."""
     import numpy as np
     import pandas as pd
 
@@ -117,32 +116,21 @@ def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
         return None
     edges_w = graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))
     sc = edges_w.sparkSession.sparkContext
-    key = blocks.semantic_store_key(edges_w, "pullpi", n, 0.0, True)
-    path, hit = blocks.cached_store_dir(key, "linkgraph_pullppr_")
-    blocks.pin_store(path)
-    try:
-        if hit:
-            b = blocks.validate_store(path, "pull")
-        else:
-            b = blocks.auto_num_blocks(edges_w, sc.defaultParallelism)
-            blocks.write_pull_blocks(edges_w, b, path)
-        S = len(seeds)
-        ind = np.zeros((n, S))
-        for j, s in enumerate(seeds):
-            ind[int(s), j] = 1.0
-        P = ind.copy()
+    path, b = blocks.open_store(edges_w, "pull")
+    S = len(seeds)
+    ind = np.zeros((n, S))
+    for j, s in enumerate(seeds):
+        ind[int(s), j] = 1.0
+    P = ind.copy()
+    with blocks.pinned_store(path):
         pull_step = blocks.pull_engine(sc, path, b, n)
         for _ in range(iterations):
             C = pull_step(P)
             P = (1.0 - d) * ind + d * C
-        pdf = pd.DataFrame({"id": np.arange(n)})
-        for j in range(S):
-            pdf[f"r{j}"] = P[:, j]
-        return edges_w.sparkSession.createDataFrame(pdf)
-    finally:
-        blocks.unpin_store(path)
-        if key is None:
-            shutil.rmtree(path, ignore_errors=True)
+    pdf = pd.DataFrame({"id": np.arange(n)})
+    for j in range(S):
+        pdf[f"r{j}"] = P[:, j]
+    return edges_w.sparkSession.createDataFrame(pdf)
 
 
 def ppr_topk(

@@ -5,7 +5,7 @@ walks with uniform or node2vec (p=return, q=inOut) transition bias.
 
 Spark-native: walks run per start-node batch inside an Arrow UDF over the
 worker-resident global CSR merged from the DISTRIBUTED block store
-(blocks.write_edge_blocks on shared storage — no driver collect). The
+(blocks.open_store on shared storage — no driver collect). The
 walker is batch-vectorized: ALL walks in a batch advance one step per
 numpy operation (gather degrees, one counter-based random vector, fancy-
 index next hops); node2vec membership ("is this neighbor also a neighbor

@@ -108,24 +108,15 @@ def spectral_embedding(
 
     edges = _sym_normalized_edges(graph)
     sc = nodes.sparkSession.sparkContext
-    key = blocks.semantic_store_key(edges, "spectral", n)
-    path, hit = blocks.cached_store_dir(key, "linkgraph_spectral_")
-    import shutil
+    # raw weights: the symmetric normalization is baked into the edge weight
+    path, b = blocks.open_store(edges, "pull", normalize=False)
 
-    blocks.pin_store(path)
-    try:
-        if hit:
-            b = blocks.validate_store(path, "pull")
-        else:
-            b = blocks.auto_num_blocks(edges, sc.defaultParallelism)
-            # raw weights: normalization is baked into the edge weight
-            blocks.write_pull_blocks(edges, b, path, normalize=False)
-
-        k = min(k, n)  # qr of an n×k start basis caps the rank at n
-        rng = np.random.RandomState(seed)
-        X, _ = np.linalg.qr(rng.standard_normal((n, k)))
-        evals = np.zeros(k)
-        prev_evals = np.zeros(k)
+    k = min(k, n)  # qr of an n×k start basis caps the rank at n
+    rng = np.random.RandomState(seed)
+    X, _ = np.linalg.qr(rng.standard_normal((n, k)))
+    evals = np.zeros(k)
+    prev_evals = np.zeros(k)
+    with blocks.pinned_store(path):
         step = blocks.pull_engine(sc, path, b, n)
         for _ in range(max_iterations):
             Y = step(X)
@@ -135,24 +126,20 @@ def spectral_embedding(
             if np.abs(evals - prev_evals).max() < tolerance:
                 break
             prev_evals = evals
-        spectral_embedding.last_eigenvalues = evals.copy()
-        # deterministic sign: largest-|entry| component positive per column
-        for j in range(k):
-            i = int(np.abs(X[:, j]).argmax())
-            if X[i, j] < 0:
-                X[:, j] = -X[:, j]
-        import pandas as pd
+    spectral_embedding.last_eigenvalues = evals.copy()
+    # deterministic sign: largest-|entry| component positive per column
+    for j in range(k):
+        i = int(np.abs(X[:, j]).argmax())
+        if X[i, j] < 0:
+            X[:, j] = -X[:, j]
+    import pandas as pd
 
-        # .tolist() converts to plain Python floats — numpy.float64
-        # elements crash createDataFrame on sessions without Arrow
-        # enabled (the external driver harness supplies such a session)
-        out = pd.DataFrame(
-            {"id": np.arange(n, dtype=np.int64), "vec": X.tolist()}
-        )
-        return nodes.sparkSession.createDataFrame(
-            out, "id long, vec array<double>"
-        )
-    finally:
-        blocks.unpin_store(path)
-        if key is None:
-            shutil.rmtree(path, ignore_errors=True)
+    # .tolist() converts to plain Python floats — numpy.float64
+    # elements crash createDataFrame on sessions without Arrow
+    # enabled (a caller-supplied session may have it off)
+    out = pd.DataFrame(
+        {"id": np.arange(n, dtype=np.int64), "vec": X.tolist()}
+    )
+    return nodes.sparkSession.createDataFrame(
+        out, "id long, vec array<double>"
+    )

@@ -44,8 +44,8 @@ def test_store_cache_pin_blocks_eviction(tmp_path):
     saved_cache = dict(blocks._STORE_DIR_CACHE)
     blocks._STORE_DIR_CACHE.clear()
     try:
-        path, hit = blocks.cached_store_dir(("pin-test", 0), "lg_pin_test_")
-        assert not hit and os.path.isdir(path)
+        path = blocks.cached_store_dir(("pin-test", 0), "lg_pin_test_")
+        assert os.path.isdir(path)
         with blocks.pinned_store(path):
             # flood the cache far past its bound — the pinned dir survives
             for i in range(1, blocks._STORE_DIR_CACHE_MAX + 8):

@@ -250,6 +250,19 @@ def test_block_store_validation(spark, tmp_path):
     # layout mismatch rejected
     with _pytest.raises(ValueError, match="layout"):
         PageRank(max_iterations=3, strategy="pull", block_store=path).run(g)
+    # a raw-weight pull store (the Katz/HITS/eigenvector layout) would give
+    # wrong PageRank, which divides every weight by the source's out-weight
+    raw = str(tmp_path / "raw")
+    blocks.write_pull_blocks(g.edges, 2, raw, normalize=False)
+    with _pytest.raises(ValueError, match="normalize"):
+        PageRank(max_iterations=3, strategy="pull", block_store=raw).run(g)
+    # a betweenness store built for the other direction is rejected
+    from linkgraph.algorithms.betweenness import betweenness_centrality
+
+    bc = str(tmp_path / "bc")
+    betweenness_centrality(g, direction="OUTGOING", store_path=bc).collect()
+    with _pytest.raises(ValueError, match="direction"):
+        betweenness_centrality(g, direction="BOTH", store_path=bc)
 
 
 def test_graph_loader_typed_subgraph(spark):

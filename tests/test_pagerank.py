@@ -133,6 +133,30 @@ def test_pagerank_checkpoint_resume(spark, tmp_path):
             assert resumed[i] == pytest.approx(full[i], abs=1e-12)
 
 
+def test_failed_superstep_releases_store_pin(spark, monkeypatch):
+    """A superstep that raises must not leave its store pinned: a leaked
+    pin keeps that store from ever being evicted from the store cache."""
+    from linkgraph.algorithms import blocks
+
+    def failing_engine(*a):
+        def step(x):
+            raise RuntimeError("superstep failed")
+        return step
+
+    def failing_gather(*a):
+        raise RuntimeError("superstep failed")
+
+    g = _graph(spark)
+    before = dict(blocks._STORE_DIR_PINS)
+    for strategy, name, fake in (("pull", "pull_engine", failing_engine),
+                                 ("csr", "gather_pack", failing_gather)):
+        with monkeypatch.context() as m:
+            m.setattr(blocks, name, fake)
+            with pytest.raises(RuntimeError, match="superstep failed"):
+                PageRank(strategy=strategy, max_iterations=3).run(g)
+        assert blocks._STORE_DIR_PINS == before
+
+
 @pytest.mark.parametrize("strategy", ["CSR", "join"])
 def test_pagerank_rejects_unknown_strategy(strategy):
     with pytest.raises(ValueError, match="auto, pull, csr"):

@@ -624,6 +624,22 @@ def test_only_blocks_names_the_crossover_constant():
     assert offenders == []
 
 
+def test_only_blocks_manages_block_stores():
+    # one store lifecycle: algorithms get a store from blocks.open_store and
+    # pin it with blocks.pinned_store, so no other module keys, builds,
+    # validates, pins or deletes a store by hand
+    lifecycle = {
+        "cached_store_dir", "semantic_store_key", "validate_store", "store_exists",
+        "write_pull_blocks", "write_edge_blocks", "pin_store", "unpin_store",
+    }
+    offenders = [
+        f"{rel}:{line}:{name}"
+        for path, rel in _package_modules() if rel != "linkgraph/algorithms/blocks.py"
+        for name, line in _code_names(path) if name in lifecycle
+    ]
+    assert offenders == []
+
+
 def test_only_wcc_and_msf_call_union_find():
     # one connected-components call: the dedup cluster tail and the
     # k-spanning tree go through wcc(), whose gate picks the driver
