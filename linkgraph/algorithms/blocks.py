@@ -16,8 +16,8 @@ Two layouts, one block-store design:
   single-machine memory.
 * **pull (CSC)** — edges partitioned by ``pmod(dst, B)``; per block
   (src, slice_pos, w_norm) with slice_pos indexing np.arange(part, n, B).
-  Per superstep the driver broadcasts the rank vector and each block
-  computes its target slice with one gather + one bincount — ZERO shuffle;
+  Per superstep the driver broadcasts the rank (or label) vector and each
+  block computes its target slice with one kernel pass — ZERO shuffle;
   the driver is the BSP barrier. The fast path while the vector fits in
   memory (~10⁸ nodes).
 
@@ -25,6 +25,25 @@ Two layouts, one block-store design:
 cache of impl/pagerank/DegreeComputer.java), so the superstep kernel is a
 pure gather-multiply-bincount over numpy; Python loops only over blocks and
 supersteps.
+
+Three pull kernels run on a block's target slice, each one numpy pass:
+
+* ``sum_kernel`` — Σ x[u]·w_norm(u,v) (PageRank and the power-iteration
+  family; also the driver-local ``pull_engine`` step).
+* ``vote_kernel`` — ``label_vote``'s (weight desc, label asc) arg-max over
+  the in-neighbours' int64 labels (LPA; the driver LPA calls
+  ``label_vote`` too).
+* ``min_kernel`` — the minimum over a node's own and its in-neighbours'
+  int64 labels (WCC, which hooks and pointer-jumps on the driver).
+
+Execution sides: every hybrid algorithm first runs its driver gate
+(``collect_if_small``, under ``DRIVER_EDGE_THRESHOLD``). Past it, a pull
+side is taken when the node ids are exactly 0..n-1 within the
+memory-aware cap (``_pull_n``) and every edge endpoint is a node id
+(``endpoints_outside``: the build records the endpoint range in the
+manifest, so the check costs no job); otherwise the algorithm's
+DataFrame/push side runs (PageRank csr, Kiveris WCC, the DataFrame LPA
+loop), which is also the path for graphs above the cap.
 
 Storage: the build tasks write raw ``.npy`` arrays under ``path/part=K/``
 (one file per array — no Arrow 2 GB cell limits) and the compute tasks
@@ -124,6 +143,63 @@ def collect_if_small(
     return None if len(pdf) > budget else pdf
 
 
+# hard ceiling on the vector length the pull engine will broadcast; the
+# effective cap is memory-aware (see _pull_node_cap) — this is only the
+# upper bound when the driver is huge
+PULL_MAX_NODES = 100_000_000
+
+
+def _pull_node_cap(spark) -> int:
+    """Memory-aware node cap for the pull engine.
+
+    A pull run holds its n vector plus scratch copies (PageRank's p, q,
+    next and teleport, and the serialized broadcast) driver-side — budget
+    ~64 B per node against 25 % of ``spark.driver.memory`` so a pull side
+    is never picked where it would OOM a driver the distributed side
+    would have survived."""
+    mem = spark.conf.get("spark.driver.memory", None)
+    if not mem:
+        try:
+            mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+        except Exception:
+            mem = "1g"
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    m = str(mem).strip().lower()
+    try:
+        if m[-1] in units:
+            mem_bytes = int(float(m[:-1]) * units[m[-1]])
+        else:
+            mem_bytes = int(float(m))
+    except (ValueError, IndexError):
+        mem_bytes = 1 << 30
+    return max(1, min(PULL_MAX_NODES, int(mem_bytes * 0.25) // 64))
+
+
+def _contiguous_n(nodes: DataFrame) -> int | None:
+    """n if node ids are exactly 0..n-1 (the pull engine's precondition)."""
+    row = nodes.agg(
+        F.count("id").alias("c"), F.min("id").alias("mn"), F.max("id").alias("mx")
+    ).first()
+    if row["c"] and row["mn"] == 0 and row["mx"] == row["c"] - 1:
+        return int(row["c"])
+    return None
+
+
+def _pull_n(nodes: DataFrame) -> int | None:
+    """n when the node table qualifies for the pull engine — ids exactly
+    0..n-1 and n within the memory-aware cap — else None."""
+    n = _contiguous_n(nodes.select("id"))
+    return n if n is not None and n <= _pull_node_cap(nodes.sparkSession) else None
+
+
+def _resolve_strategy(nodes: DataFrame) -> str:
+    """PageRank's ``strategy='auto'`` for a node table (PageRank.run and
+    InfoMap): pull (CSC blocks + one broadcast rank vector, zero shuffle
+    per superstep) when the node table qualifies (_pull_n), csr (push
+    scatter + one-exchange gather) beyond that."""
+    return "pull" if _pull_n(nodes) is not None else "csr"
+
+
 def index_edges(
     ids: np.ndarray, src: np.ndarray, dst: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -201,13 +277,18 @@ def _edge_buffer(path: str, part: int, n_edges: int) -> np.ndarray:
 def _finalize_store(
     df_manifest: DataFrame, path: str, num_blocks: int, meta: dict
 ) -> None:
-    """Write the manifest — block count, edges per part and every build
-    parameter that is not None — then _SUCCESS."""
+    """Write the manifest — block count, edges per part, the endpoint
+    range when the build reports one (``lo``/``hi`` columns) and every
+    build parameter that is not None — then _SUCCESS."""
     rows = df_manifest.collect()
     manifest = {
         "num_blocks": num_blocks,
         "parts": {str(r["part"]): int(r["n_edge"]) for r in rows},
     }
+    if "lo" in df_manifest.columns and rows:
+        manifest["endpoints"] = [
+            int(min(r["lo"] for r in rows)), int(max(r["hi"] for r in rows))
+        ]
     manifest.update({k: v for k, v in meta.items() if v is not None})
     with open(os.path.join(path, "manifest.json"), "w") as f:
         json.dump(manifest, f)
@@ -223,6 +304,18 @@ def read_manifest(path: str) -> dict:
         return json.load(f)
 
 
+def endpoints_outside(path: str, n: int) -> tuple[int, int] | None:
+    """The (lowest, highest) edge endpoint of the pull store at ``path``
+    when some endpoint is not a node id 0..n-1, else None. Read from the
+    manifest the build wrote, so the check costs no job; a store without
+    edges (or one built before ranges were recorded) has none to check."""
+    lo_hi = read_manifest(path).get("endpoints")
+    if lo_hi is None:
+        return None
+    lo, hi = lo_hi
+    return (lo, hi) if lo < 0 or hi >= n else None
+
+
 # ---------------------------------------------------------------------------
 # The store lifecycle, one mechanism for every algorithm (open_store).
 # Stores are keyed by the edge PLAN's semantic hash plus the layout and the
@@ -236,9 +329,10 @@ def read_manifest(path: str) -> dict:
 # is out of contract (the OS-page-cache residency makes the same
 # assumption). The cache owns every directory it creates, also those whose
 # key cannot be computed, so no algorithm deletes a store: past the bound
-# the oldest UNPINNED entries are evicted and deleted. Every superstep loop
-# runs inside `pinned_store`, so eviction never deletes a directory that is
-# being read, and the pin is dropped however the loop ends.
+# the least recently used UNPINNED entries are evicted and deleted. Every
+# superstep loop runs inside `pinned_store`, so eviction never deletes a
+# directory that is being read, and the pin is dropped however the loop
+# ends.
 # ---------------------------------------------------------------------------
 _STORE_DIR_CACHE: dict[tuple, str] = {}
 _STORE_DIR_CACHE_MAX = 16
@@ -310,12 +404,14 @@ def cached_store_dir(key: tuple, prefix: str) -> str:
 
     path = _STORE_DIR_CACHE.get(key)
     if path is not None and store_exists(path):
+        # a hit becomes the most recent entry, so eviction is LRU
+        _STORE_DIR_CACHE[key] = _STORE_DIR_CACHE.pop(key)
         return path
     if path is not None:  # half-built dir from a failed run — reclaim
         shutil.rmtree(path, ignore_errors=True)
     path = _STORE_DIR_CACHE[key] = tempfile.mkdtemp(prefix=prefix)
-    # evict oldest UNPINNED entries; a store mid-algorithm-run stays on
-    # disk even if that temporarily overflows the cache bound
+    # evict least recently used UNPINNED entries; a store mid-algorithm-run
+    # stays on disk even if that temporarily overflows the cache bound
     if len(_STORE_DIR_CACHE) > _STORE_DIR_CACHE_MAX:
         evictable = [
             k for k, p in _STORE_DIR_CACHE.items()
@@ -648,7 +744,10 @@ def _build_pull_writer(path: str, num_blocks: int):
             else slice_pos,
         )
         _save_atomic(d, "w_norm", wn)
-        return pd.DataFrame({"part": [part], "n_edge": [len(src)]})
+        return pd.DataFrame({
+            "part": [part], "n_edge": [len(src)],
+            "lo": [min(src.min(), dst.min())], "hi": [max(src.max(), dst.max())],
+        })
 
     return build
 
@@ -667,8 +766,8 @@ def write_pull_blocks(
     global here, unlike the src-partitioned push build where they're
     partition-local). `denom_add` bakes ArticleRank's `outdeg + avgdeg`
     denominator into the store; `normalize=False` stores raw weights
-    (eigenvector power iteration). The manifest records `weighted`,
-    `normalize` and `denom_add`.
+    (eigenvector power iteration; the label kernels). The manifest records
+    `weighted`, `normalize`, `denom_add` and the endpoint range.
     """
     os.makedirs(path, exist_ok=True)
     if normalize:
@@ -689,7 +788,8 @@ def write_pull_blocks(
             F.pmod(F.col("dst"), F.lit(num_blocks)).cast("int").alias("part"),
         )
     manifest = e.groupBy("part").applyInPandas(
-        _build_pull_writer(path, num_blocks), schema="part int, n_edge long"
+        _build_pull_writer(path, num_blocks),
+        schema="part int, n_edge long, lo long, hi long",
     )
     _finalize_store(manifest, path, num_blocks, {
         "layout": "pull", "weighted": weighted,
@@ -697,10 +797,19 @@ def write_pull_blocks(
     })
 
 
-def _pull_block(x: np.ndarray, blk: dict, slice_len: int, buf: np.ndarray) -> np.ndarray:
-    """Σ_{u→v} x[u]·w_norm(u,v) over one CSC block's target slice: one
-    gather, multiply and bincount per column of ``x`` (an n vector or an
-    n×k matrix; the result has the same trailing shape)."""
+# ------------------------------------------------ pull kernels (per block)
+# kernel(x, blk, own, buf) -> one value per slot of a CSC block's target
+# slice: ``x`` is the broadcast n vector (or n×k matrix), ``blk`` the block
+# arrays, ``own`` the slice's own entries x[part::num_blocks] and ``buf`` a
+# per-edge 8-byte scratch buffer reused across supersteps.
+
+
+def sum_kernel(x: np.ndarray, blk: dict, own: np.ndarray, buf: np.ndarray) -> np.ndarray:
+    """Σ_{u→v} x[u]·w_norm(u,v) over the target slice (PageRank and the
+    power-iteration family): one gather, multiply and bincount per column
+    of ``x`` (an n vector or an n×k matrix; the result has the same
+    trailing shape)."""
+    slice_len = len(own)
     cols = x if x.ndim == 2 else x[:, None]
     out = np.empty((slice_len, cols.shape[1]))
     for j in range(cols.shape[1]):
@@ -710,33 +819,89 @@ def _pull_block(x: np.ndarray, blk: dict, slice_len: int, buf: np.ndarray) -> np
     return out.reshape((slice_len,) + x.shape[1:])
 
 
-def _slice_len(n: int, part: int, num_blocks: int) -> int:
-    return max(0, (n - part + num_blocks - 1) // num_blocks)
+def label_vote(
+    dst: np.ndarray, lab: np.ndarray, w: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(targets, winners) of one synchronous label-propagation vote over the
+    edges (src → ``dst``) whose sources carry the labels ``lab``: for each
+    distinct target, the label with the largest total weight ``w``, ties to
+    the smallest label. The (dst, label) sums are lexsort + reduceat and the
+    winner is the (w desc, label asc) group head. The driver LPA and the
+    pull vote kernel both call this, so their winners are identical."""
+    if len(dst) == 0:
+        return dst[:0], lab[:0]
+    o = np.lexsort((lab, dst))
+    d_, l_, w_ = dst[o], lab[o], w[o]
+    grp = np.flatnonzero(np.concatenate(([True], (np.diff(d_) != 0) | (np.diff(l_) != 0))))
+    vw = np.add.reduceat(w_, grp)
+    vd, vlab = d_[grp], l_[grp]
+    # winner per dst: (w desc, label asc) — lexsort keys last-first
+    o2 = np.lexsort((vlab, -vw, vd))
+    vd2, vlab2 = vd[o2], vlab[o2]
+    head = np.flatnonzero(np.concatenate(([True], np.diff(vd2) != 0)))
+    return vd2[head], vlab2[head]
+
+
+def vote_kernel(
+    x: np.ndarray, blk: dict, own: np.ndarray, buf: np.ndarray, weighted: bool = True
+) -> np.ndarray:
+    """Next LPA labels of the target slice: the label_vote winner over its
+    in-edges (weights w_norm — raw weights in a ``normalize=False`` store —
+    or 1 per edge), its own label when it has none. ``x`` is the int64
+    label vector."""
+    src = blk["src"]
+    lab = np.take(x, src, out=buf[: len(src)].view(np.int64))
+    w = np.asarray(blk["w_norm"]) if weighted else np.ones(len(src))
+    targets, winners = label_vote(np.asarray(blk["slice_pos"]), lab, w)
+    out = np.array(own)
+    out[targets] = winners
+    return out
+
+
+def min_kernel(x: np.ndarray, blk: dict, own: np.ndarray, buf: np.ndarray) -> np.ndarray:
+    """min(x[v], min_{u→v} x[u]) over the target slice (WCC's neighbour
+    minimum). The build sorts each block by target, so the per-target
+    minimum is one reduceat over runs of equal slice_pos."""
+    out = np.array(own)
+    sp = np.asarray(blk["slice_pos"])
+    if len(sp):
+        heads = np.flatnonzero(np.concatenate(([True], sp[1:] != sp[:-1])))
+        vals = np.take(x, blk["src"], out=buf[: len(sp)].view(np.int64))
+        t = sp[heads]
+        out[t] = np.minimum(out[t], np.minimum.reduceat(vals, heads))
+    return out
+
+
+_EMPTY_PULL_BLOCK = {
+    "src": np.empty(0, np.int64),
+    "slice_pos": np.empty(0, np.int64),
+    "w_norm": np.empty(0),
+}
 
 
 def pull_superstep(
-    sc, block_path: str, num_blocks: int, n: int, x: np.ndarray
+    sc, block_path: str, num_blocks: int, n: int, x: np.ndarray, kernel=sum_kernel
 ) -> np.ndarray:
     """One pull superstep: broadcast x (an n vector or an n×k matrix —
-    every column in the same job), per-slice gather, reassemble on the
-    driver. Returns Σ_{u→v} x[u]·w_norm(u,v), indexed by id, shaped like x.
+    every column in the same job), run ``kernel`` on every block's target
+    slice, reassemble on the driver. With the default sum_kernel it
+    returns Σ_{u→v} x[u]·w_norm(u,v), indexed by id, shaped like x; the
+    label kernels return one int64 label per id.
     """
     tail = x.shape[1:]
     bc = sc.broadcast(np.ascontiguousarray(x))
 
     def task(part: int):
-        blk = _load_part(block_path, part, _PULL_ARRAYS)
-        slice_len = _slice_len(n, part, num_blocks)
-        if blk is None:
-            return part, np.zeros((slice_len,) + tail).tobytes()
+        blk = _load_part(block_path, part, _PULL_ARRAYS) or _EMPTY_PULL_BLOCK
         buf = _edge_buffer(block_path, part, len(blk["w_norm"]))
-        return part, _pull_block(bc.value, blk, slice_len, buf).tobytes()
+        res = kernel(bc.value, blk, bc.value[part::num_blocks], buf)
+        return part, res.dtype.str, res.tobytes()
 
     n_tasks = _pull_task_count(block_path, num_blocks)
     results = sc.parallelize(range(num_blocks), n_tasks).map(task).collect()
-    out = np.zeros((n,) + tail)
-    for part, buf in results:
-        out[part::num_blocks] = np.frombuffer(buf, np.float64).reshape((-1,) + tail)
+    out = np.empty((n,) + tail, dtype=results[0][1])
+    for part, dtype, buf in results:
+        out[part::num_blocks] = np.frombuffer(buf, dtype).reshape((-1,) + tail)
     bc.destroy()
     return out
 
@@ -751,7 +916,7 @@ def pull_engine(sc, block_path: str, num_blocks: int, n: int):
     jobs per superstep; the per-job floor, ~150-350 ms at local[4],
     dominated every superstep of a small graph). Beyond the threshold,
     each step is one distributed ``pull_superstep`` job — the 100 TB shape
-    is identical, only the barrier moves. Both sides run ``_pull_block``,
+    is identical, only the barrier moves. Both sides run ``sum_kernel``,
     so their results are bit-identical.
     """
     if _store_edge_count(block_path) > DRIVER_EDGE_THRESHOLD:
@@ -760,16 +925,16 @@ def pull_engine(sc, block_path: str, num_blocks: int, n: int):
     for k in range(num_blocks):
         blk = _load_part(block_path, k, _PULL_ARRAYS)
         if blk is not None and len(blk["w_norm"]):
-            parts.append((k, blk, _slice_len(n, k, num_blocks)))
+            parts.append((k, blk))
     # one scratch buffer for the run, held by this closure only (not the
     # process-wide cache the executor tasks use), so it is freed with it
-    buf = np.empty(max((len(blk["w_norm"]) for _, blk, _ in parts), default=0))
+    buf = np.empty(max((len(blk["w_norm"]) for _, blk in parts), default=0))
 
     def step(x: np.ndarray) -> np.ndarray:
         out = np.zeros((n,) + x.shape[1:])
-        for k, blk, slice_len in parts:
+        for k, blk in parts:
             view = buf[: len(blk["w_norm"])]
-            out[k::num_blocks] = _pull_block(x, blk, slice_len, view)
+            out[k::num_blocks] = sum_kernel(x, blk, x[k::num_blocks], view)
         return out
 
     return step

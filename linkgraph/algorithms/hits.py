@@ -129,9 +129,8 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
     import pandas as pd
 
     from linkgraph.algorithms import blocks
-    from linkgraph.algorithms.pagerank import _contiguous_n
 
-    n = _contiguous_n(graph.nodes.select("id"))
+    n = blocks._contiguous_n(graph.nodes.select("id"))
     if not n:
         return None
     edges = graph.edges.select("src", "dst")

@@ -173,11 +173,11 @@ def infomap(
     ascending node-id order, modules labeled by min member id. Graphs
     whose edge table is over the driver crossover are Louvain-coarsened
     distributed first; the sweep then runs over communities."""
-    from linkgraph.algorithms.pagerank import PageRank, _resolve_strategy
+    from linkgraph.algorithms.pagerank import PageRank
 
     # flow: distributed PageRank visit rates, normalized to Σp = 1, on the
     # plan PageRank's own auto resolution picks
-    strat = _resolve_strategy(graph.nodes)
+    strat = blocks._resolve_strategy(graph.nodes)
     ranks = PageRank(
         damping=damping,
         max_iterations=pr_iterations,

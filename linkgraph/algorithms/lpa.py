@@ -11,14 +11,44 @@ order-dependent ⇒ nondeterministic on symmetric graphs). We run
 **synchronous** iterations with a deterministic tie-break (max weight,
 then min label) so results are reproducible across partition counts —
 fixtures are chosen where the two schedules agree (FIXTURES.md G_LPA).
+
+One vertex program, three sides, picked per run in this order:
+
+* **driver** — the prepared edge table and the labels each fit
+  ``blocks.DRIVER_EDGE_THRESHOLD`` rows (``blocks.collect_if_small``) and
+  no checkpoint is given: numpy rounds of ``blocks.label_vote``.
+* **pull** — node ids are exactly 0..n-1 within the pull engine's
+  memory-aware cap and every edge endpoint is a node id (the store
+  manifest's endpoint range): the driver holds the int64 label vector
+  (seed labels are arbitrary longs, so they never go through float64)
+  and each round is one zero-shuffle ``blocks.pull_superstep`` job
+  running ``blocks.vote_kernel`` over a CSC store of the edge table built
+  with raw weights (``normalize=False``). With direction BOTH that table
+  is ``wcc.loop_free_undirected``, the plan WCC's pull side builds its
+  store from, so the two share one store through ``blocks.open_store``.
+* **DataFrame** — anything else: a vote join and a map-side-combined
+  arg-max per round; the path for graphs above the pull cap.
+
+Every side applies the (weight desc, label asc) vote to the same edges,
+so labels and iteration counts agree. A checkpoint is the (id, label)
+table (``lpa/labels-v1``) on the pull and the DataFrame side alike, so a
+run can resume on either.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algorithms import blocks
+from linkgraph.algorithms.wcc import loop_free_undirected
 from linkgraph.graph import Graph
 from linkgraph.io import CheckpointManager
+
+LABELS_FMT = "lpa/labels-v1"
 
 
 def _lpa_local(
@@ -31,33 +61,27 @@ def _lpa_local(
     """Driver-local synchronous LPA below the driver crossover (r6) —
     the union-find / pull-engine hybrid crossover. Consumes the SAME
     prepared edge view (direction/dedup already applied) and initial
-    labels as the distributed loop; per round the (dst, label) vote sums
-    are lexsort + reduceat and the winner is the (w desc, label asc)
-    group head — identical to the distributed arg-max. Vote sums here
-    are sums of small integer-valued weights (or counts), which float64
-    adds EXACTLY in any order, so winners match the distributed plan
-    bit-for-bit on the contract graphs; arbitrary real weights could
-    differ in ties at ~1e-16 (same caveat as any re-ordered float sum).
+    labels as the distributed loops; each round is one
+    ``blocks.label_vote`` — the pull side's kernel and the same winner as
+    the DataFrame arg-max. Vote sums here are sums of small
+    integer-valued weights (or counts), which float64 adds EXACTLY in any
+    order, so winners match the distributed plans bit-for-bit on the
+    contract graphs; arbitrary real weights could differ in ties at
+    ~1e-16 (same caveat as any re-ordered float sum).
     Returns None when the edge or the label table is over the driver
-    crossover (the distributed loop is the at-scale path and the only path
-    under checkpoint/resume)."""
-    import numpy as np
-    import pandas as pd
-
-    from linkgraph.algorithms.blocks import collect_if_small, index_edges
-
-    ep = collect_if_small(edges.select("src", "dst", "weight"))
-    lab_pd = None if ep is None else collect_if_small(labels)
+    crossover (the pull and DataFrame loops are the at-scale paths and
+    the only paths under checkpoint/resume)."""
+    ep = blocks.collect_if_small(edges.select("src", "dst", "weight"))
+    lab_pd = None if ep is None else blocks.collect_if_small(labels)
     if lab_pd is None:
         return None
     ids = lab_pd["id"].to_numpy(np.int64)
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
     lab = lab_pd["label"].to_numpy(np.int64)[order]
-    n = len(ids)
     # drop edges with endpoints outside the node set — the distributed
     # loop's joins do the same
-    es, ed, ok = index_edges(
+    es, ed, ok = blocks.index_edges(
         ids, ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64)
     )
     es, ed = es[ok], ed[ok]
@@ -68,18 +92,9 @@ def _lpa_local(
     )
     iterations, converged = 0, False
     for step in range(max_iterations):
-        vl = lab[es]
-        o = np.lexsort((vl, ed))
-        d_, l_, w_ = ed[o], vl[o], w[o]
-        grp = np.flatnonzero(np.concatenate(([True], (np.diff(d_) != 0) | (np.diff(l_) != 0))))
-        vw = np.add.reduceat(w_, grp)
-        vd, vlab = d_[grp], l_[grp]
-        # winner per dst: (w desc, label asc) — lexsort keys last-first
-        o2 = np.lexsort((vlab, -vw, vd))
-        vd2, vlab2 = vd[o2], vlab[o2]
-        head = np.flatnonzero(np.concatenate(([True], np.diff(vd2) != 0)))
+        targets, winners = blocks.label_vote(ed, lab[es], w)
         new_lab = lab.copy()
-        new_lab[vd2[head]] = vlab2[head]
+        new_lab[targets] = winners
         iterations = step + 1
         changed = int((new_lab != lab).sum()) if run_to_convergence else 1
         lab = new_lab
@@ -89,6 +104,68 @@ def _lpa_local(
     out = labels.sparkSession.createDataFrame(
         pd.DataFrame({"id": ids, "label": lab}), schema="id long, label long"
     )
+    out.iterations = iterations
+    out.did_converge = converged
+    return out
+
+
+def _lpa_pull(
+    nodes: DataFrame,
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    weighted: bool,
+    max_iterations: int,
+    run_to_convergence: bool,
+    checkpoint: CheckpointManager | None,
+    checkpoint_every: int,
+):
+    """The pull side of ``label_propagation``, or None when the node ids or
+    an edge endpoint rule it out (see the module docstring). ``seeds`` is
+    the initial (id, label) table, None for labels = own ids."""
+    n = blocks._pull_n(nodes)
+    if n is None:
+        return None
+    path, b = blocks.open_store(edges, "pull", normalize=False)
+    if blocks.endpoints_outside(path, n) is not None:
+        return None
+    spark = edges.sparkSession
+    lab = np.arange(n, dtype=np.int64)
+    start_step = 0
+    if checkpoint is not None:
+        latest = checkpoint.latest(fmt=LABELS_FMT)
+        if latest is not None:
+            start_step, seeds, _meta = latest
+    if seeds is not None:
+        pdf = seeds.toPandas()
+        lab[pdf["id"].to_numpy(np.int64)] = pdf["label"].to_numpy(np.int64)
+
+    def table(lab: np.ndarray) -> DataFrame:
+        return spark.createDataFrame(
+            pd.DataFrame({"id": np.arange(n, dtype=np.int64), "label": lab}),
+            schema="id long, label long",
+        )
+
+    kernel = (
+        blocks.vote_kernel if weighted
+        else functools.partial(blocks.vote_kernel, weighted=False)
+    )
+    sc = spark.sparkContext
+    iterations, converged = start_step, False
+    with blocks.pinned_store(path):
+        for step in range(start_step, max_iterations):
+            new_lab = blocks.pull_superstep(sc, path, b, n, lab, kernel=kernel)
+            changed = int((new_lab != lab).sum()) if run_to_convergence else 1
+            lab = new_lab
+            iterations = step + 1
+            if checkpoint is not None and checkpoint_every and iterations % checkpoint_every == 0:
+                checkpoint.write(
+                    table(lab), iterations, {"iteration": iterations, "changed": changed},
+                    fmt=LABELS_FMT,
+                )
+            converged = run_to_convergence and changed == 0
+            if converged:
+                break
+    out = table(lab)
     out.iterations = iterations
     out.did_converge = converged
     return out
@@ -110,28 +187,53 @@ def label_propagation(
     `checkpoint_every` iterations and a fresh call resumes mid-run from
     the latest snapshot (same contract as PageRank/WCC resume)."""
     if direction == "BOTH":
-        edges = graph.undirected_edges()
+        edges = loop_free_undirected(graph.edges)
     else:
-        edges = graph.edges
-    edges = edges.filter(F.col("src") != F.col("dst")).persist()
-    nodes = graph.nodes
+        edges = graph.edges.filter(F.col("src") != F.col("dst"))
+    edges = edges.persist()
+    try:
+        return _propagate(
+            graph.nodes, edges, seed_col, weighted, max_iterations,
+            run_to_convergence, checkpoint, checkpoint_every,
+        )
+    finally:
+        edges.unpersist()
 
-    if seed_col is not None and seed_col in nodes.columns:
+
+def _propagate(
+    nodes: DataFrame,
+    edges: DataFrame,
+    seed_col: str | None,
+    weighted: bool,
+    max_iterations: int,
+    run_to_convergence: bool,
+    checkpoint: CheckpointManager | None,
+    checkpoint_every: int,
+) -> DataFrame:
+    """label_propagation over the prepared, cached ``edges``: the driver
+    side, else the pull side, else the DataFrame loop."""
+    seeded = seed_col is not None and seed_col in nodes.columns
+    if seeded:
         labels = nodes.select(
             "id", F.coalesce(F.col(seed_col).cast("long"), F.col("id")).alias("label")
         )
     else:
         labels = nodes.select("id", F.col("id").alias("label"))
+    out = None
     if checkpoint is None:
         out = _lpa_local(
             edges, labels, weighted, max_iterations, run_to_convergence
         )
-        if out is not None:
-            edges.unpersist()
-            return out
+    if out is None:
+        out = _lpa_pull(
+            nodes, edges, labels if seeded else None, weighted, max_iterations,
+            run_to_convergence, checkpoint, checkpoint_every,
+        )
+    if out is not None:
+        return out
     start_step = 0
     if checkpoint is not None:
-        latest = checkpoint.latest(fmt="lpa/labels-v1")
+        latest = checkpoint.latest(fmt=LABELS_FMT)
         if latest is not None:
             start_step, labels, _meta = latest
     labels = labels.localCheckpoint(eager=True)
@@ -148,7 +250,7 @@ def label_propagation(
         # r6: arg-max via max(struct(w, -label)) — partial (map-side)
         # aggregation instead of a row_number window's shuffle + sort.
         # Lexicographic struct max = max weight then MIN label, exactly
-        # the window's (w desc, label asc) winner (node ids are ≥ 0, so
+        # label_vote's (w desc, label asc) winner (node ids are ≥ 0, so
         # negation is safe); comparisons are on identical doubles.
         best = (
             votes.groupBy("dst")
@@ -178,7 +280,7 @@ def label_propagation(
         if checkpoint is not None and checkpoint_every and (step + 1) % checkpoint_every == 0:
             new_labels = checkpoint.write(
                 new_labels, step + 1, {"iteration": step + 1, "changed": changed},
-                fmt="lpa/labels-v1",
+                fmt=LABELS_FMT,
             )
         labels.unpersist()
         labels = new_labels
@@ -187,7 +289,6 @@ def label_propagation(
         if converged:
             break
 
-    edges.unpersist()
     labels.iterations = iterations
     labels.did_converge = converged
     return labels

@@ -17,7 +17,8 @@ data size:
 
 * ``strategy='auto'`` (default): resolves per run to ``pull`` when node
   ids are contiguous and the rank vector fits a memory-aware driver
-  budget, else ``csr`` (``_resolve_strategy``).
+  budget (``blocks._resolve_strategy``) and every edge endpoint is a node
+  id, else ``csr``.
 * ``strategy='pull'``: dst-sliced CSC blocks and one broadcast rank
   vector, zero shuffle per superstep (blocks.pull_engine).
 * ``strategy='csr'``: per-partition CSR blocks inside Arrow UDFs
@@ -102,9 +103,12 @@ class PageRank:
 
         The rank vector lives on the driver (the BSP barrier); each superstep
         broadcasts q = p/W and every block computes its target slice with one
-        gather + one bincount. Requires contiguous ids 0..n-1 and a vector
-        that fits driver/executor memory — the fast path below ~10⁸ nodes;
-        'csr' (push + shuffle gather) is the path beyond that.
+        gather + one bincount. Requires contiguous ids 0..n-1, every edge
+        endpoint among them, and a vector that fits driver/executor memory
+        — the fast path below ~10⁸ nodes; 'csr' (push + shuffle gather) is
+        the path beyond that. Returns None, for run() to take csr, when
+        ``auto`` finds an endpoint that is not a node id (the store's
+        manifest records the range, so the check costs no job).
         """
         import numpy as np
         import pandas as pd
@@ -134,6 +138,15 @@ class PageRank:
         block_path, b = blocks.open_store(
             edges, "pull", self.block_store, self.num_blocks, weighted=self.weighted
         )
+        bad = blocks.endpoints_outside(block_path, n)
+        if bad is not None:
+            if self.strategy == "auto":
+                return None
+            raise ValueError(
+                "pull strategy requires every edge endpoint to be a node id "
+                f"0..{n - 1}; the edges reach ids {bad[0]}..{bad[1]} "
+                "(drop those edges, or use strategy='csr')"
+            )
 
         p = t.copy()
         start_step = 0
@@ -177,36 +190,6 @@ class PageRank:
         self.metrics.did_converge = converged
         return spark.createDataFrame(pd.DataFrame({"id": np.arange(n), "rank": p}))
 
-    # hard ceiling on the rank-vector length the pull strategy will broadcast;
-    # the effective cap is memory-aware (see _pull_node_cap) — this is only
-    # the upper bound when the driver is huge
-    PULL_MAX_NODES = 100_000_000
-
-    @classmethod
-    def _pull_node_cap(cls, spark) -> int:
-        """Memory-aware node cap for the pull strategy.
-
-        The pull path holds the rank vector plus scratch copies (p, q, next,
-        teleport, and the serialized broadcast) driver-side — budget ~64 B per
-        node against 25 % of ``spark.driver.memory`` so auto never picks a
-        plan that OOMs the driver a csr default would have survived."""
-        mem = spark.conf.get("spark.driver.memory", None)
-        if not mem:
-            try:
-                mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
-            except Exception:
-                mem = "1g"
-        units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-        m = str(mem).strip().lower()
-        try:
-            if m[-1] in units:
-                mem_bytes = int(float(m[:-1]) * units[m[-1]])
-            else:
-                mem_bytes = int(float(m))
-        except (ValueError, IndexError):
-            mem_bytes = 1 << 30
-        return max(1, min(cls.PULL_MAX_NODES, int(mem_bytes * 0.25) // 64))
-
     # -------------------------------------------------------------- csr loop
     def _run_csr(self, graph: Graph) -> DataFrame:
         """Push execution over the CSR block store, one exchange per
@@ -216,7 +199,7 @@ class PageRank:
         The tolerance check and the checkpoints read those blocks; a resume
         packs the checkpointed (id, rank) table like the teleport table."""
         d = self.damping
-        nodes = self._teleport(graph.nodes).persist()
+        nodes = self._teleport(graph.nodes)
         edges = (
             graph.edges
             if self.weighted
@@ -280,7 +263,6 @@ class PageRank:
 
         self.metrics.iterations = step
         self.metrics.did_converge = converged
-        nodes.unpersist()
         return blocks.unpack_rank_blocks(rank_blocks)
 
     # -------------------------------------------------------------------- run
@@ -289,10 +271,13 @@ class PageRank:
         # instance must re-resolve for each new graph
         strategy = self.strategy
         if strategy == "auto":
-            strategy = _resolve_strategy(graph.nodes)
-        self.resolved_strategy = strategy
+            strategy = blocks._resolve_strategy(graph.nodes)
         t0 = time.time()
-        out = self._run_pull(graph) if strategy == "pull" else self._run_csr(graph)
+        out = self._run_pull(graph) if strategy == "pull" else None
+        if out is None:  # csr asked for, or auto found a non-node endpoint
+            strategy = "csr"
+            out = self._run_csr(graph)
+        self.resolved_strategy = strategy
         self.metrics.compute_millis = int((time.time() - t0) * 1000)
         out.iterations = self.metrics.iterations
         out.did_converge = self.metrics.did_converge
@@ -302,27 +287,6 @@ class PageRank:
 def pagerank(graph: Graph, **kwargs) -> DataFrame:
     """Functional form: ``pagerank(g, damping=0.85, ...)`` → (id, rank)."""
     return PageRank(**kwargs).run(graph)
-
-
-def _contiguous_n(nodes: DataFrame) -> int | None:
-    """n if node ids are exactly 0..n-1 (pull-strategy precondition)."""
-    row = nodes.agg(
-        F.count("id").alias("c"), F.min("id").alias("mn"), F.max("id").alias("mx")
-    ).first()
-    if row["c"] and row["mn"] == 0 and row["mx"] == row["c"] - 1:
-        return int(row["c"])
-    return None
-
-
-def _resolve_strategy(nodes: DataFrame) -> str:
-    """``strategy='auto'`` for a node table (PageRank.run and InfoMap):
-    pull (CSC blocks + one broadcast rank vector, zero shuffle per
-    superstep) when ids are contiguous and the vector fits the
-    memory-aware driver cap, csr (push scatter + one-exchange gather)
-    beyond that."""
-    n = _contiguous_n(nodes.select("id"))
-    cap = PageRank._pull_node_cap(nodes.sparkSession)
-    return "pull" if n is not None and n <= cap else "csr"
 
 
 def _pull_power_iteration(
@@ -438,7 +402,7 @@ def article_rank(
     n_nodes = nodes.count()
     avg_deg = (outdeg.agg(F.sum("deg")).first()[0] or 0.0) / max(n_nodes, 1)
 
-    n = _contiguous_n(nodes)
+    n = blocks._contiguous_n(nodes)
     if n:
         import numpy as np
         import pandas as pd
@@ -482,7 +446,7 @@ def eigenvector_centrality(
     """
     edges, nodes = graph.edges, graph.nodes.select("id")
 
-    n = _contiguous_n(nodes)
+    n = blocks._contiguous_n(nodes)
     if n:
         import numpy as np
         import pandas as pd
@@ -551,7 +515,7 @@ def katz_centrality(
     """
     edges, nodes = graph.edges, graph.nodes.select("id")
 
-    n = _contiguous_n(nodes)
+    n = blocks._contiguous_n(nodes)
     if n:
         import numpy as np
         import pandas as pd

@@ -109,9 +109,8 @@ def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
     import pandas as pd
 
     from linkgraph.algorithms import blocks
-    from linkgraph.algorithms.pagerank import _contiguous_n
 
-    n = _contiguous_n(graph.nodes.select("id"))
+    n = blocks._contiguous_n(graph.nodes.select("id"))
     if n is None:
         return None
     edges_w = graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))

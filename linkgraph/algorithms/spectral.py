@@ -96,9 +96,7 @@ def spectral_embedding(
     # EXPLICITLY so auto-composition can't silently OOM the driver; beyond
     # this cap the documented fallback is the push/CSR formulation of
     # orthogonal iteration (distributed QR via tall-skinny Gram matrices).
-    from linkgraph.algorithms.pagerank import PageRank
-
-    cap = PageRank._pull_node_cap(nodes.sparkSession) // max(k, 1)
+    cap = blocks._pull_node_cap(nodes.sparkSession) // max(k, 1)
     if n > cap:
         raise ValueError(
             f"spectral_embedding: n={n} × k={k} exceeds the driver-memory "

@@ -4,32 +4,41 @@ Reference: `algo/src/main/java/org/neo4j/graphalgo/UnionFindProc.java`,
 `algo/.../impl/unionfind/{GraphUnionFind,ParallelUnionFind*}.java`,
 `core/.../core/utils/dss/DisjointSetStruct.java` (path-halving union-find).
 
-A shared-memory DSS doesn't distribute; the Spark-native equivalent is the
-**alternating large-star / small-star** algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond"): each round rewires every
-node's larger neighbors (large-star) then its smaller neighbors
-(small-star) onto the minimum of the local neighborhood. Provably
-O(log² n) rounds on ANY topology — unlike plain hash-min label
-propagation, which needs O(diameter) rounds and degrades catastrophically
-on chain-shaped graphs (spanning trees, paths; measured 100+ rounds on a
-500-node tree before this rewrite).
-
-Before the first round, each partition of the symmetric edge table is
-contracted in place by a ``mapInArrow`` union-find (``_contract_partitions``):
-every node the partition connects is rewired onto the minimum id of its
-partition-local component. Connectivity is unchanged, no partition grows
-and no shuffle precedes it; when a partition holds a whole component (one
-big component, or few partitions), the star rounds that follow only
-confirm the fixpoint. Graphs whose canonical edge list fits
-``blocks.DRIVER_EDGE_THRESHOLD`` skip all of this for one driver-side
-union-find.
-
 Component id = **min original node id in the component** — canonical and
 stable, unlike the reference's arbitrary DSS roots (its tests assert
-membership/sizes, not ids; SURVEY.md §7 hard-part 5).
+membership/sizes, not ids; SURVEY.md §7 hard-part 5). ``threshold``
+pre-filters edges by weight (> t joins components), exactly the
+reference's `threshold` config.
 
-``threshold`` pre-filters edges by weight (> t joins components), exactly
-the reference's `threshold` config.
+Every run symmetrizes the edges once (``_symmetrize``: one read of the
+edge plan, one shuffle of canonical pairs, checkpointed) and then takes
+one of three sides, picked in this order:
+
+* **driver** — the canonical edge list fits
+  ``blocks.DRIVER_EDGE_THRESHOLD`` rows (``blocks.collect_if_small``) and
+  no checkpoint is given: one numpy union-find (``union_find_mapping``).
+* **pull** — no checkpoint is given, node ids are exactly 0..n-1 within
+  the pull engine's memory-aware cap, and every edge endpoint is a node
+  id (the store manifest's endpoint range): the driver holds the int64
+  label vector and each superstep is one zero-shuffle
+  ``blocks.pull_superstep`` job running ``blocks.min_kernel`` (each node's
+  minimum over itself and its neighbours) over a CSC store of
+  ``loop_free_undirected``. The driver then hooks each node's current root onto
+  the pulled minimum and applies full pointer jumping, so labels reach
+  the min member id in O(log n) supersteps — plain synchronous min-label
+  needs O(diameter). LPA builds its direction-BOTH store from the same
+  plan, so the two share one store through ``blocks.open_store``.
+* **Kiveris** — anything else: the **alternating large-star /
+  small-star** algorithm (Kiveris et al., "Connected Components in
+  MapReduce and Beyond"). Each round rewires every node's larger
+  neighbors (large-star) then its smaller neighbors (small-star) onto the
+  minimum of the local neighborhood; provably O(log² n) rounds on ANY
+  topology. Before the first round each partition is contracted in place
+  by a ``mapInArrow`` union-find (``_contract_partitions``), so when a
+  partition holds a whole component the star rounds only confirm the
+  fixpoint. The path for graphs above the pull cap, for node ids that are
+  not 0..n-1, and the only path under checkpoint/resume (its payload is
+  the star-round edge table).
 """
 
 from __future__ import annotations
@@ -56,6 +65,28 @@ def _symmetrize(e: DataFrame) -> DataFrame:
     return pairs.select(F.inline(F.array(
         F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
         F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+    )))
+
+
+def loop_free_undirected(edges: DataFrame) -> DataFrame:
+    """edges(src, dst, weight) → both directions of every non-loop pair,
+    weighted by the max over the pair's edges in either direction: the
+    rows of ``Graph.undirected_edges()`` without self-loops, but like
+    ``_symmetrize`` it reads ``edges`` once and shuffles one row per
+    canonical pair. LPA's direction-BOTH edge table and WCC's symmetric
+    table; both build their pull store from this plan, so they share it."""
+    pairs = (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"),
+            "weight",
+        )
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.max("weight").alias("w"))
+    )
+    return pairs.select(F.inline(F.array(
+        F.struct(F.col("a").alias("src"), F.col("b").alias("dst"), F.col("w").alias("weight")),
+        F.struct(F.col("b").alias("src"), F.col("a").alias("dst"), F.col("w").alias("weight")),
     )))
 
 
@@ -135,6 +166,56 @@ def _fingerprint(e: DataFrame) -> tuple:
     return row["n"], row["h"]
 
 
+def _pull_components(
+    nodes: DataFrame, edges: DataFrame, max_iterations: int
+) -> DataFrame | None:
+    """The pull side of ``wcc``, or None when the node ids or an edge
+    endpoint rule it out (see the module docstring). The store is built
+    over ``loop_free_undirected(edges)``, the plan LPA builds its
+    direction-BOTH store from, so the two share one store; it is cached
+    while a build reads it, so its edge count and the build evaluate it
+    once. Labels start at the own id; per superstep m = the pulled
+    neighbour minimum, every root r = lab[v] takes min(m[v]) over its
+    members (hooking: roots only move to smaller labels, so no cycle
+    forms), then pointer jumping flattens every chain onto its root. A
+    superstep that changes no label ends the run."""
+    n = blocks._pull_n(nodes)
+    if n is None:
+        return None
+    sym = loop_free_undirected(edges).persist()
+    try:
+        path, b = blocks.open_store(sym, "pull", normalize=False)
+    finally:
+        sym.unpersist()
+    if blocks.endpoints_outside(path, n) is not None:
+        return None
+    sc = sym.sparkSession.sparkContext
+    lab = np.arange(n, dtype=np.int64)
+    step, converged = 0, False
+    with blocks.pinned_store(path):
+        while step < max_iterations:
+            step += 1
+            m = blocks.pull_superstep(sc, path, b, n, lab, kernel=blocks.min_kernel)
+            new = lab.copy()
+            np.minimum.at(new, lab, m)
+            while True:
+                jumped = new[new]
+                if np.array_equal(jumped, new):
+                    break
+                new = jumped
+            if np.array_equal(new, lab):
+                converged = True
+                break
+            lab = new
+    out = sym.sparkSession.createDataFrame(
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "component": lab}),
+        schema="id long, component long",
+    )
+    out.iterations = step
+    out.did_converge = converged
+    return out
+
+
 def wcc(
     graph: Graph,
     threshold: float | None = None,
@@ -163,8 +244,8 @@ def wcc(
     # driver-sized graphs through numpy union-find — identical
     # min-member-id labels, zero fixpoint rounds (each large/small-star
     # round costs ~14 jobs, mostly fixed scheduler overhead). The
-    # distributed Kiveris fixpoint below remains the at-scale path (and the
-    # only path under checkpoint/resume).
+    # distributed sides below are the pull engine and the Kiveris fixpoint
+    # (the only path under checkpoint/resume).
     pairs = (
         None if checkpoint is not None
         else blocks.collect_if_small(e.filter(F.col("u") < F.col("v")))
@@ -178,6 +259,10 @@ def wcc(
         out.iterations = 1  # one exact union-find pass (stats rows expect ≥ 1)
         out.did_converge = True
         return out
+    if checkpoint is None:
+        out = _pull_components(nodes, edges, max_iterations)
+        if out is not None:
+            return out
 
     # the distinct in _symmetrize precedes the first fingerprint: a row
     # repeated across partitions XOR-cancels in the hash and costs one more

@@ -13,6 +13,7 @@
 
 import pytest
 
+from linkgraph.algorithms import blocks
 from linkgraph.algorithms.pagerank import PageRank
 from linkgraph.graph import Graph
 from tests.conftest import edges_df
@@ -32,26 +33,24 @@ def test_pull_node_cap_parses_driver_memory():
             self.conf = FakeConf(mem)
 
     # 4g driver → 25 % budget / 64 B per node = 16 Mi nodes
-    assert PageRank._pull_node_cap(FakeSpark("4g")) == (4 << 30) // 4 // 64
+    assert blocks._pull_node_cap(FakeSpark("4g")) == (4 << 30) // 4 // 64
     # 1g default → ~4.2 M nodes, far below the old fixed 1e8 gate
-    assert PageRank._pull_node_cap(FakeSpark("1g")) < 5_000_000
+    assert blocks._pull_node_cap(FakeSpark("1g")) < 5_000_000
     # a huge driver still clamps at the hard ceiling
-    assert PageRank._pull_node_cap(FakeSpark("1t")) == PageRank.PULL_MAX_NODES
+    assert blocks._pull_node_cap(FakeSpark("1t")) == blocks.PULL_MAX_NODES
     # unparseable values fall back to the 1 GiB-equivalent conservative cap
-    assert PageRank._pull_node_cap(FakeSpark("weird")) == (1 << 30) // 4 // 64
+    assert blocks._pull_node_cap(FakeSpark("weird")) == (1 << 30) // 4 // 64
 
 
 def test_auto_strategy_respects_memory_cap(spark, monkeypatch):
     g = Graph.from_edges(edges_df(spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0)]))
     # force the cap below the node count: auto must resolve to csr
-    monkeypatch.setattr(PageRank, "_pull_node_cap", classmethod(lambda cls, s: 2))
+    monkeypatch.setattr(blocks, "_pull_node_cap", lambda s: 2)
     pr = PageRank(max_iterations=2)
     pr.run(g)
     assert pr.resolved_strategy == "csr"
     # generous cap: contiguous small graph resolves to pull
-    monkeypatch.setattr(
-        PageRank, "_pull_node_cap", classmethod(lambda cls, s: 1_000_000)
-    )
+    monkeypatch.setattr(blocks, "_pull_node_cap", lambda s: 1_000_000)
     pr2 = PageRank(max_iterations=2)
     pr2.run(g)
     assert pr2.resolved_strategy == "pull"
@@ -67,8 +66,8 @@ def test_auto_strategy_real_conf_path(spark):
     out = {r["id"]: r["rank"] for r in pr.run(g).collect()}
     assert pr.resolved_strategy in ("pull", "csr")
     assert all(abs(v - 1.0) < 1e-6 for v in out.values())
-    cap = PageRank._pull_node_cap(spark)
-    assert 1 <= cap <= PageRank.PULL_MAX_NODES
+    cap = blocks._pull_node_cap(spark)
+    assert 1 <= cap <= blocks.PULL_MAX_NODES
 
 
 # ---------------------------------------------------------------- finding 3

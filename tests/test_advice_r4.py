@@ -63,6 +63,32 @@ def test_store_cache_pin_blocks_eviction(tmp_path):
         blocks._STORE_DIR_CACHE.update(saved_cache)
 
 
+def test_store_cache_evicts_least_recently_used(tmp_path):
+    """A store hit before each fresh build is the most recent entry every
+    time, so a flood of fresh builds never evicts it."""
+    import shutil
+
+    from linkgraph.algorithms import blocks
+
+    saved_cache = dict(blocks._STORE_DIR_CACHE)
+    blocks._STORE_DIR_CACHE.clear()
+    try:
+        hot = blocks.cached_store_dir(("lru-test", "hot"), "lg_lru_test_")
+        open(os.path.join(hot, "_SUCCESS"), "w").close()  # a finished store
+        for i in range(blocks._STORE_DIR_CACHE_MAX + 1):
+            assert blocks.cached_store_dir(("lru-test", "hot"), "lg_lru_test_") == hot
+            blocks.cached_store_dir(("lru-test", i), "lg_lru_test_")
+        assert os.path.isdir(hot)
+        assert blocks._STORE_DIR_CACHE[("lru-test", "hot")] == hot
+        # the first fresh build was used least recently: it was evicted
+        assert ("lru-test", 0) not in blocks._STORE_DIR_CACHE
+    finally:
+        for p in blocks._STORE_DIR_CACHE.values():
+            shutil.rmtree(p, ignore_errors=True)
+        blocks._STORE_DIR_CACHE.clear()
+        blocks._STORE_DIR_CACHE.update(saved_cache)
+
+
 def test_link_prediction_does_not_leak_persisted_rdds(spark):
     """Repeated calls must not grow the persistent-RDD registry: each call
     unpersists the previous call's cached adjacency, so at most ONE stays

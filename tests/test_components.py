@@ -54,8 +54,9 @@ def _shuffled_path(n, seed):
 
 
 def test_wcc_long_chain_pointer_jumping(spark, uncoalesced, monkeypatch):
-    # a shuffled 500-node path on the distributed side must converge in
-    # O(log n) star rounds, far inside the 250 hash-min would need
+    # a shuffled 500-node path on the distributed side (ids 0..n-1: the
+    # pull side) must converge in O(log n) supersteps, far inside the 250
+    # hash-min would need
     monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 0)
     g = Graph.from_edges(edges_df(spark, _shuffled_path(500, seed=3)))
     out = wcc(g, max_iterations=12)
@@ -178,3 +179,106 @@ def test_lpa_checkpoint_resume(spark, tmp_path):
                for r in label_propagation(g, max_iterations=8, checkpoint=ck,
                                           checkpoint_every=1).collect()}
     assert resumed == full
+
+
+def _count_pull_supersteps(monkeypatch):
+    calls = []
+    orig = blocks.pull_superstep
+
+    def counting(*a, **kw):
+        calls.append(kw.get("kernel"))
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(blocks, "pull_superstep", counting)
+    return calls
+
+
+def test_wcc_shuffled_path_pull_and_kiveris(spark, uncoalesced, monkeypatch):
+    """A shuffled 500-node path: the pull side (ids 0..n-1) converges in at
+    most 2·⌈log₂ n⌉ supersteps, one pull job each; with ids that are not
+    0..n-1 the Kiveris star rounds still converge."""
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 0)
+    calls = _count_pull_supersteps(monkeypatch)
+    n = 500
+    path = _shuffled_path(n, seed=3)
+    out = wcc(Graph.from_edges(edges_df(spark, path)))
+    assert {r["id"]: r["component"] for r in out.collect()} == {i: 0 for i in range(n)}
+    assert out.did_converge
+    assert out.iterations <= 2 * int(np.ceil(np.log2(n)))
+    assert calls == [blocks.min_kernel] * out.iterations
+
+    calls.clear()
+    shifted = [(s + 1000, d + 1000, w) for s, d, w in path]
+    out = wcc(Graph.from_edges(edges_df(spark, shifted)), max_iterations=12)
+    got = {r["id"]: r["component"] for r in out.collect()}
+    assert got == {i + 1000: 1000 for i in range(n)}
+    assert out.did_converge and calls == []
+
+
+@pytest.mark.parametrize("first", ["pull", "dataframe"])
+def test_lpa_checkpoint_resumes_across_sides(spark, tmp_path, monkeypatch, first):
+    """A label checkpoint written on one distributed side resumes on the
+    other with the labels and iteration count of an uninterrupted run."""
+    from linkgraph.io import CheckpointManager
+
+    edges = [(i, i + 1, 1.0) for i in range(12)] + [(3, 9, 2.0), (0, 12, 1.0)]
+    g = Graph.from_edges(edges_df(spark, edges))
+    full = label_propagation(g, max_iterations=8)
+    want = {r["id"]: r["label"] for r in full.collect()}
+    calls = _count_pull_supersteps(monkeypatch)
+
+    def run(side, **kw):
+        with monkeypatch.context() as m:
+            if side == "dataframe":  # no pull side under a zero node cap
+                m.setattr(blocks, "_pull_node_cap", lambda s: 0)
+            before = len(calls)
+            out = label_propagation(g, checkpoint=ck, checkpoint_every=1, **kw)
+            assert (len(calls) > before) == (side == "pull")
+            return out
+
+    ck = CheckpointManager(spark, str(tmp_path / "lpa_ck"))
+    cut = run(first, max_iterations=2, run_to_convergence=False)
+    assert cut.iterations == 2 and not cut.did_converge
+    resumed = run("dataframe" if first == "pull" else "pull", max_iterations=8)
+    assert {r["id"]: r["label"] for r in resumed.collect()} == want
+    assert (resumed.iterations, resumed.did_converge) == (full.iterations, full.did_converge)
+
+
+def test_phantom_endpoint_keeps_wcc_and_lpa_off_the_pull_side(spark, monkeypatch):
+    """An edge endpoint that is no node id (10 with nodes 0..3) sends WCC
+    and LPA to their DataFrame sides, which agree with the driver sides."""
+    e = edges_df(spark, [(0, 1, 1.0), (1, 10, 1.0), (10, 2, 1.0)])
+    g = Graph.from_edges(e, nodes=nodes_df(spark, range(4)))
+    driver = (
+        {r["id"]: r["component"] for r in wcc(g).collect()},
+        {r["id"]: r["label"] for r in label_propagation(g).collect()},
+    )
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 0)
+    calls = _count_pull_supersteps(monkeypatch)
+    dist = (
+        {r["id"]: r["component"] for r in wcc(g).collect()},
+        {r["id"]: r["label"] for r in label_propagation(g).collect()},
+    )
+    assert calls == []
+    assert dist == driver
+    # 10 is no node, but it connects 0, 1 and 2 on every side
+    assert dist[0] == {0: 0, 1: 0, 2: 0, 3: 3}
+
+
+def test_wcc_and_lpa_share_one_pull_store(spark, monkeypatch):
+    """WCC and direction-BOTH LPA build their pull stores from the same
+    symmetric plan, so the second call reuses the first one's store."""
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 0)
+    builds = []
+    write = blocks.write_pull_blocks
+    monkeypatch.setattr(
+        blocks, "write_pull_blocks", lambda *a, **kw: builds.append(1) or write(*a, **kw)
+    )
+    calls = _count_pull_supersteps(monkeypatch)
+    edges, ids = G_LPA + [(6, 7, 1.0)], list(range(8))  # a graph no other test builds
+    g = Graph.from_edges(edges_df(spark, edges), nodes=nodes_df(spark, ids))
+    assert {r["id"]: r["component"] for r in wcc(g).collect()} == np_wcc(edges, ids)
+    got = {r["id"]: r["label"] for r in label_propagation(g, max_iterations=50).collect()}
+    assert got == np_lpa_sync(edges, ids)
+    assert set(calls) == {blocks.min_kernel, blocks.vote_kernel}
+    assert len(builds) == 1

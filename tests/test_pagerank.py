@@ -135,8 +135,11 @@ def test_pagerank_checkpoint_resume(spark, tmp_path):
 
 def test_failed_superstep_releases_store_pin(spark, monkeypatch):
     """A superstep that raises must not leave its store pinned: a leaked
-    pin keeps that store from ever being evicted from the store cache."""
+    pin keeps that store from ever being evicted from the store cache.
+    Nor may the csr run leave a cached table behind."""
     from linkgraph.algorithms import blocks
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
 
     def failing_engine(*a):
         def step(x):
@@ -150,11 +153,13 @@ def test_failed_superstep_releases_store_pin(spark, monkeypatch):
     before = dict(blocks._STORE_DIR_PINS)
     for strategy, name, fake in (("pull", "pull_engine", failing_engine),
                                  ("csr", "gather_pack", failing_gather)):
+        spark.catalog.clearCache()
         with monkeypatch.context() as m:
             m.setattr(blocks, name, fake)
             with pytest.raises(RuntimeError, match="superstep failed"):
                 PageRank(strategy=strategy, max_iterations=3).run(g)
         assert blocks._STORE_DIR_PINS == before
+        assert cache.isEmpty()
 
 
 @pytest.mark.parametrize("strategy", ["CSR", "join"])
@@ -166,6 +171,7 @@ def test_pagerank_rejects_unknown_strategy(strategy):
 def test_infomap_pagerank_follows_auto_resolution(spark, monkeypatch):
     """InfoMap runs its PageRank on the plan `auto` would pick: with the
     memory-aware pull cap below the node count that is csr."""
+    from linkgraph.algorithms import blocks
     from linkgraph.algorithms.infomap import infomap
 
     resolved = []
@@ -176,7 +182,7 @@ def test_infomap_pagerank_follows_auto_resolution(spark, monkeypatch):
         resolved.append((self.resolved_strategy, self.tolerance))
         return out
 
-    monkeypatch.setattr(PageRank, "_pull_node_cap", classmethod(lambda cls, s: 2))
+    monkeypatch.setattr(blocks, "_pull_node_cap", lambda s: 2)
     monkeypatch.setattr(PageRank, "run", spy)
     infomap(_graph(spark), pr_iterations=5).collect()
     assert resolved == [("csr", None)]
@@ -207,3 +213,23 @@ def test_eigenvector_smoke(spark):
            eigenvector_centrality(g, max_iterations=15, normalization="max").collect()}
     assert max(got.values()) == pytest.approx(1.0)
     assert got[9] == pytest.approx(0.0, abs=1e-9)  # no in-links
+
+
+def _phantom_graph(spark):
+    """Nodes 0..3 and an edge endpoint, 10, that is no node id."""
+    e = edges_df(spark, [(0, 1, 1.0), (1, 10, 1.0), (10, 2, 1.0)])
+    return Graph.from_edges(e, nodes=spark.createDataFrame([(i,) for i in range(4)], "id long"))
+
+
+def test_pull_rejects_edge_endpoint_outside_node_ids(spark):
+    with pytest.raises(ValueError, match=r"0\.\.3; the edges reach ids 0\.\.10"):
+        PageRank(strategy="pull", max_iterations=3).run(_phantom_graph(spark))
+
+
+def test_auto_runs_csr_on_edge_endpoint_outside_node_ids(spark):
+    g = _phantom_graph(spark)
+    auto = PageRank(max_iterations=3)
+    got = {r["id"]: r["rank"] for r in auto.run(g).collect()}
+    assert auto.resolved_strategy == "csr"
+    want = {r["id"]: r["rank"] for r in PageRank(strategy="csr", max_iterations=3).run(g).collect()}
+    assert got == want

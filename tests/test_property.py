@@ -5,6 +5,7 @@ jobs — but seeds vary across runs, widening coverage over time."""
 import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
 from tests.conftest import edges_df
@@ -77,6 +78,113 @@ def test_wcc_matches_union_find(spark, monkeypatch, threshold, g):
     got = {r["id"]: r["component"] for r in wcc(gr).collect()}
     want = _uf_components(n, edges)
     assert got == {v: want[v] for v in ids}
+
+
+# The three sides of WCC and LPA and the graph layout that selects each:
+# driver (default crossover), pull (ids 0..n-1, crossover forced to 0) and
+# DataFrame (crossover forced to 0, with ids that are not 0..n-1 or with an
+# edge endpoint that is not a node id).
+SIDES = ["driver", "pull", "sparse_ids", "phantom"]
+
+
+def _side_graph(spark, monkeypatch, side, n, edges):
+    """(graph, node ids, edge list) of ``edges`` over nodes 0..n-1 laid out
+    for ``side``; the edge list includes the phantom endpoint's edges."""
+    from linkgraph.algorithms import blocks
+
+    if side != "driver":
+        monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 0)
+    ids = list(range(n))
+    if side == "sparse_ids":
+        ids = [3 * v + 1 for v in ids]
+        edges = [(3 * a + 1, 3 * b + 1, w) for a, b, w in edges]
+    elif side == "phantom":
+        # n + 5 is no node: an endpoint connecting 0 and n - 1
+        edges = edges + [(0, n + 5, 1.0), (n + 5, n - 1, 1.0)]
+    nodes = spark.createDataFrame([(v,) for v in ids], "id long")
+    return Graph.from_edges(edges_df(spark, edges), nodes=nodes), ids, edges
+
+
+def _count_sides(monkeypatch):
+    """Counters of pull supersteps and driver union-find calls."""
+    import importlib
+
+    from linkgraph.algorithms import blocks
+
+    W = importlib.import_module("linkgraph.algorithms.wcc")
+    seen = {"pull": 0, "union_find": 0}
+
+    def counting(owner, name, key):
+        orig = getattr(owner, name)
+
+        def wrapper(*a, **kw):
+            seen[key] += 1
+            return orig(*a, **kw)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    counting(blocks, "pull_superstep", "pull")
+    counting(W, "union_find_mapping", "union_find")
+    return seen
+
+
+def _assert_side(side, seen, driver_calls):
+    if side == "driver":
+        assert seen == {"pull": 0, "union_find": driver_calls}
+    elif side == "pull":
+        assert seen["pull"] > 0 and seen["union_find"] == 0
+    else:
+        assert seen == {"pull": 0, "union_find": 0}
+
+
+@pytest.mark.parametrize("side", SIDES)
+@settings(**SETTINGS)
+@given(graphs())
+def test_wcc_sides_match_union_find(spark, monkeypatch, side, g):
+    from linkgraph.algorithms.wcc import wcc
+
+    n, edges = g
+    if not edges:
+        return
+    with monkeypatch.context() as m:
+        gr, ids, all_edges = _side_graph(spark, m, side, n, edges)
+        seen = _count_sides(m)
+        out = wcc(gr)
+        got = {r["id"]: r["component"] for r in out.collect()}
+    ends = sorted({v for a, b, _ in all_edges for v in (a, b)} | set(ids))
+    index = {v: i for i, v in enumerate(ends)}
+    want = _uf_components(len(ends), [(index[a], index[b], w) for a, b, w in all_edges])
+    assert got == {v: ends[want[index[v]]] for v in ids}
+    assert out.did_converge
+    _assert_side(side, seen, driver_calls=1)
+
+
+@pytest.mark.parametrize("side", SIDES)
+@settings(**SETTINGS)
+@given(graphs(), st.booleans())
+def test_lpa_sides_match_driver_kernel(spark, monkeypatch, side, g, weighted):
+    """Labels AND iteration count of every side equal the driver kernel's
+    (``_lpa_local``) over the same prepared edges."""
+    from linkgraph.algorithms.lpa import _lpa_local, label_propagation
+    from linkgraph.algorithms.wcc import loop_free_undirected
+
+    n, edges = g
+    if not edges:
+        return
+    rng = np.random.default_rng(n * 100 + len(edges))
+    edges = [(a, b, float(rng.integers(1, 4))) for a, b, _ in edges]
+    with monkeypatch.context() as m:
+        gr, _, _ = _side_graph(spark, m, side, n, edges)
+        seen = _count_sides(m)
+        out = label_propagation(gr, max_iterations=6, weighted=weighted)
+        got = {r["id"]: r["label"] for r in out.collect()}
+    want = _lpa_local(
+        loop_free_undirected(gr.edges), gr.nodes.select("id", F.col("id").alias("label")),
+        weighted, 6, True,
+    )
+    assert got == {r["id"]: r["label"] for r in want.collect()}
+    assert (out.iterations, out.did_converge) == (want.iterations, want.did_converge)
+    _assert_side(side, seen, driver_calls=0)
 
 
 @settings(**SETTINGS)

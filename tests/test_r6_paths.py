@@ -656,3 +656,43 @@ def test_only_wcc_and_msf_call_union_find():
         if not (rel == "linkgraph/algorithms/paths.py" and msf.lineno <= line <= msf.end_lineno)
     ]
     assert offenders == []
+
+
+def test_pull_engine_call_shape_stays_fixed(spark, small_graph, monkeypatch):
+    """Tools that wrap ``blocks.pull_engine`` rely on its call shape
+    ``(sc, block_path, num_blocks, n)`` and on each step taking one
+    vector. PageRank pull, WCC and LPA on their distributed pull sides run
+    under a wrapper of exactly that shape: the label kernels reach the
+    executors through ``pull_superstep``, never as extra pull_engine
+    arguments."""
+    from linkgraph.algorithms.lpa import label_propagation
+    from linkgraph.algorithms.pagerank import PageRank
+    from linkgraph.algorithms.wcc import wcc
+
+    local = (
+        _rows(PageRank(strategy="pull", max_iterations=5).run(small_graph), ["id", "rank"]),
+        _rows(wcc(small_graph), ["id", "component"]),
+        _rows(label_propagation(small_graph, max_iterations=6), ["id", "label"]),
+    )
+    engine, superstep = B.pull_engine, B.pull_superstep
+    kernels = []
+
+    def strict_engine(sc, block_path, num_blocks, n):
+        step = engine(sc, block_path, num_blocks, n)
+        return lambda p: step(p)
+
+    def counting_superstep(*a, **kw):
+        kernels.append(kw.get("kernel", B.sum_kernel))
+        return superstep(*a, **kw)
+
+    monkeypatch.setattr(B, "pull_engine", strict_engine)
+    monkeypatch.setattr(B, "pull_superstep", counting_superstep)
+    monkeypatch.setattr(B, "DRIVER_EDGE_THRESHOLD", 0)
+    ranks = _rows(PageRank(strategy="pull", max_iterations=5).run(small_graph), ["id", "rank"])
+    assert np.allclose([r for _, r in ranks], [r for _, r in local[0]], atol=1e-6)
+    assert kernels == [B.sum_kernel] * 5
+    assert _rows(wcc(small_graph), ["id", "component"]) == local[1]
+    assert set(kernels[5:]) == {B.min_kernel}
+    del kernels[:]
+    assert _rows(label_propagation(small_graph, max_iterations=6), ["id", "label"]) == local[2]
+    assert len(kernels) > 0 and set(kernels) == {B.vote_kernel}
