@@ -49,6 +49,14 @@ def _ensure_store(graph: Graph, direction: str, store_path: str | None) -> tuple
     return path, n
 
 
+def _materialized_on(path: str, df: DataFrame) -> DataFrame:
+    """``df``, a plan whose tasks read the store at ``path``, computed
+    while that store is pinned. The result is a localCheckpoint, so it
+    stays readable after the store cache evicts and deletes the store."""
+    with blocks.pinned_store(path):
+        return df.localCheckpoint(eager=True)
+
+
 def _neighbors_flat(indptr, indices, frontier):
     """Vectorized adjacency gather: → (neighbors, parents) flat arrays."""
     starts = indptr[frontier]
@@ -150,4 +158,4 @@ def betweenness_centrality(
             ),
         )
     )
-    return out
+    return _materialized_on(path, out)

@@ -175,21 +175,16 @@ def _pull_node_cap(spark) -> int:
     return max(1, min(PULL_MAX_NODES, int(mem_bytes * 0.25) // 64))
 
 
-def _contiguous_n(nodes: DataFrame) -> int | None:
-    """n if node ids are exactly 0..n-1 (the pull engine's precondition)."""
-    row = nodes.agg(
-        F.count("id").alias("c"), F.min("id").alias("mn"), F.max("id").alias("mx")
-    ).first()
-    if row["c"] and row["mn"] == 0 and row["mx"] == row["c"] - 1:
-        return int(row["c"])
-    return None
-
-
 def _pull_n(nodes: DataFrame) -> int | None:
     """n when the node table qualifies for the pull engine — ids exactly
     0..n-1 and n within the memory-aware cap — else None."""
-    n = _contiguous_n(nodes.select("id"))
-    return n if n is not None and n <= _pull_node_cap(nodes.sparkSession) else None
+    row = nodes.agg(
+        F.count("id").alias("c"), F.min("id").alias("mn"), F.max("id").alias("mx")
+    ).first()
+    n = row["c"]
+    if not n or row["mn"] != 0 or row["mx"] != n - 1:
+        return None
+    return int(n) if n <= _pull_node_cap(nodes.sparkSession) else None
 
 
 def _resolve_strategy(nodes: DataFrame) -> str:

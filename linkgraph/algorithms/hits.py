@@ -122,7 +122,8 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
     groupBys + a localCheckpoint per iteration. Each store is pinned as
     soon as it is open, before the second one can evict it. Same
     unnormalized-loop + periodic/final L1 rescale semantics as the
-    DataFrame path. Returns None when ids are not contiguous."""
+    DataFrame path. Returns None when the graph does not qualify for the
+    pull engine (blocks._pull_n, or an edge endpoint that is no node id)."""
     import contextlib
 
     import numpy as np
@@ -130,8 +131,8 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
 
     from linkgraph.algorithms import blocks
 
-    n = blocks._contiguous_n(graph.nodes.select("id"))
-    if not n:
+    n = blocks._pull_n(graph.nodes)
+    if n is None:
         return None
     edges = graph.edges.select("src", "dst")
     fwd = edges.withColumn("weight", F.lit(1.0))
@@ -152,6 +153,8 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
         steps = []
         for e in (fwd, rev):
             path, b = blocks.open_store(e, "pull", normalize=False)
+            if blocks.endpoints_outside(path, n) is not None:
+                return None
             pins.enter_context(blocks.pinned_store(path))
             steps.append(blocks.pull_engine(sc, path, b, n))
         fwd_step, rev_step = steps

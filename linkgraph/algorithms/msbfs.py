@@ -374,7 +374,7 @@ def weighted_all_shortest_paths(
     import pandas as pd
 
     from linkgraph.algorithms import blocks
-    from linkgraph.algorithms.betweenness import _ensure_store
+    from linkgraph.algorithms.betweenness import _ensure_store, _materialized_on
 
     # Dijkstra's correctness contract — one cheap aggregate, fail loudly
     # instead of silently returning wrong distances on a negative weight.
@@ -421,6 +421,7 @@ def weighted_all_shortest_paths(
 
     sources = graph.nodes.select(F.col("id").alias("source"))
     b = graph.nodes.sparkSession.sparkContext.defaultParallelism
-    return sources.repartition(b).mapInPandas(
+    dists = sources.repartition(b).mapInPandas(
         run, schema="source long, target long, distance double"
     )
+    return _materialized_on(path, dists)

@@ -37,6 +37,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.algorithms import blocks
@@ -110,9 +112,6 @@ class PageRank:
         ``auto`` finds an endpoint that is not a node id (the store's
         manifest records the range, so the check costs no job).
         """
-        import numpy as np
-        import pandas as pd
-
         spark = graph.edges.sparkSession
         sc = spark.sparkContext
         d = self.damping
@@ -290,29 +289,35 @@ def pagerank(graph: Graph, **kwargs) -> DataFrame:
 
 
 def _pull_power_iteration(
-    edges: DataFrame,
-    n: int,
+    graph: Graph,
     max_iterations: int,
     step,
     denom_add: float = 0.0,
     normalize: bool = True,
     tolerance: float | None = None,
-):
-    """Shared CSC-block power-iteration driver: open the pull store once
-    (blocks.open_store: one shuffle to build it, none when the plan-keyed
-    cache already holds it — Katz/ArticleRank/Eigenvector re-runs on the
-    same logical edge table skip the rebuild), then zero-shuffle supersteps
-    inside the store pin; `step(p, contrib)` returns the next vector.
-    Returns the final numpy vector."""
-    import numpy as np
-
-    sc = edges.sparkSession.sparkContext
+    finish=None,
+) -> DataFrame | None:
+    """Shared CSC-block power-iteration driver over the unweighted edges:
+    open the pull store once (blocks.open_store: one shuffle to build it,
+    none when the plan-keyed cache already holds it — Katz/ArticleRank/
+    Eigenvector re-runs on the same logical edge table skip the rebuild),
+    then zero-shuffle supersteps inside the store pin; `step(p, contrib)`
+    returns the next vector and `finish(p)` post-processes the last one.
+    Returns the (id, rank) table, or None when the graph does not qualify
+    for the pull engine (blocks._pull_n, or an edge endpoint that is no
+    node id) and the caller runs its join loop."""
+    n = blocks._pull_n(graph.nodes)
+    if n is None:
+        return None
+    edges = graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))
     path, b = blocks.open_store(
         edges, "pull", denom_add=denom_add, normalize=normalize
     )
+    if blocks.endpoints_outside(path, n) is not None:
+        return None
     p = np.ones(n)
     with blocks.pinned_store(path):
-        pull_step = blocks.pull_engine(sc, path, b, n)  # r6: see _run_pull
+        pull_step = blocks.pull_engine(edges.sparkSession.sparkContext, path, b, n)
         for _ in range(max_iterations):
             contrib = pull_step(p)
             p_new = step(p, contrib)
@@ -320,7 +325,11 @@ def _pull_power_iteration(
             p = p_new
             if tolerance is not None and delta < tolerance:
                 break
-    return p
+    if finish is not None:
+        p = finish(p)
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"id": np.arange(n), "rank": p})
+    )
 
 
 def _join_power_loop(
@@ -391,7 +400,7 @@ def article_rank(
     Reference: `algo/.../ArticleRankProc.java` (variant compute step in
     impl/pagerank/). Contribution = p(u) / (outdeg(u) + mean outdeg).
     Runs on the shared CSC-block engine (denominator baked into w_norm at
-    store build: w/(W+avgdeg)) when ids are contiguous; join loop otherwise.
+    store build: w/(W+avgdeg)) when the graph qualifies; join loop otherwise.
     """
     edges, nodes = graph.edges, graph.nodes.select("id")
     outdeg = edges.groupBy(F.col("src").alias("id")).agg(
@@ -402,22 +411,15 @@ def article_rank(
     n_nodes = nodes.count()
     avg_deg = (outdeg.agg(F.sum("deg")).first()[0] or 0.0) / max(n_nodes, 1)
 
-    n = blocks._contiguous_n(nodes)
-    if n:
-        import numpy as np
-        import pandas as pd
-
-        p = _pull_power_iteration(
-            edges.select("src", "dst").withColumn("weight", F.lit(1.0)),
-            n,
-            max_iterations,
-            step=lambda p, c: (1.0 - damping) + damping * c,
-            denom_add=avg_deg,
-            tolerance=tolerance,
-        )
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"id": np.arange(n), "rank": p})
-        )
+    ranks = _pull_power_iteration(
+        graph,
+        max_iterations,
+        step=lambda p, c: (1.0 - damping) + damping * c,
+        denom_add=avg_deg,
+        tolerance=tolerance,
+    )
+    if ranks is not None:
+        return ranks
 
     ranks, _converged = _join_power_loop(
         nodes,
@@ -442,33 +444,26 @@ def eigenvector_centrality(
     Reference: `algo/.../EigenvectorCentralityProc.java`; per-step L2
     stabilization, final `normalization: none|max|l1norm|l2norm`.
     Runs on the shared CSC-block engine (raw weights, per-step L2 in numpy)
-    when ids are contiguous; join loop otherwise.
+    when the graph qualifies; join loop otherwise.
     """
     edges, nodes = graph.edges, graph.nodes.select("id")
 
-    n = blocks._contiguous_n(nodes)
-    if n:
-        import numpy as np
-        import pandas as pd
+    def step(p, c):
+        norm = float(np.sqrt((c * c).sum())) or 1.0
+        return c / norm
 
-        def step(p, c):
-            norm = float(np.sqrt((c * c).sum())) or 1.0
-            return c / norm
-
-        p = _pull_power_iteration(
-            edges.select("src", "dst").withColumn("weight", F.lit(1.0)),
-            n,
-            max_iterations,
-            step=step,
-            normalize=False,
-        )
+    def finish(p):
         if normalization == "max":
-            p = p / (p.max() or 1.0)
-        elif normalization == "l1norm":
-            p = p / (p.sum() or 1.0)
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"id": np.arange(n), "rank": p})
-        )
+            return p / (p.max() or 1.0)
+        if normalization == "l1norm":
+            return p / (p.sum() or 1.0)
+        return p
+
+    ranks = _pull_power_iteration(
+        graph, max_iterations, step=step, normalize=False, finish=finish
+    )
+    if ranks is not None:
+        return ranks
 
     def _l2_post(ck: DataFrame) -> DataFrame:
         norm = ck.agg(F.sqrt(F.sum(F.col("rank") * F.col("rank")))).first()[0] or 1.0
@@ -509,28 +504,20 @@ def katz_centrality(
 
     Engine-added for GDS-successor parity (the reference ships the
     PageRank/ArticleRank/Eigenvector trio; Katz completes the family).
-    Runs on the shared CSC-block pull engine when ids are contiguous
+    Runs on the shared CSC-block pull engine when the graph qualifies
     (zero-shuffle supersteps, raw weights), join loop otherwise — the
     same two-strategy split as article_rank above.
     """
     edges, nodes = graph.edges, graph.nodes.select("id")
-
-    n = blocks._contiguous_n(nodes)
-    if n:
-        import numpy as np
-        import pandas as pd
-
-        p = _pull_power_iteration(
-            edges.select("src", "dst").withColumn("weight", F.lit(1.0)),
-            n,
-            max_iterations,
-            step=lambda p, c: alpha * c + beta,
-            normalize=False,
-            tolerance=tolerance,
-        )
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"id": np.arange(n), "rank": p})
-        )
+    ranks = _pull_power_iteration(
+        graph,
+        max_iterations,
+        step=lambda p, c: alpha * c + beta,
+        normalize=False,
+        tolerance=tolerance,
+    )
+    if ranks is not None:
+        return ranks
 
     ranks, _converged = _join_power_loop(
         nodes,

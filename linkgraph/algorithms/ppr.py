@@ -103,19 +103,22 @@ def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
     + localCheckpoint. Identical arithmetic (w_norm = 1/outdeg baked at
     store build, no dangling redistribution); the store comes from
     ``blocks.open_store``, so a repeat batch on the same edges reuses it,
-    and the supersteps run inside its pin. Returns None when ids are not
-    contiguous (callers fall back to the join loop)."""
+    and the supersteps run inside its pin. Returns None when the graph
+    does not qualify for the pull engine (blocks._pull_n, or an edge
+    endpoint that is no node id): callers fall back to the join loop."""
     import numpy as np
     import pandas as pd
 
     from linkgraph.algorithms import blocks
 
-    n = blocks._contiguous_n(graph.nodes.select("id"))
+    n = blocks._pull_n(graph.nodes)
     if n is None:
         return None
     edges_w = graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))
     sc = edges_w.sparkSession.sparkContext
     path, b = blocks.open_store(edges_w, "pull")
+    if blocks.endpoints_outside(path, n) is not None:
+        return None
     S = len(seeds)
     ind = np.zeros((n, S))
     for j, s in enumerate(seeds):

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import Graph
 from linkgraph.algorithms import blocks
-from linkgraph.algorithms.betweenness import _ensure_store
+from linkgraph.algorithms.betweenness import _ensure_store, _materialized_on
 
 _U64 = np.uint64
 _SORTED_ADJ_CACHE: dict = {}
@@ -222,6 +222,7 @@ def random_walks(
     if start_nodes is not None:
         starts = starts.filter(F.col("start").isin([int(x) for x in start_nodes]))
     b = graph.nodes.sparkSession.sparkContext.defaultParallelism
-    return starts.repartition(b).mapInPandas(
+    walks = starts.repartition(b).mapInPandas(
         run, schema="start long, walk_idx int, path array<bigint>"
     )
+    return _materialized_on(path_dir, walks)

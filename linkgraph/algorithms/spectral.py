@@ -108,6 +108,12 @@ def spectral_embedding(
     sc = nodes.sparkSession.sparkContext
     # raw weights: the symmetric normalization is baked into the edge weight
     path, b = blocks.open_store(edges, "pull", normalize=False)
+    bad = blocks.endpoints_outside(path, n)
+    if bad is not None:
+        raise ValueError(
+            f"spectral_embedding: edge endpoints span {bad[0]}..{bad[1]}, "
+            f"outside the node ids 0..{n - 1}"
+        )
 
     k = min(k, n)  # qr of an n×k start basis caps the rank at n
     rng = np.random.RandomState(seed)

@@ -2,11 +2,9 @@
 
 The reference writes results back into the Neo4j store via a parallel
 transactional exporter (`core/src/main/java/org/neo4j/graphalgo/core/write/
-Exporter.java`). Our sink is a table: Iceberg when an iceberg runtime jar is
-on the classpath, else partitioned Parquet + a JSON manifest with the same
-layout/lineage guarantees (documented divergence — this sandbox has no
-Iceberg jar; the write path is format-pluggable so a real cluster flips one
-config).
+Exporter.java`). Our sink is a table: partitioned Parquet + a JSON manifest
+that carries the layout/lineage guarantees a table format such as Iceberg
+would (documented divergence — no Iceberg runtime jar is installed).
 
 A checkpoint per superstep makes the iterative algorithms resumable
 mid-iteration and truncates Spark lineage (SURVEY.md §4 / §7 hard-part 3).
@@ -21,14 +19,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 class CheckpointManager:

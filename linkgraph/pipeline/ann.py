@@ -791,47 +791,3 @@ def sq8_topk(
         .filter(F.col("_rn") <= k)
         .select("a", "b", "qcos")
     )
-
-
-def sq8_topk_ivf(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centroids: np.ndarray,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-    bounds: DataFrame | None = None,
-) -> DataFrame:
-    """IVF∘SQ8 top-k: coarse-cell pruning composed in front of the integer
-    quantized-dot re-rank — same structure as :func:`pq_topk_ivf` (queries
-    probe ``nprobe`` cells, corpus rows live in exactly one cell, the join
-    is an equi-join on cell id), but candidates score with the asymmetric
-    SQ8 cosine (float query × decoded corpus bytes) instead of an ADC LUT.
-    The pruned scan is what survives a 10⁹-vector corpus; the byte codes
-    are what keep its shuffle 4× smaller than raw floats."""
-    if bounds is None:
-        bounds = sq8_bounds(corpus, id_col, vec_col)
-    ca = ivf_assign_multi(queries, centroids, nprobe, id_col, vec_col).select(
-        F.col("id").alias("a"), F.col("v").alias("va"), "cell"
-    )
-    cells = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col("id").alias("b"), "cell"
-    )
-    cb = (
-        sq8_decode(sq8_encode(corpus, bounds, id_col, vec_col), bounds)
-        .select(F.col("id").alias("b"), F.col("decoded").alias("vb"))
-        .join(cells, "b")
-    )
-    pairs = ca.join(cb, "cell").filter(F.col("a") != F.col("b"))
-    scored = pairs.select(
-        "a",
-        "b",
-        F.round(_dot("va", "vb") / (_norm("va") * _norm("vb")), 4).alias("qcos"),
-    )
-    win = Window.partitionBy("a").orderBy(F.desc("qcos"), F.asc("b"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(win))
-        .filter(F.col("_rn") <= k)
-        .select("a", "b", "qcos")
-    )

@@ -135,35 +135,3 @@ def learn_bpe_merges(
         ).localCheckpoint(eager=True)
         prev.unpersist()
     return merges
-
-
-def bpe_segment(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, n_bpe_units) — apply a learned merge list to every doc
-    and count resulting units (the tokenizer-aware token budget). Merges
-    replay in learned order, all inside codegen (K nested folds — keep K
-    modest per plan, or chain via intermediate selects for large K)."""
-    col = F.split(
-        F.concat_ws(
-            " ",
-            F.filter(
-                F.split(F.col(text_col), " "), lambda w: w != ""
-            ),
-        ),
-        "",
-    )
-    # word boundaries stay as literal ' ' symbols: merges were learned
-    # inside words only, so no learned pair ever contains a space and
-    # merges can never cross a word boundary
-    for a, b, _ in merges:
-        col = _merge_pair(col, a, b)
-    # filter both the ' ' boundary symbols and the lone '' that
-    # F.split('', '') yields for an empty/whitespace-only document —
-    # without it every empty doc would be billed 1 unit
-    n_units = F.size(F.filter(col, lambda s: (s != " ") & (s != "")))
-    return docs.select(
-        "doc_id", n_units.cast("long").alias("n_bpe_units")
-    )

@@ -31,8 +31,6 @@ chain — the oracle re-trains the model from scratch in DuckDB).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
@@ -51,9 +49,8 @@ def doc_features(
     the normalizer needs no second pass — total grams per doc is
     size(unigrams) + size(bigrams) = 2·n_tokens − 1, a row-local
     expression carried through the groupBy key. NULL text is coalesced to
-    '' so a NULL-text doc still emits its one ''-gram feature row — the
-    join-form and row-local scorers therefore agree on output cardinality
-    (r5 ADVICE: explode of a NULL gram array silently dropped the doc)."""
+    '' so a NULL-text doc still emits its one ''-gram feature row and gets
+    a score (an explode of a NULL gram array would drop the doc)."""
     toks = F.col("_toks")
     total = (F.lit(2) * F.size(toks) - F.lit(1)).cast("double")
     g = docs.select(
@@ -145,90 +142,6 @@ def _train_on_arrays(
     return w, bias
 
 
-def _feature_arrays_with_labels(
-    docs: DataFrame,
-    target_source: str,
-    n_buckets: int,
-    text_col: str,
-    source_col: str,
-    key_col: str,
-    checkpoint: bool = True,
-) -> tuple[DataFrame, float]:
-    """Materialized (key, bx, y) + N. checkpoint=True → localCheckpoint
-    (blocks die with this run's RDD — a persist()'s CacheManager entry is
-    plan-keyed and would be silently shared with a later identical call);
-    checkpoint=False → lazy persist, for callers that unpersist
-    themselves (train-only path, which must leave no pinned RDDs)."""
-    y = (F.col(source_col) == target_source).cast("double")
-    labels = docs.select(F.col(key_col).alias("key"), y.alias("y"))
-    fda_y = _doc_feature_arrays(
-        docs, n_buckets=n_buckets, text_col=text_col, key_col=key_col
-    ).join(labels, "key")
-    fda_y = fda_y.localCheckpoint(eager=True) if checkpoint else fda_y.persist()
-    return fda_y, float(labels.count())
-
-
-def train_quality_classifier(
-    docs: DataFrame,
-    target_source: str,
-    n_buckets: int = 256,
-    iters: int = 5,
-    lr: float = 10.0,
-    text_col: str = "text",
-    source_col: str = "source",
-    key_col: str = "doc_id",
-) -> tuple[np.ndarray, float]:
-    """→ (w[n_buckets], b) — logistic regression separating docs with
-    ``source == target_source`` (y=1) from the rest (y=0), full-batch
-    GD, ``iters`` iterations from w=0, b=0. lr=10 suits L1-normalized
-    features whose per-doc mass is 1 (margins live in [-|w|∞, |w|∞])."""
-    fda_y, n = _feature_arrays_with_labels(
-        docs, target_source, int(n_buckets), text_col, source_col, key_col,
-        checkpoint=False,
-    )
-    try:
-        return _train_on_arrays(fda_y, n, int(n_buckets), iters, lr)
-    finally:
-        fda_y.unpersist()
-
-
-def classifier_scores(
-    docs: DataFrame,
-    w: np.ndarray,
-    bias: float,
-    n_buckets: int = 256,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    ndigits: int = 5,
-) -> DataFrame:
-    """→ (doc_id, score) — sigmoid quality score in (0,1) for EVERY doc
-    under a trained model; the weight table (≤ n_buckets rows) broadcasts
-    onto one pass over the features. Rounded to ``ndigits`` (the engine's
-    float-stability recipe)."""
-    spark = docs.sparkSession
-    wdf = spark.createDataFrame(
-        [(i, float(wv)) for i, wv in enumerate(w) if wv != 0.0] or [(0, 0.0)],
-        "bucket int, w double",
-    )
-    feats = doc_features(docs, n_buckets=n_buckets, text_col=text_col, key_col=key_col)
-    m = (
-        feats.join(F.broadcast(wdf), "bucket", "left")
-        .groupBy("key")
-        .agg(
-            (
-                F.lit(float(bias))
-                + F.sum(F.col("x") * F.coalesce(F.col("w"), F.lit(0.0)))
-            ).alias("m")
-        )
-    )
-    return m.select(
-        F.col("key").alias(key_col),
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("m"))), ndigits).alias(
-            "score"
-        ),
-    )
-
-
 def quality_classifier_scores(
     docs: DataFrame,
     target_source: str,
@@ -241,110 +154,21 @@ def quality_classifier_scores(
 ) -> DataFrame:
     """Train-then-score in one call (the contract-query entry point).
 
-    Features are packed + materialized ONCE and shared by the GD loop and
-    the scoring pass (previously scoring re-tokenized + re-hashed the
-    whole corpus); scoring itself is row-local over the packed arrays —
-    same margin arithmetic as classifier_scores' broadcast-join form, and
-    the same output cardinality (docs with ≥1 feature row)."""
-    fda_y, n = _feature_arrays_with_labels(
-        docs, target_source, int(n_buckets), text_col, source_col, key_col
-    )
+    Features are packed + materialized ONCE, as (key, bx, y), and shared
+    by the GD loop and the scoring pass; scoring itself is row-local over
+    the packed arrays. The table is a localCheckpoint, not a persist: its
+    blocks die with this run's RDD, where a persist's CacheManager entry
+    is plan-keyed and would be silently shared with a later identical
+    call."""
+    y = (F.col(source_col) == target_source).cast("double")
+    labels = docs.select(F.col(key_col).alias("key"), y.alias("y"))
+    fda_y = _doc_feature_arrays(
+        docs, n_buckets=int(n_buckets), text_col=text_col, key_col=key_col
+    ).join(labels, "key").localCheckpoint(eager=True)
+    n = float(labels.count())
     w, bias = _train_on_arrays(fda_y, n, int(n_buckets), iters, lr)
     m = _margin_expr(_w_literal_array(w), bias)
     return fda_y.select(
         F.col("key").alias(key_col),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 5).alias("score"),
-    )
-
-
-def py_reference_classifier(
-    rows: list[tuple[int, str, str]],
-    target_source: str,
-    n_buckets: int,
-    iters: int,
-    lr: float,
-) -> dict[int, float]:
-    """Pure-Python/numpy reference (tests + documentation of the exact
-    arithmetic): rows = [(doc_id, source, text)] → {doc_id: score}."""
-    import hashlib
-    from collections import Counter
-
-    def grams(text: str) -> list[str]:
-        t = text.split(" ")
-        return t + [f"{t[i]} {t[i + 1]}" for i in range(len(t) - 1)]
-
-    def bucket(gm: str) -> int:
-        return int(hashlib.md5(gm.encode()).hexdigest()[:15], 16) % n_buckets
-
-    feats, ys = {}, {}
-    for did, src, text in rows:
-        c = Counter(bucket(g) for g in grams(text))
-        tot = float(sum(c.values()))
-        feats[did] = {bk: cnt / tot for bk, cnt in c.items()}
-        ys[did] = 1.0 if src == target_source else 0.0
-    n = float(len(rows))
-    w = np.zeros(n_buckets)
-    bias = 0.0
-    for _ in range(iters):
-        gw = np.zeros(n_buckets)
-        gb = 0.0
-        for did, fx in feats.items():
-            m = bias + sum(x * w[bk] for bk, x in fx.items())
-            r = 1.0 / (1.0 + math.exp(-m)) - ys[did]
-            for bk, x in fx.items():
-                gw[bk] += x * r
-            gb += r
-        w -= lr * gw / n
-        bias -= lr * gb / n
-    out = {}
-    for did, fx in feats.items():
-        m = bias + sum(x * w[bk] for bk, x in fx.items())
-        out[did] = 1.0 / (1.0 + math.exp(-m))
-    return out
-
-
-def classifier_scores_rowlocal(
-    docs: DataFrame,
-    w: np.ndarray,
-    bias: float,
-    n_buckets: int = 256,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    ndigits: int = 5,
-) -> DataFrame:
-    """→ (doc_id, score) — ZERO-SHUFFLE scoring: the weight vector is
-    inlined as a literal map and the margin is a row-local higher-order
-    aggregate over the doc's grams (Σ_b x_b·w_b = (Σ_grams
-    w[bucket(gram)]) / total_grams — per-OCCURRENCE weight sum, same
-    arithmetic as the join form up to float sum order). No explode, no
-    groupBy, no join — whole-stage codegen end to end, which also makes
-    it a stateless STREAMING transformation (streaming.stream_
-    classifier_scores). Literal-map width is n_buckets entries: fine to ~10^4;
-    past that use classifier_scores' broadcast-join form. NULL text is
-    coalesced to '' — same as doc_features — so both scorer forms emit the
-    same rows with the same (non-NULL) score for NULL-text docs (r5
-    ADVICE: the forms used to differ in cardinality on NULL text)."""
-    pairs: list = []
-    for i, wv in enumerate(w):
-        if wv != 0.0:
-            pairs += [F.lit(int(i)), F.lit(float(wv))]
-    wmap = (
-        F.create_map(*pairs) if pairs else F.create_map(F.lit(0), F.lit(0.0))
-    )
-    toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    tot = (F.lit(2) * F.size(toks) - F.lit(1)).cast("double")
-    msum = F.aggregate(
-        _grams_arr(toks),
-        F.lit(0.0),
-        # try_element_at: ANSI mode throws on missing map keys; buckets
-        # with zero weight are absent from the literal map by design
-        lambda acc, g: acc
-        + F.coalesce(F.try_element_at(wmap, _bucket(g, n_buckets)), F.lit(0.0)),
-    )
-    margin = F.lit(float(bias)) + msum / tot
-    return docs.select(
-        F.col(key_col).alias(key_col),
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)), ndigits).alias(
-            "score"
-        ),
     )

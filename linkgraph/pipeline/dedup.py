@@ -450,21 +450,6 @@ def near_duplicate_clusters(
     )
 
 
-def embedding_duplicate_clusters(
-    emb: DataFrame,
-    threshold: float = 0.98,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **lsh_kwargs,
-) -> DataFrame:
-    """(vec_id, cluster, is_representative) — the embedding twin of
-    :func:`near_duplicate_clusters`: hyperplane-LSH near-dup pairs with
-    exact cosine recheck → ``wcc()`` over the pair graph → min-id
-    representative per cluster."""
-    pairs = embedding_near_duplicates(emb, threshold, id_col, vec_col, **lsh_kwargs)
-    return _clusters_from_pairs(pairs, emb, id_col)
-
-
 _MERSENNE = (1 << 61) - 1
 
 

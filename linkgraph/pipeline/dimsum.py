@@ -98,17 +98,3 @@ def token_incidence_triplets(docs: DataFrame, text_col: str = "text") -> DataFra
         F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("col"),
         F.lit(1.0).alias("val"),
     ).where(F.col("col") != "")
-
-
-def doc_token_triplets(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(row=token, col=doc_id, val=1.0) — the TRANSPOSED orientation, where
-    column cosine(doc_a, doc_b) = |Ta ∩ Tb| / √(|Ta|·|Tb|) over distinct
-    token sets. CAUTION: here column norms are √(tokens per doc), fixed as
-    the corpus grows, so DIMSUM sampling does NOT bound a stopword row's
-    df² fan-out (see module docstring) — doc-doc similarity at scale
-    should go through MinHash-LSH / AllPairs (pipeline.dedup) instead."""
-    return docs.select(
-        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("row"),
-        F.col("doc_id").alias("col"),
-        F.lit(1.0).alias("val"),
-    ).where(F.col("row") != "")

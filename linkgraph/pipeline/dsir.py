@@ -66,13 +66,6 @@ def _grams_arr(toks: Column) -> Column:
     return F.concat(toks, bigrams)
 
 
-def _grams(text_col: str) -> Column:
-    """Inline-split form of :func:`_grams_arr` — only for row-at-a-time
-    consumers that cannot stage a projection (the streaming row-local
-    scorer); explode call sites must use the staged ``_grams_arr``."""
-    return _grams_arr(F.split(F.col(text_col), " "))
-
-
 def _bucket(gram: Column, n_buckets: int) -> Column:
     """md5-derived hash bucket in [0, n_buckets) — cross-engine: the SQL
     twin is `CAST(concat('0x', substr(md5(gram),1,15)) AS BIGINT) % B`
@@ -81,25 +74,6 @@ def _bucket(gram: Column, n_buckets: int) -> Column:
         F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("bigint")
         % F.lit(int(n_buckets))
     ).cast("int")
-
-
-def hashed_ngram_counts(
-    docs: DataFrame,
-    n_buckets: int = 256,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """→ (key, bucket, cnt) — per-document hashed n-gram feature counts.
-    One explode + one map-side-combining groupBy; the feature width is
-    ``n_buckets`` no matter how large the vocabulary grows."""
-    g = docs.select(
-        F.col(key_col).alias("key"), F.split(F.col(text_col), " ").alias("_toks")
-    ).select("key", F.explode(_grams_arr(F.col("_toks"))).alias("gram"))
-    return (
-        g.select("key", _bucket(F.col("gram"), n_buckets).alias("bucket"))
-        .groupBy("key", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 def dsir_log_weights(

@@ -61,25 +61,6 @@ def _probe_dim(emb: DataFrame, vec_col: str) -> int:
     return len(first[0])
 
 
-def random_projection(
-    emb: DataFrame,
-    out_dim: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, proj) — JL random projection to ``out_dim`` dims.
-
-    The projected vector is assembled row-locally; distances are
-    preserved within (1±ε) per Johnson–Lindenstrauss, making this the
-    standard pre-pass that shrinks ANN / dedup shuffle width.
-    """
-    cols = _matvec_cols(
-        vec_col, _projection_matrix(_probe_dim(emb, vec_col), out_dim, seed)
-    )
-    return emb.select(id_col, F.array(*cols).alias("proj"))
-
-
 def random_projection_wide(
     emb: DataFrame,
     out_dim: int = 16,
@@ -87,9 +68,9 @@ def random_projection_wide(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, d0..d{out_dim-1}) — same projection as
-    :func:`random_projection`, one column per output dimension (the
-    oracle-friendly wide shape)."""
+    """(vec_id, d0..d{out_dim-1}) — Johnson–Lindenstrauss random
+    projection, one column per output dimension (the oracle-friendly wide
+    shape)."""
     cols = _matvec_cols(
         vec_col, _projection_matrix(_probe_dim(emb, vec_col), out_dim, seed)
     )
@@ -163,7 +144,7 @@ def pca_project(
     Covariance is distributed (one d²-sized partial per partition); the
     d×d eigendecomposition happens on the driver; the component matrix is
     folded back into the plan as JVM literals — same zero-Python
-    projection as :func:`random_projection`.
+    projection as :func:`random_projection_wide`.
     """
     cov, mean, _ = covariance_matrix(emb, vec_col)
     vals, vecs = np.linalg.eigh(cov)

@@ -1,11 +1,10 @@
 """Multimodal column plumbing — binary payloads with typed metadata.
 
 Image/audio/video travel as opaque `binary` columns plus a metadata struct.
-The decode/feature kernels are Arrow-batched `mapInPandas` UDFs; the actual
-codec calls are STUBBED (this container has no image/audio libraries) behind
-a deterministic fake so the Spark-side plumbing — schema, batch shape,
-partitioning — is real and tested. Swap `_decode_stub` for PIL/librosa on a
-real cluster.
+The image decode/feature kernel is an Arrow-batched `mapInPandas` UDF; the
+actual codec call is STUBBED (no image library is installed here) behind a
+deterministic fake so the Spark-side plumbing — schema, batch shape,
+partitioning — is real and tested. `decode_real=True` swaps in PIL.
 """
 
 from __future__ import annotations
@@ -73,68 +72,6 @@ def _decode_real(payload: bytes, width: int, height: int) -> np.ndarray:
         ) from ex
     img = Image.open(io.BytesIO(payload)).convert("L")
     return np.asarray(img, dtype=np.uint8)
-
-
-def _decode_audio_stub(payload: bytes) -> tuple[np.ndarray, int]:
-    """Deterministic fake audio decode: payload bytes → (samples, rate).
-
-    Real implementation would be ``soundfile.read(io.BytesIO(payload))``;
-    not available in this container (see :func:`_decode_audio_real`)."""
-    raw = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-    samples = (raw - 127.5) / 127.5
-    return samples, 16_000
-
-
-def _decode_audio_real(payload: bytes) -> tuple[np.ndarray, int]:
-    """Real audio decode via soundfile (librosa's backend), probed AT CALL
-    TIME on the executor — drop-in on any cluster that has it installed;
-    raises NotImplementedError only when the import actually fails."""
-    try:
-        import io
-
-        import soundfile
-    except ImportError as ex:
-        raise NotImplementedError(
-            "real codecs (PIL/soundfile/av) are not installed in this "
-            "container; use decode_real=False for the deterministic stub "
-            "(identical Spark plumbing)"
-        ) from ex
-    samples, rate = soundfile.read(io.BytesIO(payload), dtype="float64")
-    if samples.ndim > 1:  # downmix multi-channel to mono
-        samples = samples.mean(axis=1)
-    return samples, int(rate)
-
-
-def extract_audio_features(media: DataFrame, decode_real: bool = False) -> DataFrame:
-    """(media_id, rms, peak, n_samples, sample_rate) over audio rows —
-    Arrow-batched decode + summary stats, same mapInPandas plumbing as
-    :func:`extract_features`. ``decode_real=True`` routes through the
-    runtime soundfile probe (:func:`_decode_audio_real`)."""
-    decode = _decode_audio_real if decode_real else _decode_audio_stub
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rms, peak, ns, sr = [], [], [], []
-            for payload in pdf["payload"]:
-                samples, rate = decode(payload)
-                rms.append(float(np.sqrt(np.mean(samples * samples))) if len(samples) else 0.0)
-                peak.append(float(np.abs(samples).max()) if len(samples) else 0.0)
-                ns.append(len(samples))
-                sr.append(rate)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "rms": rms,
-                    "peak": peak,
-                    "n_samples": ns,
-                    "sample_rate": sr,
-                }
-            )
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        feats,
-        schema="media_id long, rms double, peak double, n_samples long, sample_rate int",
-    )
 
 
 def extract_features(media: DataFrame, decode_real: bool = False) -> DataFrame:

@@ -6,8 +6,7 @@ built-in-function plans:
 
 - :func:`sessionize` groups an event table into activity sessions with
   Spark's native ``session_window`` aggregate — the same expression works
-  unchanged in batch and Structured Streaming (see
-  ``streaming.stream_sessionize``), where state is watermark-bounded.
+  unchanged in batch and, on a watermarked input, in Structured Streaming.
 - :func:`pack_sequences` assigns every document a byte-exact slot in the
   GPT-style concat-and-chunk training layout via a DISTRIBUTED prefix sum
   (per-partition cumsum + a driver-side prefix over the tiny per-partition
@@ -120,22 +119,6 @@ def pack_sequences(
         .alias("last_seq"),
     )
     return out
-
-
-def packing_stats(packed: DataFrame, seq_len: int = 512) -> DataFrame:
-    """One-row summary of a :func:`pack_sequences` layout: total tokens,
-    number of ``seq_len`` sequences, boundary-crossing docs, and fill rate
-    of the final (ragged) sequence."""
-    return packed.agg(
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.ceil(F.sum("n_tokens") / seq_len).cast("long").alias("n_sequences"),
-        F.sum((F.col("last_seq") > F.col("first_seq")).cast("long"))
-        .cast("long")
-        .alias("boundary_docs"),
-        F.round(
-            F.sum("n_tokens") / (F.ceil(F.sum("n_tokens") / seq_len) * seq_len), 4
-        ).alias("fill_rate"),
-    )
 
 
 def chunk_documents(

@@ -1,4 +1,4 @@
-"""Frequency sketches: heavy hitters and approximate distinct counts.
+"""Frequency sketches: heavy hitters and count-min token counts.
 
 Beyond the reference's graph surface — the counting primitives a 100 TB
 training-data pipeline needs when the long tail is too big to shuffle:
@@ -10,9 +10,6 @@ training-data pipeline needs when the long tail is too big to shuffle:
   ≥ phi·N survives the per-partition summary, so the exact verify pass
   has no false negatives and the final output is exact — the
   sketch-candidates → exact-verify shape the dedup family already uses.
-* :func:`approx_distinct_tokens` — HyperLogLog++ via the built-in
-  ``approx_count_distinct`` (JVM-side, mergeable), with the exact
-  distinct count as the small-scale cross-check.
 
 Scale shape: the only full shuffle is the groupBy over tokens that HIT a
 broadcast candidate set of ≤ partitions × k rows — the long tail (the
@@ -34,9 +31,7 @@ def mg_update(counters: dict, toks: "pd.Series", k: int) -> dict:
     """One batched Misra–Gries step: merge the batch's exact value_counts
     into `counters`, then decrement by the (k+1)-th largest weight when
     the summary overflows k entries (equivalent error bound to the
-    per-item update: undercount ≤ m/(k+1)). THE shared MG invariant —
-    used by the batch partition summaries AND the streaming shard state;
-    keep it single-sourced."""
+    per-item update: undercount ≤ m/(k+1))."""
     vc = toks.value_counts()
     for tok, c in vc.items():
         counters[tok] = counters.get(tok, 0) + int(c)
@@ -100,35 +95,6 @@ def heavy_hitters(
         exact.crossJoin(F.broadcast(total))
         .filter(F.col("count") >= F.lit(phi) * F.col("n_total"))
         .select(F.col("tok").alias("token"), "count")
-    )
-
-
-def exact_heavy_hitters(
-    docs: DataFrame, phi: float = 0.01, text_col: str = "text"
-) -> DataFrame:
-    """Full-shuffle exact reference for :func:`heavy_hitters` (same
-    output contract) — the parity twin tests assert against."""
-    toks = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-    counts = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("count"))
-    total = toks.agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .filter(F.col("count") >= F.lit(phi) * F.col("n_total"))
-        .select(F.col("tok").alias("token"), "count")
-    )
-
-
-def approx_distinct_tokens(
-    docs: DataFrame, rsd: float = 0.02, text_col: str = "text"
-) -> DataFrame:
-    """→ one row (approx_distinct, exact_distinct): HyperLogLog++ distinct
-    token estimate (mergeable JVM sketch — the 100 TB path) next to the
-    exact count (small-scale cross-check; at scale drop the exact column).
-    """
-    toks = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-    return toks.agg(
-        F.approx_count_distinct("tok", rsd).alias("approx_distinct"),
-        F.count_distinct("tok").alias("exact_distinct"),
     )
 
 

@@ -659,8 +659,7 @@ def score_bigram_lm(
     a full model and well-defined for a capped one; with
     ``broadcast_model=True`` both count tables are broadcast (the capped-
     model 100 TB path — no shuffle of the corpus bigrams at all). Works
-    unchanged on a STREAMING ``docs`` frame (stream-static left joins);
-    see ``streaming.stream_lm_score`` for the per-micro-batch wrapper.
+    unchanged on a STREAMING ``docs`` frame (stream-static left joins).
     """
     big, uni = model["bigrams"], model["unigrams"]
     if broadcast_model:

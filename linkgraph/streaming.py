@@ -2,41 +2,14 @@
 
 The reference has NO streaming capability (SURVEY.md §2.9 — every proc
 snapshots the store). This module is engine-added value for continuous
-ingestion pipelines: the same JVM-side expressions the batch operators use
-(pipeline.text), lifted onto streams, plus watermarked windowed graph-edge
-aggregation. All transformations are built-in functions — streaming-safe,
-no Python in the hot path.
+ingestion pipelines: watermark-bounded exact dedup, a running distinct
+degree per source (`applyInPandasWithState`), and near-duplicate filtering
+of a stream against a static corpus's LSH index.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def read_document_stream(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """File-source document stream (new parquet files under `path`)."""
-    schema = schema or "doc_id long, text string, lang string, source string, n_chars long"
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def stream_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Streaming token counts — stateless projection, identical expressions
-    to pipeline.text.token_stats, so batch and stream results agree."""
-    toks = F.split(F.col(text_col), " ")
-    return docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_uniq_tokens"),
-    )
-
-
-def stream_quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Streaming quality scores (stateless; mirrors pipeline.text)."""
-    from linkgraph.pipeline.text import quality_scores
-
-    return quality_scores(docs, text_col)
+from pyspark.sql import DataFrame, functions as F
 
 
 def stream_exact_dedup(
@@ -67,56 +40,6 @@ def stream_exact_dedup(
             ["text_hash"]
         )
     return hashed.dropDuplicates(["text_hash"])
-
-
-def stream_tokenset_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    event_time_col: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming bag-of-words deduplication — the continuous twin of
-    ``pipeline.dedup.tokenset_duplicates``: documents whose DISTINCT token
-    set matches an already-seen one are dropped as they arrive (catches
-    word-reorder / token-repeat variants that byte-exact dedup misses).
-    The key is pure codegen (split → array_distinct → sort_array →
-    concat_ws → md5); state is watermark-bounded when an event-time column
-    is given, exactly like :func:`stream_exact_dedup`."""
-    key = F.md5(
-        F.concat_ws(
-            " ",
-            F.sort_array(
-                F.array_distinct(F.split(F.coalesce(F.col(text_col), F.lit("")), " "))
-            ),
-        )
-    )
-    hashed = docs.withColumn("tokenset_hash", key)
-    if event_time_col is not None:
-        return hashed.withWatermark(
-            event_time_col, watermark
-        ).dropDuplicatesWithinWatermark(["tokenset_hash"])
-    return hashed.dropDuplicates(["tokenset_hash"])
-
-
-def windowed_edge_degrees(
-    edges: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Watermarked per-window out-degree over a timestamped edge stream —
-    late rows beyond the watermark are dropped, state is bounded.
-
-    → (window, src, out_degree, weight_sum)
-    """
-    return (
-        edges.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("window"), "src")
-        .agg(
-            F.count(F.lit(1)).alias("out_degree"),
-            F.sum("weight").alias("weight_sum"),
-        )
-    )
 
 
 def stateful_distinct_degree(
@@ -176,191 +99,6 @@ def stateful_distinct_degree(
     return edges.groupBy("src").applyInPandasWithState(
         update, out_schema, state_schema, "update", tmo
     )
-
-
-def stream_heavy_hitters(
-    docs: DataFrame,
-    k_per_group: int = 64,
-    n_groups: int = 16,
-    text_col: str = "text",
-) -> DataFrame:
-    """Running heavy-hitter candidates over an unbounded document stream —
-    sharded Misra-Gries via `applyInPandasWithState`.
-
-    Tokens hash into ``n_groups`` shards; each shard keeps ONE mergeable
-    MG summary of ``k_per_group`` counters as its state (Agarwal et al.,
-    Mergeable Summaries). Within a shard the MG guarantee holds: any
-    token with frequency ≥ m_shard/(k+1) of that shard's mass survives,
-    so the union of shard summaries is a guaranteed-superset candidate
-    set for global heavy hitters (each token lives in exactly one shard).
-    State is ≤ n_groups × k_per_group counters FOREVER, regardless of
-    stream length or vocabulary — the property that lets this run against
-    an unbounded corpus where exact streaming word-count state would grow
-    with |vocab|.
-
-    → update-mode stream of (grp, token, est) — current surviving
-    counters per shard; filter/exact-verify downstream (same
-    candidates → exact-verify shape as the batch `heavy_hitters`).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    toks = docs.select(
-        F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).where(F.col("tok") != "")
-    keyed = toks.withColumn(
-        "grp", F.pmod(F.xxhash64("tok"), F.lit(n_groups)).cast("int")
-    )
-
-    def update(key, pdfs, state):
-        from linkgraph.pipeline.sketch import mg_update
-
-        (grp,) = key
-        if state.exists:
-            toks_s, counts_s = state.get
-            counters = dict(zip(toks_s, (int(c) for c in counts_s)))
-        else:
-            counters = {}
-        for pdf in pdfs:
-            counters = mg_update(counters, pdf["tok"], k_per_group)
-        state.update((list(counters.keys()), list(counters.values())))
-        yield pd.DataFrame(
-            {
-                "grp": grp,
-                "token": list(counters.keys()),
-                "est": [int(v) for v in counters.values()],
-            }
-        )
-
-    return keyed.groupBy("grp").applyInPandasWithState(
-        update,
-        "grp int, token string, est long",
-        "toks array<string>, counts array<long>",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def incremental_wcc(
-    edge_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-):
-    """Incremental connected components over an edge stream (foreachBatch).
-
-    Classic incremental CC: the persisted (id, component) mapping is itself
-    a star graph (id→component edges); per micro-batch, union it with the
-    batch's new edges and re-run the batch Kiveris `wcc` on that union —
-    cost scales with the DELTA plus one edge per known node, not the full
-    history. The mapping is parquet-persisted under versioned dirs with an
-    atomically-replaced CURRENT pointer file, so a crash at ANY point
-    leaves the previous version intact and the streaming checkpoint replay
-    reconverges.
-
-    Returns the StreamingQuery (availableNow drains what exists).
-    """
-    import os
-    import shutil
-
-    from linkgraph.algorithms.wcc import wcc as _wcc
-    from linkgraph.graph import Graph
-
-    pointer = os.path.join(state_dir, "CURRENT")
-
-    def _current_dir() -> str | None:
-        if not os.path.exists(pointer):
-            return None
-        with open(pointer) as f:
-            name = f.read().strip()
-        path = os.path.join(state_dir, name)
-        return path if name and os.path.exists(path) else None
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        new_edges = batch_df.select("src", "dst")
-        cur = _current_dir()
-        if cur is not None:
-            prior = spark.read.parquet(cur).select(
-                F.col("id").alias("src"), F.col("component").alias("dst")
-            )
-            union = new_edges.unionByName(prior)
-        else:
-            union = new_edges
-        g = Graph.from_edges(union)
-        mapping = _wcc(g).select("id", "component")
-        nxt_name = f"v{batch_id}"
-        if cur is not None and os.path.basename(cur) == nxt_name:
-            # checkpoint replay of a batch whose mapping already committed:
-            # never overwrite the dir being read — write the alternate name
-            nxt_name = f"v{batch_id}r"
-        mapping.write.mode("overwrite").parquet(os.path.join(state_dir, nxt_name))
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(nxt_name)
-        os.replace(tmp, pointer)  # single atomic commit point
-        if cur is not None and os.path.basename(cur) != nxt_name:
-            shutil.rmtree(cur, ignore_errors=True)
-
-    return (
-        edge_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming twin of ``pipeline.sessions.sessionize``: the SAME
-    ``session_window`` aggregate, with a watermark so session state is
-    BOUNDED — a session closes (and its row is emitted, in append mode)
-    once the watermark passes its gap-extended end, and late events beyond
-    ``watermark`` are dropped instead of growing state forever. Batch and
-    stream rows agree for every session older than the watermark."""
-    from linkgraph.pipeline.sessions import sessionize
-
-    return sessionize(
-        events.withWatermark(ts_col, watermark),
-        gap=gap,
-        user_col=user_col,
-        ts_col=ts_col,
-        value_col=value_col,
-    )
-
-
-def stream_lm_score(
-    stream_docs: DataFrame,
-    model: dict,
-    sink_fn,
-    k_smooth: float = 0.5,
-    text_col: str = "text",
-):
-    """Score a document STREAM against a pre-trained static bigram model
-    (``pipeline.text.train_bigram_lm``): every micro-batch is scored with
-    the same batch scorer via foreachBatch — stateless across batches
-    (each document's bigrams live inside its own row), so state never
-    grows. ``sink_fn(scored_df, epoch_id)`` receives each batch's
-    (doc_id, n_bigrams, avg_logprob). Use a CAPPED model (max_bigrams=M,
-    broadcast) so the per-batch join is map-side."""
-    from linkgraph.pipeline.text import score_bigram_lm
-
-    def _batch(df: DataFrame, epoch_id: int) -> None:
-        sink_fn(
-            score_bigram_lm(
-                df, model, k_smooth=k_smooth, text_col=text_col,
-                broadcast_model=True,
-            ),
-            epoch_id,
-        )
-
-    return stream_docs.writeStream.foreachBatch(_batch)
 
 
 class StaticNearDupIndex:
@@ -487,35 +225,3 @@ def run_available_now(
     )
     q.awaitTermination()
     return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}").collect()
-
-
-def stream_classifier_scores(
-    stream_docs: DataFrame,
-    w,
-    bias: float,
-    n_buckets: int = 256,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, score) as a STREAMING transformation — score a document
-    stream against a pre-trained hashed logistic quality model
-    (``pipeline.classify.train_quality_classifier``).
-
-    Unlike the foreachBatch scorers (stream_lm_score), this is a plain
-    streaming SELECT: the row-local literal-map scorer
-    (classify.classifier_scores_rowlocal) contains no join, aggregate,
-    or state, so the returned streaming DataFrame composes into ANY
-    downstream mode/sink with zero state and zero shuffle per batch.
-    Model refresh = restart the query with new literals (the model is
-    n_buckets + 1 doubles — a restart, not a retrain, is the cheap
-    path)."""
-    from linkgraph.pipeline.classify import classifier_scores_rowlocal
-
-    return classifier_scores_rowlocal(
-        stream_docs,
-        w,
-        bias,
-        n_buckets=n_buckets,
-        text_col=text_col,
-        key_col=key_col,
-    )

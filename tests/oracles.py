@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import hashlib
+import math
+from collections import Counter
+
 import numpy as np
 
 
@@ -167,3 +171,62 @@ def np_kruskal_weight(edge_triples, maximum=False):
             total += w
             cnt += 1
     return total, cnt
+
+
+def py_reference_classifier(
+    rows: list[tuple[int, str, str]],
+    target_source: str,
+    n_buckets: int,
+    iters: int,
+    lr: float,
+) -> dict[int, float]:
+    """Hashed-bigram logistic classifier, trained by full-batch GD and
+    applied to its own rows: [(doc_id, source, text)] → {doc_id: score}."""
+
+    def grams(text: str) -> list[str]:
+        t = text.split(" ")
+        return t + [f"{t[i]} {t[i + 1]}" for i in range(len(t) - 1)]
+
+    def bucket(gm: str) -> int:
+        return int(hashlib.md5(gm.encode()).hexdigest()[:15], 16) % n_buckets
+
+    feats, ys = {}, {}
+    for did, src, text in rows:
+        c = Counter(bucket(g) for g in grams(text))
+        tot = float(sum(c.values()))
+        feats[did] = {bk: cnt / tot for bk, cnt in c.items()}
+        ys[did] = 1.0 if src == target_source else 0.0
+    n = float(len(rows))
+    w = np.zeros(n_buckets)
+    bias = 0.0
+    for _ in range(iters):
+        gw = np.zeros(n_buckets)
+        gb = 0.0
+        for did, fx in feats.items():
+            m = bias + sum(x * w[bk] for bk, x in fx.items())
+            r = 1.0 / (1.0 + math.exp(-m)) - ys[did]
+            for bk, x in fx.items():
+                gw[bk] += x * r
+            gb += r
+        w -= lr * gw / n
+        bias -= lr * gb / n
+    out = {}
+    for did, fx in feats.items():
+        m = bias + sum(x * w[bk] for bk, x in fx.items())
+        out[did] = 1.0 / (1.0 + math.exp(-m))
+    return out
+
+
+def exact_heavy_hitters(docs, phi: float = 0.01, text_col: str = "text"):
+    """Full-shuffle exact (token, count) of every token with count ≥
+    phi·N — the output contract of ``sketch.heavy_hitters``."""
+    from pyspark.sql import functions as F
+
+    toks = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+    counts = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("count"))
+    total = toks.agg(F.count(F.lit(1)).alias("n_total"))
+    return (
+        counts.crossJoin(F.broadcast(total))
+        .filter(F.col("count") >= F.lit(phi) * F.col("n_total"))
+        .select(F.col("tok").alias("token"), "count")
+    )

@@ -132,6 +132,27 @@ def test_betweenness_path_graph(spark):
     assert got[3] == pytest.approx(3.0)
 
 
+@pytest.mark.parametrize("algo", ["betweenness", "random_walks", "weighted_asp"])
+def test_push_store_results_survive_store_eviction(spark, monkeypatch, algo):
+    """The result no longer reads the cached push store: evicting that
+    store before the caller's action leaves the result intact."""
+    import os
+
+    from linkgraph.algorithms.msbfs import weighted_all_shortest_paths
+
+    run = {
+        "betweenness": betweenness_centrality,
+        "random_walks": random_walks,
+        "weighted_asp": weighted_all_shortest_paths,
+    }[algo]
+    monkeypatch.setattr(B, "_STORE_DIR_CACHE_MAX", 1)
+    out = run(_g(spark, PATH5, ids=range(5)))
+    used = list(B._STORE_DIR_CACHE.values())
+    B.open_store(edges_df(spark, [(0, 2, 1.0)]), "pull")  # evicts `used`
+    assert not any(os.path.isdir(p) for p in used)
+    assert len(out.collect()) >= 5  # count() could prune the store read
+
+
 def test_betweenness_sampled_runs(spark):
     g = _g(spark, PATH5, ids=range(5))
     got = betweenness_centrality(g, direction="BOTH", probability=0.6, seed=7)

@@ -2,7 +2,7 @@
 
 from collections import Counter
 
-from linkgraph.pipeline.bpe import bpe_segment, learn_bpe_merges, word_freq
+from linkgraph.pipeline.bpe import learn_bpe_merges, word_freq
 
 
 def _ref_bpe(word_counts: dict[str, int], n_merges: int, min_pair: int = 2):
@@ -57,35 +57,6 @@ def test_learn_bpe_merges_matches_reference(spark):
     exp_merges, _ = _ref_bpe(dict(wc), 8)
     got = learn_bpe_merges(docs, 8)
     assert got == exp_merges
-
-
-def test_bpe_segment_counts(spark):
-    docs = spark.createDataFrame(TEXTS, "doc_id long, text string")
-    wc = Counter(w for _, t in TEXTS for w in t.split(" "))
-    merges, _ = _ref_bpe(dict(wc), 5)
-
-    def seg_word(w):
-        syms = list(w)
-        for a, b, _n in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return len(syms)
-
-    exp = {
-        did: sum(seg_word(w) for w in t.split(" ") if w) for did, t in TEXTS
-    }
-    got = {
-        r.doc_id: r.n_bpe_units
-        for r in bpe_segment(docs, learn_bpe_merges(docs, 5)).collect()
-    }
-    assert got == exp
 
 
 def test_early_stop_below_min_pair_count(spark):

@@ -4,7 +4,7 @@ sampling, fan-out bound."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from linkgraph.pipeline.dimsum import dimsum_cosine, doc_token_triplets
+from linkgraph.pipeline.dimsum import dimsum_cosine
 
 
 def _trips(spark, rows):
@@ -60,14 +60,6 @@ def test_sampling_bounds_fanout(spark):
     est = dimsum_cosine(t, gamma=1.0, k=10_000)
     n_pairs = est.count()
     assert n_pairs < 40 * 39 / 2
-
-
-def test_doc_token_triplets_shape(spark):
-    docs = spark.createDataFrame(
-        [(0, "a b a"), (1, "b c")], "doc_id long, text string"
-    )
-    got = {(r.row, r.col) for r in doc_token_triplets(docs).collect()}
-    assert got == {("a", 0), ("b", 0), ("b", 1), ("c", 1)}
 
 
 def test_token_incidence_triplets_shape(spark):

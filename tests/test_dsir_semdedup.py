@@ -13,11 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from linkgraph.pipeline.dedup import semantic_dedup
-from linkgraph.pipeline.dsir import (
-    dsir_log_weights,
-    dsir_select,
-    hashed_ngram_counts,
-)
+from linkgraph.pipeline.dsir import dsir_log_weights, dsir_select
 
 B = 64
 ADDK = 0.5
@@ -73,21 +69,6 @@ def _docs(spark):
     return spark.createDataFrame(
         FIXTURE, "doc_id long, source string, text string"
     )
-
-
-def test_hashed_ngram_counts_match_python(spark):
-    got = {
-        (r["key"], r["bucket"]): r["cnt"]
-        for r in hashed_ngram_counts(
-            _docs(spark), n_buckets=B, key_col="doc_id"
-        ).collect()
-    }
-    want = {}
-    for did, _, text in FIXTURE:
-        for g in _py_grams(text):
-            k = (did, _py_bucket(g))
-            want[k] = want.get(k, 0) + 1
-    assert got == want
 
 
 def test_dsir_log_weights_match_python_reference(spark):
@@ -224,19 +205,14 @@ def test_semdedup_identical_vectors_always_cluster(spark):
 
 
 def test_quality_classifier_matches_python_reference(spark):
-    from linkgraph.pipeline.classify import (
-        classifier_scores,
-        py_reference_classifier,
-        train_quality_classifier,
-    )
+    from linkgraph.pipeline.classify import quality_classifier_scores
+    from oracles import py_reference_classifier
 
-    docs = _docs(spark)
-    w, bias = train_quality_classifier(
-        docs, "tgt", n_buckets=B, iters=3, lr=10.0
-    )
     got = {
         r["doc_id"]: r["score"]
-        for r in classifier_scores(docs, w, bias, n_buckets=B).collect()
+        for r in quality_classifier_scores(
+            _docs(spark), "tgt", n_buckets=B, iters=3, lr=10.0
+        ).collect()
     }
     want = py_reference_classifier(FIXTURE, "tgt", B, 3, 10.0)
     assert set(got) == set(want)
@@ -260,46 +236,19 @@ def test_quality_classifier_separates_target_like(spark):
 
 
 def test_quality_classifier_no_leaked_cache(spark):
-    from linkgraph.pipeline.classify import train_quality_classifier
+    """The materialized feature table is a localCheckpoint: no plan-keyed
+    CacheManager entry outlives the call for a later call to pick up."""
+    from linkgraph.pipeline.classify import quality_classifier_scores
 
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
-    train_quality_classifier(_docs(spark), "tgt", n_buckets=B, iters=2)
-    assert jsc.getPersistentRDDs().size() <= before
-
-
-def test_classifier_rowlocal_matches_join_form(spark):
-    from linkgraph.pipeline.classify import (
-        classifier_scores,
-        classifier_scores_rowlocal,
-        train_quality_classifier,
-    )
-
-    docs = _docs(spark)
-    w, bias = train_quality_classifier(docs, "tgt", n_buckets=B, iters=3)
-    a = {
-        r["doc_id"]: r["score"]
-        for r in classifier_scores(docs, w, bias, n_buckets=B).collect()
-    }
-    b = {
-        r["doc_id"]: r["score"]
-        for r in classifier_scores_rowlocal(docs, w, bias, n_buckets=B).collect()
-    }
-    assert set(a) == set(b)
-    for did in a:
-        assert abs(a[did] - b[did]) < 2e-5, (did, a[did], b[did])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    quality_classifier_scores(_docs(spark), "tgt", n_buckets=B, iters=2).collect()
+    assert cache.isEmpty()
 
 
-def test_classifier_scorer_forms_agree_on_null_text(spark):
-    # r5 ADVICE: the join form used to DROP NULL-text docs (explode of a
-    # NULL gram array) while the row-local form emitted them with a NULL
-    # score. Both now coalesce text to '' and must emit the same rows
-    # with the same non-NULL score.
-    from linkgraph.pipeline.classify import (
-        classifier_scores,
-        classifier_scores_rowlocal,
-        train_quality_classifier,
-    )
+def test_quality_classifier_scores_null_text(spark):
+    """NULL text scores like empty text: both carry the one ''-gram."""
+    from linkgraph.pipeline.classify import quality_classifier_scores
 
     docs = _docs(spark).unionByName(
         spark.createDataFrame(
@@ -307,57 +256,9 @@ def test_classifier_scorer_forms_agree_on_null_text(spark):
             "doc_id long, source string, text string",
         )
     )
-    w, bias = train_quality_classifier(_docs(spark), "tgt", n_buckets=B, iters=3)
-    a = {
-        r["doc_id"]: r["score"]
-        for r in classifier_scores(docs, w, bias, n_buckets=B).collect()
-    }
-    b = {
-        r["doc_id"]: r["score"]
-        for r in classifier_scores_rowlocal(docs, w, bias, n_buckets=B).collect()
-    }
-    assert set(a) == set(b) and {901, 902} <= set(a)
-    for did in a:
-        assert a[did] is not None and b[did] is not None
-        assert abs(a[did] - b[did]) < 2e-5, (did, a[did], b[did])
-    # NULL text ≡ empty text: same single ''-gram feature
-    assert a[901] == a[902]
-
-
-def test_classifier_rowlocal_zero_shuffle_plan(spark):
-    from linkgraph.pipeline.classify import classifier_scores_rowlocal
-
-    w = np.linspace(-1.0, 1.0, B)
-    p = (
-        classifier_scores_rowlocal(_docs(spark), w, 0.1, n_buckets=B)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in p and "Join" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
-def test_stream_classifier_scores_matches_batch(spark, tmp_path):
-    from linkgraph.pipeline.classify import (
-        classifier_scores_rowlocal,
-        train_quality_classifier,
-    )
-    from linkgraph.streaming import run_available_now, stream_classifier_scores
-
-    docs = _docs(spark)
-    w, bias = train_quality_classifier(docs, "tgt", n_buckets=B, iters=3)
-    src = str(tmp_path / "qc_stream")
-    docs.select("doc_id", "text").write.parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     got = {
         r["doc_id"]: r["score"]
-        for r in run_available_now(
-            stream_classifier_scores(stream, w, bias, n_buckets=B), "qc_stream_q"
-        )
+        for r in quality_classifier_scores(docs, "tgt", n_buckets=B, iters=3).collect()
     }
-    want = {
-        r["doc_id"]: r["score"]
-        for r in classifier_scores_rowlocal(docs, w, bias, n_buckets=B).collect()
-    }
-    assert got == want
+    assert len(got) == len(FIXTURE) + 2
+    assert got[901] is not None and got[901] == got[902]

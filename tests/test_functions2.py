@@ -359,7 +359,7 @@ def test_write_table_roundtrip(spark, tmp_path):
 
 def test_stream_quality_matches_batch(spark, tmp_path):
     from linkgraph.pipeline.text import quality_scores
-    from linkgraph.streaming import read_document_stream, run_available_now, stream_quality_scores
+    from linkgraph.streaming import run_available_now
 
     docs = spark.createDataFrame(
         [(0, "the cat sat", "en", "s", 11), (1, "a b", "en", "s", 3)],
@@ -367,8 +367,9 @@ def test_stream_quality_matches_batch(spark, tmp_path):
     )
     path = str(tmp_path / "docs_q")
     docs.write.parquet(path)
+    stream = spark.readStream.schema(docs.schema).parquet(path)
     got = {r["doc_id"]: r["n_tokens"]
-           for r in run_available_now(stream_quality_scores(read_document_stream(spark, path)), "q_stream")}
+           for r in run_available_now(quality_scores(stream), "q_stream")}
     want = {r["doc_id"]: r["n_tokens"] for r in quality_scores(docs).collect()}
     assert got == want
 

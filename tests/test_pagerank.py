@@ -226,6 +226,32 @@ def test_pull_rejects_edge_endpoint_outside_node_ids(spark):
         PageRank(strategy="pull", max_iterations=3).run(_phantom_graph(spark))
 
 
+@pytest.mark.parametrize(
+    "algo", ["article_rank", "eigenvector", "katz", "hits", "ppr", "spectral"]
+)
+def test_pull_family_on_edge_endpoint_outside_node_ids(spark, algo):
+    """Every pull-store reader checks the store's endpoint range: past it
+    the power-iteration family runs its join loop, spectral refuses."""
+    from linkgraph.algorithms.hits import hits
+    from linkgraph.algorithms.pagerank import katz_centrality
+    from linkgraph.algorithms.ppr import ppr_batch
+    from linkgraph.algorithms.spectral import spectral_embedding
+
+    g = _phantom_graph(spark)
+    if algo == "spectral":
+        with pytest.raises(ValueError, match=r"0\.\.10, outside the node ids 0\.\.3"):
+            spectral_embedding(g, k=2)
+        return
+    out = {
+        "article_rank": lambda: article_rank(g, max_iterations=3),
+        "eigenvector": lambda: eigenvector_centrality(g, max_iterations=3),
+        "katz": lambda: katz_centrality(g, max_iterations=3),
+        "hits": lambda: hits(g, max_iterations=3),
+        "ppr": lambda: ppr_batch(g, [0], iterations=3),
+    }[algo]()
+    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3]
+
+
 def test_auto_runs_csr_on_edge_endpoint_outside_node_ids(spark):
     g = _phantom_graph(spark)
     auto = PageRank(max_iterations=3)

@@ -1,7 +1,6 @@
-"""Plan-shape regressions for the round-5 DSIR / quality-classifier
-operators: the bucket→ratio (and bucket→weight) tables broadcast onto
-the feature pass, selection is TakeOrdered (no window, no global sort),
-and nothing in the hot path drops to Python."""
+"""Plan-shape regressions for the DSIR operators: the bucket→ratio table
+broadcasts onto the feature pass, selection is TakeOrdered (no window, no
+global sort), and nothing in the hot path drops to Python."""
 
 from pyspark.sql import functions as F
 
@@ -16,14 +15,6 @@ def _docs(spark, n=30):
           "en", f"s{i % 3}", 20) for i in range(n)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-
-
-def test_hashed_ngram_counts_row_local_no_python(spark):
-    from linkgraph.pipeline.dsir import hashed_ngram_counts
-
-    p = _plan(hashed_ngram_counts(_docs(spark), n_buckets=64))
-    assert "Join" not in p and "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
 def test_dsir_weights_broadcast_ratio_no_python(spark):
@@ -46,14 +37,3 @@ def test_dsir_select_takeordered_no_window(spark):
     assert "Window" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
-
-def test_classifier_scores_broadcast_weights_no_python(spark):
-    import numpy as np
-
-    from linkgraph.pipeline.classify import classifier_scores
-
-    w = np.linspace(-1.0, 1.0, 64)
-    p = _plan(classifier_scores(_docs(spark), w, 0.1, n_buckets=64))
-    assert "BroadcastHashJoin" in p
-    assert "Window" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p

@@ -53,25 +53,6 @@ def test_sq8_topk_recall_vs_exact_cosine(spark):
     assert all(-1.0001 <= r["qcos"] <= 1.0001 for r in rows)
 
 
-def test_sq8_topk_ivf_full_probe_equals_bruteforce(spark):
-    """nprobe == num_cells ⇒ the cell join is a full scan — IVF∘SQ8 must
-    reproduce sq8_topk exactly (same identity pq_topk_ivf is held to)."""
-    import numpy as np
-    from linkgraph.pipeline.ann import (
-        sq8_topk, sq8_topk_ivf, train_ivf_centroids,
-    )
-
-    rng = np.random.RandomState(11)
-    centers = rng.rand(3, 8) * 5
-    vecs = [centers[i % 3] + rng.rand(8) * 0.2 for i in range(40)]
-    emb = _emb(spark, vecs)
-    q = emb.filter("vec_id < 6")
-    cents = train_ivf_centroids(emb, num_cells=3, seed=4)
-    full = sq8_topk_ivf(q, emb, cents, k=3, nprobe=3)
-    brute = sq8_topk(q, emb, k=3)
-    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, brute.collect()))
-
-
 def test_perplexity_buckets_approx_mode_parity(spark):
     """approx_percentile cutpoints must land every doc in the same bucket
     as the exact mode at this scale (sketch accuracy 10k ≫ doc count)."""
