@@ -37,17 +37,27 @@ Three pull kernels run on a block's target slice, each one numpy pass:
   int64 labels (WCC, which hooks and pointer-jumps on the driver).
 
 Execution sides: every hybrid algorithm first runs its driver gate
-(``collect_if_small``, under ``DRIVER_EDGE_THRESHOLD``). Past it, a pull
-side is taken when the node ids are exactly 0..n-1 within the
-memory-aware cap (``_pull_n``) and every edge endpoint is a node id
-(``endpoints_outside``: the build records the endpoint range in the
-manifest, so the check costs no job); otherwise the algorithm's
-DataFrame/push side runs (PageRank csr, Kiveris WCC, the DataFrame LPA
-loop), which is also the path for graphs above the cap.
+(``collect_if_small``, under ``DRIVER_EDGE_THRESHOLD``). Below it, PageRank
+(pull), WCC, LPA and triangle counting read the raw ``(src, dst[,
+weight])`` projection and the node ids once each, prepare the edges in
+numpy (symmetrize, canonicalize, dedup, drop loops, max weight per pair)
+and return a local relation that already holds every node row, so the
+caller's action is one job with no shuffle. Past the gate, a pull side is
+taken when the node ids are exactly 0..n-1 within the memory-aware cap
+(``_pull_n``) and every edge endpoint is a node id (``endpoints_outside``:
+the build records the endpoint range in the manifest, so the check costs
+no job); otherwise the algorithm's DataFrame/push side runs (PageRank
+csr, Kiveris WCC, the DataFrame LPA loop), which is also the path for
+graphs above the cap.
 
-Storage: the build tasks write raw ``.npy`` arrays under ``path/part=K/``
-(one file per array — no Arrow 2 GB cell limits) and the compute tasks
-``np.load(..., mmap_mode='r')`` them. mmap makes the adjacency
+Storage: a store is a directory of raw ``.npy`` arrays under
+``path/part=K/`` (one file per array — no Arrow 2 GB cell limits) plus a
+manifest; the compute tasks ``np.load(..., mmap_mode='r')`` them. A store
+over at most ``DRIVER_EDGE_THRESHOLD`` edges is built on the driver:
+``open_store``'s probe collects the raw ``(src, dst, weight)`` rows once
+and the same per-block builders run over the pandas frame, with no
+shuffle; a larger store is built by Spark tasks, one per block. Both
+builds write identical arrays and manifests. mmap makes the adjacency
 **OS-page-cache resident machine-wide**: any Python worker on the host hits
 RAM after the first touch, regardless of task placement — per-process RAM
 caches thrash when Spark schedules a partition on a different worker each
@@ -214,7 +224,27 @@ def index_edges(
     return es, ed, ok
 
 
-def auto_num_blocks(edges, parallelism: int) -> int:
+def canonical_pairs(
+    src: np.ndarray, dst: np.ndarray, w: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """(a, b, w_max): the distinct non-loop pairs of the edges
+    ``src`` → ``dst`` as a < b, sorted by (a, b), and each pair's max
+    weight over its edges in either direction (None without ``w``). The
+    numpy form of ``Graph.canonical_edges()`` and of the pairs
+    ``wcc.loop_free_undirected`` symmetrizes."""
+    a, b = np.minimum(src, dst), np.maximum(src, dst)
+    keep = a < b
+    a, b = a[keep], b[keep]
+    o = np.lexsort((b, a))
+    a, b = a[o], b[o]
+    w = None if w is None else w[keep][o]
+    if len(a) == 0:
+        return a, b, w
+    head = np.flatnonzero(np.concatenate(([True], (np.diff(a) != 0) | (np.diff(b) != 0))))
+    return a[head], b[head], None if w is None else np.maximum.reduceat(w, head)
+
+
+def _num_blocks(n_edges: int, parallelism: int) -> int:
     """Size the block count by edge VOLUME, capped by parallelism.
 
     Core-count-sized blocks are wrong at both ends: a 50k-edge graph split
@@ -222,8 +252,13 @@ def auto_num_blocks(edges, parallelism: int) -> int:
     the cap keeps one block per core. Mirrors Spark's own
     `files.maxPartitionBytes` sizing logic, applied to CSR blocks.
     """
-    n_e = edges.count()
-    return max(1, min(int(parallelism), -(-n_e // EDGES_PER_BLOCK)))
+    return max(1, min(int(parallelism), -(-int(n_edges) // EDGES_PER_BLOCK)))
+
+
+def auto_num_blocks(edges, parallelism: int) -> int:
+    """``_num_blocks`` of the row count of the ``edges`` DataFrame (one
+    count job)."""
+    return _num_blocks(edges.count(), parallelism)
 
 
 def _save_atomic(path: str, name: str, arr: np.ndarray) -> None:
@@ -269,21 +304,35 @@ def _edge_buffer(path: str, part: int, n_edges: int) -> np.ndarray:
     return buf
 
 
+def _build_on_driver(frame: pd.DataFrame, build) -> pd.DataFrame:
+    """Run a per-block ``build`` over a collected edge frame, one call per
+    ``part`` as the Spark build's grouped ``applyInPandas`` makes it, and
+    return the per-block manifest rows."""
+    rows = [build(grp) for _, grp in frame.groupby("part", sort=True)]
+    return pd.concat(rows, ignore_index=True) if rows else pd.DataFrame(
+        {"part": [], "n_edge": []}
+    )
+
+
+def _collect_frame(df: DataFrame) -> pd.DataFrame:
+    """A few-row DataFrame (one row per block) as pandas, by a plain
+    collect: no Arrow conversion for a handful of rows."""
+    return pd.DataFrame(df.collect(), columns=df.columns)
+
+
 def _finalize_store(
-    df_manifest: DataFrame, path: str, num_blocks: int, meta: dict
+    parts: pd.DataFrame, path: str, num_blocks: int, meta: dict
 ) -> None:
-    """Write the manifest — block count, edges per part, the endpoint
-    range when the build reports one (``lo``/``hi`` columns) and every
-    build parameter that is not None — then _SUCCESS."""
-    rows = df_manifest.collect()
+    """Write the manifest — block count, edges per part (one ``parts`` row
+    per built block), the endpoint range when the build reports one
+    (``lo``/``hi`` columns) and every build parameter that is not None —
+    then _SUCCESS."""
     manifest = {
         "num_blocks": num_blocks,
-        "parts": {str(r["part"]): int(r["n_edge"]) for r in rows},
+        "parts": {str(int(p)): int(c) for p, c in zip(parts["part"], parts["n_edge"])},
     }
-    if "lo" in df_manifest.columns and rows:
-        manifest["endpoints"] = [
-            int(min(r["lo"] for r in rows)), int(max(r["hi"] for r in rows))
-        ]
+    if "lo" in parts.columns and len(parts):
+        manifest["endpoints"] = [int(parts["lo"].min()), int(parts["hi"].max())]
     manifest.update({k: v for k, v in meta.items() if v is not None})
     with open(os.path.join(path, "manifest.json"), "w") as f:
         json.dump(manifest, f)
@@ -455,9 +504,16 @@ def open_store(
                     f"run needs {name}={want!r} — rebuild or point elsewhere"
                 )
         return path, int(m["num_blocks"])
-    b = num_blocks or auto_num_blocks(
-        edges, edges.sparkSession.sparkContext.defaultParallelism
-    )
+    # a driver-sized store is built from one LIMIT-bounded collect of the
+    # raw rows, with no shuffle; a larger one is counted and built by Spark
+    parallelism = edges.sparkSession.sparkContext.defaultParallelism
+    edges = edges.select("src", "dst", "weight")
+    rows = collect_if_small(edges)
+    if rows is not None:
+        b = num_blocks or _num_blocks(len(rows), parallelism)
+        edges = rows
+    else:
+        b = num_blocks or auto_num_blocks(edges, parallelism)
     write = write_pull_blocks if layout == "pull" else write_edge_blocks
     write(edges, b, path, **meta)
     return path, b
@@ -518,7 +574,8 @@ def _build_push_writer(path: str):
         src = pdf["src"].to_numpy(np.int64)
         dst = pdf["dst"].to_numpy(np.int64)
         w = pdf["weight"].to_numpy(np.float64)
-        order = np.argsort(src, kind="stable")
+        # a total order, so the block does not depend on the row order
+        order = np.lexsort((w, dst, src))
         src, dst, w = src[order], dst[order], w[order]
         src_ids, counts = np.unique(src, return_counts=True)
         indptr = np.concatenate(([0], np.cumsum(counts)))
@@ -539,20 +596,29 @@ def _build_push_writer(path: str):
 
 
 def write_edge_blocks(
-    edges: DataFrame,
+    edges: DataFrame | pd.DataFrame,
     num_blocks: int,
     path: str,
     weighted: bool | None = None,
     **meta,
 ) -> None:
-    """Materialize the CSR block store once under `path/part=K/*.npy`;
-    `weighted` and any further `meta` (betweenness records its `direction`
-    and node count `n`) go into the manifest."""
+    """Materialize the CSR block store once under `path/part=K/*.npy` from
+    edges(src, dst, weight) — a DataFrame (one Spark task per block) or a
+    collected pandas frame (built on the driver); `weighted` and any
+    further `meta` (betweenness records its `direction` and node count
+    `n`) go into the manifest."""
     os.makedirs(path, exist_ok=True)
-    e = edges.withColumn("part", F.pmod(F.col("src"), F.lit(num_blocks)).cast("int"))
-    manifest = e.groupBy("part").applyInPandas(
-        _build_push_writer(path), schema="part int, n_edge long"
-    )
+    build = _build_push_writer(path)
+    if isinstance(edges, pd.DataFrame):
+        e = edges[["src", "dst", "weight"]].assign(
+            part=np.mod(edges["src"].to_numpy(np.int64), num_blocks)
+        )
+        manifest = _build_on_driver(e, build)
+    else:
+        e = edges.withColumn("part", F.pmod(F.col("src"), F.lit(num_blocks)).cast("int"))
+        manifest = _collect_frame(
+            e.groupBy("part").applyInPandas(build, schema="part int, n_edge long")
+        )
     _finalize_store(
         manifest, path, num_blocks, {"layout": "push", "weighted": weighted, **meta}
     )
@@ -724,7 +790,9 @@ def _build_pull_writer(path: str, num_blocks: int):
         src = pdf["src"].to_numpy(np.int64)
         dst = pdf["dst"].to_numpy(np.int64)
         wn = pdf["w_norm"].to_numpy(np.float64)
-        order = np.argsort(dst, kind="stable")
+        # by target (the kernels need runs of equal slice_pos), then a total
+        # order, so the block does not depend on the row order
+        order = np.lexsort((wn, src, dst))
         src, dst, wn = src[order], dst[order], wn[order]
         slice_pos = (dst - part) // num_blocks
         d = _part_dir(path, part)
@@ -748,7 +816,7 @@ def _build_pull_writer(path: str, num_blocks: int):
 
 
 def write_pull_blocks(
-    edges: DataFrame,
+    edges: DataFrame | pd.DataFrame,
     num_blocks: int,
     path: str,
     weighted: bool | None = None,
@@ -757,35 +825,44 @@ def write_pull_blocks(
 ) -> None:
     """edges(src,dst,weight) → CSC store under `path/part=K/*.npy`.
 
-    w_norm = w/(W(src)+denom_add) via one DataFrame join (src degrees are
-    global here, unlike the src-partitioned push build where they're
-    partition-local). `denom_add` bakes ArticleRank's `outdeg + avgdeg`
-    denominator into the store; `normalize=False` stores raw weights
-    (eigenvector power iteration; the label kernels). The manifest records
-    `weighted`, `normalize`, `denom_add` and the endpoint range.
+    w_norm = w/(W(src)+denom_add): src degrees are global here, unlike the
+    src-partitioned push build where they're partition-local, so a
+    DataFrame input takes one join (then one Spark task per block) and a
+    collected pandas input one ``bincount`` (then the same per-block
+    builder on the driver). `denom_add` bakes ArticleRank's
+    `outdeg + avgdeg` denominator into the store; `normalize=False` stores
+    raw weights (eigenvector power iteration; the label kernels). The
+    manifest records `weighted`, `normalize`, `denom_add` and the
+    endpoint range.
     """
     os.makedirs(path, exist_ok=True)
-    if normalize:
-        wsum = edges.groupBy("src").agg(F.sum("weight").alias("_wsum"))
-        e = edges.join(wsum, "src").select(
-            "src",
-            "dst",
-            (F.col("weight") / (F.col("_wsum") + F.lit(float(denom_add)))).alias(
-                "w_norm"
-            ),
-            F.pmod(F.col("dst"), F.lit(num_blocks)).cast("int").alias("part"),
+    build = _build_pull_writer(path, num_blocks)
+    if isinstance(edges, pd.DataFrame):
+        src = edges["src"].to_numpy(np.int64)
+        dst = edges["dst"].to_numpy(np.int64)
+        wn = edges["weight"].to_numpy(np.float64)
+        if normalize:
+            _, inv = np.unique(src, return_inverse=True)
+            wn = wn / (np.bincount(inv, weights=wn)[inv] + float(denom_add))
+        frame = pd.DataFrame(
+            {"src": src, "dst": dst, "w_norm": wn, "part": np.mod(dst, num_blocks)}
         )
+        manifest = _build_on_driver(frame, build)
     else:
+        w_norm = F.col("weight")
+        if normalize:
+            wsum = edges.groupBy("src").agg(F.sum("weight").alias("_wsum"))
+            edges = edges.join(wsum, "src")
+            w_norm = F.col("weight") / (F.col("_wsum") + F.lit(float(denom_add)))
         e = edges.select(
             "src",
             "dst",
-            F.col("weight").alias("w_norm"),
+            w_norm.alias("w_norm"),
             F.pmod(F.col("dst"), F.lit(num_blocks)).cast("int").alias("part"),
         )
-    manifest = e.groupBy("part").applyInPandas(
-        _build_pull_writer(path, num_blocks),
-        schema="part int, n_edge long, lo long, hi long",
-    )
+        manifest = _collect_frame(e.groupBy("part").applyInPandas(
+            build, schema="part int, n_edge long, lo long, hi long"
+        ))
     _finalize_store(manifest, path, num_blocks, {
         "layout": "pull", "weighted": weighted,
         "normalize": bool(normalize), "denom_add": float(denom_add),

@@ -14,9 +14,18 @@ fixtures are chosen where the two schedules agree (FIXTURES.md G_LPA).
 
 One vertex program, three sides, picked per run in this order:
 
-* **driver** — the prepared edge table and the labels each fit
-  ``blocks.DRIVER_EDGE_THRESHOLD`` rows (``blocks.collect_if_small``) and
-  no checkpoint is given: numpy rounds of ``blocks.label_vote``.
+* **driver** — no checkpoint is given and the raw ``(src, dst, weight)``
+  projection and the ``(id, label)`` table each fit
+  ``blocks.DRIVER_EDGE_THRESHOLD`` rows (``blocks.collect_if_small``; the
+  raw rows bound the prepared edges, so on duplicate-heavy input this
+  gate is more conservative than one on the prepared table). The edges
+  are prepared in numpy — loops dropped and, with direction BOTH, both
+  directions of every canonical pair with its max weight, the rows of
+  ``wcc.loop_free_undirected`` — and the rounds are numpy
+  ``blocks.label_vote`` calls. Edges with an endpoint that is no node id
+  are dropped, as the distributed joins drop them. The result is a local
+  relation of every node row. With the edges under the budget but the
+  node table over it, the pull or DataFrame side runs.
 * **pull** — node ids are exactly 0..n-1 within the pull engine's
   memory-aware cap and every edge endpoint is a node id (the store
   manifest's endpoint range): the driver holds the int64 label vector
@@ -28,6 +37,9 @@ One vertex program, three sides, picked per run in this order:
   store from, so the two share one store through ``blocks.open_store``.
 * **DataFrame** — anything else: a vote join and a map-side-combined
   arg-max per round; the path for graphs above the pull cap.
+
+The pull and DataFrame sides read the prepared edge table, persisted for
+the run; the driver side never builds it.
 
 Every side applies the (weight desc, label asc) vote to the same edges,
 so labels and iteration counts agree. A checkpoint is the (id, label)
@@ -57,39 +69,48 @@ def _lpa_local(
     weighted: bool,
     max_iterations: int,
     run_to_convergence: bool,
+    undirected: bool = False,
 ):
     """Driver-local synchronous LPA below the driver crossover (r6) —
-    the union-find / pull-engine hybrid crossover. Consumes the SAME
-    prepared edge view (direction/dedup already applied) and initial
-    labels as the distributed loops; each round is one
-    ``blocks.label_vote`` — the pull side's kernel and the same winner as
-    the DataFrame arg-max. Vote sums here are sums of small
-    integer-valued weights (or counts), which float64 adds EXACTLY in any
-    order, so winners match the distributed plans bit-for-bit on the
-    contract graphs; arbitrary real weights could differ in ties at
+    the union-find / pull-engine hybrid crossover. Reads the (src, dst,
+    weight) rows of ``edges`` and the initial (id, label) table once each
+    and prepares the edges in numpy: loops are dropped and, with
+    ``undirected``, the rest become both directions of every canonical
+    pair with its max weight (``blocks.canonical_pairs``) — the rows of
+    ``wcc.loop_free_undirected``, the pull and DataFrame sides' edge view.
+    Each round is one ``blocks.label_vote`` — the pull side's kernel and
+    the same winner as the DataFrame arg-max. Vote sums here are sums of
+    small integer-valued weights (or counts), which float64 adds EXACTLY
+    in any order, so winners match the distributed plans bit-for-bit on
+    the contract graphs; arbitrary real weights could differ in ties at
     ~1e-16 (same caveat as any re-ordered float sum).
     Returns None when the edge or the label table is over the driver
     crossover (the pull and DataFrame loops are the at-scale paths and
     the only paths under checkpoint/resume)."""
-    ep = blocks.collect_if_small(edges.select("src", "dst", "weight"))
+    ep = blocks.collect_if_small(
+        edges.select("src", "dst", "weight").dropna(subset=["src", "dst"])
+    )
     lab_pd = None if ep is None else blocks.collect_if_small(labels)
     if lab_pd is None:
         return None
+    src = ep["src"].to_numpy(np.int64)
+    dst = ep["dst"].to_numpy(np.int64)
+    w = ep["weight"].to_numpy(np.float64)
+    if undirected:
+        a, b, w = blocks.canonical_pairs(src, dst, w)
+        src, dst, w = np.concatenate([a, b]), np.concatenate([b, a]), np.concatenate([w, w])
+    else:
+        keep = src != dst
+        src, dst, w = src[keep], dst[keep], w[keep]
     ids = lab_pd["id"].to_numpy(np.int64)
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
     lab = lab_pd["label"].to_numpy(np.int64)[order]
     # drop edges with endpoints outside the node set — the distributed
     # loop's joins do the same
-    es, ed, ok = blocks.index_edges(
-        ids, ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64)
-    )
+    es, ed, ok = blocks.index_edges(ids, src, dst)
     es, ed = es[ok], ed[ok]
-    w = (
-        ep["weight"].to_numpy(np.float64)[ok]
-        if weighted
-        else np.ones(int(ok.sum()), dtype=np.float64)
-    )
+    w = w[ok] if weighted else np.ones(int(ok.sum()), dtype=np.float64)
     iterations, converged = 0, False
     for step in range(max_iterations):
         targets, winners = blocks.label_vote(ed, lab[es], w)
@@ -186,6 +207,21 @@ def label_propagation(
     With `checkpoint`, the label DataFrame is durably written every
     `checkpoint_every` iterations and a fresh call resumes mid-run from
     the latest snapshot (same contract as PageRank/WCC resume)."""
+    nodes = graph.nodes
+    seeded = seed_col is not None and seed_col in nodes.columns
+    if seeded:
+        labels = nodes.select(
+            "id", F.coalesce(F.col(seed_col).cast("long"), F.col("id")).alias("label")
+        )
+    else:
+        labels = nodes.select("id", F.col("id").alias("label"))
+    if checkpoint is None:
+        out = _lpa_local(
+            graph.edges, labels, weighted, max_iterations, run_to_convergence,
+            undirected=direction == "BOTH",
+        )
+        if out is not None:
+            return out
     if direction == "BOTH":
         edges = loop_free_undirected(graph.edges)
     else:
@@ -193,7 +229,7 @@ def label_propagation(
     edges = edges.persist()
     try:
         return _propagate(
-            graph.nodes, edges, seed_col, weighted, max_iterations,
+            nodes, edges, labels, seeded, weighted, max_iterations,
             run_to_convergence, checkpoint, checkpoint_every,
         )
     finally:
@@ -203,32 +239,20 @@ def label_propagation(
 def _propagate(
     nodes: DataFrame,
     edges: DataFrame,
-    seed_col: str | None,
+    labels: DataFrame,
+    seeded: bool,
     weighted: bool,
     max_iterations: int,
     run_to_convergence: bool,
     checkpoint: CheckpointManager | None,
     checkpoint_every: int,
 ) -> DataFrame:
-    """label_propagation over the prepared, cached ``edges``: the driver
-    side, else the pull side, else the DataFrame loop."""
-    seeded = seed_col is not None and seed_col in nodes.columns
-    if seeded:
-        labels = nodes.select(
-            "id", F.coalesce(F.col(seed_col).cast("long"), F.col("id")).alias("label")
-        )
-    else:
-        labels = nodes.select("id", F.col("id").alias("label"))
-    out = None
-    if checkpoint is None:
-        out = _lpa_local(
-            edges, labels, weighted, max_iterations, run_to_convergence
-        )
-    if out is None:
-        out = _lpa_pull(
-            nodes, edges, labels if seeded else None, weighted, max_iterations,
-            run_to_convergence, checkpoint, checkpoint_every,
-        )
+    """label_propagation over the prepared, cached ``edges`` from the
+    initial ``labels``: the pull side, else the DataFrame loop."""
+    out = _lpa_pull(
+        nodes, edges, labels if seeded else None, weighted, max_iterations,
+        run_to_convergence, checkpoint, checkpoint_every,
+    )
     if out is not None:
         return out
     start_step = 0

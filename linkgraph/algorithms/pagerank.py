@@ -17,10 +17,13 @@ data size:
 
 * ``strategy='auto'`` (default): resolves per run to ``pull`` when node
   ids are contiguous and the rank vector fits a memory-aware driver
-  budget (``blocks._resolve_strategy``) and every edge endpoint is a node
-  id, else ``csr``.
+  budget (``blocks._pull_n``) and every edge endpoint is a node id, else
+  ``csr``.
 * ``strategy='pull'``: dst-sliced CSC blocks and one broadcast rank
-  vector, zero shuffle per superstep (blocks.pull_engine).
+  vector, zero shuffle per superstep (blocks.pull_engine). A
+  driver-sized graph costs no shuffle at all: the store is built on the
+  driver from one collect of the raw edges (``blocks.open_store``), the
+  teleport vector is built in numpy and every superstep is driver-local.
 * ``strategy='csr'``: per-partition CSR blocks inside Arrow UDFs
   (blocks.py), one exchange per superstep. The scatter sums per (source
   block, dst) and the fused gather sums per dst: a two-stage salted
@@ -99,18 +102,30 @@ class PageRank:
             "id", F.when(F.col("id").isin(srcs), 1.0).otherwise(0.0).alias("t")
         )
 
+    def _teleport_vector(self, n: int) -> np.ndarray:
+        """The teleport t over the node ids 0..n-1; a source id that is no
+        node id is ignored, as the isin over the node table ignores it."""
+        if self.source_nodes is None:
+            return np.ones(n)
+        seeds = np.array([int(s) for s in self.source_nodes], dtype=np.int64)
+        t = np.zeros(n)
+        t[seeds[(seeds >= 0) & (seeds < n)]] = 1.0
+        return t
+
     # ------------------------------------------------------------- pull loop
-    def _run_pull(self, graph: Graph) -> DataFrame:
+    def _run_pull(self, graph: Graph, n: int | None) -> DataFrame:
         """Broadcast-pull execution: dst-sliced CSC blocks, zero shuffle.
 
         The rank vector lives on the driver (the BSP barrier); each superstep
         broadcasts q = p/W and every block computes its target slice with one
-        gather + one bincount. Requires contiguous ids 0..n-1, every edge
-        endpoint among them, and a vector that fits driver/executor memory
-        — the fast path below ~10⁸ nodes; 'csr' (push + shuffle gather) is
-        the path beyond that. Returns None, for run() to take csr, when
-        ``auto`` finds an endpoint that is not a node id (the store's
-        manifest records the range, so the check costs no job).
+        gather + one bincount. Requires contiguous ids 0..n-1 (``n`` from
+        ``blocks._pull_n``, None when the ids are not 0..n-1 or exceed the
+        memory-aware cap), every edge endpoint among them, and a vector
+        that fits driver/executor memory — the fast path below ~10⁸ nodes;
+        'csr' (push + shuffle gather) is the path beyond that. Returns
+        None, for run() to take csr, when ``auto`` finds an endpoint that
+        is not a node id (the store's manifest records the range, so the
+        check costs no job).
         """
         spark = graph.edges.sparkSession
         sc = spark.sparkContext
@@ -120,19 +135,12 @@ class PageRank:
             if self.weighted
             else graph.edges.withColumn("weight", F.lit(1.0))
         )
-
-        node_pd = self._teleport(graph.nodes).toPandas()
-        n = len(node_pd)
-        ids = node_pd["id"].to_numpy(np.int64)
-        if n == 0:
-            return graph.nodes.select("id", F.lit(0.0).alias("rank"))
-        if ids.min() != 0 or ids.max() != n - 1:
+        if n is None:
             raise ValueError(
-                "pull strategy requires contiguous node ids 0..n-1 "
-                "(densify first, or use strategy='csr')"
+                "pull strategy requires contiguous node ids 0..n-1 within the "
+                "driver-memory cap (densify first, or use strategy='csr')"
             )
-        t = np.zeros(n)
-        t[ids] = node_pd["t"].to_numpy(np.float64)
+        t = self._teleport_vector(n)
 
         block_path, b = blocks.open_store(
             edges, "pull", self.block_store, self.num_blocks, weighted=self.weighted
@@ -269,10 +277,11 @@ class PageRank:
         # resolved per RUN into a local + resolved_strategy: a reused auto
         # instance must re-resolve for each new graph
         strategy = self.strategy
+        n = None if strategy == "csr" else blocks._pull_n(graph.nodes)
         if strategy == "auto":
-            strategy = blocks._resolve_strategy(graph.nodes)
+            strategy = "pull" if n is not None else "csr"
         t0 = time.time()
-        out = self._run_pull(graph) if strategy == "pull" else None
+        out = self._run_pull(graph, n) if strategy == "pull" else None
         if out is None:  # csr asked for, or auto found a non-node endpoint
             strategy = "csr"
             out = self._run_csr(graph)

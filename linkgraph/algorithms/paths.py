@@ -420,9 +420,12 @@ def minimum_spanning_forest(graph: Graph, maximum: bool = False) -> DataFrame:
         elif pick_pd.empty:
             break
         else:
-            mapping = union_find_mapping(pick_pd, spark).select(
-                F.col("id").alias("comp_old"), F.col("component").alias("comp_new")
-            )
+            mapping = F.broadcast(spark.createDataFrame(
+                union_find_mapping(pick_pd).rename(
+                    columns={"id": "comp_old", "component": "comp_new"}
+                ),
+                "comp_old long, comp_new long",
+            ))
         # two components may pick the same edge — dedup within the round;
         # across rounds an edge cannot recur (its endpoints share a comp)
         new_edges = picks.select("src", "dst", "weight").distinct()

@@ -122,7 +122,10 @@ def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
     S = len(seeds)
     ind = np.zeros((n, S))
     for j, s in enumerate(seeds):
-        ind[int(s), j] = 1.0
+        # a seed that is no node id keeps an all-zero column, as in the
+        # join loop, whose indicator matches no node row
+        if 0 <= int(s) < n:
+            ind[int(s), j] = 1.0
     P = ind.copy()
     with blocks.pinned_store(path):
         pull_step = blocks.pull_engine(sc, path, b, n)

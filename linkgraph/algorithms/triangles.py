@@ -6,11 +6,18 @@ IntersectingTriangleCount}.java`. There: forward-ordered adjacency
 intersection per edge in shared memory. Here, two physical plans for one
 algorithm, picked by data size (the union-find / pull-engine crossover):
 
-* at or below ``blocks.DRIVER_EDGE_THRESHOLD`` canonical edges, the edge
-  list is collected (one LIMIT-bounded job) and ``triangle_kernel`` —
-  vectorised numpy over the degree-oriented CSR, wedges closed by a
-  ``searchsorted`` lookup on sorted int64 edge keys — enumerates every
-  triangle with the ids of its corners and the indices of its edges;
+* at or below ``blocks.DRIVER_EDGE_THRESHOLD`` raw edge rows, the
+  ``(src, dst)`` projection is collected (one LIMIT-bounded job with no
+  shuffle; the raw rows bound the canonical edges, so on duplicate-heavy
+  input this gate is more conservative than one on the canonical table),
+  canonicalized and deduped in numpy (``blocks.canonical_pairs``), and
+  ``triangle_kernel`` — vectorised numpy over the degree-oriented CSR,
+  wedges closed by a ``searchsorted`` lookup on sorted int64 edge keys —
+  enumerates every triangle with the ids of its corners and the indices
+  of its edges. ``triangle_count`` then collects the node ids too and
+  returns a local relation of every node row, zero rows included, so the
+  caller's action is one job; with the node table over the budget it
+  joins the node table instead;
 * above it, the classic two-shuffle self-join on canonical (src < dst)
   edges —
 
@@ -98,11 +105,12 @@ def triangle_kernel(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.nd
 def _triangles_local(graph: Graph) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
     """(src, dst, triangle corner ids) of the canonical edges, by the numpy
     kernel; None above the driver crossover."""
-    pdf = blocks.collect_if_small(graph.canonical_edges().select("src", "dst"))
+    pdf = blocks.collect_if_small(graph.edges.select("src", "dst").dropna())
     if pdf is None:
         return None
-    src = pdf["src"].to_numpy(np.int64)
-    dst = pdf["dst"].to_numpy(np.int64)
+    src, dst, _ = blocks.canonical_pairs(
+        pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+    )
     return src, dst, triangle_kernel(src, dst)[0]
 
 
@@ -181,6 +189,9 @@ def triangle_count(graph: Graph) -> DataFrame:
         src, dst, tri = local
         ends, d = np.unique(np.concatenate([src, dst]), return_counts=True)
         t = np.bincount(np.searchsorted(ends, tri.ravel()), minlength=len(ends))
+        ids_pd = blocks.collect_if_small(graph.nodes.select("id"))
+        if ids_pd is not None:
+            return _local_counts(graph.nodes.sparkSession, ids_pd, ends, t, d)
         stats = graph.nodes.sparkSession.createDataFrame(
             pd.DataFrame({"id": ends, "triangles": t, "deg": d}),
             "id long, triangles long, deg long",
@@ -202,6 +213,27 @@ def triangle_count(graph: Graph) -> DataFrame:
             .otherwise(0.0)
             .alias("coefficient"),
         )
+    )
+
+
+def _local_counts(spark, ids_pd: pd.DataFrame, ends, t, d) -> DataFrame:
+    """(id, triangles, coefficient) of every collected node row from the
+    per-endpoint triangle counts ``t`` and degrees ``d`` over the sorted
+    endpoints ``ends`` (0 for a node on no edge), as the node-table join
+    computes them."""
+    ids = ids_pd["id"].to_numpy(np.int64)
+    tri = np.zeros(len(ids), dtype=np.int64)
+    deg = np.zeros(len(ids), dtype=np.int64)
+    if len(ends):
+        pos = np.minimum(np.searchsorted(ends, ids), len(ends) - 1)
+        hit = ends[pos] == ids
+        tri[hit], deg[hit] = t[pos[hit]], d[pos[hit]]
+    coef = np.zeros(len(ids))
+    ok = deg >= 2
+    coef[ok] = 2.0 * tri[ok] / (deg[ok] * (deg[ok] - 1))
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids, "triangles": tri, "coefficient": coef}),
+        "id long, triangles long, coefficient double",
     )
 
 

@@ -10,13 +10,18 @@ membership/sizes, not ids; SURVEY.md §7 hard-part 5). ``threshold``
 pre-filters edges by weight (> t joins components), exactly the
 reference's `threshold` config.
 
-Every run symmetrizes the edges once (``_symmetrize``: one read of the
-edge plan, one shuffle of canonical pairs, checkpointed) and then takes
-one of three sides, picked in this order:
+A run takes one of three sides, picked in this order:
 
-* **driver** — the canonical edge list fits
-  ``blocks.DRIVER_EDGE_THRESHOLD`` rows (``blocks.collect_if_small``) and
-  no checkpoint is given: one numpy union-find (``union_find_mapping``).
+* **driver** — no checkpoint is given and the raw ``(src, dst)``
+  projection fits ``blocks.DRIVER_EDGE_THRESHOLD`` rows
+  (``blocks.collect_if_small``; the raw rows bound the canonical pairs,
+  so on duplicate-heavy input this gate is more conservative than one on
+  the pairs). Loops and duplicates go into one numpy union-find
+  (``union_find_mapping``) as they are. When the node ids fit the same
+  budget the result is a local relation of every node row, so the
+  caller's action is one job; otherwise the node table is joined with
+  the broadcast mapping. An endpoint that is no node id still connects
+  its neighbours, but gets no row.
 * **pull** — no checkpoint is given, node ids are exactly 0..n-1 within
   the pull engine's memory-aware cap, and every edge endpoint is a node
   id (the store manifest's endpoint range): the driver holds the int64
@@ -38,7 +43,9 @@ one of three sides, picked in this order:
   partition holds a whole component the star rounds only confirm the
   fixpoint. The path for graphs above the pull cap, for node ids that are
   not 0..n-1, and the only path under checkpoint/resume (its payload is
-  the star-round edge table).
+  the star-round edge table). Only this side symmetrizes the edges
+  (``_symmetrize``: one read of the edge plan, one shuffle of canonical
+  pairs, checkpointed).
 """
 
 from __future__ import annotations
@@ -227,42 +234,32 @@ def wcc(
     edges = graph.edges
     if threshold is not None:
         edges = edges.filter(F.col("weight") > threshold)
+    nodes = graph.nodes.select("id")
+
+    # the driver side skips every fixpoint round (each large/small-star
+    # round costs ~14 jobs, mostly fixed scheduler overhead); the
+    # distributed sides are the pull engine and the Kiveris fixpoint (the
+    # only path under checkpoint/resume)
+    if checkpoint is None:
+        pairs = blocks.collect_if_small(edges.select("src", "dst").dropna())
+        if pairs is not None:
+            out = _label_nodes(nodes, union_find_mapping(pairs))
+            out.iterations = 1  # one exact union-find pass (stats rows expect ≥ 1)
+            out.did_converge = True
+            return out
+        out = _pull_components(nodes, edges, max_iterations)
+        if out is not None:
+            return out
+
     e = _symmetrize(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
-    nodes = graph.nodes.select("id")
-
     start = 0
     if checkpoint is not None:
         latest = checkpoint.latest(fmt="wcc/edges-v2")
         if latest is not None:
             start, e, _ = latest
     e = e.localCheckpoint(eager=True)
-
-    # r6 hybrid crossover: the symmetrized edge list is materialized anyway,
-    # so one LIMIT-bounded collect of its canonical (u < v) half routes
-    # driver-sized graphs through numpy union-find — identical
-    # min-member-id labels, zero fixpoint rounds (each large/small-star
-    # round costs ~14 jobs, mostly fixed scheduler overhead). The
-    # distributed sides below are the pull engine and the Kiveris fixpoint
-    # (the only path under checkpoint/resume).
-    pairs = (
-        None if checkpoint is not None
-        else blocks.collect_if_small(e.filter(F.col("u") < F.col("v")))
-    )
-    if pairs is not None:
-        mapping = union_find_mapping(pairs, nodes.sparkSession)
-        out = (
-            nodes.join(mapping, "id", "left")
-            .select("id", F.coalesce("component", F.col("id")).alias("component"))
-        )
-        out.iterations = 1  # one exact union-find pass (stats rows expect ≥ 1)
-        out.did_converge = True
-        return out
-    if checkpoint is None:
-        out = _pull_components(nodes, edges, max_iterations)
-        if out is not None:
-            return out
 
     # the distinct in _symmetrize precedes the first fingerprint: a row
     # repeated across partitions XOR-cancels in the hash and costs one more
@@ -297,9 +294,34 @@ def wcc(
     return out
 
 
-def union_find_mapping(pairs: pd.DataFrame, spark) -> DataFrame:
-    """Driver-side union-find over collected (src, dst) pairs → broadcastable
-    mapping (id, component), component = min member id.
+def _label_nodes(nodes: DataFrame, mapping: pd.DataFrame) -> DataFrame:
+    """(id, component) of every row of ``nodes``: the mapping's component,
+    else the id itself. A local relation when the node ids fit
+    ``blocks.collect_if_small`` (a raw-row gate), else a join of the node
+    table with the broadcast mapping."""
+    spark = nodes.sparkSession
+    ids_pd = blocks.collect_if_small(nodes)
+    if ids_pd is None:
+        m = F.broadcast(spark.createDataFrame(mapping, "id long, component long"))
+        return nodes.join(m, "id", "left").select(
+            "id", F.coalesce("component", F.col("id")).alias("component")
+        )
+    ids = ids_pd["id"].to_numpy(np.int64)
+    known = mapping["id"].to_numpy(np.int64)
+    comp = ids.copy()
+    if len(known):
+        pos = np.minimum(np.searchsorted(known, ids), len(known) - 1)
+        hit = known[pos] == ids
+        comp[hit] = mapping["component"].to_numpy(np.int64)[pos[hit]]
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids, "component": comp}), "id long, component long"
+    )
+
+
+def union_find_mapping(pairs: pd.DataFrame) -> pd.DataFrame:
+    """Driver-side union-find over collected (src, dst) pairs → the mapping
+    (id, component) of every endpoint, sorted by id, component = min
+    member id.
 
     The driver side of ``wcc`` (which also serves the dedup cluster tail
     and the k-spanning tree) and of the Borůvka merge rounds in
@@ -307,18 +329,12 @@ def union_find_mapping(pairs: pd.DataFrame, spark) -> DataFrame:
     ``blocks.collect_if_small`` returns the pairs, a numpy union-find
     replaces the distributed fixpoint rounds (~14 jobs each).
     """
-    if len(pairs) == 0:
-        return spark.createDataFrame([], "id long, component long")
-    ends = pairs.to_numpy(dtype=np.int64)
+    ends = pairs.to_numpy(dtype=np.int64).reshape(-1, 2)
     uniq, inv = np.unique(ends, return_inverse=True)
     inv = inv.reshape(ends.shape)
     # indices into the SORTED uniq array: the smallest index is the min id
     label = _min_labels(inv[:, 0], inv[:, 1], len(uniq))
-    return F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame({"id": uniq, "component": uniq[label]})
-        )
-    )
+    return pd.DataFrame({"id": uniq, "component": uniq[label]})
 
 
 def wcc_stats(components: DataFrame) -> DataFrame:

@@ -88,6 +88,25 @@ def test_ppr_empty_seeds_raises(spark):
         ppr_batch(g, [])
 
 
+def test_ppr_seed_outside_node_ids_gets_zero_column(spark, monkeypatch):
+    """A seed that is no node id (7 with nodes 0..5) gets an all-zero
+    column on the pull side, as on the join loop, next to a real seed."""
+    from linkgraph.algorithms import blocks
+    from linkgraph.algorithms.ppr import ppr_batch
+
+    g = Graph.from_edges(edges_df(spark, TRIPLES))
+
+    def run():
+        rows = ppr_batch(g, [7, 0]).orderBy("id").collect()
+        return [r["r0"] for r in rows], [r["r1"] for r in rows]
+
+    zero, real = run()
+    assert zero == [0.0] * 6
+    assert real == pytest.approx(_numpy_ppr(0, 6))
+    monkeypatch.setattr(blocks, "_pull_node_cap", lambda s: 0)  # the join loop
+    assert run()[0] == zero
+
+
 def test_neighbor_mean_matches_pandas(spark):
     from linkgraph.pipeline.embed import neighbor_mean_embeddings
 
