@@ -44,7 +44,7 @@ numpy (symmetrize, canonicalize, dedup, drop loops, max weight per pair)
 and return a local relation that already holds every node row, so the
 caller's action is one job with no shuffle. Past the gate, a pull side is
 taken when the node ids are exactly 0..n-1 within the memory-aware cap
-(``_pull_n``) and every edge endpoint is a node id (``endpoints_outside``:
+(``_pull_size``) and every edge endpoint is a node id (``endpoints_outside``:
 the build records the endpoint range in the manifest, so the check costs
 no job); otherwise the algorithm's DataFrame/push side runs (PageRank
 csr, Kiveris WCC, the DataFrame LPA loop), which is also the path for
@@ -56,16 +56,25 @@ manifest; the compute tasks ``np.load(..., mmap_mode='r')`` them. A store
 over at most ``DRIVER_EDGE_THRESHOLD`` edges is built on the driver:
 ``open_store``'s probe collects the raw ``(src, dst, weight)`` rows once
 and the same per-block builders run over the pandas frame, with no
-shuffle; a larger store is built by Spark tasks, one per block. Both
-builds write identical arrays and manifests. mmap makes the adjacency
-**OS-page-cache resident machine-wide**: any Python worker on the host hits
-RAM after the first touch, regardless of task placement — per-process RAM
-caches thrash when Spark schedules a partition on a different worker each
-superstep (measured: local[8] 3× slower than local[2] with per-process
-caching; see BENCH/BASELINE.md history). Per superstep, Arrow/broadcast
-traffic is ONLY the rank vector. On a cluster the store lives on the
-executor-local scratch of a shared filesystem (or is fetched once from
-object storage per host).
+shuffle; a larger store is built by Spark tasks, one per block. The pull
+family of the raw edges (PageRank, the power iterations, HITS, batch PPR)
+counts the edge rows in its node aggregate and opens its store with
+``pull_store``, and WCC and LPA reach their pull stores only once their
+own raw-edge probe has failed, so past the crossover no build pays a
+dropped probe. Both builds drop edges with a null endpoint and write the
+same manifest and the same arrays, up to the float summation order of a
+source's weight sum W(u) (``np.bincount`` on the driver,
+``groupBy.sum`` in Spark): a few ulps of ``w_norm`` for general real
+weights, exact when every partial sum is representable (integer or
+dyadic weights). mmap makes the adjacency **OS-page-cache resident
+machine-wide**: any Python worker
+on the host hits RAM after the first touch, regardless of task placement
+— per-process RAM caches thrash when Spark schedules a partition on a
+different worker each superstep (measured: local[8] 3× slower than
+local[2] with per-process caching; see BENCH/BASELINE.md history). Per
+superstep, Arrow/broadcast traffic is ONLY the rank vector. On a cluster
+the store lives on the executor-local scratch of a shared filesystem (or
+is fetched once from object storage per host).
 
 Lifecycle: every algorithm gets its store from ``open_store``, the one
 place a store is keyed, sized, built and validated. Each manifest records
@@ -126,8 +135,9 @@ def _pull_task_count(block_path: str, num_blocks: int) -> int:
 # The hybrid crossover, shared by every algorithm with a driver-local path:
 # a table of at most this many rows fits comfortably on the driver, where
 # numpy beats ~10 distributed fixpoint jobs. It is read at call time and
-# only in this module (collect_if_small and pull_engine), so assigning
-# blocks.DRIVER_EDGE_THRESHOLD moves every algorithm's crossover together.
+# only in this module (collect_if_small, pull_store and pull_engine), so
+# assigning blocks.DRIVER_EDGE_THRESHOLD moves every algorithm's crossover
+# together.
 DRIVER_EDGE_THRESHOLD = 2_000_000
 
 
@@ -185,24 +195,64 @@ def _pull_node_cap(spark) -> int:
     return max(1, min(PULL_MAX_NODES, int(mem_bytes * 0.25) // 64))
 
 
-def _pull_n(nodes: DataFrame) -> int | None:
-    """n when the node table qualifies for the pull engine — ids exactly
-    0..n-1 and n within the memory-aware cap — else None."""
-    row = nodes.agg(
-        F.count("id").alias("c"), F.min("id").alias("mn"), F.max("id").alias("mx")
+def _node_range(nodes: DataFrame, edges: DataFrame | None = None) -> tuple[int, bool, int]:
+    """(row count, ids are exactly 0..count-1, edge rows) of a node table,
+    by one aggregate; an empty table is not contiguous. With ``edges`` the
+    same aggregate also counts its rows — no column is read, so a row with
+    a null endpoint, which a store build drops, still counts — else the
+    edge count is 0."""
+    frame = nodes.select("id", F.lit(None).cast("long").alias("_e"))
+    if edges is not None:
+        frame = frame.unionByName(
+            edges.select(
+                F.lit(None).cast("long").alias("id"), F.lit(1).cast("long").alias("_e")
+            )
+        )
+    row = frame.agg(
+        F.count("id").alias("c"), F.min("id").alias("mn"), F.max("id").alias("mx"),
+        F.count("_e").alias("m"),
     ).first()
-    n = row["c"]
-    if not n or row["mn"] != 0 or row["mx"] != n - 1:
-        return None
-    return int(n) if n <= _pull_node_cap(nodes.sparkSession) else None
+    n = int(row["c"])
+    return n, bool(n) and row["mn"] == 0 and row["mx"] == n - 1, int(row["m"])
 
 
-def _resolve_strategy(nodes: DataFrame) -> str:
-    """PageRank's ``strategy='auto'`` for a node table (PageRank.run and
-    InfoMap): pull (CSC blocks + one broadcast rank vector, zero shuffle
-    per superstep) when the node table qualifies (_pull_n), csr (push
-    scatter + one-exchange gather) beyond that."""
-    return "pull" if _pull_n(nodes) is not None else "csr"
+def _pull_size(nodes: DataFrame, edges: DataFrame | None = None) -> tuple[int | None, int]:
+    """(n, m) by one aggregate: n when the node table qualifies for the
+    pull engine — ids exactly 0..n-1 and n within the memory-aware cap —
+    else None, and the edge-row count m that ``pull_store`` sizes from
+    (0 without ``edges``)."""
+    n, dense, m = _node_range(nodes, edges)
+    return (n if dense and n <= _pull_node_cap(nodes.sparkSession) else None), m
+
+
+def _resolve_strategy(
+    nodes: DataFrame, edges: DataFrame, strategy: str = "auto"
+) -> tuple[str, int | None, int | None]:
+    """(strategy, n, m) of PageRank's ``strategy`` for a graph, with one
+    aggregate over its node and edge tables (PageRank.resolve).
+    ``auto`` resolves to pull (CSC blocks + one broadcast rank vector,
+    zero shuffle per superstep) when the node table qualifies (_pull_size),
+    else csr (push scatter + one-exchange gather). An explicit pull checks
+    contiguity alone — the memory cap only guards auto's choice — and gets
+    n = 0 for an empty table and None for ids that are not 0..n-1. m is
+    the edge-row count the pull store is sized from (``pull_store``); csr
+    gets (None, None)."""
+    if strategy == "csr":
+        return "csr", None, None
+    if strategy == "auto":
+        n, m = _pull_size(nodes, edges)
+        return ("pull", n, m) if n is not None else ("csr", None, None)
+    n, dense, m = _node_range(nodes, edges)
+    return "pull", n if dense or n == 0 else None, m
+
+
+def lookup(keys: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(pos, hit): the position of each ``q`` in the sorted unique
+    ``keys`` (clamped into range) and the mask of the ``q`` found there."""
+    if len(keys) == 0:
+        return np.zeros(len(q), dtype=np.int64), np.zeros(len(q), dtype=bool)
+    pos = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
+    return pos, keys[pos] == q
 
 
 def index_edges(
@@ -211,17 +261,9 @@ def index_edges(
     """(es, ed, ok): positions of ``src``/``dst`` in the sorted unique node
     ``ids``, and the mask of edges with both endpoints in ``ids`` — the
     edges a distributed join against the node table keeps."""
-    n = len(ids)
-    es = np.searchsorted(ids, src)
-    ed = np.searchsorted(ids, dst)
-    if n == 0:
-        return es, ed, np.zeros(len(src), dtype=bool)
-    ok = (
-        (es < n) & (ed < n)
-        & (ids[np.minimum(es, n - 1)] == src)
-        & (ids[np.minimum(ed, n - 1)] == dst)
-    )
-    return es, ed, ok
+    es, hs = lookup(ids, src)
+    ed, hd = lookup(ids, dst)
+    return es, ed, hs & hd
 
 
 def canonical_pairs(
@@ -476,6 +518,7 @@ def open_store(
     layout: str,
     path: str | None = None,
     num_blocks: int | None = None,
+    probe: bool = True,
     **meta,
 ) -> tuple[str, int]:
     """(path, num_blocks) of a ``layout`` ('pull' CSC or 'push' CSR) block
@@ -488,7 +531,14 @@ def open_store(
     its manifest records — a store built another way would silently
     mis-weight every superstep — and its OWN block count is returned: a
     count that differs from ``num_blocks`` would mis-slice. Otherwise the
-    store is built with ``num_blocks``, or a count sized by edge volume."""
+    store is built with ``num_blocks``, or a count sized by edge volume.
+
+    A build first probes the rows with ``collect_if_small`` and, when they
+    fit, builds on the driver. A caller whose own raw-edge probe has just
+    found the edges over the budget passes ``probe=False``: the store's
+    edges are then counted and built by Spark at once, without a second
+    dropped collect. Edges with a null endpoint are dropped by either
+    build."""
     meta = {**_BUILD_DEFAULTS[layout], **meta}
     if path is None:
         # a plan without a hash gets a fresh key: built once, still evicted
@@ -507,8 +557,8 @@ def open_store(
     # a driver-sized store is built from one LIMIT-bounded collect of the
     # raw rows, with no shuffle; a larger one is counted and built by Spark
     parallelism = edges.sparkSession.sparkContext.defaultParallelism
-    edges = edges.select("src", "dst", "weight")
-    rows = collect_if_small(edges)
+    edges = edges.select("src", "dst", "weight").dropna(subset=["src", "dst"])
+    rows = collect_if_small(edges) if probe else None
     if rows is not None:
         b = num_blocks or _num_blocks(len(rows), parallelism)
         edges = rows
@@ -517,6 +567,26 @@ def open_store(
     write = write_pull_blocks if layout == "pull" else write_edge_blocks
     write(edges, b, path, **meta)
     return path, b
+
+
+def pull_store(
+    edges: DataFrame,
+    n_edges: int,
+    path: str | None = None,
+    num_blocks: int | None = None,
+    **meta,
+) -> tuple[str, int]:
+    """``open_store(edges, 'pull', ...)`` for a caller that has counted the
+    edge rows (``n_edges``, from the node aggregate ``_node_range``): the
+    rows are collected only when the count fits the budget, and a Spark
+    build is sized from the count, so past the crossover neither a
+    dropped probe nor a count runs."""
+    if num_blocks is None:
+        parallelism = edges.sparkSession.sparkContext.defaultParallelism
+        num_blocks = _num_blocks(n_edges, parallelism)
+    return open_store(
+        edges, "pull", path, num_blocks, probe=n_edges <= DRIVER_EDGE_THRESHOLD, **meta
+    )
 
 
 _GLOBAL_CSR_CACHE: dict[str, tuple] = {}
@@ -567,6 +637,29 @@ def load_global_csr(path: str, n: int, raw_weights: bool = False):
     return got
 
 
+def _total_order(major: np.ndarray, minor: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """Indices that sort the rows by (major, minor, w). When the ids are
+    non-negative and pack into one int64 key, one argsort of the key and a
+    lexsort of only the rows whose (major, minor) pair repeats (rows equal
+    in all three are interchangeable); else a three-key lexsort, several
+    times slower."""
+    if len(major) and min(major.min(), minor.min()) >= 0:
+        span = int(minor.max()) + 1
+        if (int(major.max()) + 1) * span < 2**63:
+            key = major * span + minor
+            order = np.argsort(key)
+            k = key[order]
+            dup = k[1:] == k[:-1]
+            if dup.any():
+                run = np.flatnonzero(
+                    np.concatenate(([False], dup)) | np.concatenate((dup, [False]))
+                )
+                sub = order[run]
+                order[run] = sub[np.lexsort((w[sub], k[run]))]
+            return order
+    return np.lexsort((w, minor, major))
+
+
 # ---------------------------------------------------------------- push (CSR)
 def _build_push_writer(path: str):
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -575,7 +668,7 @@ def _build_push_writer(path: str):
         dst = pdf["dst"].to_numpy(np.int64)
         w = pdf["weight"].to_numpy(np.float64)
         # a total order, so the block does not depend on the row order
-        order = np.lexsort((w, dst, src))
+        order = _total_order(src, dst, w)
         src, dst, w = src[order], dst[order], w[order]
         src_ids, counts = np.unique(src, return_counts=True)
         indptr = np.concatenate(([0], np.cumsum(counts)))
@@ -792,7 +885,7 @@ def _build_pull_writer(path: str, num_blocks: int):
         wn = pdf["w_norm"].to_numpy(np.float64)
         # by target (the kernels need runs of equal slice_pos), then a total
         # order, so the block does not depend on the row order
-        order = np.lexsort((wn, src, dst))
+        order = _total_order(dst, src, wn)
         src, dst, wn = src[order], dst[order], wn[order]
         slice_pos = (dst - part) // num_blocks
         d = _part_dir(path, part)

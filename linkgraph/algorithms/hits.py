@@ -123,7 +123,7 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
     soon as it is open, before the second one can evict it. Same
     unnormalized-loop + periodic/final L1 rescale semantics as the
     DataFrame path. Returns None when the graph does not qualify for the
-    pull engine (blocks._pull_n, or an edge endpoint that is no node id)."""
+    pull engine (blocks._pull_size, or an edge endpoint that is no node id)."""
     import contextlib
 
     import numpy as np
@@ -131,7 +131,7 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
 
     from linkgraph.algorithms import blocks
 
-    n = blocks._pull_n(graph.nodes)
+    n, m = blocks._pull_size(graph.nodes, graph.edges)
     if n is None:
         return None
     edges = graph.edges.select("src", "dst")
@@ -152,7 +152,7 @@ def _hits_pull(graph: Graph, max_iterations: int, tolerance: float | None):
     with contextlib.ExitStack() as pins:
         steps = []
         for e in (fwd, rev):
-            path, b = blocks.open_store(e, "pull", normalize=False)
+            path, b = blocks.pull_store(e, m, normalize=False)
             if blocks.endpoints_outside(path, n) is not None:
                 return None
             pins.enter_context(blocks.pinned_store(path))

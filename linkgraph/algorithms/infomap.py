@@ -177,17 +177,12 @@ def infomap(
 
     # flow: distributed PageRank visit rates, normalized to Σp = 1, on the
     # plan PageRank's own auto resolution picks
-    strat = blocks._resolve_strategy(graph.nodes)
-    ranks = PageRank(
-        damping=damping,
-        max_iterations=pr_iterations,
-        # pull: early stop once visit rates stabilize — the delta check is
-        # a driver-side numpy max, zero extra Spark jobs. csr: skip it (a
-        # per-iteration delta join would cost more than it saves).
-        tolerance=1e-10 if strat == "pull" else None,
-        weighted=weighted,
-        strategy=strat,
-    ).run(graph)
+    pr = PageRank(damping=damping, max_iterations=pr_iterations, weighted=weighted)
+    # pull: early stop once visit rates stabilize — the delta check is a
+    # driver-side numpy max, zero extra Spark jobs. csr: skip it (a
+    # per-iteration delta join would cost more than it saves).
+    pr.tolerance = 1e-10 if pr.resolve(graph) == "pull" else None
+    ranks = pr.run(graph)
     spark = graph.nodes.sparkSession
 
     # the side follows the edge table alone: the coarsened path is an

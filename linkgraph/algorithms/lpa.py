@@ -35,6 +35,8 @@ One vertex program, three sides, picked per run in this order:
   with raw weights (``normalize=False``). With direction BOTH that table
   is ``wcc.loop_free_undirected``, the plan WCC's pull side builds its
   store from, so the two share one store through ``blocks.open_store``.
+  When the driver gate has just found the raw edges over the budget, the
+  store is counted and built by Spark without a second probe.
 * **DataFrame** — anything else: a vote join and a map-side-combined
   arg-max per round; the path for graphs above the pull cap.
 
@@ -63,8 +65,16 @@ from linkgraph.io import CheckpointManager
 LABELS_FMT = "lpa/labels-v1"
 
 
+def _collect_raw(edges: DataFrame) -> pd.DataFrame | None:
+    """The raw (src, dst, weight) rows without a null endpoint, when they
+    fit ``blocks.collect_if_small``."""
+    return blocks.collect_if_small(
+        edges.select("src", "dst", "weight").dropna(subset=["src", "dst"])
+    )
+
+
 def _lpa_local(
-    edges: DataFrame,
+    edges: DataFrame | pd.DataFrame,
     labels: DataFrame,
     weighted: bool,
     max_iterations: int,
@@ -84,12 +94,11 @@ def _lpa_local(
     in any order, so winners match the distributed plans bit-for-bit on
     the contract graphs; arbitrary real weights could differ in ties at
     ~1e-16 (same caveat as any re-ordered float sum).
+    ``edges`` may also be the raw rows a caller has already collected.
     Returns None when the edge or the label table is over the driver
     crossover (the pull and DataFrame loops are the at-scale paths and
     the only paths under checkpoint/resume)."""
-    ep = blocks.collect_if_small(
-        edges.select("src", "dst", "weight").dropna(subset=["src", "dst"])
-    )
+    ep = edges if isinstance(edges, pd.DataFrame) else _collect_raw(edges)
     lab_pd = None if ep is None else blocks.collect_if_small(labels)
     if lab_pd is None:
         return None
@@ -139,14 +148,15 @@ def _lpa_pull(
     run_to_convergence: bool,
     checkpoint: CheckpointManager | None,
     checkpoint_every: int,
+    probe: bool = True,
 ):
     """The pull side of ``label_propagation``, or None when the node ids or
     an edge endpoint rule it out (see the module docstring). ``seeds`` is
     the initial (id, label) table, None for labels = own ids."""
-    n = blocks._pull_n(nodes)
+    n, _ = blocks._pull_size(nodes)
     if n is None:
         return None
-    path, b = blocks.open_store(edges, "pull", normalize=False)
+    path, b = blocks.open_store(edges, "pull", normalize=False, probe=probe)
     if blocks.endpoints_outside(path, n) is not None:
         return None
     spark = edges.sparkSession
@@ -215,9 +225,10 @@ def label_propagation(
         )
     else:
         labels = nodes.select("id", F.col("id").alias("label"))
-    if checkpoint is None:
+    ep = None if checkpoint is not None else _collect_raw(graph.edges)
+    if ep is not None:
         out = _lpa_local(
-            graph.edges, labels, weighted, max_iterations, run_to_convergence,
+            ep, labels, weighted, max_iterations, run_to_convergence,
             undirected=direction == "BOTH",
         )
         if out is not None:
@@ -228,9 +239,12 @@ def label_propagation(
         edges = graph.edges.filter(F.col("src") != F.col("dst"))
     edges = edges.persist()
     try:
+        # the pull store skips its own probe when the raw-edge probe above
+        # has just found the edges over the budget
         return _propagate(
             nodes, edges, labels, seeded, weighted, max_iterations,
             run_to_convergence, checkpoint, checkpoint_every,
+            probe=checkpoint is not None or ep is not None,
         )
     finally:
         edges.unpersist()
@@ -246,12 +260,14 @@ def _propagate(
     run_to_convergence: bool,
     checkpoint: CheckpointManager | None,
     checkpoint_every: int,
+    probe: bool = True,
 ) -> DataFrame:
     """label_propagation over the prepared, cached ``edges`` from the
-    initial ``labels``: the pull side, else the DataFrame loop."""
+    initial ``labels``: the pull side, else the DataFrame loop. ``probe``
+    goes to the pull store's ``blocks.open_store``."""
     out = _lpa_pull(
         nodes, edges, labels if seeded else None, weighted, max_iterations,
-        run_to_convergence, checkpoint, checkpoint_every,
+        run_to_convergence, checkpoint, checkpoint_every, probe,
     )
     if out is not None:
         return out

@@ -17,8 +17,8 @@ data size:
 
 * ``strategy='auto'`` (default): resolves per run to ``pull`` when node
   ids are contiguous and the rank vector fits a memory-aware driver
-  budget (``blocks._pull_n``) and every edge endpoint is a node id, else
-  ``csr``.
+  budget (``blocks._resolve_strategy``) and every edge endpoint is a node
+  id, else ``csr``.
 * ``strategy='pull'``: dst-sliced CSC blocks and one broadcast rank
   vector, zero shuffle per superstep (blocks.pull_engine). A
   driver-sized graph costs no shuffle at all: the store is built on the
@@ -92,6 +92,7 @@ class PageRank:
         self.checkpoint_every = checkpoint_every
         self.block_store = block_store
         self.metrics = RunMetrics()
+        self._resolved = None
 
     # ------------------------------------------------------------------ setup
     def _teleport(self, nodes: DataFrame) -> DataFrame:
@@ -113,19 +114,20 @@ class PageRank:
         return t
 
     # ------------------------------------------------------------- pull loop
-    def _run_pull(self, graph: Graph, n: int | None) -> DataFrame:
+    def _run_pull(self, graph: Graph, n: int | None, m: int) -> DataFrame:
         """Broadcast-pull execution: dst-sliced CSC blocks, zero shuffle.
 
         The rank vector lives on the driver (the BSP barrier); each superstep
         broadcasts q = p/W and every block computes its target slice with one
-        gather + one bincount. Requires contiguous ids 0..n-1 (``n`` from
-        ``blocks._pull_n``, None when the ids are not 0..n-1 or exceed the
-        memory-aware cap), every edge endpoint among them, and a vector
-        that fits driver/executor memory — the fast path below ~10⁸ nodes;
-        'csr' (push + shuffle gather) is the path beyond that. Returns
-        None, for run() to take csr, when ``auto`` finds an endpoint that
-        is not a node id (the store's manifest records the range, so the
-        check costs no job).
+        gather + one bincount. Requires contiguous ids 0..n-1 (``n`` and
+        the edge-row count ``m`` from ``blocks._resolve_strategy``: n is
+        None when the ids are not 0..n-1, 0 for an empty node table),
+        every edge endpoint among them, and a
+        vector that fits driver/executor memory — the fast path below ~10⁸
+        nodes; 'csr' (push + shuffle gather) is the path beyond that.
+        Returns None, for run() to take csr, when ``auto`` finds an
+        endpoint that is not a node id (the store's manifest records the
+        range, so the check costs no job).
         """
         spark = graph.edges.sparkSession
         sc = spark.sparkContext
@@ -137,13 +139,15 @@ class PageRank:
         )
         if n is None:
             raise ValueError(
-                "pull strategy requires contiguous node ids 0..n-1 within the "
-                "driver-memory cap (densify first, or use strategy='csr')"
+                "pull strategy requires contiguous node ids 0..n-1 "
+                "(densify first, or use strategy='csr')"
             )
+        if n == 0:
+            return graph.nodes.select("id", F.lit(0.0).alias("rank"))
         t = self._teleport_vector(n)
 
-        block_path, b = blocks.open_store(
-            edges, "pull", self.block_store, self.num_blocks, weighted=self.weighted
+        block_path, b = blocks.pull_store(
+            edges, m, self.block_store, self.num_blocks, weighted=self.weighted
         )
         bad = blocks.endpoints_outside(block_path, n)
         if bad is not None:
@@ -273,15 +277,25 @@ class PageRank:
         return blocks.unpack_rank_blocks(rank_blocks)
 
     # -------------------------------------------------------------------- run
+    def resolve(self, graph: Graph) -> str:
+        """Resolve ``strategy`` for ``graph`` now (one aggregate,
+        ``blocks._resolve_strategy``) and keep the result for the next
+        run() on the same graph, for a caller whose own settings depend on
+        the side (InfoMap's tolerance)."""
+        self._resolved = (
+            graph, *blocks._resolve_strategy(graph.nodes, graph.edges, self.strategy)
+        )
+        return self._resolved[1]
+
     def run(self, graph: Graph) -> DataFrame:
         # resolved per RUN into a local + resolved_strategy: a reused auto
         # instance must re-resolve for each new graph
-        strategy = self.strategy
-        n = None if strategy == "csr" else blocks._pull_n(graph.nodes)
-        if strategy == "auto":
-            strategy = "pull" if n is not None else "csr"
+        if self._resolved is None or self._resolved[0] is not graph:
+            self.resolve(graph)
+        _, strategy, n, m = self._resolved
+        self._resolved = None
         t0 = time.time()
-        out = self._run_pull(graph, n) if strategy == "pull" else None
+        out = self._run_pull(graph, n, m) if strategy == "pull" else None
         if out is None:  # csr asked for, or auto found a non-node endpoint
             strategy = "csr"
             out = self._run_csr(graph)
@@ -313,15 +327,13 @@ def _pull_power_iteration(
     then zero-shuffle supersteps inside the store pin; `step(p, contrib)`
     returns the next vector and `finish(p)` post-processes the last one.
     Returns the (id, rank) table, or None when the graph does not qualify
-    for the pull engine (blocks._pull_n, or an edge endpoint that is no
+    for the pull engine (blocks._pull_size, or an edge endpoint that is no
     node id) and the caller runs its join loop."""
-    n = blocks._pull_n(graph.nodes)
+    n, m = blocks._pull_size(graph.nodes, graph.edges)
     if n is None:
         return None
     edges = graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))
-    path, b = blocks.open_store(
-        edges, "pull", denom_add=denom_add, normalize=normalize
-    )
+    path, b = blocks.pull_store(edges, m, denom_add=denom_add, normalize=normalize)
     if blocks.endpoints_outside(path, n) is not None:
         return None
     p = np.ones(n)

@@ -104,19 +104,19 @@ def _ppr_batch_pull(graph: Graph, seeds, d: float, iterations: int):
     store build, no dangling redistribution); the store comes from
     ``blocks.open_store``, so a repeat batch on the same edges reuses it,
     and the supersteps run inside its pin. Returns None when the graph
-    does not qualify for the pull engine (blocks._pull_n, or an edge
+    does not qualify for the pull engine (blocks._pull_size, or an edge
     endpoint that is no node id): callers fall back to the join loop."""
     import numpy as np
     import pandas as pd
 
     from linkgraph.algorithms import blocks
 
-    n = blocks._pull_n(graph.nodes)
+    n, m = blocks._pull_size(graph.nodes, graph.edges)
     if n is None:
         return None
     edges_w = graph.edges.select("src", "dst").withColumn("weight", F.lit(1.0))
     sc = edges_w.sparkSession.sparkContext
-    path, b = blocks.open_store(edges_w, "pull")
+    path, b = blocks.pull_store(edges_w, m)
     if blocks.endpoints_outside(path, n) is not None:
         return None
     S = len(seeds)

@@ -222,12 +222,10 @@ def _local_counts(spark, ids_pd: pd.DataFrame, ends, t, d) -> DataFrame:
     endpoints ``ends`` (0 for a node on no edge), as the node-table join
     computes them."""
     ids = ids_pd["id"].to_numpy(np.int64)
+    pos, hit = blocks.lookup(ends, ids)
     tri = np.zeros(len(ids), dtype=np.int64)
     deg = np.zeros(len(ids), dtype=np.int64)
-    if len(ends):
-        pos = np.minimum(np.searchsorted(ends, ids), len(ends) - 1)
-        hit = ends[pos] == ids
-        tri[hit], deg[hit] = t[pos[hit]], d[pos[hit]]
+    tri[hit], deg[hit] = t[pos[hit]], d[pos[hit]]
     coef = np.zeros(len(ids))
     ok = deg >= 2
     coef[ok] = 2.0 * tri[ok] / (deg[ok] * (deg[ok] - 1))

@@ -32,7 +32,10 @@ A run takes one of three sides, picked in this order:
   the pulled minimum and applies full pointer jumping, so labels reach
   the min member id in O(log n) supersteps — plain synchronous min-label
   needs O(diameter). LPA builds its direction-BOTH store from the same
-  plan, so the two share one store through ``blocks.open_store``.
+  plan, so the two share one store through ``blocks.open_store``. This
+  side is reached only once the driver gate has found the raw edges over
+  the budget, so the store is counted and built by Spark without a
+  second probe (``probe=False``).
 * **Kiveris** — anything else: the **alternating large-star /
   small-star** algorithm (Kiveris et al., "Connected Components in
   MapReduce and Beyond"). Each round rewires every node's larger
@@ -186,12 +189,13 @@ def _pull_components(
     members (hooking: roots only move to smaller labels, so no cycle
     forms), then pointer jumping flattens every chain onto its root. A
     superstep that changes no label ends the run."""
-    n = blocks._pull_n(nodes)
+    n, _ = blocks._pull_size(nodes)
     if n is None:
         return None
     sym = loop_free_undirected(edges).persist()
     try:
-        path, b = blocks.open_store(sym, "pull", normalize=False)
+        # only reached once wcc's raw-edge probe found the edges over budget
+        path, b = blocks.open_store(sym, "pull", normalize=False, probe=False)
     finally:
         sym.unpersist()
     if blocks.endpoints_outside(path, n) is not None:
@@ -307,12 +311,9 @@ def _label_nodes(nodes: DataFrame, mapping: pd.DataFrame) -> DataFrame:
             "id", F.coalesce("component", F.col("id")).alias("component")
         )
     ids = ids_pd["id"].to_numpy(np.int64)
-    known = mapping["id"].to_numpy(np.int64)
+    pos, hit = blocks.lookup(mapping["id"].to_numpy(np.int64), ids)
     comp = ids.copy()
-    if len(known):
-        pos = np.minimum(np.searchsorted(known, ids), len(known) - 1)
-        hit = known[pos] == ids
-        comp[hit] = mapping["component"].to_numpy(np.int64)[pos[hit]]
+    comp[hit] = mapping["component"].to_numpy(np.int64)[pos[hit]]
     return spark.createDataFrame(
         pd.DataFrame({"id": ids, "component": comp}), "id long, component long"
     )

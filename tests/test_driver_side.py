@@ -91,6 +91,69 @@ def test_open_store_builds_driver_sized_store_without_spark_build(spark, tmp_pat
     assert _store_files(str(tmp_path / "small"))[1] == _store_files(str(tmp_path / "large"))[1]
 
 
+def test_open_store_drops_null_endpoints_in_either_build(spark, tmp_path, monkeypatch):
+    """A row with a null endpoint is dropped by the driver build and by the
+    Spark build alike, so both stores hold the same arrays."""
+    df = spark.createDataFrame(
+        [(0, 1, 1.0), (None, 1, 1.0), (1, 2, 2.0), (2, None, 1.0), (2, 0, 4.0)],
+        "src long, dst long, weight double",
+    )
+    blocks.open_store(df, "pull", str(tmp_path / "small"))
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", -1)
+    blocks.open_store(df, "pull", str(tmp_path / "large"))
+    got, got_manifest = _store_files(str(tmp_path / "small"))
+    want, want_manifest = _store_files(str(tmp_path / "large"))
+    assert got_manifest == want_manifest
+    assert blocks._store_edge_count(str(tmp_path / "small")) == 3
+    assert sorted(got) == sorted(want)
+    for name, arr in want.items():
+        assert np.array_equal(got[name], arr), name
+
+
+@pytest.mark.parametrize("algo", ["wcc", "lpa"])
+def test_pull_store_past_budget_skips_second_probe(spark, monkeypatch, algo):
+    """Past the budget, WCC's and LPA's pull stores are counted and built
+    by Spark at once: the raw-edge probe that just failed is the only
+    LIMIT-bounded collect, and the labels equal the driver side's."""
+    e = edges_df(spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 2.0), (3, 4, 1.0),
+                         (4, 5, 1.0), (5, 5, 1.0), (1, 0, 1.0)])
+    g = Graph.from_edges(e, nodes=spark.range(7).select("id"))
+    run, cols = {
+        "wcc": (lambda: wcc(g), ["id", "component"]),
+        "lpa": (lambda: label_propagation(g, max_iterations=6), ["id", "label"]),
+    }[algo]
+    local = _rows(run(), cols)
+    probes = []
+    collect = blocks.collect_if_small
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 3)
+    monkeypatch.setattr(
+        blocks, "collect_if_small", lambda df, *a, **kw: probes.append(df) or collect(df, *a, **kw)
+    )
+    sides = []
+    open_store = blocks.open_store
+    monkeypatch.setattr(
+        blocks, "open_store", lambda *a, **kw: sides.append(kw.get("probe")) or open_store(*a, **kw)
+    )
+    assert _rows(run(), cols) == local
+    assert len(probes) == 1 and sides == [False]
+
+
+def test_pagerank_past_budget_builds_store_without_probe_or_count(spark, monkeypatch, tmp_path):
+    """PageRank counts its edge rows in the node aggregate, so past the
+    budget its pull store is built by Spark, sized from that count, with
+    no LIMIT-bounded probe and no count of its own."""
+    g = _dense_graph(spark, 12)
+    want = _ranks(PageRank(max_iterations=10).run(g))
+    calls = []
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 100)
+    monkeypatch.setattr(blocks, "collect_if_small", lambda *a, **kw: calls.append("probe"))
+    monkeypatch.setattr(blocks, "auto_num_blocks", lambda *a, **kw: calls.append("count"))
+    got = _ranks(PageRank(max_iterations=10, block_store=str(tmp_path / "s")).run(g))
+    assert calls == []
+    assert blocks._store_edge_count(str(tmp_path / "s")) == 201
+    assert np.allclose([got[i] for i in range(60)], [want[i] for i in range(60)], atol=1e-12)
+
+
 # --------------------------------------------------------------- job budget
 def _dense_graph(spark, salt):
     """Random edges over the node ids 0..59; ``salt`` (0..58) makes each
@@ -161,6 +224,27 @@ def test_personalized_pagerank_ignores_source_outside_nodes(spark, monkeypatch, 
     assert sorted(local) == list(range(60))
     assert np.allclose([local[i] for i in range(60)], [dist[i] for i in range(60)], atol=1e-12)
     assert np.allclose([local[i] for i in range(60)], [only_3[i] for i in range(60)], atol=1e-12)
+
+
+def test_explicit_pull_checks_contiguity_only(spark, monkeypatch):
+    """An explicit pull runs past the memory cap (that cap guards auto's
+    choice only), returns an empty frame for an empty node table, and
+    raises on ids that are not 0..n-1."""
+    g = _dense_graph(spark, 11)
+    auto = PageRank(max_iterations=10)
+    want = _ranks(auto.run(g))
+    monkeypatch.setattr(blocks, "_pull_node_cap", lambda spark: 1)
+    pull = PageRank(max_iterations=10, strategy="pull")
+    got = _ranks(pull.run(g))
+    assert pull.resolved_strategy == "pull" and sorted(got) == list(range(60))
+    assert np.allclose([got[i] for i in range(60)], [want[i] for i in range(60)], atol=1e-12)
+    auto.run(g)
+    assert auto.resolved_strategy == "csr"
+    empty = PageRank(strategy="pull").run(_empty(spark))
+    assert empty.columns == ["id", "rank"] and empty.collect() == []
+    sparse = Graph.from_edges(edges_df(spark, [(0, 2, 1.0)]), nodes=nodes_df(spark, [0, 2]))
+    with pytest.raises(ValueError, match="contiguous node ids"):
+        PageRank(strategy="pull").run(sparse)
 
 
 @pytest.mark.parametrize("direction", ["BOTH", "OUTGOING"])

@@ -188,6 +188,28 @@ def test_infomap_pagerank_follows_auto_resolution(spark, monkeypatch):
     assert resolved == [("csr", None)]
 
 
+def test_infomap_resolves_once_and_falls_back_on_outside_endpoint(spark, monkeypatch):
+    """InfoMap's PageRank resolves its strategy with one node aggregate
+    and, as ``auto``, falls back to csr when an edge reaches an id that is
+    no node id (the explicit pull it used to pass raised ValueError)."""
+    from linkgraph.algorithms import blocks
+    from linkgraph.algorithms.infomap import infomap
+
+    e = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0), (2, 10, 1.0), (3, 0, 1.0)],
+        "src long, dst long, weight double",
+    )
+    g = Graph.from_edges(e, nodes=spark.createDataFrame([(i,) for i in range(4)], "id long"))
+    calls = []
+    node_range = blocks._node_range
+    monkeypatch.setattr(
+        blocks, "_node_range", lambda *a, **kw: calls.append(1) or node_range(*a, **kw)
+    )
+    out = dict(tuple(r) for r in infomap(g, pr_iterations=5).collect())
+    assert len(calls) == 1
+    assert sorted(out) == [0, 1, 2, 3] and out[0] == out[1] == out[2]
+
+
 def test_article_rank_matches_oracle(spark):
     g = _graph(spark)
     got = {r["id"]: r["rank"] for r in article_rank(g, max_iterations=20).collect()}
