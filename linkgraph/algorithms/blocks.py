@@ -38,11 +38,15 @@ Three pull kernels run on a block's target slice, each one numpy pass:
 
 Execution sides: every hybrid algorithm first runs its driver gate
 (``collect_if_small``, under ``DRIVER_EDGE_THRESHOLD``). Below it, PageRank
-(pull), WCC, LPA and triangle counting read the raw ``(src, dst[,
-weight])`` projection and the node ids once each, prepare the edges in
-numpy (symmetrize, canonicalize, dedup, drop loops, max weight per pair)
-and return a local relation that already holds every node row, so the
-caller's action is one job with no shuffle. Past the gate, a pull side is
+(pull), WCC, LPA, triangle counting, k-core and k-truss read the raw
+``(src, dst[, weight])`` projection and the node ids once each, prepare
+the edges in numpy (symmetrize, canonicalize, dedup, drop loops, max
+weight per pair) and return a local relation that already holds every
+node row, so the caller's action is one job with no shuffle. Set
+similarity and near-duplicate clustering do the same with their raw
+``(item, cat)`` and ``(doc_id, text)`` rows, with all-pair work gates
+(``fits_driver``) and one pair kernel (``set_masks`` and
+``set_intersections``). Past the gate, a pull side is
 taken when the node ids are exactly 0..n-1 within the memory-aware cap
 (``_pull_size``) and every edge endpoint is a node id (``endpoints_outside``:
 the build records the endpoint range in the manifest, so the check costs
@@ -90,6 +94,7 @@ until the loop ends, normally or not.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import zlib
@@ -135,10 +140,16 @@ def _pull_task_count(block_path: str, num_blocks: int) -> int:
 # The hybrid crossover, shared by every algorithm with a driver-local path:
 # a table of at most this many rows fits comfortably on the driver, where
 # numpy beats ~10 distributed fixpoint jobs. It is read at call time and
-# only in this module (collect_if_small, pull_store and pull_engine), so
-# assigning blocks.DRIVER_EDGE_THRESHOLD moves every algorithm's crossover
-# together.
+# only in this module (collect_if_small, fits_driver, pull_store and
+# pull_engine), so assigning blocks.DRIVER_EDGE_THRESHOLD moves every
+# algorithm's crossover together.
 DRIVER_EDGE_THRESHOLD = 2_000_000
+
+
+def fits_driver(*sizes: int) -> bool:
+    """Whether each work size of a driver side (pairs, incidence cells)
+    fits the crossover, as its collected rows did."""
+    return all(s <= DRIVER_EDGE_THRESHOLD for s in sizes)
 
 
 def collect_if_small(
@@ -284,6 +295,49 @@ def canonical_pairs(
         return a, b, w
     head = np.flatnonzero(np.concatenate(([True], (np.diff(a) != 0) | (np.diff(b) != 0))))
     return a[head], b[head], None if w is None else np.maximum.reduceat(w, head)
+
+
+def set_masks(
+    set_idx: np.ndarray, elem_idx: np.ndarray, n_sets: int, n_elems: int
+) -> np.ndarray:
+    """(n_sets, ⌈n_elems/64⌉) uint64 bitmasks: bit e of row s is set when
+    some (set_idx[i], elem_idx[i]) is (s, e). A repeated membership sets
+    the same bit, so the masks hold the distinct memberships."""
+    masks = np.zeros((n_sets, max(1, -(-int(n_elems) // 64))), dtype=np.uint64)
+    e = np.asarray(elem_idx, dtype=np.int64)
+    bit = np.left_shift(np.uint64(1), (e & 63).astype(np.uint64))
+    np.bitwise_or.at(masks, (np.asarray(set_idx, dtype=np.int64), e >> 6), bit)
+    return masks
+
+
+# mask words AND-ed per set_intersections chunk (~32 MB of uint64)
+INTERSECT_CHUNK_WORDS = 4_000_000
+
+
+def set_intersections(
+    masks: np.ndarray, rows: np.ndarray
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Exact intersection sizes of bitmask sets (``set_masks``), in chunks
+    of ``rows``: yields (chunk, inter) with inter[i, s] = |set chunk[i] ∩
+    set s| for every set s, an int64 popcount of the AND-ed masks (a
+    16-bit lookup table: numpy 1.x has no popcount ufunc). The one pair
+    kernel of set similarity and of near-duplicate detection, on the
+    driver and inside the Spark bitmask pass."""
+    n, w = masks.shape
+    lut = _popcount16()
+    step = max(1, INTERSECT_CHUNK_WORDS // max(1, n * w))
+    for s in range(0, len(rows), step):
+        chunk = rows[s : s + step]
+        band = masks[chunk][:, None, :] & masks[None, :, :]
+        yield chunk, lut[band.view(np.uint16)].reshape(len(chunk), n, 4 * w).sum(
+            axis=-1, dtype=np.int64
+        )
+
+
+@functools.cache
+def _popcount16() -> np.ndarray:
+    v = np.arange(1 << 16)
+    return sum((v >> k) & 1 for k in range(16)).astype(np.uint16)
 
 
 def _num_blocks(n_edges: int, parallelism: int) -> int:

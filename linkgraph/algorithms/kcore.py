@@ -7,11 +7,16 @@ Two operators, both pure DataFrame fixpoints:
   undirected degree ≥ k, by iterative peeling: drop nodes below k,
   recompute degrees over the survivors, repeat to fixpoint. Round count ≤
   peel depth. Two physical plans, picked by data size (the union-find /
-  pull-engine crossover): when the undirected edges and the node table
-  each fit ``blocks.DRIVER_EDGE_THRESHOLD`` rows, both are collected once
-  and every round is one ``np.bincount`` over the edges between survivors;
-  otherwise every round is one degree aggregation + one semi-join. Both
-  run the same rounds and report the same ``iterations``/``did_converge``.
+  pull-engine crossover): when the raw ``(src, dst)`` edge rows and the
+  node table each fit ``blocks.DRIVER_EDGE_THRESHOLD`` rows, both are
+  collected once with no shuffle, the edges are made undirected in numpy
+  (``blocks.canonical_pairs``, both directions; an undirected graph's
+  edges only drop loops) and every round is one ``np.bincount`` over the
+  edges between survivors; otherwise every round is one degree
+  aggregation + one semi-join. The raw rows bound the undirected pairs,
+  so on input with many duplicate edges the gate is more conservative
+  than one on the deduped table. Both run the same rounds and report the
+  same ``iterations``/``did_converge``.
 * ``core_numbers(graph)`` — every node's coreness via the iterated
   h-index (Lü et al., Nature Communications 2016): start from the degree,
   repeatedly replace each node's estimate with the h-index of its
@@ -39,19 +44,26 @@ def _und_edges(graph: Graph) -> DataFrame:
 
 
 def _k_core_local(graph: Graph, k: int, max_rounds: int) -> DataFrame | None:
-    """The synchronous peel on the driver; None above the crossover."""
-    ep = blocks.collect_if_small(_und_edges(graph))
+    """The synchronous peel on the driver; None above the crossover. The
+    raw edge rows are read with no shuffle and made undirected in numpy,
+    as ``_und_edges`` does in Spark."""
+    ep = blocks.collect_if_small(graph.edges.select("src", "dst").dropna())
     if ep is None:
         return None
     node_pd = blocks.collect_if_small(graph.nodes.select("id"))
     if node_pd is None:
         return None
+    src, dst = ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64)
+    if graph.directed:
+        a, b, _ = blocks.canonical_pairs(src, dst)
+        src, dst = np.concatenate([a, b]), np.concatenate([b, a])
+    else:
+        keep = src != dst
+        src, dst = src[keep], dst[keep]
     node_ids = node_pd["id"].to_numpy(np.int64)
     ids = np.unique(node_ids)
     n = len(ids)
-    es, ed, ok = blocks.index_edges(
-        ids, ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64)
-    )
+    es, ed, ok = blocks.index_edges(ids, src, dst)
     es, ed = es[ok], ed[ok]
     active = np.ones(n, dtype=bool)
     n_active = n

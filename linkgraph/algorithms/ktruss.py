@@ -17,8 +17,11 @@ handful) and running extra rounds is a no-op — which is what makes the
 fixed-round SQL oracle in queries.py exact.
 
 Two physical plans, picked by data size (the union-find / pull-engine
-crossover): at or below ``blocks.DRIVER_EDGE_THRESHOLD`` canonical edges
-the edge list is collected once and every round is
+crossover): at or below ``blocks.DRIVER_EDGE_THRESHOLD`` raw ``(src,
+dst)`` edge rows the projection is collected once with no shuffle and
+canonicalized in numpy (``blocks.canonical_pairs``; the raw rows bound the
+canonical edges, so on input with many duplicate edges this gate is more
+conservative than one on the canonical table), and every round is
 ``triangles.triangle_kernel`` plus one ``np.bincount`` over the surviving
 edges; above it each round is one distributed triangle count — two
 shuffle joins + one map-side-combining groupBy, lineage truncated per
@@ -58,11 +61,12 @@ def _edge_support(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
 
 def _k_truss_local(graph: Graph, k: int, max_rounds: int) -> DataFrame | None:
     """The synchronous peel on the driver; None above the crossover."""
-    pdf = blocks.collect_if_small(graph.canonical_edges().select("src", "dst"))
+    pdf = blocks.collect_if_small(graph.edges.select("src", "dst").dropna())
     if pdf is None:
         return None
-    src = pdf["src"].to_numpy(np.int64)
-    dst = pdf["dst"].to_numpy(np.int64)
+    src, dst, _ = blocks.canonical_pairs(
+        pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+    )
     rounds, converged = 0, False
     for _ in range(max_rounds):
         sup = _edge_support(src, dst)

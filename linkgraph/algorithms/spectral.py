@@ -81,13 +81,10 @@ def spectral_embedding(
     eigenvalue estimates are exposed as ``spectral_embedding.last_eigenvalues``
     after each call (driver-side diagnostics, not part of the schema)."""
     nodes = graph.nodes.select("id")
-    row = nodes.agg(
-        F.count("id").alias("c"), F.min("id").alias("mn"), F.max("id").alias("mx")
-    ).first()
-    n = int(row["c"] or 0)
+    n, dense, _ = blocks._node_range(nodes)
     if n == 0:
         return nodes.select("id", F.array().cast("array<double>").alias("vec"))
-    if row["mn"] != 0 or row["mx"] != n - 1:
+    if not dense:
         raise ValueError(
             "spectral_embedding requires contiguous ids 0..n-1 (densify first)"
         )

@@ -247,7 +247,7 @@ def wcc(
     if checkpoint is None:
         pairs = blocks.collect_if_small(edges.select("src", "dst").dropna())
         if pairs is not None:
-            out = _label_nodes(nodes, union_find_mapping(pairs))
+            out = _label_nodes(nodes, pairs)
             out.iterations = 1  # one exact union-find pass (stats rows expect ≥ 1)
             out.did_converge = True
             return out
@@ -298,25 +298,35 @@ def wcc(
     return out
 
 
-def _label_nodes(nodes: DataFrame, mapping: pd.DataFrame) -> DataFrame:
-    """(id, component) of every row of ``nodes``: the mapping's component,
-    else the id itself. A local relation when the node ids fit
+def _label_nodes(nodes: DataFrame, pairs: pd.DataFrame) -> DataFrame:
+    """(id, component) of every row of ``nodes`` under the union-find over
+    ``pairs``: a local relation when the node ids fit
     ``blocks.collect_if_small`` (a raw-row gate), else a join of the node
     table with the broadcast mapping."""
     spark = nodes.sparkSession
     ids_pd = blocks.collect_if_small(nodes)
     if ids_pd is None:
-        m = F.broadcast(spark.createDataFrame(mapping, "id long, component long"))
+        m = F.broadcast(spark.createDataFrame(union_find_mapping(pairs), "id long, component long"))
         return nodes.join(m, "id", "left").select(
             "id", F.coalesce("component", F.col("id")).alias("component")
         )
     ids = ids_pd["id"].to_numpy(np.int64)
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids, "component": union_find_labels(pairs, ids)}),
+        "id long, component long",
+    )
+
+
+def union_find_labels(pairs: pd.DataFrame, ids: np.ndarray) -> np.ndarray:
+    """The component (min member id) of each of ``ids`` under the driver
+    union-find over the collected (src, dst) ``pairs``; an id in no pair
+    is its own component. Serves ``wcc``'s driver side and the driver
+    side of ``dedup.near_duplicate_clusters``."""
+    mapping = union_find_mapping(pairs)
     pos, hit = blocks.lookup(mapping["id"].to_numpy(np.int64), ids)
     comp = ids.copy()
     comp[hit] = mapping["component"].to_numpy(np.int64)[pos[hit]]
-    return spark.createDataFrame(
-        pd.DataFrame({"id": ids, "component": comp}), "id long, component long"
-    )
+    return comp
 
 
 def union_find_mapping(pairs: pd.DataFrame) -> pd.DataFrame:

@@ -8,15 +8,37 @@ arrays — no Python string hashing anywhere in the hot path. LSH banding
 turns near-dup search into an equi-join on (band, band_hash), and SimHash
 gets its Hamming-ball candidate join via the block-permutation trick — the
 standard shuffle-friendly formulations for 100 TB corpora.
+
+``near_duplicate_clusters(strategy="auto")`` (and ``dedup_keep_best`` on
+top of it) has a **driver side** for driver-sized corpora: one
+LIMIT-bounded ``blocks.collect_if_small`` of ``(doc_id, text)`` (no
+shuffle), ``str.split(" ")`` token sets (the ``F.split`` +
+``array_distinct`` of the Spark side), a collapse to the U distinct sets,
+all-pair intersections by the popcount kernel the Spark bitmask pass
+uses (``blocks.set_intersections`` over ``_token_masks``), the cut
+``round(i/u, 5) >= t`` as an exact integer test, and the driver
+union-find (``wcc.union_find_labels``); the result is a local relation of
+every document row. Taken when the collected rows, the U(U−1)/2 pairs and
+the U·V incidence cells over the V distinct tokens each fit
+``blocks.DRIVER_EDGE_THRESHOLD`` (and doc ids are non-null integers);
+otherwise the collected rows are dropped and the Spark strategies run
+unchanged.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    BooleanType, IntegralType, LongType, StringType, StructField, StructType,
+)
+
+from linkgraph.algorithms import blocks
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -211,16 +233,27 @@ def _clusters_from_pairs(pairs: DataFrame, items: DataFrame, id_col: str) -> Dat
 _BITSET_MAX_VOCAB = 1024  # ≤16 uint64 words per doc-mask
 
 
-def _bitset_jaccard_pairs(
-    toks: DataFrame, threshold: float, n_vocab: int
-) -> DataFrame:
+def _token_masks(token_sets) -> tuple[np.ndarray, np.ndarray, int]:
+    """(sizes, bitmasks, V) of token sets of distinct tokens: one
+    ``blocks.set_masks`` row per set over the V distinct tokens."""
+    sizes = np.fromiter(map(len, token_sets), np.int64, len(token_sets))
+    codes, vocab = pd.factorize(
+        np.fromiter((t for ts in token_sets for t in ts), object, int(sizes.sum()))
+    )
+    rows = np.repeat(np.arange(len(token_sets)), sizes)
+    return sizes, blocks.set_masks(rows, codes, len(token_sets), len(vocab)), len(vocab)
+
+
+def _bitset_jaccard_pairs(toks: DataFrame, threshold: float) -> DataFrame:
     """Exact all-pairs Jaccard when the DISTINCT VOCABULARY is tiny
-    (≤ _BITSET_MAX_VOCAB): every token set becomes a ⌈V/64⌉-word bitmask,
-    the intersection is popcount(a AND b), and a U×U block kernel in one
-    Arrow pass replaces U²/2 interpreted array_intersects (measured ~6×
-    on the sf0.1 near-clique corpus, where V = 31). The guarded driver
-    collect is bounded by the caller's U ≤ direct_max gate — the same
-    collect-and-broadcast small-side pattern as vector_similarity.
+    (≤ _BITSET_MAX_VOCAB): every token set becomes a ⌈V/64⌉-word bitmask
+    (``_token_masks``), the intersection is popcount(a AND b)
+    (``blocks.set_intersections``, the driver side's kernel too), and a
+    U×U block kernel in one Arrow pass replaces U²/2 interpreted
+    array_intersects (measured ~6× on the sf0.1 near-clique corpus, where
+    V = 31). The guarded driver collect is bounded by the caller's
+    U ≤ direct_max gate — the same collect-and-broadcast small-side
+    pattern as vector_similarity.
 
     Bit-identical to the codegen path: popcounts are exact ints, the
     division is the same IEEE double op, and ROUNDING + the threshold cut
@@ -231,39 +264,16 @@ def _bitset_jaccard_pairs(
     spark = toks.sparkSession
     rows = toks.select("doc_id", "t").collect()
     ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    vocab: dict = {}
-    W = max(1, -(-int(n_vocab) // 64))
-    masks = np.zeros((len(rows), W), dtype=np.uint64)
-    cnts = np.zeros(len(rows), dtype=np.int64)
-    for i, r in enumerate(rows):
-        ts = r["t"]
-        cnts[i] = len(ts)
-        for tok in ts:
-            b = vocab.setdefault(tok, len(vocab))
-            masks[i, b >> 6] |= np.uint64(1) << np.uint64(b & 63)
+    cnts, masks, _ = _token_masks([r["t"] for r in rows])
     U = len(ids)
-    sc = spark.sparkContext
-    bc = sc.broadcast((ids, cnts, masks))
+    bc = spark.sparkContext.broadcast((ids, cnts, masks))
 
     def kernel(batches):
         ids_, cnts_, masks_ = bc.value
-        lut = np.zeros(65536, dtype=np.int64)
-        for k in range(16):
-            lut += (np.arange(65536) >> k) & 1
-        lut = lut.astype(np.uint16)
-        w = masks_.shape[1]
-        chunk = max(1, 4_000_000 // max(1, U * w))
         pre = threshold - 1e-5  # raw prefilter; exact rounded cut in Spark
         for batch in batches:
             idx = batch.column("id").to_numpy().astype(np.int64)
-            for s in range(0, len(idx), chunk):
-                rows_i = idx[s : s + chunk]
-                band = masks_[rows_i][:, None, :] & masks_[None, :, :]
-                inter = (
-                    lut[band.view(np.uint16).reshape(len(rows_i), U, w * 4)]
-                    .sum(axis=-1)
-                    .astype(np.int64)
-                )
+            for rows_i, inter in blocks.set_intersections(masks_, idx):
                 union = cnts_[rows_i][:, None] + cnts_[None, :] - inter
                 raw = inter / np.maximum(union, 1)
                 keep = (raw >= pre) & (rows_i[:, None] < np.arange(U)[None, :])
@@ -312,7 +322,7 @@ def _direct_jaccard_pairs(
         F.countDistinct("tok")
     ).first()[0] or 0
     if 0 < n_vocab <= _BITSET_MAX_VOCAB:
-        return _bitset_jaccard_pairs(toks, threshold, int(n_vocab))
+        return _bitset_jaccard_pairs(toks, threshold)
     # the stream side of a broadcast-nested-loop join is NOT re-split by the
     # planner: if docs arrived as one partition (e.g. off a localCheckpoint),
     # the whole U² scan runs on one core. Spread it across the cluster.
@@ -381,6 +391,10 @@ def near_duplicate_clusters(
     if max_doc_freq is not None or strategy == "index":
         pairs = token_jaccard_pairs(docs, threshold, text_col, max_doc_freq, "index")
         return _clusters_from_pairs(pairs, docs, "doc_id")
+    if strategy == "auto":
+        local = _near_dup_clusters_local(docs, threshold, text_col)
+        if local is not None:
+            return local
 
     # 1. collapse to distinct token SETS: key = md5 of the sorted distinct
     # tokens (tokens cannot contain ' ', so ' '-joining is injective);
@@ -447,6 +461,75 @@ def near_duplicate_clusters(
                 "is_representative"
             ),
         )
+    )
+
+
+def _round5_cut(t: float) -> int:
+    """The least R with R/10⁵ >= t (as doubles): Spark's HALF_UP
+    ``round(x, 5) >= t`` holds exactly when x >= (2R − 1)/(2·10⁵)."""
+    r = math.ceil(t * 100_000)
+    while (r - 1) / 100_000 >= t:
+        r -= 1
+    while r / 100_000 < t:
+        r += 1
+    return r
+
+
+def _near_dup_clusters_local(
+    docs: DataFrame, threshold: float, text_col: str
+) -> DataFrame | None:
+    """The driver side of ``near_duplicate_clusters(strategy="auto")``
+    (module docstring): (doc_id, cluster, is_representative) as a local
+    relation, or None past a gate or for doc ids that are not non-null
+    integers. Null text stays a singleton. A pair is kept when
+    round(i/u, 5) >= t, tested on the integer counts as
+    2·10⁵·i >= (2R − 1)·u (``_round5_cut``): the division and HALF_UP
+    rounding of the Spark side, with no float on the cut."""
+    from linkgraph.algorithms.wcc import union_find_labels
+
+    id_type = docs.schema["doc_id"].dataType
+    if not (isinstance(id_type, IntegralType)
+            and isinstance(docs.schema[text_col].dataType, StringType)):
+        return None
+    pdf = blocks.collect_if_small(docs.select("doc_id", F.col(text_col).alias("text")))
+    if pdf is None or pdf["doc_id"].isna().any():
+        return None
+    ids = pdf["doc_id"].to_numpy(np.int64)
+    has_text = pdf["text"].notna().to_numpy()
+    key_of: dict = {}
+    set_of = np.fromiter(
+        (key_of.setdefault(frozenset(t.split(" ")), len(key_of))
+         for t in pdf["text"][has_text]),
+        np.int64, int(has_text.sum()),
+    )
+    u = len(key_of)
+    if not blocks.fits_driver(u * (u - 1) // 2):
+        return None
+    sizes, masks, v = _token_masks(list(key_of))
+    if not blocks.fits_driver(u * v):
+        return None
+    rep = np.full(u, np.iinfo(np.int64).max)
+    np.minimum.at(rep, set_of, ids[has_text])  # each set's min doc id
+    cut = 2 * _round5_cut(threshold) - 1
+    src, dst = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for rows, inter in blocks.set_intersections(masks, np.arange(u)):
+        r, b = np.nonzero(np.arange(u)[None, :] > rows[:, None])
+        a, i = rows[r], inter[r, b]
+        keep = 200_000 * i >= cut * (sizes[a] + sizes[b] - i)
+        src.append(rep[a[keep]])
+        dst.append(rep[b[keep]])
+    rep_cluster = union_find_labels(
+        pd.DataFrame({"src": np.concatenate(src), "dst": np.concatenate(dst)}), rep
+    )
+    cluster = ids.copy()
+    cluster[has_text] = rep_cluster[set_of]
+    schema = StructType([
+        StructField("doc_id", id_type), StructField("cluster", LongType()),
+        StructField("is_representative", BooleanType()),
+    ])
+    return docs.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "cluster": cluster, "is_representative": ids == cluster}),
+        schema,
     )
 
 

@@ -1,24 +1,31 @@
-"""The shuffle-free driver side of PageRank (pull), WCC, LPA and triangle
-counting: below ``blocks.DRIVER_EDGE_THRESHOLD`` each reads the raw edge
-projection and the node ids once, prepares the edges in numpy and returns
-a local relation of every node row. These tests pin its job budget, check
-that the driver-built block store equals the Spark-built one, and check
-its edge semantics against the forced-distributed sides (threshold -1:
-even an empty table is over budget)."""
+"""The shuffle-free driver side of PageRank (pull), WCC, LPA, triangle
+counting, k-core, k-truss, set similarity and near-duplicate clustering:
+below ``blocks.DRIVER_EDGE_THRESHOLD`` each reads its raw input once,
+prepares it in numpy and returns a local relation. These tests pin its
+job budget, check that the driver-built block store equals the
+Spark-built one, and check its semantics against the forced-distributed
+sides (threshold -1: even an empty table is over budget)."""
 
 import os
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import edges_df, nodes_df
-from linkgraph.algorithms import blocks
+from linkgraph.algorithms import blocks, similarity
+from linkgraph.algorithms.kcore import k_core
+from linkgraph.algorithms.ktruss import k_truss
 from linkgraph.algorithms.lpa import label_propagation
 from linkgraph.algorithms.pagerank import PageRank
 from linkgraph.algorithms.triangles import _triangles_local, triangle_count
 from linkgraph.algorithms.wcc import wcc
 from linkgraph.graph import Graph
+from linkgraph.pipeline import dedup
+from linkgraph.pipeline.dedup import dedup_keep_best, near_duplicate_clusters
+from linkgraph.queries import QUERIES
 
 
 # ------------------------------------------------------------ store builds
@@ -300,6 +307,8 @@ def _edgeless(spark):
 
 
 ALGOS = {
+    "kcore": lambda g: _rows(k_core(g, 2), ["id", "in_core"]),
+    "ktruss": lambda g: _rows(k_truss(g, 3), ["src", "dst", "support"]),
     "wcc": lambda g: _rows(wcc(g), ["id", "component"]),
     "lpa": lambda g: _rows(label_propagation(g, max_iterations=8), ["id", "label"]),
     "lpa_out": lambda g: _rows(
@@ -325,3 +334,170 @@ def test_driver_side_matches_distributed(spark, monkeypatch, graph, algo):
         assert dict(local)[7] == 6 and dict(local)[9] == 9
     if graph is _messy and algo == "triangles":
         assert [r[1] for r in local] == [1, 1, 1, 1, 1, 1, 1, 1, 0, 0]
+
+
+def test_kcore_of_undirected_graph_keeps_its_edge_rows(spark, monkeypatch):
+    """An undirected (direction BOTH) graph's edges are used as they are,
+    loops dropped, on either side."""
+    e = edges_df(spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0), (2, 3, 1.0), (3, 3, 1.0)])
+    g = Graph.from_edges(e, nodes=nodes_df(spark, range(5)), direction="BOTH")
+    local, dist = _both_sides(monkeypatch, lambda: _rows(k_core(g, 2), ["id", "in_core"]))
+    assert local == dist == [(0, True), (1, True), (2, True), (3, False), (4, False)]
+
+
+# ------------------------------------------ set similarity and near-dup
+# duplicate rows, a null item, null categories (they count toward the
+# degree but never intersect), an item with only a null category, an item
+# sharing nothing, and ties on similarity (1-2 and 1-3 both 2/4)
+EVENTS = [
+    (1, "x"), (1, "y"), (1, "z"), (1, "x"), (2, "x"), (2, "y"), (2, None),
+    (3, "x"), (3, "y"), (3, "w"), (4, "z"), (4, "w"), (4, "z"), (5, None),
+    (None, "x"), (None, "y"), (6, "q"), (7, "x"), (7, "y"), (7, "z"),
+    (7, "w"), (8, "y"), (8, None), (8, None),
+]
+SIM_OPTIONS = {
+    "all": {},
+    "top_k": {"top_k": 2},
+    "cutoff": {"similarity_cutoff": 0.5},
+    "degree": {"degree_cutoff": 3},
+    "top": {"top": 5},
+    "combined": {"top_k": 3, "similarity_cutoff": 0.3, "degree_cutoff": 2, "top": 6},
+}
+
+
+def _events(spark, rows, typed):
+    df = spark.createDataFrame(rows, "user long, cat string")
+    if typed == "string_items_int_cats":
+        df = df.select(F.col("user").cast("string").alias("user"), F.ascii("cat").alias("cat"))
+    return df
+
+
+@pytest.mark.parametrize("typed", ["long_items", "string_items_int_cats"])
+@pytest.mark.parametrize("rows", [EVENTS, []], ids=["events", "empty"])
+@pytest.mark.parametrize("option", sorted(SIM_OPTIONS))
+@pytest.mark.parametrize("kind", ["jaccard", "overlap"])
+def test_set_similarity_driver_side_matches_dataframe(spark, monkeypatch, kind, option, rows, typed):
+    df = _events(spark, rows, typed)
+    opts = SIM_OPTIONS[option]
+    fn = getattr(similarity, kind)
+    args = (df, "user", "cat", kind, opts.get("top_k"), opts.get("similarity_cutoff"),
+            opts.get("degree_cutoff"), opts.get("top"))
+    assert similarity._set_similarity_local(*args) is not None
+
+    def run():
+        out = fn(df, "user", "cat", **opts)
+        return _rows(out, ["a", "b", "similarity"]), out.schema.simpleString()
+
+    local, dist = _both_sides(monkeypatch, run)
+    assert local == dist
+    if rows and option == "all" and typed == "long_items":
+        pairs = {(a, b): s for a, b, s in local[0]}
+        assert not any(5 in p or None in p or 6 in p for p in pairs)
+        if kind == "jaccard":
+            assert pairs[(1, 2)] == pairs[(1, 3)] == 0.5  # 2 is {x, y, null}
+            assert pairs[(2, 8)] == 0.25  # a null category never intersects
+
+
+def _docs(spark, texts):
+    return spark.createDataFrame(
+        [(10 * i + 3, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+
+
+NEAR_DUP_TEXTS = [
+    "a b c d e",        # with the next: 4/5, exactly at the 0.8 cut
+    "a b c d",
+    "b c d e f",        # 4/6 with the first: in only at t = 0.66667
+    "p q r s t u v w",  # with the next: 7/9, one token below the cut
+    "p q r s t u v x",
+    "m n o m",          # the same token set as the next two
+    "o n m",
+    "n m o o",
+    None,               # null text: singletons
+    None,
+    "",
+    "",
+    "k  l",             # {k, "", l}: 2/3 with the next
+    "k l",
+]
+
+
+@pytest.mark.parametrize("threshold", [0.8, 0.66667])
+def test_near_duplicate_driver_side_matches_dataframe(spark, monkeypatch, threshold):
+    docs = _docs(spark, NEAR_DUP_TEXTS)
+    assert dedup._near_dup_clusters_local(docs, threshold, "text") is not None
+
+    def run():
+        out = near_duplicate_clusters(docs, threshold)
+        return (
+            _rows(out, ["doc_id", "cluster", "is_representative"]),
+            _rows(dedup_keep_best(docs, threshold), ["cluster", "doc_id", "n_tokens"]),
+            out.schema.simpleString(),
+        )
+
+    local, dist = _both_sides(monkeypatch, run)
+    assert local == dist
+    cluster = {d: c for d, c, _ in local[0]}
+    low = threshold < 0.8
+    assert cluster[13] == 3  # 4/5 is at the 0.8 cut
+    assert cluster[43] == (33 if low else 43)  # 7/9 is one token below it
+    assert cluster[23] == (3 if low else 23)  # round(2/3, 5) = 0.66667
+    assert cluster[133] == (123 if low else 133)  # the empty token counts
+    assert cluster[63] == cluster[73] == 53  # identical token sets
+    assert cluster[83] == 83 and cluster[93] == 93  # null text
+    assert cluster[113] == 103  # "" is the token set {""}
+
+
+@pytest.mark.parametrize("t", [0.8, 0.66667, 0.7, 0.1, 0.333333, 0.99999, 1.0, 0.0])
+def test_round5_cut_is_half_up_rounding(t):
+    """The driver's integer cut 2·10⁵·i >= (2R − 1)·u equals
+    round(i/u, 5) >= t with HALF_UP decimal rounding of the double, as
+    Spark's ``round`` does, for every i <= u <= 80."""
+    cut = 2 * dedup._round5_cut(t) - 1
+    for u in range(1, 81):
+        for i in range(u + 1):
+            rounded = float(Decimal(repr(i / u)).quantize(Decimal("1e-5"), ROUND_HALF_UP))
+            assert (200_000 * i >= cut * u) == (rounded >= t), (i, u)
+
+
+@pytest.fixture(scope="module")
+def contract_sf(tmp_path_factory):
+    """Contract-schema documents and events at the sf0.01 sizes (500
+    documents, 10,000 events), from the benchmark's seeded generator."""
+    from lgbench import inputs
+
+    return inputs.write_contract_tables(1, str(tmp_path_factory.mktemp("contract")), 500, 10_000)
+
+
+@pytest.mark.parametrize("query", ["user_jaccard_topk", "dedup_clusters"])
+def test_similarity_and_dedup_job_budget(spark, contract_sf, query):
+    """The query and its caller's toPandas take at most 3 jobs: the raw
+    probe and the action on a local relation (9-14 and 17 with every
+    stage in Spark)."""
+    assert _jobs(spark, query, lambda: QUERIES[query](spark, contract_sf)) <= 3
+
+
+@pytest.mark.parametrize(
+    "query, probe",
+    [("user_jaccard_topk", ["item", "cat"]), ("dedup_clusters", ["doc_id", "text"])],
+)
+def test_past_work_gate_drops_one_collect(spark, monkeypatch, contract_sf, query, probe):
+    """With the rows under the budget but the pairs over it (166 users,
+    ~440 distinct token sets), the raw probe is the one collect dropped
+    and the Spark path returns the same rows."""
+    want = QUERIES[query](spark, contract_sf).toPandas()
+    probes = []
+    collect = blocks.collect_if_small
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 12_000)
+    monkeypatch.setattr(
+        blocks, "collect_if_small",
+        lambda df, *a, **kw: probes.append(df.columns) or collect(df, *a, **kw),
+    )
+    got = QUERIES[query](spark, contract_sf).toPandas()
+    assert probes[0] == probe and probes.count(probe) == 1
+    cols = sorted(want.columns)
+    assert _rows_pd(got, cols) == _rows_pd(want, cols)
+
+
+def _rows_pd(pdf, cols):
+    return sorted(tuple(r) for r in pdf[cols].itertuples(index=False))
