@@ -45,7 +45,8 @@ weight per pair) and return a local relation that already holds every
 node row, so the caller's action is one job with no shuffle. Set
 similarity and near-duplicate clustering do the same with their raw
 ``(item, cat)`` and ``(doc_id, text)`` rows, with all-pair work gates
-(``fits_driver``) and one pair kernel (``set_masks`` and
+(``fits_driver``; the document probe's row budget is ``pair_budget``,
+the most rows whose pairs fit) and one pair kernel (``set_masks`` and
 ``set_intersections``). Past the gate, a pull side is
 taken when the node ids are exactly 0..n-1 within the memory-aware cap
 (``_pull_size``) and every edge endpoint is a node id (``endpoints_outside``:
@@ -96,6 +97,7 @@ from __future__ import annotations
 import contextlib
 import functools
 import json
+import math
 import os
 import zlib
 from collections.abc import Iterator
@@ -140,9 +142,9 @@ def _pull_task_count(block_path: str, num_blocks: int) -> int:
 # The hybrid crossover, shared by every algorithm with a driver-local path:
 # a table of at most this many rows fits comfortably on the driver, where
 # numpy beats ~10 distributed fixpoint jobs. It is read at call time and
-# only in this module (collect_if_small, fits_driver, pull_store and
-# pull_engine), so assigning blocks.DRIVER_EDGE_THRESHOLD moves every
-# algorithm's crossover together.
+# only in this module (collect_if_small, fits_driver, pair_budget,
+# pull_store and pull_engine), so assigning blocks.DRIVER_EDGE_THRESHOLD
+# moves every algorithm's crossover together.
 DRIVER_EDGE_THRESHOLD = 2_000_000
 
 
@@ -150,6 +152,16 @@ def fits_driver(*sizes: int) -> bool:
     """Whether each work size of a driver side (pairs, incidence cells)
     fits the crossover, as its collected rows did."""
     return all(s <= DRIVER_EDGE_THRESHOLD for s in sizes)
+
+
+def pair_budget() -> int:
+    """The most items U whose U(U−1)/2 pairs fit the crossover (2,000 at
+    the default): the row budget of a driver side that collects wide rows
+    (a document's text) and then works on all pairs of them, so no more
+    rows reach the driver than its pair gate could accept. A negative
+    crossover (everything over budget) stays negative."""
+    t = DRIVER_EDGE_THRESHOLD
+    return t if t < 0 else (1 + math.isqrt(8 * t + 1)) // 2
 
 
 def collect_if_small(

@@ -15,14 +15,18 @@ LIMIT-bounded ``blocks.collect_if_small`` of ``(doc_id, text)`` (no
 shuffle), ``str.split(" ")`` token sets (the ``F.split`` +
 ``array_distinct`` of the Spark side), a collapse to the U distinct sets,
 all-pair intersections by the popcount kernel the Spark bitmask pass
-uses (``blocks.set_intersections`` over ``_token_masks``), the cut
+uses (``blocks.set_intersections`` over ``blocks.set_masks``), the cut
 ``round(i/u, 5) >= t`` as an exact integer test, and the driver
 union-find (``wcc.union_find_labels``); the result is a local relation of
-every document row. Taken when the collected rows, the U(U−1)/2 pairs and
-the U·V incidence cells over the V distinct tokens each fit
-``blocks.DRIVER_EDGE_THRESHOLD`` (and doc ids are non-null integers);
-otherwise the collected rows are dropped and the Spark strategies run
-unchanged.
+every document row. The rows carry whole texts, so the probe's budget is
+not the edge-row crossover but ``blocks.pair_budget()``: the most rows
+whose pairs fit ``blocks.DRIVER_EDGE_THRESHOLD`` (2,000 at the default),
+which bounds the U(U−1)/2 pairs of the U ≤ rows distinct sets too. The
+side is taken when the rows fit that budget, the U·V incidence cells over
+the V distinct tokens fit the crossover (checked before any mask is
+built) and doc ids are non-null integers; otherwise the collected rows
+are dropped and the Spark strategies run unchanged. The row budget is
+conservative on corpora with many identical token sets.
 """
 
 from __future__ import annotations
@@ -233,25 +237,26 @@ def _clusters_from_pairs(pairs: DataFrame, items: DataFrame, id_col: str) -> Dat
 _BITSET_MAX_VOCAB = 1024  # ≤16 uint64 words per doc-mask
 
 
-def _token_masks(token_sets) -> tuple[np.ndarray, np.ndarray, int]:
-    """(sizes, bitmasks, V) of token sets of distinct tokens: one
-    ``blocks.set_masks`` row per set over the V distinct tokens."""
+def _token_incidence(token_sets) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
+    """(sizes, set_idx, tok_idx, V) of token sets of distinct tokens: each
+    (set, token) membership over the V distinct tokens, the input of
+    ``blocks.set_masks``. V is known before any mask is allocated, so a
+    caller can gate the U·⌈V/64⌉ masks first."""
     sizes = np.fromiter(map(len, token_sets), np.int64, len(token_sets))
     codes, vocab = pd.factorize(
         np.fromiter((t for ts in token_sets for t in ts), object, int(sizes.sum()))
     )
-    rows = np.repeat(np.arange(len(token_sets)), sizes)
-    return sizes, blocks.set_masks(rows, codes, len(token_sets), len(vocab)), len(vocab)
+    return sizes, np.repeat(np.arange(len(token_sets)), sizes), codes, len(vocab)
 
 
 def _bitset_jaccard_pairs(toks: DataFrame, threshold: float) -> DataFrame:
     """Exact all-pairs Jaccard when the DISTINCT VOCABULARY is tiny
     (≤ _BITSET_MAX_VOCAB): every token set becomes a ⌈V/64⌉-word bitmask
-    (``_token_masks``), the intersection is popcount(a AND b)
-    (``blocks.set_intersections``, the driver side's kernel too), and a
-    U×U block kernel in one Arrow pass replaces U²/2 interpreted
-    array_intersects (measured ~6× on the sf0.1 near-clique corpus, where
-    V = 31). The guarded driver collect is bounded by the caller's
+    (``_token_incidence`` + ``blocks.set_masks``), the intersection is
+    popcount(a AND b) (``blocks.set_intersections``, the driver side's
+    kernel too), and a U×U block kernel in one Arrow pass replaces U²/2
+    interpreted array_intersects (measured ~6× on the sf0.1 near-clique
+    corpus, where V = 31). The guarded driver collect is bounded by the caller's
     U ≤ direct_max gate — the same collect-and-broadcast small-side
     pattern as vector_similarity.
 
@@ -264,8 +269,9 @@ def _bitset_jaccard_pairs(toks: DataFrame, threshold: float) -> DataFrame:
     spark = toks.sparkSession
     rows = toks.select("doc_id", "t").collect()
     ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    cnts, masks, _ = _token_masks([r["t"] for r in rows])
     U = len(ids)
+    cnts, set_idx, tok_idx, v = _token_incidence([r["t"] for r in rows])
+    masks = blocks.set_masks(set_idx, tok_idx, U, v)
     bc = spark.sparkContext.broadcast((ids, cnts, masks))
 
     def kernel(batches):
@@ -481,17 +487,23 @@ def _near_dup_clusters_local(
     """The driver side of ``near_duplicate_clusters(strategy="auto")``
     (module docstring): (doc_id, cluster, is_representative) as a local
     relation, or None past a gate or for doc ids that are not non-null
-    integers. Null text stays a singleton. A pair is kept when
-    round(i/u, 5) >= t, tested on the integer counts as
-    2·10⁵·i >= (2R − 1)·u (``_round5_cut``): the division and HALF_UP
-    rounding of the Spark side, with no float on the cut."""
+    integers. The probe's row budget is ``blocks.pair_budget()``, the
+    most rows whose pairs fit, so at most that many texts (2,000 at the
+    default) plus the one that shows the overflow reach the driver, and
+    the U distinct sets of the rows always pass the pair gate. Null text
+    stays a singleton. A pair is kept when round(i/u, 5) >= t, tested on
+    the integer counts as 2·10⁵·i >= (2R − 1)·u (``_round5_cut``): the
+    division and HALF_UP rounding of the Spark side, with no float on the
+    cut."""
     from linkgraph.algorithms.wcc import union_find_labels
 
     id_type = docs.schema["doc_id"].dataType
     if not (isinstance(id_type, IntegralType)
             and isinstance(docs.schema[text_col].dataType, StringType)):
         return None
-    pdf = blocks.collect_if_small(docs.select("doc_id", F.col(text_col).alias("text")))
+    pdf = blocks.collect_if_small(
+        docs.select("doc_id", F.col(text_col).alias("text")), budget=blocks.pair_budget()
+    )
     if pdf is None or pdf["doc_id"].isna().any():
         return None
     ids = pdf["doc_id"].to_numpy(np.int64)
@@ -502,12 +514,11 @@ def _near_dup_clusters_local(
          for t in pdf["text"][has_text]),
         np.int64, int(has_text.sum()),
     )
-    u = len(key_of)
-    if not blocks.fits_driver(u * (u - 1) // 2):
-        return None
-    sizes, masks, v = _token_masks(list(key_of))
+    u = len(key_of)  # u <= rows <= pair_budget: the U(U−1)/2 pairs fit
+    sizes, set_idx, tok_idx, v = _token_incidence(list(key_of))
     if not blocks.fits_driver(u * v):
         return None
+    masks = blocks.set_masks(set_idx, tok_idx, u, v)
     rep = np.full(u, np.iinfo(np.int64).max)
     np.minimum.at(rep, set_of, ids[has_text])  # each set's min doc id
     cut = 2 * _round5_cut(threshold) - 1

@@ -482,9 +482,10 @@ def test_similarity_and_dedup_job_budget(spark, contract_sf, query):
     [("user_jaccard_topk", ["item", "cat"]), ("dedup_clusters", ["doc_id", "text"])],
 )
 def test_past_work_gate_drops_one_collect(spark, monkeypatch, contract_sf, query, probe):
-    """With the rows under the budget but the pairs over it (166 users,
-    ~440 distinct token sets), the raw probe is the one collect dropped
-    and the Spark path returns the same rows."""
+    """Past the work gate (threshold 12,000: 166 users have more pairs;
+    500 documents are more rows than the 155 whose pairs fit), the raw
+    probe is the one collect dropped and the Spark path returns the same
+    rows."""
     want = QUERIES[query](spark, contract_sf).toPandas()
     probes = []
     collect = blocks.collect_if_small
@@ -501,3 +502,50 @@ def test_past_work_gate_drops_one_collect(spark, monkeypatch, contract_sf, query
 
 def _rows_pd(pdf, cols):
     return sorted(tuple(r) for r in pdf[cols].itertuples(index=False))
+
+
+@pytest.mark.parametrize("threshold", [-1, 0, 1, 2, 3, 12_000, 2_000_000])
+def test_pair_budget_is_the_most_rows_whose_pairs_fit(monkeypatch, threshold):
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", threshold)
+    u = blocks.pair_budget()
+    if threshold < 0:
+        assert u < 0
+    else:
+        assert u * (u - 1) // 2 <= threshold < (u + 1) * u // 2
+    assert threshold != 2_000_000 or u == 2_000
+
+
+def test_near_dup_probe_collects_at_most_the_pair_budget(spark, monkeypatch, contract_sf):
+    """Texts are wide rows: past the gate (500 documents, 155 rows whose
+    pairs fit 12,000) no more than 156 texts reach the driver, where the
+    edge-row budget would have collected all 500, and the Spark path
+    returns the same clusters."""
+    docs = spark.read.parquet(os.path.join(contract_sf, "documents.parquet"))
+    want = _rows(near_duplicate_clusters(docs), ["doc_id", "cluster", "is_representative"])
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 12_000)
+    assert blocks.pair_budget() == 155
+    collected = []
+    to_pandas = type(docs).toPandas
+
+    def recording(df):
+        pdf = to_pandas(df)
+        if "text" in df.columns:
+            collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(type(docs), "toPandas", recording)
+    got = _rows(near_duplicate_clusters(docs), ["doc_id", "cluster", "is_representative"])
+    assert collected == [156]
+    assert got == want
+
+
+def test_near_dup_incidence_gate_runs_before_the_masks(spark, monkeypatch):
+    """Three documents of 1,000 distinct tokens each fit the rows and the
+    pairs of threshold 5,000 but not their 3 × 3,000 incidence cells:
+    the driver side declines before any bitmask is allocated."""
+    docs = _docs(spark, [" ".join(f"{d}t{k}" for k in range(1_000)) for d in range(3)])
+    monkeypatch.setattr(blocks, "DRIVER_EDGE_THRESHOLD", 5_000)
+    built = []
+    monkeypatch.setattr(blocks, "set_masks", lambda *a: built.append(a))
+    assert dedup._near_dup_clusters_local(docs, 0.8, "text") is None
+    assert built == []

@@ -641,10 +641,13 @@ def test_only_blocks_manages_block_stores():
 
 
 def test_only_wcc_and_msf_call_union_find():
-    # one connected-components call: the dedup cluster tail and the
-    # k-spanning tree go through wcc(), whose gate picks the driver
-    # union-find. Only the Borůvka rounds of the minimum spanning forest
-    # keep their own count-first gate (it also ends their loop).
+    # one union-find: it is reached only through wcc.py (wcc() and its
+    # helpers, such as union_find_labels, which the near-dup driver side
+    # calls on pairs it has already gated) or the minimum spanning forest.
+    # The dedup cluster tail past the driver side and the k-spanning tree
+    # go through wcc(), whose gate picks the driver union-find; only the
+    # Borůvka rounds of the MSF keep their own count-first gate (it also
+    # ends their loop).
     modules = _package_modules()
     (paths,) = [p for p, rel in modules if rel == "linkgraph/algorithms/paths.py"]
     (msf,) = [n for n in ast.parse(paths.read_text()).body
